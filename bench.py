@@ -188,7 +188,7 @@ def bench_cms_build(spark, corpus_path: str) -> dict:
              djb2 HOF + partial/final hash aggregate on buckets) — the
              headline: no Python in the hot path, and hash arithmetic runs
              once per distinct token.
-    - arrow: mapInArrow numpy partials + treeReduce merge — the mergeable
+    - arrow: mapInArrow numpy partials + fan-in merge — the mergeable
              "UDAF" pattern shared by all sketch kernels.
     A small warmup job first spins up workers / JIT, mirroring a long-lived
     cluster's steady state."""

@@ -10,9 +10,9 @@ reference's per-rank partial sketch + MPI_Reduce merge
                    Arrow batches into ONE numpy sketch (np.bincount per hash
                    row — no per-row Python) and emits a single serialized
                    partial-sketch row (~tens of KB).
-  stage 2 (reduce): associative element-wise merge of the partials — a
-                   tree reduction (``RDD.treeReduce``), exactly what
-                   MPI_Reduce does internally.
+  stage 2 (reduce): associative element-wise merge of the partials — the
+                   fan-in tree of ``sketch_agg.merge_sketch_partials``, like
+                   the reduction tree MPI_Reduce runs internally.
 
 At 100 TB the stage-1 output is one small row per input split, so the
 "shuffle" is a few MB regardless of input size; the build is embarrassingly
@@ -22,7 +22,6 @@ reachable.
 
 from __future__ import annotations
 
-import math
 from typing import Iterator
 
 import numpy as np
@@ -31,6 +30,7 @@ import pyarrow as pa
 from ..config import CMSConfig
 from ..memtune import tune_allocator
 from ._grouped_fold import GroupedFoldBase, salted_pre_shuffle
+from .sketch_agg import merge_sketch_partials
 from ..sketches.cms import CountMinSketch
 from ..sketches.hashing import affine_hash, djb2_batch
 
@@ -165,29 +165,19 @@ def cms_text_partials(df, text_col: str, cfg: CMSConfig, *, sep: str = " ",
     return proj.mapInArrow(fold, PARTIAL_SCHEMA)
 
 
-def merge_partials(partials_df, cfg: CMSConfig, *, depth: int | None = None) -> CountMinSketch:
-    """Tree-merge serialized partials into one sketch (MPI_Reduce analog,
-    src/mpi/mpiV2.c:163-175). treeReduce keeps every merge step bounded:
-    with P partials and fan-in f, no single node touches more than f
-    sketches — scalable to 10^5 input splits."""
-    rdd = partials_df.select("sketch").rdd.map(lambda r: bytes(r[0]))
-    n = max(rdd.getNumPartitions(), 2)
-    tree_depth = depth if depth is not None else max(2, int(math.ceil(math.log(n, 16))))
-
+def merge_partials(partials_df, cfg: CMSConfig) -> CountMinSketch:
+    """Merge serialized CMS partials into one sketch (MPI_Reduce analog,
+    src/mpi/mpiV2.c:163-175) through the shared fan-in merge; no partials
+    give the zero sketch of ``cfg``."""
     eps, delta = cfg.epsilon, cfg.delta
-
-    def merge_bytes(x: bytes, y: bytes) -> bytes:
-        a = CountMinSketch.from_bytes(x, eps, delta)
-        b = CountMinSketch.from_bytes(y, eps, delta)
-        return a.merge(b).to_bytes()
-
-    blob = rdd.treeReduce(merge_bytes, depth=tree_depth)
-    return CountMinSketch.from_bytes(blob, eps, delta)
+    sk = merge_sketch_partials(
+        partials_df, lambda b: CountMinSketch.from_bytes(b, eps, delta))
+    return cfg.new_sketch() if sk is None else sk
 
 
 def build_cms(df, item_col: str, cfg: CMSConfig, *, weight_col: str | None = None,
               string_items: bool = False) -> CountMinSketch:
-    """End-to-end: partial sketches per partition -> tree merge -> sketch."""
+    """End-to-end: partial sketches per partition -> fan-in merge -> sketch."""
     return merge_partials(
         cms_partials(df, item_col, cfg, weight_col=weight_col, string_items=string_items), cfg
     )

@@ -216,7 +216,7 @@ def _minhash_mins_arrow(df: DataFrame, id_col: str, text: str = "text", *,
             # same value as hashing the occurrence directly (identical
             # string -> identical djb2 -> identical affine image), so
             # every per-doc min is bit-identical to the per-occurrence
-            # form (equality-tested in tests/test_dedup_ops.py).
+            # form (equality-tested in tests/test_fingerprint_kernels.py).
             enc = flat_ne.dictionary_encode()
             codes = enc.indices.to_numpy(zero_copy_only=False)
             xu = djb2_batch(enc.dictionary) % p  # token ids, already < p

@@ -265,7 +265,7 @@ def mg_frequent_tokens(df, text_col: str, k: int, phi: float) -> DataFrame:
     Misra-Gries summary (sketches/misra_gries.py) — the deterministic,
     hash-free sibling of :func:`heavy_hitters_scalable`.
 
-    Shape: ONE summary build scan (mapInArrow partials + treeReduce merge;
+    Shape: ONE summary build scan (mapInArrow partials + fan-in merge;
     the whole merged state is <= k (item, count) pairs, so the driver
     holds O(k), never the token universe), then candidate pruning by the
     summary's exact error bound (drop items whose upper bound

@@ -12,7 +12,7 @@ bits vs ~800 MB+ of raw keys in a hash-join build table).
 
 Construction rides the generic mergeable-sketch rails
 (``sketch_agg.build_sketch``: one Arrow partial per partition +
-``treeReduce`` OR-merge) — notably the build needs NO distinct/shuffle
+fan-in OR-merge) — notably the build needs NO distinct/shuffle
 on the small side, because duplicate inserts are idempotent bit-ORs.
 The prefilter is an Arrow-vectorized ``mapInArrow`` predicate over the
 broadcast bits (k affine hash rows over the Mersenne prime, the same

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..config import CMSConfig
 from ..sketches.cms import CountMinSketch
 from .agg import cms_grouped, merge_partials
-from .sketch_agg import merge_sketch_partials, sketch_grouped
+from .sketch_agg import fold_blobs, merge_sketch_partials, sketch_grouped
 
 ROLLUP_SCHEMA = "bucket STRING, rows_seen LONG, total LONG, sketch BINARY"
 
@@ -83,14 +83,12 @@ def cms_rollup_range(buckets_df: DataFrame, lo: str, hi: str,
                      cfg: CMSConfig) -> CountMinSketch:
     """Merge the bucket sketches with ``lo <= bucket <= hi`` (ISO date
     strings — lexicographic order IS chronological order) into one CMS via
-    the bounded tree merge. An empty range yields the zero sketch of the
-    same config. The caller should persist ``buckets_df`` when issuing
-    several range queries against one rollup build."""
+    the fan-in merge. An empty range yields the zero sketch of the same
+    config. The caller should persist ``buckets_df`` when issuing several
+    range queries against one rollup build."""
     sel = buckets_df.filter(
         (F.col("bucket") >= F.lit(lo)) & (F.col("bucket") <= F.lit(hi))
     )
-    if sel.isEmpty():
-        return cfg.new_sketch()
     return merge_partials(sel, cfg)
 
 
@@ -132,7 +130,7 @@ def sketch_time_buckets(df: DataFrame, ts_col: str, item_col: str,
 def sketch_rollup_range(buckets_df: DataFrame, lo: str, hi: str,
                         make_sketch: Callable, from_bytes: Callable):
     """Merge the bucket sketches with ``lo <= bucket <= hi`` into one
-    sketch via the associative tree merge — the kernel-generic sibling of
+    sketch via the associative fan-in merge — the kernel-generic sibling of
     :func:`cms_rollup_range`. Sum-merge kernels (CMS) give a sketch
     bit-identical to a direct build over the range; idempotent merges
     (HLL max, Bloom OR) give the EXACT same state a direct build would
@@ -141,9 +139,8 @@ def sketch_rollup_range(buckets_df: DataFrame, lo: str, hi: str,
     sel = buckets_df.filter(
         (F.col("bucket") >= F.lit(lo)) & (F.col("bucket") <= F.lit(hi))
     )
-    if sel.isEmpty():
-        return make_sketch()
-    return merge_sketch_partials(sel, from_bytes)
+    sk = merge_sketch_partials(sel, from_bytes)
+    return make_sketch() if sk is None else sk
 
 
 def rollup_range_collect(buckets_df: DataFrame, lo: str, hi: str,
@@ -153,10 +150,8 @@ def rollup_range_collect(buckets_df: DataFrame, lo: str, hi: str,
     the store regime's whole point) and fold them driver-side in bucket
     order. Returns ``(rows, sketch_or_None)``.
 
-    r6 (guide §1.2): the treeReduce path (`merge_*_partials`) costs an
-    ``isEmpty()`` probe plus an ``.rdd`` conversion plus a multi-stage
-    reduce — three-plus jobs to merge a handful of kilobyte blobs. For
-    day-span ranges the driver fold is the same ``merge()`` calls in a
+    Unlike the range merges above, the caller also gets the covered rows,
+    and the driver fold runs the same ``merge()`` calls in a
     deterministic (bucket-sorted) order: bit-identical for sum-merge
     (CMS) and idempotent (HLL/Bloom/KMV) kernels; for order-sensitive
     summaries (MG) the merged BYTES may differ from a tree order but
@@ -166,11 +161,8 @@ def rollup_range_collect(buckets_df: DataFrame, lo: str, hi: str,
     rows = buckets_df.filter(
         (F.col("bucket") >= F.lit(lo)) & (F.col("bucket") <= F.lit(hi))
     ).select("bucket", "sketch").collect()
-    sk = None
-    for r in sorted(rows, key=lambda r: r["bucket"]):
-        o = from_bytes(bytes(r["sketch"]))
-        sk = o if sk is None else sk.merge(o)
-    return rows, sk
+    ordered = sorted(rows, key=lambda r: r["bucket"])
+    return rows, fold_blobs((r["sketch"] for r in ordered), from_bytes)
 
 
 def write_rollup(buckets_df: DataFrame, path: str, *,

@@ -5,9 +5,9 @@ Every kernel in ``sketches/`` implements the same protocol:
 so one partial/final implementation serves CMS, HLL, Bloom, KLL and
 t-digest alike (the north-star's "mergeable Arrow-vectorized aggregation"):
 one serialized partial per partition via ``mapInArrow``, then an
-associative tree merge. Element-wise-sum merges (CMS), max merges (HLL),
-OR merges (Bloom) and compaction merges (KLL/t-digest) all ride the same
-rails — only the kernel differs.
+associative fan-in merge (``merge_sketch_partials``). Element-wise-sum
+merges (CMS), max merges (HLL), OR merges (Bloom) and compaction merges
+(KLL/t-digest) all ride the same rails — only the kernel differs.
 """
 
 from __future__ import annotations
@@ -167,16 +167,53 @@ def sketch_partials(df, col: str, make_sketch: Callable, *,
     return proj.mapInArrow(fold, PARTIAL_SCHEMA)
 
 
-def merge_sketch_partials(partials_df, from_bytes: Callable, *, depth: int | None = None):
-    """Associative tree merge of serialized partials (MPI_Reduce analog)."""
-    rdd = partials_df.select("sketch").rdd.map(lambda r: bytes(r[0]))
-    n = max(rdd.getNumPartitions(), 2)
-    tree_depth = depth if depth is not None else max(2, int(math.ceil(math.log(n, 16))))
+FANIN = 16  # the driver folds at most this many partials, a merge task about as many
+_BLOB_PA = pa.schema([("sketch", pa.binary())])
 
-    def merge_bytes(x: bytes, y: bytes) -> bytes:
-        return from_bytes(x).merge(from_bytes(y)).to_bytes()
 
-    return from_bytes(rdd.treeReduce(merge_bytes, depth=tree_depth))
+def fold_blobs(blobs, from_bytes: Callable):
+    """Merge serialized sketches in iteration order; None when empty."""
+    out = None
+    for blob in blobs:
+        sk = from_bytes(bytes(blob))
+        out = sk if out is None else out.merge(sk)
+    return out
+
+
+def merge_sketch_partials(partials_df, from_bytes: Callable):
+    """Fan-in merge of the ``sketch`` column of a partials DataFrame
+    (MPI_Reduce analog, src/mpi/mpiV2.c:163-175); None when it has no rows.
+
+    Up to ``FANIN`` partials are collected by the action that computes
+    them and folded on the driver, so the merge adds no job and no Python
+    pass. With more, ``repartition(ceil(P/FANIN))`` + ``mapInArrow``
+    levels first fold the blobs about FANIN at a time, so neither a merge
+    task nor the driver holds many more than FANIN sketches."""
+    from pyspark.sql import DataFrame
+
+    blobs = partials_df.select("sketch")
+    # size the plan through its JVM RDD: no Python worker starts, and any
+    # shuffle stage AQE runs to size it is reused by the collect of this
+    # plan, or by merge levels planned over the RDD (as Dataset.checkpoint)
+    rdd = blobs._jdf.queryExecution().toRdd()
+    n = rdd.getNumPartitions()
+    if n > FANIN:
+        spark = blobs.sparkSession
+        blobs = DataFrame(spark._jsparkSession.internalCreateDataFrame(
+            rdd, blobs._jdf.schema(), False), spark)
+
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        tune_allocator()
+        out = fold_blobs((b for batch in batches
+                          for b in batch.column(0).to_pylist()), from_bytes)
+        if out is not None:
+            yield pa.RecordBatch.from_pydict({"sketch": [out.to_bytes()]},
+                                             schema=_BLOB_PA)
+
+    while n > FANIN:
+        n = math.ceil(n / FANIN)
+        blobs = blobs.repartition(n).mapInArrow(fold, "sketch BINARY")
+    return fold_blobs((r[0] for r in blobs.collect()), from_bytes)
 
 
 def build_sketch(df, col: str, make_sketch: Callable, from_bytes: Callable, *,
@@ -184,7 +221,8 @@ def build_sketch(df, col: str, make_sketch: Callable, from_bytes: Callable, *,
                  string_items: bool = False, as_float: bool = False):
     partials = sketch_partials(df, col, make_sketch, weight_col=weight_col,
                                string_items=string_items, as_float=as_float)
-    return merge_sketch_partials(partials, from_bytes)
+    sk = merge_sketch_partials(partials, from_bytes)
+    return make_sketch() if sk is None else sk
 
 
 def text_token_partials(df, text_col: str, make_sketch: Callable, *,
@@ -237,7 +275,8 @@ def text_token_partials(df, text_col: str, make_sketch: Callable, *,
 def build_sketch_from_text(df, text_col: str, make_sketch: Callable,
                            from_bytes: Callable, *, sep: str = " "):
     partials = text_token_partials(df, text_col, make_sketch, sep=sep)
-    return merge_sketch_partials(partials, from_bytes)
+    sk = merge_sketch_partials(partials, from_bytes)
+    return make_sketch() if sk is None else sk
 
 
 # ---------------------------------------------------------------------------
@@ -397,10 +436,7 @@ def merge_grouped_partials(partials, from_bytes: Callable):
     def merge_group(pdf):
         import pandas as pd
 
-        out = None
-        for blob in pdf["sketch"]:
-            sk = from_bytes(bytes(blob))
-            out = sk if out is None else out.merge(sk)
+        out = fold_blobs(pdf["sketch"], from_bytes)
         return pd.DataFrame(
             {
                 "group": [pdf["group"].iloc[0]],

@@ -862,7 +862,8 @@ def q_rollup_day_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     blob_rel = (
         buckets.filter((F.col("bucket") >= F.lit(lo))
                        & (F.col("bucket") <= F.lit(hi)))
-        .select("bucket", "sketch", F.lit(None).cast("long").alias("x")))
+        .select(F.lit("blob").alias("kind"), "bucket", "sketch",
+                F.lit(None).cast("long").alias("x")))
 
     def per_user(day: str):
         return (ev.filter(F.col("ts").isNotNull()
@@ -878,12 +879,13 @@ def q_rollup_day_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(per_user(OVERLAP_DAY_B).withColumnRenamed("n", "nb"), "user_id")
         .agg(F.coalesce(F.sum(F.col("na") * F.col("nb")), F.lit(0))
              .alias("x"))
-        .select(F.lit(None).cast("string").alias("bucket"),
+        .select(F.lit("exact").alias("kind"),
+                F.lit(None).cast("string").alias("bucket"),
                 F.lit(None).cast("binary").alias("sketch"), "x"))
     day_blobs: dict = {}
     exact = 0
     for r in blob_rel.unionByName(exact_rel).collect():
-        if r["sketch"] is not None:
+        if r["kind"] == "blob":
             day_blobs[r["bucket"]] = bytes(r["sketch"])
         else:
             exact = int(r["x"])

@@ -313,8 +313,8 @@ def q_hll_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the state is identical.
     bsel = buckets.filter(
         (F.col("bucket") >= ROLLUP_LO) & (F.col("bucket") <= ROLLUP_HI)
-    ).select(F.col("bucket").alias("k"), "sketch",
-             F.lit(None).cast("long").alias("n"))
+    ).select(F.lit("blob").alias("kind"), F.col("bucket").alias("k"),
+             "sketch", F.lit(None).cast("long").alias("n"))
     esel = (
         pairs.join(
             F.broadcast(spine),
@@ -322,13 +322,13 @@ def q_hll_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("d") >= F.date_sub(F.col("win_day").cast("date"),
                                         SLIDE_WINDOW_DAYS - 1).cast("string")))
         .groupBy("win_day").agg(F.countDistinct("user_id").alias("n"))
-        .select(F.col("win_day").alias("k"),
+        .select(F.lit("exact").alias("kind"), F.col("win_day").alias("k"),
                 F.lit(None).cast("binary").alias("sketch"), "n")
     )
     day_sk: dict = {}
     exact: dict = {}
     for r in bsel.unionByName(esel).collect():
-        if r["sketch"] is not None:
+        if r["kind"] == "blob":
             sk = _hll_from_bytes(bytes(r["sketch"]))
             prev = day_sk.get(r["k"])
             day_sk[r["k"]] = prev.merge(sk) if prev is not None else sk

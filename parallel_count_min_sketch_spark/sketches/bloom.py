@@ -102,13 +102,3 @@ class BloomFilter:
         packed = np.frombuffer(data, dtype=np.uint8, offset=_HEADER.size)
         bits = np.unpackbits(packed)[:m].astype(np.uint8)
         return cls(seed=seed, m=m, k=k, bits=bits, n_added=n_added)
-
-    @staticmethod
-    def merge_blobs(blobs) -> "BloomFilter":
-        out = None
-        for blob in blobs:
-            sk = BloomFilter.from_bytes(bytes(blob))
-            out = sk if out is None else out.merge(sk)
-        if out is None:
-            raise ValueError("no blobs to merge")
-        return out

@@ -148,13 +148,3 @@ class CountSketch:
         table = np.frombuffer(data, dtype="<i8", offset=_HEADER.size) \
             .astype(np.int64).reshape(depth, width)
         return cls(depth, width, seed, table=table)
-
-    @staticmethod
-    def merge_blobs(blobs) -> "CountSketch":
-        out = None
-        for blob in blobs:
-            sk = CountSketch.from_bytes(bytes(blob))
-            out = sk if out is None else out.merge(sk)
-        if out is None:
-            raise ValueError("no blobs to merge")
-        return out

@@ -139,13 +139,3 @@ class DyadicCMS:
             out.sketches[l] = CountMinSketch.from_bytes(data[off:off + size], epsilon, delta)
             off += size
         return out
-
-    @staticmethod
-    def merge_blobs(blobs, epsilon: float = 0.001, delta: float = 0.1) -> "DyadicCMS":
-        out = None
-        for blob in blobs:
-            sk = DyadicCMS.from_bytes(bytes(blob), epsilon, delta)
-            out = sk if out is None else out.merge(sk)
-        if out is None:
-            raise ValueError("no blobs to merge")
-        return out

@@ -28,6 +28,8 @@ Two families:
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 
 MERSENNE_PRIME = 2_147_483_647  # 2^31 - 1, reference PRIME
@@ -42,6 +44,7 @@ for _i in range(1, _MAX_TOKEN_LEN + 1):
     _POW33[_i] = (_POW33[_i - 1] * 33) % LONG_PRIME
 
 
+@functools.lru_cache(maxsize=1024)
 def affine_params(seed: int, depth: int) -> tuple[np.ndarray, np.ndarray]:
     """Derive ``depth`` (a, b) pairs from ``seed``.
 
@@ -49,10 +52,16 @@ def affine_params(seed: int, depth: int) -> tuple[np.ndarray, np.ndarray]:
     universal_hash_init (src/core/count_min_sketch.c:121-133), but drawn
     from a seeded PCG64 instead of C rand() so they are reproducible
     everywhere (and embeddable as literals into oracle SQL).
+
+    Memoized (every sketch constructor and ``from_bytes`` calls this; a
+    fresh PCG64 costs more than decoding a sketch), so the arrays are shared
+    and read-only.
     """
     rng = np.random.default_rng(seed)
     a = rng.integers(1, MERSENNE_PRIME, size=depth, dtype=np.int64)
     b = rng.integers(0, MERSENNE_PRIME, size=depth, dtype=np.int64)
+    a.flags.writeable = False
+    b.flags.writeable = False
     return a, b
 
 

@@ -138,13 +138,3 @@ class HyperLogLog:
             raise ValueError("not an HLL1 blob")
         regs = np.frombuffer(data, dtype=np.uint8, offset=_HEADER.size).astype(np.int64)
         return cls(precision, seed, registers=regs)
-
-    @staticmethod
-    def merge_blobs(blobs) -> "HyperLogLog":
-        out = None
-        for blob in blobs:
-            sk = HyperLogLog.from_bytes(bytes(blob))
-            out = sk if out is None else out.merge(sk)
-        if out is None:
-            raise ValueError("no blobs to merge")
-        return out

@@ -158,13 +158,3 @@ class KLLSketch:
             sk.levels.append(np.frombuffer(data, dtype=np.float64, offset=off, count=size).copy())
             off += size * 8
         return sk
-
-    @staticmethod
-    def merge_blobs(blobs) -> "KLLSketch":
-        out = None
-        for blob in blobs:
-            sk = KLLSketch.from_bytes(bytes(blob))
-            out = sk if out is None else out.merge(sk)
-        if out is None:
-            raise ValueError("no blobs to merge")
-        return out

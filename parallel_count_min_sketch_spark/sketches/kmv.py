@@ -187,13 +187,3 @@ class KMVSketch:
             raise ValueError("not a KMV1 blob")
         vals = np.frombuffer(data, dtype="<i8", offset=_HEADER.size).astype(np.int64)
         return cls(k, seed, values=vals)
-
-    @staticmethod
-    def merge_blobs(blobs) -> "KMVSketch":
-        out = None
-        for blob in blobs:
-            sk = KMVSketch.from_bytes(bytes(blob))
-            out = sk if out is None else out.merge(sk)
-        if out is None:
-            raise ValueError("no blobs to merge")
-        return out

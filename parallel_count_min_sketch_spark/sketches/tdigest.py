@@ -134,13 +134,3 @@ class TDigest:
         td.weights = np.frombuffer(data, dtype=np.float64, offset=off, count=size).copy()
         td.n = n
         return td
-
-    @staticmethod
-    def merge_blobs(blobs) -> "TDigest":
-        out = None
-        for blob in blobs:
-            sk = TDigest.from_bytes(bytes(blob))
-            out = sk if out is None else out.merge(sk)
-        if out is None:
-            raise ValueError("no blobs to merge")
-        return out

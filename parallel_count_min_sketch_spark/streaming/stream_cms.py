@@ -22,7 +22,7 @@ import struct
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import CMSConfig
-from ..operators.agg import cms_text_partials
+from ..operators.agg import build_cms_from_text
 from ..sketches.cms import CountMinSketch
 
 _STATE_HEADER = struct.Struct("<4sqI")  # magic, last batch_id, ckpt-tag length
@@ -79,11 +79,7 @@ class StreamingCMS:
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= self.last_batch_id:
             return  # replayed micro-batch already merged — skip
-        partials = cms_text_partials(batch_df, self.text_col, self.cfg).collect()
-        for row in partials:
-            self.sketch.merge(
-                CountMinSketch.from_bytes(bytes(row["sketch"]), self.cfg.epsilon, self.cfg.delta)
-            )
+        self.sketch.merge(build_cms_from_text(batch_df, self.text_col, self.cfg))
         self.batches_seen += 1
         self.last_batch_id = batch_id
         self._save_state()

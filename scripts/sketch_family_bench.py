@@ -2,7 +2,7 @@
 
 BENCH evidence is CMS-centric; the north rule names HLL, KLL, t-digest and
 Bloom as first-class. This times each family's distributed Arrow-kernel
-build (per-partition partial -> treeReduce merge, the same rails the
+build (per-partition partial -> fan-in merge, the same rails the
 contract queries use) on its natural web workload over the deterministic
 4M-doc corpus, warm best-of-N:
 

@@ -228,8 +228,53 @@ def test_weighted_cms_path_rejects_negative_weights(spark):
 def test_merge_partials_large_fanin(spark, items_df):
     df, items = items_df
     partials = cms_partials(df.repartition(32), "item", CFG)
-    sk = merge_partials(partials, CFG, depth=3)
+    sk = merge_partials(partials, CFG)
     assert np.array_equal(sk.table, expected_sketch(items).table)
+
+
+@pytest.mark.parametrize("parts", [8, 32])
+def test_multi_level_fanin_equals_sequential(spark, items_df, monkeypatch, parts):
+    """A fan-in of 2 turns 8 and 32 partials into 3 and 5 mapInArrow merge
+    levels: the sketch must still equal the sequential build bit for bit."""
+    from parallel_count_min_sketch_spark.operators import sketch_agg
+
+    monkeypatch.setattr(sketch_agg, "FANIN", 2)
+    df, items = items_df
+    got = build_cms(df.repartition(parts), "item", CFG)
+    exp = expected_sketch(items)
+    assert got.total == exp.total
+    assert got.to_bytes() == exp.to_bytes()
+
+
+def test_small_build_is_one_job_without_rdd(spark, monkeypatch):
+    """Up to FANIN partials, the merge is the collect of the partial
+    kernel's own job: no Python RDD, no second job."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(0, 20000, 1, 8).select((F.col("id") * 7919 % 5000).alias("item"))
+    exp = CFG.new_sketch()
+    exp.update_batch(np.arange(20000, dtype=np.int64) * 7919 % 5000)
+
+    def no_rdd(self):
+        raise AssertionError("the sketch merge must not use DataFrame.rdd")
+
+    monkeypatch.setattr(type(df), "rdd", property(no_rdd))
+    sc = spark.sparkContext
+    group = "test-small-build-one-job"
+    sc.setJobGroup(group, group)
+    try:
+        got = build_cms(df, "item", CFG)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert got.to_bytes() == exp.to_bytes()
+
+
+def test_merge_partials_of_no_rows_is_zero_sketch(spark, items_df):
+    df, _ = items_df
+    partials = cms_partials(df, "item", CFG).filter("rows_seen < 0")
+    assert merge_partials(partials, CFG).to_bytes() == CFG.new_sketch().to_bytes()
 
 
 @pytest.mark.parametrize("name", [

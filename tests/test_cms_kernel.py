@@ -8,6 +8,7 @@ import pytest
 from parallel_count_min_sketch_spark.sketches import (
     CountMinSketch,
     SequentialCMS,
+    affine_params,
     djb2_batch,
     djb2_py,
 )
@@ -164,6 +165,15 @@ def test_serialization_roundtrip():
     merged = CountMinSketch.merge_blobs([blob, blob], 0.01, 0.1)
     assert merged.total == 2 * sk.total
     assert np.array_equal(merged.table, 2 * sk.table)
+
+
+def test_affine_params_are_memoized_read_only():
+    a, b = affine_params(7, 3)
+    assert affine_params(7, 3)[0] is a and affine_params(7, 3)[1] is b
+    with pytest.raises(ValueError):
+        a[0] = 1
+    with pytest.raises(ValueError):
+        CountMinSketch(0.01, 0.1, seed=7).b += 1
 
 
 def test_djb2_batch_matches_scalar():

@@ -6,6 +6,7 @@ import time
 import numpy as np
 import pytest
 
+from parallel_count_min_sketch_spark.operators.sketch_agg import fold_blobs
 from parallel_count_min_sketch_spark.sketches import CountMinSketch
 from parallel_count_min_sketch_spark.sketches.dyadic import DyadicCMS, decompose
 
@@ -74,7 +75,8 @@ def test_merge_and_serialization():
     pa_, pb = whole.copy_empty(), whole.copy_empty()
     pa_.update_batch(a_items)
     pb.update_batch(b_items)
-    merged = DyadicCMS.merge_blobs([pa_.to_bytes(), pb.to_bytes()], 0.01, 0.1)
+    merged = fold_blobs([pa_.to_bytes(), pb.to_bytes()],
+                        lambda b: DyadicCMS.from_bytes(b, 0.01, 0.1))
     assert merged.to_bytes() == whole.to_bytes()
     assert merged.total == 60_000
     with pytest.raises(ValueError):

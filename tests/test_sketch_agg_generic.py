@@ -136,6 +136,21 @@ def test_weighted_nulls_and_zeros_are_dropped(spark):
         build_sketch(neg, "item", _mk_cms, _cms_from_bytes, weight_col="cnt")
 
 
+@pytest.mark.parametrize("parts", [8, 32])
+def test_multi_level_fanin_hll_equals_sequential(spark, monkeypatch, parts):
+    """The generic rail through several mapInArrow merge levels (fan-in
+    2): HLL registers equal the sequential build's bit for bit."""
+    from parallel_count_min_sketch_spark.operators import sketch_agg
+
+    monkeypatch.setattr(sketch_agg, "FANIN", 2)
+    items = np.random.default_rng(3).integers(1, 100_000, size=20_000)
+    df = spark.createDataFrame([(int(x),) for x in items], "item BIGINT")
+    got = build_sketch(df.repartition(parts), "item", _mk_hll, _hll_from_bytes)
+    exp = _mk_hll()
+    exp.update_batch(items)
+    assert got.to_bytes() == exp.to_bytes()
+
+
 def test_grouped_hll_matches_per_group_sequential(spark):
     rng = np.random.default_rng(11)
     rows = [

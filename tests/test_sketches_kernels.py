@@ -5,6 +5,7 @@ serialization round-trips."""
 import numpy as np
 import pytest
 
+from parallel_count_min_sketch_spark.operators.sketch_agg import fold_blobs
 from parallel_count_min_sketch_spark.sketches.bloom import BloomFilter, bloom_dims
 from parallel_count_min_sketch_spark.sketches.hll import HyperLogLog
 from parallel_count_min_sketch_spark.sketches.kll import KLLSketch
@@ -119,7 +120,7 @@ def test_kll_merge_preserves_guarantee():
         s = KLLSketch(k=200, seed=2)
         s.update_batch(p)
         sketches.append(s)
-    merged = KLLSketch.merge_blobs([s.to_bytes() for s in sketches])
+    merged = fold_blobs([s.to_bytes() for s in sketches], KLLSketch.from_bytes)
     assert merged.n == data.size
     qs = np.array([0.1, 0.5, 0.9, 0.99])
     est = merged.quantile(qs)
@@ -157,7 +158,7 @@ def test_tdigest_merge_and_roundtrip():
     digests = [TDigest(100) for _ in parts]
     for d, p in zip(digests, parts):
         d.update_batch(p)
-    merged = TDigest.merge_blobs([d.to_bytes() for d in digests])
+    merged = fold_blobs([d.to_bytes() for d in digests], TDigest.from_bytes)
     assert merged.n == pytest.approx(data.size)
     med = float(merged.quantile([0.5])[0])
     assert abs(med - np.median(data)) < 0.1
