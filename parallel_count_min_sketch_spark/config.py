@@ -46,6 +46,11 @@ class CMSConfig:
 
         return CountMinSketch(self.epsilon, self.delta, self.seed)
 
+    def from_bytes(self, blob: bytes):
+        from .sketches.cms import CountMinSketch
+
+        return CountMinSketch.from_bytes(blob, self.epsilon, self.delta)
+
     # ---- SQL emission (shared by Spark SQL and DuckDB oracles) ----------
     def bucket_sql(self, row: int, item_expr: str) -> str:
         """h_row(item) as pure BIGINT SQL: ((a*(x%p)+b)%p)%w."""

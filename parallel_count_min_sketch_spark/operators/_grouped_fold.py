@@ -1,10 +1,13 @@
-"""Shared scaffolding for the stacked (vectorized-across-groups) grouped
-fold accumulators — ``agg.GroupedCMSFold`` (scatter-add counters) and
+"""Shared scaffolding for the grouped sketch folds of ``sketch_agg``.
+
+The stacked (vectorized-across-groups) accumulators
+``sketch_agg.GroupedCMSFold`` (scatter-add counters) and
 ``sketch_agg.GroupedHLLFold`` (scatter-max registers) differ ONLY in their
 per-batch scatter; everything around it (null filtering, the weighted
 protocol, dictionary-encode -> slot mapping, geometric capacity growth,
 item extraction) is this base class, so a protocol fix lands in exactly
-one place.
+one place. ``iter_group_segments`` is the per-group-segment split the
+other grouped folds use.
 
 Weighted protocol (both kernels): negative weights rejected loudly,
 zero-weight rows dropped BEFORE item extraction (for string items the
@@ -23,12 +26,38 @@ import pyarrow as pa
 from ..sketches.hashing import djb2_batch
 
 
-def items_from_array(col: pa.Array, string_items: bool) -> np.ndarray:
-    """int64 item ids from an Arrow column: djb2 byte fold for strings
-    (reference hash), plain int64 view otherwise."""
+def items_from_array(col: pa.Array, string_items: bool,
+                     as_float: bool = False) -> np.ndarray:
+    """Sketch input values from an Arrow column: djb2 byte fold for
+    strings (reference hash), float64 for value sketches (KLL, t-digest),
+    plain int64 item ids otherwise."""
     if string_items:
         return djb2_batch(col)
-    return col.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+    dtype = np.float64 if as_float else np.int64
+    return col.to_numpy(zero_copy_only=False).astype(dtype, copy=False)
+
+
+def iter_group_segments(batch: pa.RecordBatch, values: np.ndarray,
+                        weights: np.ndarray | None = None):
+    """Yield (group_key, value_slice, weight_slice_or_None) per distinct
+    group of an Arrow batch whose column 0 holds the group key. Keys are
+    dictionary-encoded so only UNIQUE key strings ever cross into Python;
+    the segmenting argsort runs on int32 codes (matters for
+    high-cardinality groups — host, file)."""
+    import pyarrow.compute as pc
+
+    enc = pc.dictionary_encode(batch.column(0))
+    codes = enc.indices.to_numpy(zero_copy_only=False)
+    key_by_code = enc.dictionary.to_pylist()
+    order = np.argsort(codes, kind="stable")
+    sorted_codes = codes[order]
+    sorted_values = values[order]
+    sorted_w = weights[order] if weights is not None else None
+    uniq, starts = np.unique(sorted_codes, return_index=True)
+    bounds = np.append(starts, len(sorted_codes))
+    for code, lo, hi in zip(uniq, bounds[:-1], bounds[1:]):
+        yield (key_by_code[code], sorted_values[lo:hi],
+               sorted_w[lo:hi] if sorted_w is not None else None)
 
 
 class GroupedFoldBase:
@@ -116,8 +145,8 @@ class GroupedFoldBase:
 def salted_pre_shuffle(df, group_col: str, col: str, salt: int,
                        n_partitions: int | None, salt_seed: int):
     """One raw-row repartition on hash(group, item-salt % s) — the shared
-    pre-shuffle of the salted grouped builds (``agg.cms_grouped`` /
-    ``sketch_agg.sketch_grouped``): caps per-group partials at ``salt``
+    pre-shuffle of the salted grouped build (``sketch_agg.sketch_grouped``):
+    caps per-group partials at ``salt``
     per group instead of one per scan partition, while splitting hot
     groups over ``salt`` tasks (measured in BENCH/grouped_skew.json)."""
     from pyspark.sql import functions as F

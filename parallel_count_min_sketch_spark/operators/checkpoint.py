@@ -9,7 +9,7 @@ everything — the result is bit-identical to an uninterrupted build
 
 Layout of a checkpoint dir:
     meta.json            sketch config + n_partitions + input fingerprint
-    partials/*.parquet   rows (partition_id, rows_seen, total, sketch)
+    partials/*.parquet   rows (partition_id, rows_seen, sketch)
 
 Lineage granularity is the input partition (Spark's unit of recomputation).
 On a real Iceberg deployment the natural extension is file-level lineage
@@ -24,9 +24,12 @@ import json
 import os
 import time
 
+from pyspark.errors import AnalysisException
+
 from ..config import CMSConfig
 from ..sketches.cms import CountMinSketch
-from .agg import cms_grouped, cms_partials, cms_text_partials
+from .agg import cms_grouped
+from .sketch_agg import fold_blobs, sketch_partials, text_token_partials
 
 
 def _norm_uri(uri: str) -> str:
@@ -104,7 +107,7 @@ class CheckpointedCMSBuild:
             return set()
         try:
             rows = spark.read.parquet(self.partials_dir).select("partition_id").collect()
-        except Exception:  # noqa: BLE001 - empty/corrupt dir -> start over
+        except AnalysisException:  # empty dir: nothing completed yet
             return set()
         return {r["partition_id"] for r in rows}
 
@@ -155,10 +158,12 @@ class CheckpointedCMSBuild:
         if len(done) < n_partitions:
             skips = frozenset(done) if done else None
             todo = (
-                cms_text_partials(df, col, self.cfg, skip_partitions=skips)
+                text_token_partials(df, col, self.cfg.new_sketch,
+                                    skip_partitions=skips)
                 if text_mode
-                else cms_partials(df, col, self.cfg, string_items=string_items,
-                                  skip_partitions=skips)
+                else sketch_partials(df, col, self.cfg.new_sketch,
+                                     string_items=string_items,
+                                     skip_partitions=skips)
             )
             # one parquet file per task -> each partial is durable as soon as
             # its task finishes (executor loss loses only in-flight partitions)
@@ -171,9 +176,7 @@ class CheckpointedCMSBuild:
         if {r["partition_id"] for r in rows} != set(range(n_partitions)):
             missing = set(range(n_partitions)) - {r["partition_id"] for r in rows}
             raise RuntimeError(f"checkpoint incomplete after run: missing {missing}")
-        merged = CountMinSketch.merge_blobs(
-            (r["sketch"] for r in rows), self.cfg.epsilon, self.cfg.delta
-        )
+        merged = fold_blobs((r["sketch"] for r in rows), self.cfg.from_bytes)
         self.metrics = {
             "n_partitions": n_partitions,
             "partitions_skipped": len(done),
@@ -211,7 +214,7 @@ class FileCheckpointedCMSBuild:
             return set()
         try:
             rows = spark.read.parquet(self.partials_dir).select("group").collect()
-        except Exception:  # noqa: BLE001
+        except AnalysisException:  # empty dir: nothing completed yet
             return set()
         return {r["group"] for r in rows}
 
@@ -249,9 +252,9 @@ class FileCheckpointedCMSBuild:
         missing = wanted - set(by_path)
         if missing:
             raise RuntimeError(f"lineage incomplete after run: {missing}")
-        merged = CountMinSketch.merge_blobs(
+        merged = fold_blobs(
             (r["sketch"] for p, r in by_path.items() if p in wanted),
-            self.cfg.epsilon, self.cfg.delta,
+            self.cfg.from_bytes,
         )
         self.metrics = {
             "n_files": len(all_files),

@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..config import CMSConfig
 from ..memtune import tune_allocator
-from ..sketches.cms import CountMinSketch
 from ..sketches.hashing import djb2_batch
 from .sql_build import point_query_join
 
@@ -182,10 +181,9 @@ def partials_to_table(partials_df, cfg: CMSConfig):
     bounded by depth*width rows per partition regardless of input size."""
     def explode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tune_allocator()
-        eps, delta = cfg.epsilon, cfg.delta
         for batch in batches:
             for blob in batch.column(0).to_pylist():
-                sk = CountMinSketch.from_bytes(blob, eps, delta)
+                sk = cfg.from_bytes(blob)
                 rows, cols = np.nonzero(sk.table)
                 yield pa.RecordBatch.from_arrays(
                     [pa.array(rows.astype(np.int32)),

@@ -1,21 +1,23 @@
-"""Time-bucketed CMS rollup: the materialized-rollup / hypertable pattern.
+"""Time-bucketed sketch rollup: the materialized-rollup / hypertable pattern.
 
 At 100 TB an events table is append-only and time-partitioned; rebuilding a
 sketch per ad-hoc time-range query would rescan the corpus every time.
-Instead we materialize ONE small CMS per time bucket (day) — a rollup table
-of KB-sized blobs, built in a single scan on the grouped two-phase rails
-(operators/agg.cms_grouped) — and answer any [lo, hi] range query by
-merging just the covered bucket sketches. CMS is linear in its input
-multiset (counters are sums), so the merge of per-day sketches is
-BIT-IDENTICAL to a sketch built directly over the date-filtered rows —
-the same element-wise merge the reference uses across MPI ranks
-(reference: src/mpi/mpiV2.c:163-175), applied across time partitions
-instead of ranks. Build cost amortizes across every future range query;
-query cost is O(n_buckets) KB-blobs, independent of corpus size.
+Instead we materialize ONE small sketch per time bucket (day) — a rollup
+table of KB-sized blobs, built in a single scan on the grouped two-phase
+rails (``sketch_agg.sketch_grouped``) — and answer any [lo, hi] range query
+by merging just the covered bucket sketches. Every kernel rides the same
+functions, given as ``(make_sketch, from_bytes)``: for a CMS pass
+``(cfg.new_sketch, cfg.from_bytes)``. CMS is linear in its input multiset
+(counters are sums), so the merge of per-day sketches is BIT-IDENTICAL to
+a sketch built directly over the date-filtered rows — the same
+element-wise merge the reference uses across MPI ranks (reference:
+src/mpi/mpiV2.c:163-175), applied across time partitions instead of
+ranks. Build cost amortizes across every future range query; query cost
+is O(n_buckets) KB-blobs, independent of corpus size.
 
 In production the bucket DataFrame would be written once as a parquet
-rollup table partitioned by bucket (operators/checkpoint.py handles blob
-persistence); bucket-range predicates then prune partitions at scan time.
+rollup table partitioned by bucket (``write_rollup``); bucket-range
+predicates then prune partitions at scan time.
 """
 
 from __future__ import annotations
@@ -24,12 +26,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..config import CMSConfig
-from ..sketches.cms import CountMinSketch
-from .agg import cms_grouped, merge_partials
 from .sketch_agg import fold_blobs, merge_sketch_partials, sketch_grouped
-
-ROLLUP_SCHEMA = "bucket STRING, rows_seen LONG, total LONG, sketch BINARY"
 
 
 def _day_bucket(df: DataFrame, ts_col: str) -> DataFrame:
@@ -42,77 +39,30 @@ def _day_bucket(df: DataFrame, ts_col: str) -> DataFrame:
     return df.withColumn("__bucket", F.col(ts_col).cast("date").cast("string"))
 
 
-def cms_time_buckets(df, ts_col: str, item_col: str, cfg: CMSConfig, *,
-                     string_items: bool = False,
-                     pre_aggregate: bool = False) -> DataFrame:
-    """DataFrame[bucket, rows_seen, total, sketch]: one merged CMS per
-    calendar day of ``ts_col`` (TIMESTAMP_NTZ-safe: cast to DATE then
-    STRING, timezone-independent and replayable as DuckDB's
-    CAST(ts AS DATE)). Rows with a NULL timestamp or NULL item are
-    dropped, mirroring the grouped rails' NULL policy.
-
-    ``pre_aggregate`` picks the distinct-first plan. Use it iff
-    distinct (day, item) pairs ≪ rows (hot-key traffic, log-ingest
-    arrival where each input split covers few days): it trades one
-    extra (day, item) shuffle for an Arrow channel that moves O(pairs)
-    weighted rows instead of O(occurrences). Measured both ways at
-    100M rows in BENCH/rollup_scale{,_clustered}.json — 1.5x faster at
-    7.3M pairs, slower when pairs are near-unique."""
-    bucketed = _day_bucket(df, ts_col)
-    if pre_aggregate:
-        # collapse to (day, DISTINCT item, count) first: Catalyst's
-        # partial/final agg does the heavy per-occurrence counting
-        # JVM-side with map-side combine, and the Arrow channel then
-        # moves one weighted row per distinct (day, item) instead of one
-        # per occurrence. CMS weighted updates are the same integer sums,
-        # so the bucket sketches are BIT-IDENTICAL (tested) — the grouped
-        # sibling of sql_build's distinct-first plan.
-        pre = bucketed.groupBy("__bucket", item_col).agg(
-            F.count("*").alias("__w"))
-        out = cms_grouped(pre, "__bucket", item_col, cfg,
-                          string_items=string_items, weight_col="__w")
-    else:
-        out = cms_grouped(bucketed, "__bucket", item_col, cfg,
-                          string_items=string_items)
-    return (
-        out.withColumnRenamed("group", "bucket")
-    )
-
-
-def cms_rollup_range(buckets_df: DataFrame, lo: str, hi: str,
-                     cfg: CMSConfig) -> CountMinSketch:
-    """Merge the bucket sketches with ``lo <= bucket <= hi`` (ISO date
-    strings — lexicographic order IS chronological order) into one CMS via
-    the fan-in merge. An empty range yields the zero sketch of the same
-    config. The caller should persist ``buckets_df`` when issuing several
-    range queries against one rollup build."""
-    sel = buckets_df.filter(
-        (F.col("bucket") >= F.lit(lo)) & (F.col("bucket") <= F.lit(hi))
-    )
-    return merge_partials(sel, cfg)
-
-
 def sketch_time_buckets(df: DataFrame, ts_col: str, item_col: str,
                         make_sketch: Callable, from_bytes: Callable, *,
                         string_items: bool = False,
                         as_float: bool = False,
                         pre_aggregate: bool = False) -> DataFrame:
-    """Kernel-generic time-bucket rollup on the grouped rails: one merged
-    sketch per calendar day of ``ts_col`` for ANY kernel implementing the
-    update_batch/merge/to_bytes protocol — per-day HLLs (distinct users
-    per day), Blooms, KLLs ride the same two-phase shape as the CMS
-    rollup. Returns DataFrame[bucket, rows_seen, sketch].
+    """DataFrame[bucket, rows_seen, sketch]: one merged sketch per
+    calendar day of ``ts_col`` for ANY kernel implementing the
+    update_batch/merge/to_bytes protocol — per-day CMS (frequencies), HLL
+    (distinct users per day), Bloom, KLL. Rows with a NULL timestamp or
+    NULL item are dropped, mirroring the grouped rails' NULL policy.
 
-    ``pre_aggregate=True`` collapses to (day, DISTINCT item, count)
-    JVM-side first (Catalyst partial/final agg with map-side combine) so
-    the Arrow channel moves one weighted row per distinct (day, item)
-    instead of one per occurrence — the generic sibling of
-    ``cms_time_buckets(pre_aggregate=True)``. State is identical through
-    each kernel's WEIGHTED protocol: bit-equal for 'invariant' kernels
-    (HLL/Bloom/KMV ignore counts) and 'native' ones (MG adds them);
-    'repeat' kernels (KLL/t-digest) see the same multiset but a different
-    arrival order, so bytes may differ while the published bounds hold —
-    the usual repartition caveat."""
+    ``pre_aggregate=True`` picks the distinct-first plan: collapse to
+    (day, DISTINCT item, count) JVM-side first (Catalyst partial/final agg
+    with map-side combine), so the Arrow channel moves one weighted row
+    per distinct (day, item) instead of one per occurrence. Use it iff
+    distinct (day, item) pairs << rows (hot-key traffic, log-ingest
+    arrival where each input split covers few days): measured for CMS at
+    100M rows in BENCH/rollup_scale{,_clustered}.json — 1.5x faster at
+    7.3M pairs, slower when pairs are near-unique. State is identical
+    through each kernel's WEIGHTED protocol: bit-equal for 'native'
+    kernels (CMS and MG add the counts) and 'invariant' ones (HLL/Bloom/
+    KMV ignore them); 'repeat' kernels (KLL/t-digest) see the same
+    multiset but a different arrival order, so bytes may differ while the
+    published bounds hold — the usual repartition caveat."""
     bucketed = _day_bucket(df, ts_col)
     if pre_aggregate:
         pre = bucketed.groupBy("__bucket", item_col).agg(
@@ -129,13 +79,14 @@ def sketch_time_buckets(df: DataFrame, ts_col: str, item_col: str,
 
 def sketch_rollup_range(buckets_df: DataFrame, lo: str, hi: str,
                         make_sketch: Callable, from_bytes: Callable):
-    """Merge the bucket sketches with ``lo <= bucket <= hi`` into one
-    sketch via the associative fan-in merge — the kernel-generic sibling of
-    :func:`cms_rollup_range`. Sum-merge kernels (CMS) give a sketch
-    bit-identical to a direct build over the range; idempotent merges
-    (HLL max, Bloom OR) give the EXACT same state a direct build would
-    because day buckets partition the rows (each row lands in exactly one
-    bucket). An empty range yields ``make_sketch()`` untouched."""
+    """Merge the bucket sketches with ``lo <= bucket <= hi`` (ISO date
+    strings — lexicographic order IS chronological order) into one sketch
+    via the associative fan-in merge. Sum-merge kernels (CMS) give a
+    sketch bit-identical to a direct build over the range; idempotent
+    merges (HLL max, Bloom OR) give the EXACT same state a direct build
+    would because day buckets partition the rows (each row lands in
+    exactly one bucket). An empty range yields ``make_sketch()``
+    untouched."""
     sel = buckets_df.filter(
         (F.col("bucket") >= F.lit(lo)) & (F.col("bucket") <= F.lit(hi))
     )
@@ -150,7 +101,7 @@ def rollup_range_collect(buckets_df: DataFrame, lo: str, hi: str,
     the store regime's whole point) and fold them driver-side in bucket
     order. Returns ``(rows, sketch_or_None)``.
 
-    Unlike the range merges above, the caller also gets the covered rows,
+    Unlike :func:`sketch_rollup_range`, the caller also gets the covered rows,
     and the driver fold runs the same ``merge()`` calls in a
     deterministic (bucket-sorted) order: bit-identical for sum-merge
     (CMS) and idempotent (HLL/Bloom/KMV) kernels; for order-sensitive

@@ -7,7 +7,9 @@ t-digest alike (the north-star's "mergeable Arrow-vectorized aggregation"):
 one serialized partial per partition via ``mapInArrow``, then an
 associative fan-in merge (``merge_sketch_partials``). Element-wise-sum
 merges (CMS), max merges (HLL), OR merges (Bloom) and compaction merges
-(KLL/t-digest) all ride the same rails — only the kernel differs.
+(KLL/t-digest) all ride the same rails — only the kernel differs. This is
+the reference's per-rank partial sketch + MPI_Reduce merge
+(src/mpi/mpiV2.c:131-175); ``agg.py`` only binds a ``CMSConfig`` to it.
 """
 
 from __future__ import annotations
@@ -19,8 +21,11 @@ import numpy as np
 import pyarrow as pa
 
 from ..memtune import tune_allocator
+from ..sketches.cms import CountMinSketch
 from ..sketches.hashing import djb2_batch
-from ._grouped_fold import GroupedFoldBase, salted_pre_shuffle
+from ..sketches.hll import HyperLogLog
+from ._grouped_fold import (GroupedFoldBase, items_from_array,
+                            iter_group_segments, salted_pre_shuffle)
 
 PARTIAL_SCHEMA = "partition_id INT, rows_seen LONG, sketch BINARY"
 _PARTIAL_PA = pa.schema(
@@ -35,6 +40,18 @@ def _task_partition_id() -> int:
 
     ctx = TaskContext.get()
     return ctx.partitionId() if ctx is not None else -1
+
+
+def _partial_batch(rows: int, sk) -> pa.RecordBatch:
+    """The one partial row of this task: (partition_id, rows_seen, sketch)."""
+    return pa.RecordBatch.from_pydict(
+        {
+            "partition_id": [_task_partition_id()],
+            "rows_seen": [rows],
+            "sketch": [sk.to_bytes()],
+        },
+        schema=_PARTIAL_PA,
+    )
 
 
 def _weighted_update(sk, values: np.ndarray, weights: np.ndarray | None) -> int:
@@ -116,16 +133,23 @@ def _update_repeat_bounded(sk, values: np.ndarray, weights: np.ndarray,
 
 def sketch_partials(df, col: str, make_sketch: Callable, *,
                     weight_col: str | None = None,
-                    string_items: bool = False, as_float: bool = False):
-    """One serialized partial sketch per input partition. ``weight_col``
-    feeds pre-aggregated ``(item, count)`` inputs — the common production
-    shape — through the same rails (exactness per kernel documented in
-    ``_weighted_update``)."""
+                    string_items: bool = False, as_float: bool = False,
+                    skip_partitions: frozenset[int] | None = None):
+    """DataFrame[partition_id, rows_seen, sketch] with exactly one row per
+    input partition (the per-rank partial sketch, reference
+    src/mpi/mpiV2.c:131-140). ``weight_col`` feeds pre-aggregated
+    ``(item, count)`` inputs — the common production shape — through the
+    same rails (exactness per kernel documented in ``_weighted_update``);
+    ``rows_seen`` then counts logical mass. ``skip_partitions``:
+    checkpointed partitions whose compute (and output row) is skipped on
+    resume."""
     cols = [col] + ([weight_col] if weight_col else [])
     proj = df.select(*cols)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tune_allocator()
+        if skip_partitions and _task_partition_id() in skip_partitions:
+            return
         sk = make_sketch()
         rows = 0
         for batch in batches:
@@ -146,23 +170,11 @@ def sketch_partials(df, col: str, make_sketch: Callable, *,
                 else None
             )
             for lo in range(0, len(c), _CHUNK):
-                chunk = c.slice(lo, _CHUNK)
-                if string_items:
-                    values = djb2_batch(chunk)
-                elif as_float:
-                    values = chunk.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-                else:
-                    values = chunk.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+                values = items_from_array(c.slice(lo, _CHUNK), string_items,
+                                          as_float)
                 w = w_all[lo:lo + _CHUNK] if w_all is not None else None
                 rows += _weighted_update(sk, values, w)
-        yield pa.RecordBatch.from_pydict(
-            {
-                "partition_id": [_task_partition_id()],
-                "rows_seen": [rows],
-                "sketch": [sk.to_bytes()],
-            },
-            schema=_PARTIAL_PA,
-        )
+        yield _partial_batch(rows, sk)
 
     return proj.mapInArrow(fold, PARTIAL_SCHEMA)
 
@@ -226,7 +238,8 @@ def build_sketch(df, col: str, make_sketch: Callable, from_bytes: Callable, *,
 
 
 def text_token_partials(df, text_col: str, make_sketch: Callable, *,
-                        sep: str = " "):
+                        sep: str = " ",
+                        skip_partitions: frozenset[int] | None = None):
     """Kernel-generic doc-local token build: tokenize each Arrow batch in
     Arrow C kernels, collapse to (distinct token, count) with value_counts,
     djb2 ONCE per distinct token, and feed the kernel through the WEIGHTED
@@ -234,24 +247,30 @@ def text_token_partials(df, text_col: str, make_sketch: Callable, *,
     not 100x as many single-token rows (measured 10x on the Misra-Gries
     build, BENCH/sketch_family_scale.json). Exact per kernel: 'native'
     kernels take the counts, 'invariant' ones (distinct/membership) drop
-    them, 'repeat'-mode kernels expand bounded."""
+    them, 'repeat'-mode kernels expand bounded. ``skip_partitions`` as in
+    :func:`sketch_partials`."""
     import pyarrow.compute as pc
 
     proj = df.select(text_col)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tune_allocator()
+        if skip_partitions and _task_partition_id() in skip_partitions:
+            return
         sk = make_sketch()
         rows = 0
         for batch in batches:
             col = batch.column(0)
             if col.null_count:
                 col = col.drop_null()
+            # tokenize + flatten + filter entirely in Arrow C kernels
             tokens = pc.list_flatten(pc.split_pattern(col, sep))
             if len(tokens):
                 tokens = pc.filter(tokens, pc.not_equal(tokens, ""))
             if len(tokens) == 0:
                 continue
+            # (distinct token, count) in Arrow C before hashing: djb2 and
+            # the counter update run once per DISTINCT token per batch
             vc = pc.value_counts(tokens)
             vals = vc.field("values")
             counts = vc.field("counts").to_numpy(zero_copy_only=False) \
@@ -260,14 +279,7 @@ def text_token_partials(df, text_col: str, make_sketch: Callable, *,
                 chunk = vals.slice(lo, _CHUNK)
                 w = counts[lo:lo + _CHUNK]
                 rows += _weighted_update(sk, djb2_batch(chunk), w)
-        yield pa.RecordBatch.from_pydict(
-            {
-                "partition_id": [_task_partition_id()],
-                "rows_seen": [rows],
-                "sketch": [sk.to_bytes()],
-            },
-            schema=_PARTIAL_PA,
-        )
+        yield _partial_batch(rows, sk)
 
     return proj.mapInArrow(fold, PARTIAL_SCHEMA)
 
@@ -280,10 +292,11 @@ def build_sketch_from_text(df, text_col: str, make_sketch: Callable,
 
 
 # ---------------------------------------------------------------------------
-# Per-group sketches on the generic rails (one HLL per lang, one KLL per
-# host, ...). Same two-phase, skew-proof shape as operators/agg.cms_grouped:
-# phase 1 emits bounded per-(partition, group) partials; phase 2 shuffles
-# only those small rows and merges per group.
+# Per-group sketches (one CMS per lang, one HLL per host, one KLL per day,
+# ...). Two-phase to stay skew-proof: phase 1 emits bounded
+# per-(partition, group) partials; phase 2 shuffles only those small rows
+# and merges per group — a hot group never concentrates raw rows on one
+# task.
 # ---------------------------------------------------------------------------
 GROUPED_SCHEMA = "group STRING, rows_seen LONG, sketch BINARY"
 _GROUPED_PA = pa.schema(
@@ -291,24 +304,99 @@ _GROUPED_PA = pa.schema(
 )
 
 
+def _grouped_batch(groups: list, rows: list, blobs: list) -> pa.RecordBatch:
+    """One RecordBatch of (group, rows_seen, sketch) partial rows — ONE
+    copy of the grouped emit contract for every grouped builder."""
+    return pa.RecordBatch.from_pydict(
+        {"group": groups, "rows_seen": rows, "sketch": blobs},
+        schema=_GROUPED_PA,
+    )
+
+
 def _emit_grouped_partials(sketches: dict, counts: dict):
-    """The shared tail of every grouped partial builder: one RecordBatch
-    of (group, rows_seen, sketch) rows for this partition — ONE copy of
-    the emit contract, so a schema change lands in every builder."""
+    """The tail of the per-group-segment builders (dict of sketches)."""
     if sketches:
-        yield pa.RecordBatch.from_pydict(
-            {
-                "group": list(sketches.keys()),
-                "rows_seen": [counts[g] for g in sketches],
-                "sketch": [sketches[g].to_bytes() for g in sketches],
-            },
-            schema=_GROUPED_PA,
-        )
+        yield _grouped_batch(list(sketches), [counts[g] for g in sketches],
+                             [sk.to_bytes() for sk in sketches.values()])
+
+
+class GroupedCMSFold(GroupedFoldBase):
+    """Task-level grouped-CMS accumulator, vectorized ACROSS groups.
+
+    The per-group-segment fold (dict of sketches + ``iter_group_segments``)
+    collapses at high group cardinality: a 10k-row Arrow batch spread over
+    5k groups yields ~2-row segments, so per-segment Python overhead — not
+    counter arithmetic — dominates (measured 5x slower than even a naive
+    shuffle-by-group plan at 50M rows / 5k hosts). This class instead keeps
+    ONE stacked ``(slot, depth, width)`` counter array for all groups the
+    task has seen and scatter-adds every row of a batch in a single
+    ``np.add.at`` call: cost is O(depth * rows) independent of how many
+    groups the rows land in. Memory equals the dict-of-sketches layout
+    (one (depth, width) table per distinct group in the partition), grown
+    geometrically. Null filtering, the weighted protocol ('native': weights
+    add into counters) and the group->slot mapping live in the shared
+    ``_grouped_fold.GroupedFoldBase``.
+
+    Counter updates commute with the per-sketch path bit-for-bit: the same
+    int64 additions land in the same (depth, bucket) cells, so partials are
+    byte-identical to a per-group sequential build (tested).
+    """
+
+    __slots__ = ("proto", "depth", "width", "_tables", "_totals")
+
+    def __init__(self, proto: CountMinSketch, *, string_items: bool = False,
+                 weighted: bool = False):
+        super().__init__(string_items=string_items, weighted=weighted)
+        self.proto = proto
+        self.depth, self.width = proto.depth, proto.width
+        self._tables = np.zeros((0, self.depth, self.width), dtype=np.int64)
+        self._totals = np.zeros(0, dtype=np.int64)
+
+    def _capacity(self) -> int:
+        return self._tables.shape[0]
+
+    def _grow(self, new_cap: int) -> None:
+        cap = self._tables.shape[0]
+        tables = np.zeros((new_cap, self.depth, self.width), dtype=np.int64)
+        tables[:cap] = self._tables
+        self._tables = tables
+        totals = np.zeros(new_cap, dtype=np.int64)
+        totals[:cap] = self._totals
+        self._totals = totals
+
+    def _scatter(self, slots: np.ndarray, items: np.ndarray,
+                 wts: np.ndarray | None) -> None:
+        h = self.proto.buckets(items)  # (depth, n)
+        # flat scatter index: slot*(d*w) + j*w + h[j] for every (j, row)
+        base = slots * np.int64(self.depth * self.width)
+        idx = (base[None, :]
+               + (np.arange(self.depth, dtype=np.int64) * self.width)[:, None]
+               + h).ravel()
+        flat = self._tables.reshape(-1)
+        if wts is None:
+            np.add.at(flat, idx, 1)
+            np.add.at(self._totals, slots, 1)
+        else:
+            np.add.at(flat, idx,
+                      np.broadcast_to(wts, (self.depth, wts.size)).ravel())
+            np.add.at(self._totals, slots, wts)
+
+    def result_batch(self) -> pa.RecordBatch | None:
+        """One partial row per group seen; rows_seen is the group's
+        logical mass, the sketch's own ``total``."""
+        if not self._keys:
+            return None
+        p = self.proto
+        totals = self._totals[:len(self._keys)].tolist()
+        blobs = [CountMinSketch(p.epsilon, p.delta, p.seed, table=self._tables[s],
+                                total=t).to_bytes()
+                 for s, t in enumerate(totals)]
+        return _grouped_batch(self._keys, totals, blobs)
 
 
 class GroupedHLLFold(GroupedFoldBase):
     """Task-level grouped-HLL accumulator, vectorized ACROSS groups — the
-    max-merge twin of ``agg.GroupedCMSFold``. One stacked (slot, m)
+    max-merge twin of :class:`GroupedCMSFold`. One stacked (slot, m)
     register array for every group the task has seen; each Arrow batch
     folds in a single ``np.maximum.at`` scatter, so cost is O(rows)
     independent of group cardinality (the per-group-segment fold degrades
@@ -324,8 +412,6 @@ class GroupedHLLFold(GroupedFoldBase):
 
     def __init__(self, precision: int, seed: int, *, string_items: bool = False,
                  weighted: bool = False):
-        from ..sketches.hll import HyperLogLog
-
         super().__init__(string_items=string_items, weighted=weighted)
         self.proto = HyperLogLog(precision, seed)
         self.m = self.proto.m
@@ -354,17 +440,23 @@ class GroupedHLLFold(GroupedFoldBase):
     def result_batch(self) -> pa.RecordBatch | None:
         if not self._keys:
             return None
-        from ..sketches.hll import HyperLogLog
-
         n = len(self._keys)
         blobs = [HyperLogLog(self.proto.precision, self.proto.seed,
                              registers=self._regs[s]).to_bytes()
                  for s in range(n)]
-        return pa.RecordBatch.from_pydict(
-            {"group": self._keys, "rows_seen": self._rows[:n].tolist(),
-             "sketch": blobs},
-            schema=_GROUPED_PA,
-        )
+        return _grouped_batch(self._keys, self._rows[:n].tolist(), blobs)
+
+
+def _stacked_fold(sk, **kw) -> GroupedFoldBase | None:
+    """The stacked accumulator for the kernel's EXACT type — scatter-add
+    for CountMinSketch, scatter-max for HyperLogLog — or None, which
+    selects the per-group-segment fold (any other kernel, or a subclass
+    whose update may differ)."""
+    if type(sk) is CountMinSketch:
+        return GroupedCMSFold(sk, **kw)
+    if type(sk) is HyperLogLog:
+        return GroupedHLLFold(sk.precision, sk.seed, **kw)
+    return None
 
 
 def sketch_grouped_partials(df, group_col: str, col: str, make_sketch: Callable, *,
@@ -372,30 +464,24 @@ def sketch_grouped_partials(df, group_col: str, col: str, make_sketch: Callable,
                             weight_col: str | None = None):
     cols = [group_col, col] + ([weight_col] if weight_col else [])
     proj = df.select(*cols)
+    weighted = weight_col is not None
 
-    sample = make_sketch()
-    from ..sketches.hll import HyperLogLog
+    if not as_float and _stacked_fold(make_sketch()) is not None:
 
-    if isinstance(sample, HyperLogLog) and not as_float:
-        precision, seed = sample.precision, sample.seed
-        weighted = weight_col is not None
-
-        def fold_hll(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        def fold_stacked(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             tune_allocator()
-            acc = GroupedHLLFold(precision, seed, string_items=string_items,
-                                 weighted=weighted)
+            acc = _stacked_fold(make_sketch(), string_items=string_items,
+                                weighted=weighted)
             for batch in batches:
                 acc.update(batch)
             out = acc.result_batch()
             if out is not None:
                 yield out
 
-        return proj.mapInArrow(fold_hll, GROUPED_SCHEMA)
+        return proj.mapInArrow(fold_stacked, GROUPED_SCHEMA)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
-
-        from .agg import iter_group_segments
 
         tune_allocator()
         sketches: dict[str, object] = {}
@@ -408,13 +494,7 @@ def sketch_grouped_partials(df, group_col: str, col: str, make_sketch: Callable,
                 batch = batch.filter(keep)
             if batch.num_rows == 0:
                 continue
-            vals_col = batch.column(1)
-            if string_items:
-                values = djb2_batch(vals_col)
-            elif as_float:
-                values = vals_col.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-            else:
-                values = vals_col.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+            values = items_from_array(batch.column(1), string_items, as_float)
             w_all = (batch.column(2).to_numpy(zero_copy_only=False)
                      .astype(np.int64, copy=False) if weight_col else None)
             for g, seg, wseg in iter_group_segments(batch, values, w_all):
@@ -462,12 +542,14 @@ def sketch_grouped(df, group_col: str, col: str, make_sketch: Callable,
     before phase 1 — use at HIGH group cardinality, where otherwise every
     scan partition emits a partial for every group and phase-2 shuffle
     volume is partitions x groups x blob bytes; salting caps it at
-    groups x s while splitting hot groups over s tasks (same trade-off as
-    ``agg.cms_grouped``, measured in BENCH/grouped_skew.json). CMS/HLL/
-    Bloom/KMV merge to identical state under any partitioning; KLL and
-    t-digest state depends on how rows were grouped into partials
-    (randomized compaction / centroid order), but their published error
-    bounds hold regardless — same caveat as any repartition."""
+    groups x s while splitting hot groups over s tasks (measured in
+    BENCH/grouped_skew.json). The salt is a deterministic hash of the item
+    column seeded by ``salt_seed``, so re-runs and retries repartition
+    identically. CMS/HLL/Bloom/KMV merge to identical state under any
+    partitioning; KLL and t-digest state depends on how rows were grouped
+    into partials (randomized compaction / centroid order), but their
+    published error bounds hold regardless — same caveat as any
+    repartition."""
     src = df
     if pre_shuffle_salt:
         src = salted_pre_shuffle(df, group_col, col, pre_shuffle_salt,
@@ -493,8 +575,6 @@ def text_token_grouped_partials(df, group_col: str, text_col: str,
     proj = df.select(group_col, text_col)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .agg import iter_group_segments
-
         tune_allocator()
         sketches: dict[str, object] = {}
         counts: dict[str, int] = {}

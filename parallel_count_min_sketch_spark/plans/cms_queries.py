@@ -665,8 +665,7 @@ def q_cms_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     query cost scales with days covered, not corpus size."""
     import numpy as np
 
-    from ..operators.rollup import cms_time_buckets, rollup_range_collect
-    from ..sketches.cms import CountMinSketch
+    from ..operators.rollup import rollup_range_collect, sketch_time_buckets
 
     ev = load(spark, sf_dir, "events").select("ts", "user_id")
     # r6: only the queried day range feeds the build — day sketches are
@@ -681,16 +680,13 @@ def q_cms_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct-first build: groupBy(day, user) count JVM-side, then one
     # weighted Arrow row per distinct pair — bit-identical to the
     # per-occurrence plan (test_pre_aggregate_rollup_build_is_bit_identical)
-    buckets = cms_time_buckets(
-        ev, "ts", "user_id", ROLLUP_CFG, pre_aggregate=True
+    buckets = sketch_time_buckets(
+        ev, "ts", "user_id", ROLLUP_CFG.new_sketch, ROLLUP_CFG.from_bytes,
+        pre_aggregate=True
     )
-    # r6: ONE job — collect the <= span-many KB day blobs and fold
-    # driver-side (rollup_range_collect; replaces persist + count +
-    # isEmpty + treeReduce, bit-identical CMS sums)
+    # ONE job — collect the <= span-many KB day blobs and fold driver-side
     rows, sk = rollup_range_collect(
-        buckets, ROLLUP_LO, ROLLUP_HI,
-        lambda b: CountMinSketch.from_bytes(
-            b, ROLLUP_CFG.epsilon, ROLLUP_CFG.delta))
+        buckets, ROLLUP_LO, ROLLUP_HI, ROLLUP_CFG.from_bytes)
     sel_days = len(rows)
     if sk is None:
         sk = ROLLUP_CFG.new_sketch()
@@ -726,7 +722,7 @@ def q_stream_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import numpy as np
 
-    from ..operators.rollup import cms_rollup_range, cms_time_buckets
+    from ..operators.rollup import sketch_rollup_range, sketch_time_buckets
     from ..streaming.stream_rollup import (
         compact_rollup,
         read_stream_rollup,
@@ -745,22 +741,23 @@ def q_stream_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src)
         )
         store = os.path.join(tmp, "store")
-        q = start_rollup_stream(stream, ROLLUP_CFG, "ts", "user_id", store,
+        mk, fb = ROLLUP_CFG.new_sketch, ROLLUP_CFG.from_bytes
+        q = start_rollup_stream(stream, mk, fb, "ts", "user_id", store,
                                 os.path.join(tmp, "ckpt"))
         if not q.awaitTermination(300):
             raise TimeoutError("rollup stream did not drain within 300s")
 
         streamed_df = read_stream_rollup(spark, store)
         n_batches = streamed_df.select("batch_id").distinct().count()
-        sk_stream = cms_rollup_range(streamed_df, ROLLUP_LO, ROLLUP_HI,
-                                     ROLLUP_CFG)
+        sk_stream = sketch_rollup_range(streamed_df, ROLLUP_LO, ROLLUP_HI,
+                                        mk, fb)
         compacted = os.path.join(tmp, "compacted")
-        compact_rollup(spark, store, compacted, ROLLUP_CFG)
-        sk_compact = cms_rollup_range(spark.read.parquet(compacted),
-                                      ROLLUP_LO, ROLLUP_HI, ROLLUP_CFG)
-        sk_batch = cms_rollup_range(
-            cms_time_buckets(ev, "ts", "user_id", ROLLUP_CFG),
-            ROLLUP_LO, ROLLUP_HI, ROLLUP_CFG)
+        compact_rollup(spark, store, compacted, fb)
+        sk_compact = sketch_rollup_range(spark.read.parquet(compacted),
+                                         ROLLUP_LO, ROLLUP_HI, mk, fb)
+        sk_batch = sketch_rollup_range(
+            sketch_time_buckets(ev, "ts", "user_id", mk, fb),
+            ROLLUP_LO, ROLLUP_HI, mk, fb)
         est49 = int(sk_stream.point_query(
             np.array([49], dtype=np.int64))[0])
         row = (
@@ -842,21 +839,18 @@ def q_rollup_day_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle gates both numbers and the CMS one-sided overestimate
     guarantee (est >= exact, by the same min-of-row-dots argument as the
     point query)."""
-    from ..operators.rollup import cms_time_buckets
-    from ..sketches.cms import CountMinSketch
+    from ..operators.rollup import sketch_time_buckets
 
     ev = load(spark, sf_dir, "events").select("ts", "user_id")
-    # r6: only the two compared days feed the build (day sketches are
+    # only the two compared days feed the build (day sketches are
     # independent — identical in-range sketches, 2/30 of the day work),
     # and BOTH day blobs come back in ONE collect folded driver-side
-    # (rollup_range_collect; replaces persist + 2x(isEmpty+treeReduce))
     ev = ev.filter(
         (F.to_date("ts") == F.lit(OVERLAP_DAY_A).cast("date"))
         | (F.to_date("ts") == F.lit(OVERLAP_DAY_B).cast("date")))
-    buckets = cms_time_buckets(
-        ev, "ts", "user_id", ROLLUP_CFG, pre_aggregate=True)
-    _fb = lambda b: CountMinSketch.from_bytes(
-        b, ROLLUP_CFG.epsilon, ROLLUP_CFG.delta)
+    buckets = sketch_time_buckets(
+        ev, "ts", "user_id", ROLLUP_CFG.new_sketch, ROLLUP_CFG.from_bytes,
+        pre_aggregate=True)
     lo = min(OVERLAP_DAY_A, OVERLAP_DAY_B)
     hi = max(OVERLAP_DAY_A, OVERLAP_DAY_B)
     blob_rel = (
@@ -892,7 +886,8 @@ def q_rollup_day_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _day_sk(day: str):
         blob = day_blobs.get(day)
-        return _fb(blob) if blob is not None else ROLLUP_CFG.new_sketch()
+        return (ROLLUP_CFG.from_bytes(blob) if blob is not None
+                else ROLLUP_CFG.new_sketch())
 
     ska, skb = _day_sk(OVERLAP_DAY_A), _day_sk(OVERLAP_DAY_B)
     est = int(ska.inner_product(skb))

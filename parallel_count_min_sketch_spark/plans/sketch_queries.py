@@ -542,7 +542,6 @@ def q_cms_grouped_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..config import CMSConfig
     from ..operators.agg import cms_grouped
     from ..operators.sketch_agg import finalize_grouped
-    from ..sketches.cms import CountMinSketch
     from ..sketches.hashing import djb2_py
 
     cfg = CMSConfig(epsilon=0.001, delta=0.1, seed=12345)
@@ -552,12 +551,11 @@ def q_cms_grouped_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("tok") != "")
     grouped = cms_grouped(toks, "lang", "tok", cfg, string_items=True)
     probe = int(djb2_py("key"))
-    eps, delta = cfg.epsilon, cfg.delta
 
     def fin(row: dict) -> list[tuple]:
-        sk = CountMinSketch.from_bytes(row["sketch"], eps, delta)
+        sk = cfg.from_bytes(row["sketch"])
         est = int(sk.point_query(np.array([probe], dtype=np.int64))[0])
-        return [(row["group"], int(row["total"]), est)]
+        return [(row["group"], sk.total, est)]
 
     out = finalize_grouped(
         grouped, fin, "lang STRING, total_tokens BIGINT, est_key BIGINT",
@@ -813,16 +811,10 @@ def q_kll_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.rollup import sketch_rollup_range, sketch_time_buckets
 
     ev = load(spark, sf_dir, "events")
-    # persist: sketch_rollup_range's isEmpty() probe + merge are two jobs —
-    # without it the whole per-day build runs twice (same pattern as the
-    # CMS/HLL pillars)
     buckets = sketch_time_buckets(ev, "ts", "value", _mk_kll, _kll_from_bytes,
-                                  as_float=True).persist()
-    try:
-        sk = sketch_rollup_range(buckets, ROLLUP_LO, ROLLUP_HI, _mk_kll,
-                                 _kll_from_bytes)
-    finally:
-        buckets.unpersist()
+                                  as_float=True)
+    sk = sketch_rollup_range(buckets, ROLLUP_LO, ROLLUP_HI, _mk_kll,
+                             _kll_from_bytes)
     sel = ev.filter(
         (F.col("ts").cast("date").cast("string") >= ROLLUP_LO)
         & (F.col("ts").cast("date").cast("string") <= ROLLUP_HI)

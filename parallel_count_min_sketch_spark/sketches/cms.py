@@ -242,16 +242,5 @@ class CountMinSketch:
             raise ValueError("(eps, delta) do not match serialized dims")
         return sk
 
-    @staticmethod
-    def merge_blobs(blobs, epsilon: float = 0.001, delta: float = 0.1) -> "CountMinSketch":
-        """Merge an iterable of serialized sketches (order-independent)."""
-        out = None
-        for blob in blobs:
-            sk = CountMinSketch.from_bytes(bytes(blob), epsilon, delta)
-            out = sk if out is None else out.merge(sk)
-        if out is None:
-            raise ValueError("no blobs to merge")
-        return out
-
 
 __all__ = ["CountMinSketch", "dims", "LONG_PRIME", "MERSENNE_PRIME"]

@@ -60,9 +60,7 @@ class StreamingCMS:
             self.last_batch_id = last_id
             off = _STATE_HEADER.size
             self.ckpt_tag = data[off:off + tag_len].decode("utf-8") or None
-            return CountMinSketch.from_bytes(
-                data[off + tag_len:], self.cfg.epsilon, self.cfg.delta
-            )
+            return self.cfg.from_bytes(data[off + tag_len:])
         return None
 
     def _save_state(self) -> None:

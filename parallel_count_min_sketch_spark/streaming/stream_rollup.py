@@ -19,26 +19,40 @@ associative reduce, here across micro-batches x days instead of ranks).
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, functions as F
 
-from ..config import CMSConfig
-from ..operators.rollup import cms_time_buckets
+from ..operators.rollup import sketch_time_buckets, write_rollup
+from ..operators.sketch_agg import merge_grouped_partials
 
 
-def rollup_sink(cfg: CMSConfig, ts_col: str, item_col: str, store_path: str,
-                *, string_items: bool = False):
-    """foreachBatch callback maintaining a per-day CMS rollup store at
-    ``store_path``. Use with ``writeStream.foreachBatch(...)`` (any
-    trigger, including availableNow backfills). Safe to replay: the
-    (batch_id, bucket) partition directories are idempotently
-    overwritten, never appended. The dynamic overwrite mode is scoped to
-    THIS writer via the per-write option — never set session-wide, so
-    concurrent sinks/jobs on the same SparkSession keep their own
-    overwrite semantics."""
+def rollup_sink(make_sketch: Callable, from_bytes: Callable, ts_col: str,
+                item_col: str, store_path: str, *, string_items: bool = False,
+                as_float: bool = False):
+    """foreachBatch callback maintaining a per-day rollup store at
+    ``store_path`` for ANY update/merge/to_bytes kernel — per-day CMS
+    (``cfg.new_sketch, cfg.from_bytes``), per-day HLL = stream-maintained
+    COUNT DISTINCT per day, per-day MG = windowed top-k candidates. Use
+    with ``writeStream.foreachBatch(...)`` (any trigger, including
+    availableNow backfills). Safe to replay: the (batch_id, bucket)
+    partition directories are idempotently overwritten, never appended.
+    The dynamic overwrite mode is scoped to THIS writer via the per-write
+    option — never set session-wide, so concurrent sinks/jobs on the same
+    SparkSession keep their own overwrite semantics.
+
+    Merge associativity is the whole contract: for sum-merge (CMS) and
+    idempotent-merge kernels (HLL max, Bloom OR) the folded store is
+    byte-identical to a one-shot batch build (tested); for
+    randomized-compaction kernels (KLL, t-digest) the published error
+    bounds hold but bytes depend on the batch split — same caveat as any
+    repartition."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        buckets = cms_time_buckets(batch_df, ts_col, item_col, cfg,
-                                   string_items=string_items)
+        buckets = sketch_time_buckets(batch_df, ts_col, item_col,
+                                      make_sketch, from_bytes,
+                                      string_items=string_items,
+                                      as_float=as_float)
         (
             buckets.withColumn("batch_id", F.lit(int(batch_id)))
             .write.mode("overwrite")
@@ -61,113 +75,37 @@ def read_stream_rollup(spark, store_path: str) -> DataFrame:
     return df.withColumn("bucket", F.col("bucket").cast("string"))
 
 
-def compact_rollup(spark, store_path: str, out_path: str, cfg: CMSConfig) -> None:
+def compact_rollup(spark, store_path: str, out_path: str,
+                   from_bytes: Callable) -> None:
     """Fold a stream-maintained store (several partial rows per day, one
-    per touching micro-batch) into the canonical one-row-per-day form and
-    persist it with ``write_rollup``. Pure merge by associativity — the
-    compacted store answers every range query with the same bytes
-    (tested) while dropping the batch_id dimension, so long-running
-    maintainers can bound file counts with a periodic compaction instead
-    of carrying one file per (batch, day) forever."""
-    from ..operators.rollup import write_rollup
-    from ..operators.sketch_agg import merge_grouped_partials
-
-    eps, delta = cfg.epsilon, cfg.delta
-
-    def fb(b):
-        from ..sketches.cms import CountMinSketch
-
-        return CountMinSketch.from_bytes(b, eps, delta)
-
-    df = read_stream_rollup(spark, store_path)
-    grouped = df.select(
+    per touching micro-batch) into the canonical one-row-per-day
+    [bucket, rows_seen, sketch] form and persist it with ``write_rollup``.
+    Pure merge by associativity — the compacted store answers every range
+    query with the same bytes (tested) while dropping the batch_id
+    dimension, so long-running maintainers can bound file counts with a
+    periodic compaction instead of carrying one file per (batch, day)
+    forever."""
+    grouped = read_stream_rollup(spark, store_path).select(
         F.col("bucket").alias("group"), "rows_seen", "sketch"
     )
-    merged = merge_grouped_partials(grouped, fb).withColumnRenamed(
+    merged = merge_grouped_partials(grouped, from_bytes).withColumnRenamed(
         "group", "bucket")
-    # keep the store schema identical to the batch form (ROLLUP_SCHEMA):
-    # per-day total is the sum of the disjoint batch partials' totals
-    totals = df.groupBy("bucket").agg(F.sum("total").alias("total"))
-    out = merged.join(totals, "bucket").select(
-        "bucket", "rows_seen", "total", "sketch")
-    write_rollup(out, out_path, mode="overwrite")
+    write_rollup(merged, out_path, mode="overwrite")
 
 
-def start_rollup_stream(stream_df: DataFrame, cfg: CMSConfig, ts_col: str,
-                        item_col: str, store_path: str, checkpoint_dir: str,
-                        *, string_items: bool = False,
+def start_rollup_stream(stream_df: DataFrame, make_sketch: Callable,
+                        from_bytes: Callable, ts_col: str, item_col: str,
+                        store_path: str, checkpoint_dir: str, *,
+                        string_items: bool = False,
                         available_now: bool = True):
-    """Wire a streaming DataFrame into the rollup store and start the
-    query. ``available_now=True`` drains every available source file then
-    stops — the backfill/catch-up mode; pass False for a continuously
-    running maintainer."""
+    """Wire a streaming DataFrame into the rollup store (``rollup_sink``)
+    and start the query. ``available_now=True`` drains every available
+    source file then stops — the backfill/catch-up mode; pass False for a
+    continuously running maintainer."""
     writer = (
         stream_df.writeStream
-        .foreachBatch(rollup_sink(cfg, ts_col, item_col, store_path,
-                                  string_items=string_items))
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def generic_rollup_sink(make_sketch, from_bytes, ts_col: str, item_col: str,
-                        store_path: str, *, string_items: bool = False,
-                        as_float: bool = False):
-    """Kernel-generic twin of :func:`rollup_sink`: maintain a per-day
-    rollup store for ANY update/merge/to_bytes kernel (per-day HLL =
-    stream-maintained COUNT DISTINCT per day; per-day MG = stream-
-    maintained windowed top-k candidates). Identical idempotency story —
-    each micro-batch overwrites its own (batch_id, bucket) partition
-    directories, so at-least-once replays converge instead of
-    double-counting. Merge-associativity is the whole contract: for
-    idempotent-merge kernels (HLL max, Bloom OR) the folded store is
-    byte-identical to a one-shot batch build (gated in
-    test_stream_rollup.py); for randomized-compaction kernels (KLL,
-    t-digest) the published error bounds hold but bytes depend on the
-    batch split — same caveat as any repartition."""
-    from ..operators.rollup import sketch_time_buckets
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        buckets = sketch_time_buckets(batch_df, ts_col, item_col,
-                                      make_sketch, from_bytes,
-                                      string_items=string_items,
-                                      as_float=as_float)
-        (
-            buckets.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "bucket")
-            .parquet(store_path)
-        )
-
-    return process
-
-
-def generic_rollup_range(spark, store_path: str, lo: str, hi: str,
-                         make_sketch, from_bytes):
-    """Answer a [lo, hi] range over a stream-maintained generic store:
-    fold every (batch, day) partial of the covered days by associativity
-    — no compaction required first."""
-    from ..operators.rollup import sketch_rollup_range
-
-    return sketch_rollup_range(read_stream_rollup(spark, store_path),
-                               lo, hi, make_sketch, from_bytes)
-
-
-def start_generic_rollup_stream(stream_df: DataFrame, make_sketch,
-                                from_bytes, ts_col: str, item_col: str,
-                                store_path: str, checkpoint_dir: str, *,
-                                string_items: bool = False,
-                                available_now: bool = True):
-    """Wire + start the kernel-generic maintainer (see
-    :func:`start_rollup_stream`)."""
-    writer = (
-        stream_df.writeStream
-        .foreachBatch(generic_rollup_sink(make_sketch, from_bytes, ts_col,
-                                          item_col, store_path,
-                                          string_items=string_items))
+        .foreachBatch(rollup_sink(make_sketch, from_bytes, ts_col, item_col,
+                                  store_path, string_items=string_items))
         .option("checkpointLocation", checkpoint_dir)
     )
     if available_now:

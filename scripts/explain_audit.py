@@ -57,11 +57,12 @@ def _rollup_build_df(spark, sf_dir):
     so audit the interesting stage directly: the pre_aggregate=True bucket
     build (JVM partial/final (day,item) count agg below the grouped Arrow
     sketch rails)."""
-    from parallel_count_min_sketch_spark.operators.rollup import cms_time_buckets
+    from parallel_count_min_sketch_spark.operators.rollup import sketch_time_buckets
     from parallel_count_min_sketch_spark.plans.cms_queries import ROLLUP_CFG, load
 
     ev = load(spark, sf_dir, "events")
-    return cms_time_buckets(ev, "ts", "user_id", ROLLUP_CFG, pre_aggregate=True)
+    return sketch_time_buckets(ev, "ts", "user_id", ROLLUP_CFG.new_sketch,
+                               ROLLUP_CFG.from_bytes, pre_aggregate=True)
 
 
 def _incremental_matches_df(spark, sf_dir):

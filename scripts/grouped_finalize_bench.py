@@ -35,11 +35,9 @@ def bench_config(spark, df, n_hosts: int, cpus: int, epsilon: float) -> dict:
     from parallel_count_min_sketch_spark.config import CMSConfig
     from parallel_count_min_sketch_spark.operators.agg import cms_grouped
     from parallel_count_min_sketch_spark.operators.sketch_agg import finalize_grouped
-    from parallel_count_min_sketch_spark.sketches.cms import CountMinSketch
 
     cfg = CMSConfig(epsilon=epsilon, delta=0.1, seed=12345)
     probe = 4242
-    eps, delta = cfg.epsilon, cfg.delta
 
     grouped = cms_grouped(df, "host", "item", cfg).persist()
     t0 = time.perf_counter()
@@ -47,9 +45,9 @@ def bench_config(spark, df, n_hosts: int, cpus: int, epsilon: float) -> dict:
     build_sec = time.perf_counter() - t0
 
     def fin(row: dict) -> list[tuple]:
-        sk = CountMinSketch.from_bytes(row["sketch"], eps, delta)
+        sk = cfg.from_bytes(row["sketch"])
         est = int(sk.point_query(np.array([probe], dtype=np.int64))[0])
-        return [(row["group"], int(row["total"]), est)]
+        return [(row["group"], sk.total, est)]
 
     schema = "host STRING, total BIGINT, est BIGINT"
     pa_schema = pa.schema([("host", pa.string()), ("total", pa.int64()),
@@ -68,8 +66,8 @@ def bench_config(spark, df, n_hosts: int, cpus: int, epsilon: float) -> dict:
     blob_bytes = sum(len(bytes(r["sketch"])) for r in collected)
     loop_rows = []
     for r in collected:
-        sk = CountMinSketch.from_bytes(bytes(r["sketch"]), eps, delta)
-        loop_rows.append((r["group"], int(r["total"]),
+        sk = cfg.from_bytes(bytes(r["sketch"]))
+        loop_rows.append((r["group"], sk.total,
                           int(sk.point_query(np.array([probe], dtype=np.int64))[0])))
     loop_sec = time.perf_counter() - t0
     assert sorted(dist_rows) == sorted(loop_rows), "finalize paths disagree"

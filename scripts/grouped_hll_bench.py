@@ -68,7 +68,7 @@ def _emit(t0, rows, n_groups):
 def _timed_segment_fold(df):
     """The pre-round-5 generic path: one HyperLogLog per group, per-batch
     group segmentation, update_batch per segment."""
-    from parallel_count_min_sketch_spark.operators.agg import iter_group_segments
+    from parallel_count_min_sketch_spark.operators._grouped_fold import iter_group_segments
     from parallel_count_min_sketch_spark.sketches.hll import HyperLogLog
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

@@ -74,23 +74,23 @@ def skewed_df(spark):
 
 def _timed_partials(df):
     """The library's two-phase grouped CMS build (phase 1 is the REAL
-    rail: operators.agg.GroupedCMSFold, vectorized ACROSS groups),
+    rail: operators.sketch_agg.GroupedCMSFold, vectorized ACROSS groups),
     instrumented to emit one (task_sec, n_rows) row per kernel invocation
     (= per task)."""
     from parallel_count_min_sketch_spark.config import CMSConfig
-    from parallel_count_min_sketch_spark.operators.agg import GroupedCMSFold
+    from parallel_count_min_sketch_spark.operators.sketch_agg import GroupedCMSFold
 
     cfg = CMSConfig(epsilon=EPS, delta=DELTA, seed=SEED)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         t0 = time.perf_counter()
-        acc = GroupedCMSFold(cfg)
+        acc = GroupedCMSFold(cfg.new_sketch())
         rows = 0
         for batch in batches:
             rows += batch.num_rows
             acc.update(batch)
         out = acc.result_batch()
-        blob_bytes = (sum(len(b.as_py()) for b in out.column(3))
+        blob_bytes = (sum(len(b.as_py()) for b in out.column("sketch"))
                       if out is not None else 0)
         yield pa.RecordBatch.from_pydict(
             {"task_sec": [time.perf_counter() - t0],
@@ -128,7 +128,7 @@ def _timed_naive(df):
 
 
 def _timed_salted(df):
-    """The library's salted grouped plan (cms_grouped(pre_shuffle_salt=s)):
+    """The library's salted grouped plan (sketch_grouped(pre_shuffle_salt=s)):
     ONE raw-row shuffle on hash(group, item-salt % s), then the same
     vectorized fold — each group's rows land in at most s partitions, so
     partial volume is groups x s (not partitions x groups) and the hot

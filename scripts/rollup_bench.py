@@ -6,7 +6,7 @@ JVM-side from spark.range, no I/O — then measures the rollup economics
 the operator claims:
 
   build_sec       one scan building the per-day CMS bucket table
-                  (operators/rollup.cms_time_buckets)
+                  (operators/rollup.sketch_time_buckets)
   rollup_query    a --range-days range query answered by merging ONLY the
                   covered KB-sized bucket blobs (buckets persisted — the
                   materialized-rollup serving mode)
@@ -69,8 +69,8 @@ def main() -> None:
     from parallel_count_min_sketch_spark.config import CMSConfig
     from parallel_count_min_sketch_spark.operators.agg import build_cms
     from parallel_count_min_sketch_spark.operators.rollup import (
-        cms_rollup_range,
-        cms_time_buckets,
+        sketch_rollup_range,
+        sketch_time_buckets,
     )
     from parallel_count_min_sketch_spark.sources.items import _u
 
@@ -124,8 +124,9 @@ def main() -> None:
             nonlocal buckets
             if buckets is not None:
                 buckets.unpersist()
-            buckets = cms_time_buckets(ev, "ts", "user_id", cfg,
-                                       pre_aggregate=pre).persist()
+            buckets = sketch_time_buckets(ev, "ts", "user_id", cfg.new_sketch,
+                                          cfg.from_bytes,
+                                          pre_aggregate=pre).persist()
             buckets.count()  # materialize the rollup table
             return buckets
 
@@ -135,7 +136,8 @@ def main() -> None:
     _, build_runs = timed(mk_build(False))
 
     def rollup_query():
-        return cms_rollup_range(buckets, lo, hi, cfg)
+        return sketch_rollup_range(buckets, lo, hi, cfg.new_sketch,
+                                   cfg.from_bytes)
 
     sk_roll, roll_runs = timed(rollup_query)
 

@@ -184,8 +184,10 @@ def test_grouped_sketches(spark):
     cfg = CMSConfig(epsilon=0.1, delta=0.1, seed=9)
     out = {r["group"]: r for r in cms_grouped(df, "lang", "item", cfg).collect()}
     assert set(out) == {"en", "de"}
-    assert out["en"]["total"] == 3 and out["de"]["total"] == 3
-    en = CountMinSketch.from_bytes(bytes(out["en"]["sketch"]), cfg.epsilon, cfg.delta)
+    assert out["en"]["rows_seen"] == 3 and out["de"]["rows_seen"] == 3
+    en = cfg.from_bytes(bytes(out["en"]["sketch"]))
+    de = cfg.from_bytes(bytes(out["de"]["sketch"]))
+    assert en.total == 3 and de.total == 3
     exp = cfg.new_sketch()
     exp.update_batch(np.array([1, 1, 3]))
     assert en.to_bytes() == exp.to_bytes()
@@ -197,7 +199,9 @@ def test_grouped_sketches_skip_nulls(spark):
     cfg = CMSConfig(epsilon=0.1, delta=0.1, seed=9)
     out = {r["group"]: r for r in cms_grouped(df, "lang", "item", cfg).collect()}
     assert set(out) == {"en", "de"}
-    assert out["en"]["total"] == 1 and out["de"]["total"] == 1
+    assert out["en"]["rows_seen"] == 1 and out["de"]["rows_seen"] == 1
+    totals = {g: cfg.from_bytes(bytes(r["sketch"])).total for g, r in out.items()}
+    assert totals == {"en": 1, "de": 1}
 
 
 def test_grouped_salted_pre_shuffle_byte_equal(spark):
@@ -215,7 +219,9 @@ def test_grouped_salted_pre_shuffle_byte_equal(spark):
         df, "host", "item", cfg, pre_shuffle_salt=4, n_partitions=16).collect()}
     assert set(plain) == set(salted)
     for g in plain:
-        assert plain[g]["total"] == salted[g]["total"]
+        assert plain[g]["rows_seen"] == salted[g]["rows_seen"]
+        assert (cfg.from_bytes(bytes(plain[g]["sketch"])).total
+                == plain[g]["rows_seen"])
         assert bytes(plain[g]["sketch"]) == bytes(salted[g]["sketch"])
 
 

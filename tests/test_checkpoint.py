@@ -55,6 +55,21 @@ def test_resume_after_partial_loss(spark, ckpt_dir):
     assert sk2.to_bytes() == sk_full.to_bytes()
 
 
+def test_corrupt_partial_fails_resume_before_writing(spark, ckpt_dir):
+    """A corrupt partial file is an error, not an empty checkpoint: the
+    resume must fail before it recomputes and appends any partial."""
+    df = web_pages(spark, 200, seed=5, partitions=4)
+    CheckpointedCMSBuild(CFG, ckpt_dir).run(df, "text")
+    partials_dir = os.path.join(ckpt_dir, "partials")
+    with open(os.path.join(partials_dir, "part-99999-corrupt.parquet"), "wb") as f:
+        f.write(b"this is not a parquet file")
+    before = sorted(os.listdir(partials_dir))
+    with pytest.raises(Exception) as err:
+        CheckpointedCMSBuild(CFG, ckpt_dir).run(df, "text", resume=True)
+    assert "checkpoint incomplete" not in str(err.value)
+    assert sorted(os.listdir(partials_dir)) == before
+
+
 def test_noop_resume_recomputes_nothing(spark, ckpt_dir):
     df = web_pages(spark, 200, seed=5, partitions=4)
     CheckpointedCMSBuild(CFG, ckpt_dir).run(df, "text")

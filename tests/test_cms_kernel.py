@@ -5,6 +5,8 @@ the reference's demo tests (src/core/count_min_sketch.c:246-328)."""
 import numpy as np
 import pytest
 
+from parallel_count_min_sketch_spark.config import CMSConfig
+from parallel_count_min_sketch_spark.operators.sketch_agg import fold_blobs
 from parallel_count_min_sketch_spark.sketches import (
     CountMinSketch,
     SequentialCMS,
@@ -162,7 +164,7 @@ def test_serialization_roundtrip():
     back = CountMinSketch.from_bytes(blob, 0.01, 0.1)
     assert back.total == sk.total and back.seed == sk.seed
     assert np.array_equal(back.table, sk.table)
-    merged = CountMinSketch.merge_blobs([blob, blob], 0.01, 0.1)
+    merged = fold_blobs([blob, blob], CMSConfig(0.01, 0.1, 11).from_bytes)
     assert merged.total == 2 * sk.total
     assert np.array_equal(merged.table, 2 * sk.table)
 

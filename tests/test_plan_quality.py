@@ -280,11 +280,12 @@ def test_rollup_pre_aggregate_plan(spark):
     HashAggregate on (day, item) BELOW the Arrow stage — so the Python
     channel moves one weighted row per distinct pair — and (c) keep the
     counting on the codegen path."""
-    from parallel_count_min_sketch_spark.operators.rollup import cms_time_buckets
+    from parallel_count_min_sketch_spark.operators.rollup import sketch_time_buckets
     from parallel_count_min_sketch_spark.plans.cms_queries import ROLLUP_CFG
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    df = cms_time_buckets(ev, "ts", "user_id", ROLLUP_CFG, pre_aggregate=True)
+    df = sketch_time_buckets(ev, "ts", "user_id", ROLLUP_CFG.new_sketch,
+                             ROLLUP_CFG.from_bytes, pre_aggregate=True)
     plan = _plan(df, execute=True)
     final = plan.split("== Initial Plan ==")[0]
     m = re.search(r"ReadSchema: ([^\n]+)", final)

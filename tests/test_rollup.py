@@ -9,11 +9,12 @@ from pyspark.sql import functions as F
 from parallel_count_min_sketch_spark.config import CMSConfig
 from parallel_count_min_sketch_spark.operators.agg import build_cms
 from parallel_count_min_sketch_spark.operators.rollup import (
-    cms_rollup_range,
-    cms_time_buckets,
+    sketch_rollup_range,
+    sketch_time_buckets,
 )
 
 CFG = CMSConfig(epsilon=0.01, delta=0.1, seed=7)
+CMS = (CFG.new_sketch, CFG.from_bytes)
 
 
 @pytest.fixture(scope="module")
@@ -27,8 +28,8 @@ def test_rollup_range_merge_equals_direct_build(spark, events):
     — the property that lets a rollup table answer range queries without
     rescanning the corpus."""
     lo, hi = "2024-01-05", "2024-01-12"
-    buckets = cms_time_buckets(events, "ts", "user_id", CFG)
-    merged = cms_rollup_range(buckets, lo, hi, CFG)
+    buckets = sketch_time_buckets(events, "ts", "user_id", *CMS)
+    merged = sketch_rollup_range(buckets, lo, hi, *CMS)
 
     direct_rows = events.filter(
         (F.col("ts").cast("date") >= F.lit(lo).cast("date"))
@@ -41,17 +42,17 @@ def test_rollup_range_merge_equals_direct_build(spark, events):
 
 def test_rollup_boundaries_inclusive(spark, events):
     """Single-day range == exactly that day's bucket sketch."""
-    buckets = cms_time_buckets(events, "ts", "user_id", CFG)
+    buckets = sketch_time_buckets(events, "ts", "user_id", *CMS)
     day = "2024-01-03"
-    one = cms_rollup_range(buckets, day, day, CFG)
+    one = sketch_rollup_range(buckets, day, day, *CMS)
     row = buckets.filter(F.col("bucket") == day).collect()
     assert len(row) == 1
     assert bytes(row[0]["sketch"]) == one.to_bytes()
 
 
 def test_rollup_empty_range_is_zero_sketch(spark, events):
-    buckets = cms_time_buckets(events, "ts", "user_id", CFG)
-    sk = cms_rollup_range(buckets, "1999-01-01", "1999-12-31", CFG)
+    buckets = sketch_time_buckets(events, "ts", "user_id", *CMS)
+    sk = sketch_rollup_range(buckets, "1999-01-01", "1999-12-31", *CMS)
     assert sk.total == 0
     assert sk.to_bytes() == CFG.new_sketch().to_bytes()
 
@@ -60,10 +61,10 @@ def test_rollup_partition_invariant(spark, events):
     """Same bytes whatever the input partitioning (counter addition is
     commutative and associative)."""
     lo, hi = "2024-01-02", "2024-01-20"
-    a = cms_rollup_range(
-        cms_time_buckets(events.repartition(1), "ts", "user_id", CFG), lo, hi, CFG)
-    b = cms_rollup_range(
-        cms_time_buckets(events.repartition(13), "ts", "user_id", CFG), lo, hi, CFG)
+    a = sketch_rollup_range(
+        sketch_time_buckets(events.repartition(1), "ts", "user_id", *CMS), lo, hi, *CMS)
+    b = sketch_rollup_range(
+        sketch_time_buckets(events.repartition(13), "ts", "user_id", *CMS), lo, hi, *CMS)
     assert a.to_bytes() == b.to_bytes()
 
 
@@ -110,11 +111,11 @@ def test_pre_aggregate_rollup_build_is_bit_identical(spark, events):
     weighted grouped build) must produce byte-identical day sketches —
     weighted CMS updates are the same integer sums."""
     lo, hi = "2024-01-02", "2024-01-25"
-    plain = cms_rollup_range(
-        cms_time_buckets(events, "ts", "user_id", CFG), lo, hi, CFG)
-    pre = cms_rollup_range(
-        cms_time_buckets(events, "ts", "user_id", CFG, pre_aggregate=True),
-        lo, hi, CFG)
+    plain = sketch_rollup_range(
+        sketch_time_buckets(events, "ts", "user_id", *CMS), lo, hi, *CMS)
+    pre = sketch_rollup_range(
+        sketch_time_buckets(events, "ts", "user_id", *CMS, pre_aggregate=True),
+        lo, hi, *CMS)
     assert plain.to_bytes() == pre.to_bytes()
 
 
@@ -173,7 +174,7 @@ def test_rollup_write_read_partition_pruned(spark, events, tmp_path):
         write_rollup,
     )
 
-    buckets = cms_time_buckets(events, "ts", "user_id", CFG)
+    buckets = sketch_time_buckets(events, "ts", "user_id", *CMS)
     path = str(tmp_path / "rollup_store")
     write_rollup(buckets, path)
 
@@ -187,8 +188,8 @@ def test_rollup_write_read_partition_pruned(spark, events, tmp_path):
     assert re.search(r"PartitionFilters: \[[^\]]*bucket", plan), plan
     assert sel.count() == 8  # exactly the covered days survive pruning
 
-    merged = cms_rollup_range(back, lo, hi, CFG)
-    direct = cms_rollup_range(buckets, lo, hi, CFG)
+    merged = sketch_rollup_range(back, lo, hi, *CMS)
+    direct = sketch_rollup_range(buckets, lo, hi, *CMS)
     assert merged.to_bytes() == direct.to_bytes()
 
 
@@ -203,11 +204,11 @@ def test_rollup_rewrite_day_is_idempotent(spark, events, tmp_path):
         write_rollup,
     )
 
-    buckets = cms_time_buckets(events, "ts", "user_id", CFG).persist()
+    buckets = sketch_time_buckets(events, "ts", "user_id", *CMS).persist()
     path = str(tmp_path / "rollup_store")
     write_rollup(buckets, path)
     lo, hi = "2024-01-05", "2024-01-12"
-    before = cms_rollup_range(read_rollup(spark, path), lo, hi, CFG).to_bytes()
+    before = sketch_rollup_range(read_rollup(spark, path), lo, hi, *CMS).to_bytes()
 
     # retry of one day inside the range: same content, written again
     day = buckets.filter(F.col("bucket") == "2024-01-07")
@@ -216,7 +217,7 @@ def test_rollup_rewrite_day_is_idempotent(spark, events, tmp_path):
     buckets.unpersist()
 
     back = read_rollup(spark, path)
-    assert cms_rollup_range(back, lo, hi, CFG).to_bytes() == before
+    assert sketch_rollup_range(back, lo, hi, *CMS).to_bytes() == before
     # one row per day survived: the day was replaced, not appended
     assert back.count() == back.select("bucket").distinct().count()
 
@@ -225,8 +226,8 @@ def test_rollup_estimates_one_sided(spark, events):
     """Point estimates from the merged range sketch keep the CMS one-sided
     guarantee vs exact filtered counts."""
     lo, hi = "2024-01-05", "2024-01-12"
-    buckets = cms_time_buckets(events, "ts", "user_id", CFG)
-    sk = cms_rollup_range(buckets, lo, hi, CFG)
+    buckets = sketch_time_buckets(events, "ts", "user_id", *CMS)
+    sk = sketch_rollup_range(buckets, lo, hi, *CMS)
     exact = {
         r["user_id"]: r["c"]
         for r in events.filter(

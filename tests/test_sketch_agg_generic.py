@@ -151,23 +151,45 @@ def test_multi_level_fanin_hll_equals_sequential(spark, monkeypatch, parts):
     assert got.to_bytes() == exp.to_bytes()
 
 
-def test_grouped_hll_matches_per_group_sequential(spark):
+@pytest.mark.parametrize("mk,fb", [(_mk_hll, _hll_from_bytes),
+                                   (_mk_cms, _cms_from_bytes)],
+                         ids=["hll", "cms"])
+def test_grouped_hll_matches_per_group_sequential(spark, mk, fb):
+    """The stacked grouped folds (scatter-max for HLL, scatter-add for
+    CMS) equal a per-group sequential build byte for byte."""
     rng = np.random.default_rng(11)
     rows = [
         (["en", "de", "fr"][int(g)], int(x))
         for g, x in zip(rng.integers(0, 3, 3000), rng.integers(1, 500, 3000))
     ]
     df = spark.createDataFrame(rows, "lang STRING, item BIGINT").repartition(5)
-    got = {
-        r["group"]: HyperLogLog.from_bytes(bytes(r["sketch"]))
-        for r in sketch_grouped(df, "lang", "item", _mk_hll,
-                                _hll_from_bytes).collect()
-    }
+    out = sketch_grouped(df, "lang", "item", mk, fb).collect()
+    got = {r["group"]: fb(bytes(r["sketch"])) for r in out}
     assert set(got) == {"en", "de", "fr"}
+    for r in out:
+        assert r["rows_seen"] == sum(1 for l, _ in rows if l == r["group"])
     for lang in got:
-        exp = _mk_hll()
+        exp = mk()
         exp.update_batch(np.array([x for l, x in rows if l == lang]))
         assert got[lang].to_bytes() == exp.to_bytes()
+
+
+def test_stacked_fold_dispatch_is_by_exact_type():
+    """Only the exact CountMinSketch / HyperLogLog types get a stacked
+    fold; subclasses and other kernels take the per-group-segment fold."""
+    from parallel_count_min_sketch_spark.operators.sketch_agg import (
+        GroupedCMSFold,
+        GroupedHLLFold,
+        _stacked_fold,
+    )
+
+    class SubCMS(CountMinSketch):
+        pass
+
+    assert type(_stacked_fold(_mk_cms())) is GroupedCMSFold
+    assert type(_stacked_fold(_mk_hll())) is GroupedHLLFold
+    assert _stacked_fold(SubCMS(0.01, 0.1, seed=5)) is None
+    assert _stacked_fold(_mk_kll()) is None
 
 
 def test_repeat_bounded_matches_unbounded_mass():

@@ -8,8 +8,8 @@ from pyspark.sql import functions as F
 
 from parallel_count_min_sketch_spark.config import CMSConfig
 from parallel_count_min_sketch_spark.operators.rollup import (
-    cms_rollup_range,
-    cms_time_buckets,
+    sketch_rollup_range,
+    sketch_time_buckets,
 )
 from parallel_count_min_sketch_spark.streaming.stream_rollup import (
     read_stream_rollup,
@@ -18,6 +18,7 @@ from parallel_count_min_sketch_spark.streaming.stream_rollup import (
 )
 
 CFG = CMSConfig(epsilon=0.01, delta=0.1, seed=7)
+CMS = (CFG.new_sketch, CFG.from_bytes)
 LO, HI = "2024-01-05", "2024-01-12"
 
 
@@ -46,16 +47,16 @@ def test_stream_rollup_equals_batch_rollup(spark, tmp_path, events, staged_event
         .parquet(staged_events)
     )
     store = str(tmp_path / "rollup_store")
-    q = start_rollup_stream(stream, CFG, "ts", "user_id", store,
+    q = start_rollup_stream(stream, *CMS, "ts", "user_id", store,
                             str(tmp_path / "ckpt"))
     assert q.awaitTermination(180), "stream did not drain within 180s"
 
     streamed = read_stream_rollup(spark, store)
     # a day spanning both micro-batches carries two partial rows
     assert streamed.count() > streamed.select("bucket").distinct().count()
-    merged = cms_rollup_range(streamed, LO, HI, CFG)
-    batch = cms_rollup_range(
-        cms_time_buckets(events, "ts", "user_id", CFG), LO, HI, CFG)
+    merged = sketch_rollup_range(streamed, LO, HI, *CMS)
+    batch = sketch_rollup_range(
+        sketch_time_buckets(events, "ts", "user_id", *CMS), LO, HI, *CMS)
     assert merged.to_bytes() == batch.to_bytes()
 
 
@@ -69,19 +70,19 @@ def test_compact_rollup_preserves_range_bytes(spark, tmp_path, events):
     )
 
     store = str(tmp_path / "store")
-    sink = rollup_sink(CFG, "ts", "user_id", store)
+    sink = rollup_sink(*CMS, "ts", "user_id", store)
     sink(events.filter(F.col("event_id") % 2 == 0), 0)
     sink(events.filter(F.col("event_id") % 2 == 1), 1)
     raw = read_stream_rollup(spark, store)
     assert raw.count() > raw.select("bucket").distinct().count()
 
     out = str(tmp_path / "compacted")
-    compact_rollup(spark, store, out, CFG)
+    compact_rollup(spark, store, out, CFG.from_bytes)
     compacted = read_rollup(spark, out)
     assert compacted.count() == compacted.select("bucket").distinct().count()
     assert (
-        cms_rollup_range(compacted, LO, HI, CFG).to_bytes()
-        == cms_rollup_range(raw, LO, HI, CFG).to_bytes()
+        sketch_rollup_range(compacted, LO, HI, *CMS).to_bytes()
+        == sketch_rollup_range(raw, LO, HI, *CMS).to_bytes()
     )
 
 
@@ -91,36 +92,28 @@ def test_stream_rollup_replay_is_idempotent(spark, tmp_path, events):
     half = events.filter(F.col("event_id") % 2 == 0)
     other = events.filter(F.col("event_id") % 2 == 1)
     store = str(tmp_path / "store")
-    sink = rollup_sink(CFG, "ts", "user_id", store)
+    sink = rollup_sink(*CMS, "ts", "user_id", store)
     sink(half, 0)
     sink(other, 1)
-    once = cms_rollup_range(read_stream_rollup(spark, store), LO, HI, CFG)
+    once = sketch_rollup_range(read_stream_rollup(spark, store), LO, HI, *CMS)
     sink(half, 0)  # replay after a simulated crash-before-commit
-    again = cms_rollup_range(read_stream_rollup(spark, store), LO, HI, CFG)
+    again = sketch_rollup_range(read_stream_rollup(spark, store), LO, HI, *CMS)
     assert once.to_bytes() == again.to_bytes()
-    batch = cms_rollup_range(
-        cms_time_buckets(events, "ts", "user_id", CFG), LO, HI, CFG)
+    batch = sketch_rollup_range(
+        sketch_time_buckets(events, "ts", "user_id", *CMS), LO, HI, *CMS)
     assert once.to_bytes() == batch.to_bytes()
 
 
 def test_generic_stream_rollup_hll_equals_batch(spark, tmp_path, events,
                                                 staged_events):
-    """Kernel-generic streaming maintainer: a stream-maintained per-day
-    HLL store, drained in multiple micro-batches, must fold to registers
+    """The same streaming maintainer with another kernel: a
+    stream-maintained per-day HLL store, drained in multiple micro-batches, must fold to registers
     BYTE-IDENTICAL to a one-shot batch rollup (HLL max-merge is
     idempotent AND associative, so the batch split cannot matter) — and
     therefore to a direct build over the date-filtered rows."""
     from functools import partial
 
-    from parallel_count_min_sketch_spark.operators.rollup import (
-        sketch_rollup_range,
-        sketch_time_buckets,
-    )
     from parallel_count_min_sketch_spark.sketches.hll import HyperLogLog
-    from parallel_count_min_sketch_spark.streaming.stream_rollup import (
-        generic_rollup_range,
-        start_generic_rollup_stream,
-    )
 
     mk = partial(HyperLogLog, 12, 7)
     # package-level wrapper: a bound classmethod passed from a TEST module
@@ -135,11 +128,12 @@ def test_generic_stream_rollup_hll_equals_batch(spark, tmp_path, events,
         .parquet(staged_events)
     )
     store = str(tmp_path / "hll_store")
-    q = start_generic_rollup_stream(stream, mk, fb, "ts", "user_id", store,
-                                    str(tmp_path / "hll_ckpt"))
+    q = start_rollup_stream(stream, mk, fb, "ts", "user_id", store,
+                            str(tmp_path / "hll_ckpt"))
     assert q.awaitTermination(180), "stream did not drain within 180s"
 
-    merged = generic_rollup_range(spark, store, LO, HI, mk, fb)
+    merged = sketch_rollup_range(read_stream_rollup(spark, store), LO, HI,
+                                 mk, fb)
     batch = sketch_rollup_range(
         sketch_time_buckets(events, "ts", "user_id", mk, fb), LO, HI, mk, fb)
     assert merged.to_bytes() == batch.to_bytes()
