@@ -146,9 +146,9 @@ def salted_pre_shuffle(df, group_col: str, col: str, salt: int,
                        n_partitions: int | None, salt_seed: int):
     """One raw-row repartition on hash(group, item-salt % s) — the shared
     pre-shuffle of the salted grouped build (``sketch_agg.sketch_grouped``):
-    caps per-group partials at ``salt``
-    per group instead of one per scan partition, while splitting hot
-    groups over ``salt`` tasks (measured in BENCH/grouped_skew.json)."""
+    caps per-group partials at ``salt`` per group instead of one per scan
+    partition, while splitting hot groups over ``salt`` tasks (measured in
+    BENCH/grouped_skew.json)."""
     from pyspark.sql import functions as F
 
     salt_col = F.pmod(F.xxhash64(F.col(col), F.lit(int(salt_seed))),

@@ -5,10 +5,10 @@ associative ``MPI_Reduce`` (src/mpi/mpiV2.c:131-175; its OpenMP
 thread-private variant is src/openmp/openmpV1.c:73-105). ``sketch_agg``
 is that two-level design for every kernel:
 
-  stage 1 (map):   ``mapInArrow`` over the item column; each task folds its
-                   Arrow batches into ONE numpy sketch (np.bincount per hash
-                   row — no per-row Python) and emits a single serialized
-                   partial-sketch row (~tens of KB).
+  stage 1 (map):   each task folds the Arrow batches of its partition into
+                   ONE sketch (a bincount per hash row — no per-row
+                   Python) and emits a single serialized partial-sketch
+                   row (~tens of KB).
   stage 2 (reduce): associative element-wise merge of the partials — the
                    fan-in tree of ``sketch_agg.merge_sketch_partials``, like
                    the reduction tree MPI_Reduce runs internally.
