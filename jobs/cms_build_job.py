@@ -9,9 +9,13 @@
 
 Pipeline: parquet/Iceberg scan (text column pruned from html by Catalyst)
 -> optional salted repartition (defuses host/language skew before the
-sketch stage) -> CMS build (JVM Catalyst path or Arrow-kernel partials with
-per-partition checkpoint lineage) -> sketch blob + metrics written to the
-output dir. Prints one JSON metrics line to stdout.
+sketch stage) -> CMS build (JVM Catalyst path or Arrow-kernel partials)
+-> sketch blob + metrics written to the output dir. Prints one JSON metrics
+line to stdout.
+
+With --checkpoint the build keeps one partial sketch per input file in the
+checkpoint dir; a rerun scans only the files that have none yet (appended
+files, or files of a run that failed), then merges every file's partial.
 
 Build the --py-files archive with:
     python -c "import shutil; shutil.make_archive('pcms_spark', 'zip', '.', 'parallel_count_min_sketch_spark')"
@@ -37,9 +41,6 @@ def main() -> None:
     ap.add_argument("--delta", type=float, default=0.1)
     ap.add_argument("--seed", type=int, default=12345)
     ap.add_argument("--checkpoint", default=None)
-    ap.add_argument("--file-lineage", action="store_true",
-                    help="with --checkpoint: file-granular lineage (resume "
-                         "prunes completed files from the scan itself)")
     ap.add_argument("--salt-partitions", type=int, default=0,
                     help="salted repartition width (0 = keep scan partitioning)")
     ap.add_argument("--path", choices=["sql", "arrow"], default="sql")
@@ -56,10 +57,10 @@ def main() -> None:
         ap.error("--reps must be >= 1")
     if args.checkpoint and args.reps > 1:
         ap.error("--reps applies to the sql/arrow paths only")
-    if args.checkpoint and args.salt_partitions and not args.file_lineage:
-        ap.error("--checkpoint with --salt-partitions requires --file-lineage: "
-                 "partition-id lineage is unsound downstream of a salted "
-                 "repartition (contents shift with parallelism)")
+    if args.checkpoint and args.salt_partitions:
+        ap.error("--checkpoint and --salt-partitions conflict: the "
+                 "checkpointed build scans --input file by file, so a salted "
+                 "repartition would be ignored")
 
     from pyspark.sql import SparkSession, functions as F
 
@@ -73,24 +74,16 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
     cfg = CMSConfig(args.eps, args.delta, args.seed)
 
-    df = spark.read.parquet(args.input).select(args.text_col)
-    if args.salt_partitions:
-        df = salted_repartition(df, args.salt_partitions, seed=args.seed)
-
     t0 = time.perf_counter()
-    if args.checkpoint and args.file_lineage:
-        from parallel_count_min_sketch_spark.operators.checkpoint import (
-            FileCheckpointedCMSBuild,
-        )
-
-        build = FileCheckpointedCMSBuild(cfg, args.checkpoint)
+    if args.checkpoint:
+        build = CheckpointedCMSBuild(cfg, args.checkpoint)
         sk = build.run(spark, args.input, args.text_col)
         metrics = build.metrics
-    elif args.checkpoint:
-        build = CheckpointedCMSBuild(cfg, args.checkpoint)
-        sk = build.run(df, args.text_col, input_desc=args.input)
-        metrics = build.metrics
     else:
+        df = spark.read.parquet(args.input).select(args.text_col)
+        if args.salt_partitions:
+            df = salted_repartition(df, args.salt_partitions, seed=args.seed)
+
         def timed_reps(fn):
             walls, out = [], None
             for _ in range(args.reps):

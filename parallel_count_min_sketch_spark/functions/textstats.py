@@ -50,11 +50,6 @@ def stopword_ratio_bp(text: str = "text") -> Column:
 BPE_ISH_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 
 
-def bpe_ish_token_count(text: str = "text") -> Column:
-    """Subword-count proxy: matches of BPE_ISH_PATTERN (JVM regexp_count)."""
-    return F.expr(f"regexp_count({text}, '{BPE_ISH_PATTERN}')").cast("bigint")
-
-
 def quality_score_bp(text: str = "text") -> Column:
     """Deterministic quality score in basis points: rewards mid-length docs
     and presence of stopwords (webtext heuristics: too-short and

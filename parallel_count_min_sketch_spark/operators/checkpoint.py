@@ -1,35 +1,40 @@
-"""Checkpointed sketch builds: per-partition lineage + resume.
+"""Checkpointed sketch builds: file-granular lineage + resume.
 
-North-rule requirement: "resumable from checkpoint with per-partition
-sketch lineage + metrics". Because sketch merge is associative and
-order-independent, a build can be resumed from any subset of completed
-per-partition partials: recompute only the missing partitions and merge
-everything — the result is bit-identical to an uninterrupted build
-(asserted in tests).
+Because sketch merge is associative and order-independent (the
+reference's MPI_Reduce, src/mpi/mpiV2.c:131-175), a build can resume from
+any subset of stored partials: compute only the missing ones and merge
+everything — the result is bit-identical to an
+uninterrupted build (asserted in tests).
+
+The unit of lineage is the input FILE: one partial sketch per immutable
+data file, unioned at query time — the design of *Approximate Distinct
+Counts for Billions of Datasets* (SIGMOD 2019) and the granularity of an
+Iceberg snapshot. A run lists the input's files and scans only those with
+no partial yet, so a resume prunes the scan itself, not just the compute.
+Appended files are a plain resume; partials of files the input no longer
+lists (an overwritten dataset) are ignored.
 
 Layout of a checkpoint dir:
-    meta.json            sketch config + n_partitions + input fingerprint
-    partials/*.parquet   rows (partition_id, rows_seen, sketch)
+    meta.json                 sketch config: epsilon, delta, seed
+    file_partials/*.parquet   rows (group = input file URI, rows_seen, sketch)
 
-Lineage granularity is the input partition (Spark's unit of recomputation).
-On a real Iceberg deployment the natural extension is file-level lineage
-(record input_file_name() per partial and prune completed files from the
-scan); in this sandbox we skip the *compute* for completed partitions —
-the dominant cost — while the scan itself is re-planned by Spark.
+Partials are durable per write job, not per task: the default parquet
+commit protocol publishes a job's output only at job commit, so a failed
+run leaves none of its partials behind and the next run rescans its files.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.errors import AnalysisException
 
 from ..config import CMSConfig
 from ..sketches.cms import CountMinSketch
-from .agg import cms_grouped
-from .sketch_agg import fold_blobs, sketch_partials, text_token_partials
+from .sketch_agg import fold_blobs, sketch_grouped_from_text
 
 
 def _norm_uri(uri: str) -> str:
@@ -42,227 +47,85 @@ def _norm_uri(uri: str) -> str:
 
 
 class CheckpointedCMSBuild:
-    def __init__(self, cfg: CMSConfig, checkpoint_dir: str):
-        self.cfg = cfg
-        self.dir = checkpoint_dir
-        self.partials_dir = os.path.join(checkpoint_dir, "partials")
-        self.meta_path = os.path.join(checkpoint_dir, "meta.json")
-        self.metrics: dict = {}
-
-    # -- lineage bookkeeping -------------------------------------------------
-    @staticmethod
-    def _fingerprint(df) -> dict:
-        """Identity of the input's partition layout. Partition-id lineage is
-        only sound when partition CONTENTS are reproducible across runs:
-        same source files AND no shuffle between scan and partials (a
-        repartition keyed on nondeterministic ids — e.g. salted_repartition's
-        monotonically_increasing_id — shifts contents with core count while
-        keeping the partition count fixed)."""
-        files = sorted(_norm_uri(f) for f in df.inputFiles())
-        # walk the optimized logical plan's NODE names (a substring match on
-        # the rendered plan would false-positive on paths/columns that merely
-        # contain the word "Repartition")
-        unstable_nodes = {"Repartition", "RepartitionByExpression", "RebalancePartitions"}
-        stable = True
-        stack = [df._jdf.queryExecution().optimizedPlan()]
-        while stack:
-            node = stack.pop()
-            name = node.nodeName()
-            # a global Sort range-partitions on SAMPLED boundaries, so
-            # partition contents are not reproducible across runs either
-            # (sortWithinPartitions, global=false, keeps contents stable)
-            if name in unstable_nodes or (
-                    name == "Sort" and getattr(node, "global")()):
-                stable = False
-                break
-            children = node.children()
-            for i in range(children.size()):
-                stack.append(children.apply(i))
-        return {"files": files, "scan_stable": stable}
-
-    def _write_meta(self, n_partitions: int, input_desc: str,
-                    fingerprint: dict) -> None:
-        os.makedirs(self.dir, exist_ok=True)
-        meta = {
-            "epsilon": self.cfg.epsilon,
-            "delta": self.cfg.delta,
-            "seed": self.cfg.seed,
-            "depth": self.cfg.depth,
-            "width": self.cfg.width,
-            "n_partitions": n_partitions,
-            "input": input_desc,
-            "fingerprint": fingerprint,
-        }
-        with open(self.meta_path, "w") as f:
-            json.dump(meta, f, indent=2)
-
-    def _read_meta(self) -> dict | None:
-        if not os.path.exists(self.meta_path):
-            return None
-        with open(self.meta_path) as f:
-            return json.load(f)
-
-    def completed_partitions(self, spark) -> set[int]:
-        if not os.path.isdir(self.partials_dir):
-            return set()
-        try:
-            rows = spark.read.parquet(self.partials_dir).select("partition_id").collect()
-        except AnalysisException:  # empty dir: nothing completed yet
-            return set()
-        return {r["partition_id"] for r in rows}
-
-    # -- build ---------------------------------------------------------------
-    def run(self, df, col: str, *, text_mode: bool = True, string_items: bool = False,
-            input_desc: str = "", resume: bool = True) -> CountMinSketch:
-        """Build (or resume) the sketch; persists partials as it goes."""
-        spark = df.sparkSession
-        n_partitions = df.rdd.getNumPartitions()
-        fingerprint = self._fingerprint(df)
-        if not fingerprint["scan_stable"]:
-            raise ValueError(
-                "partition-id lineage is unsound downstream of a "
-                "repartition/rebalance or global sort (partition contents "
-                "shift with parallelism or sampled range boundaries while "
-                "the count stays fixed); checkpoint the plain scan — use "
-                "sortWithinPartitions instead of orderBy if ordering is "
-                "needed — or use FileCheckpointedCMSBuild for file-granular "
-                "lineage"
-            )
-        meta = self._read_meta() if resume else None
-        if meta is not None:
-            if meta.get("fingerprint", {}).get("files") != fingerprint["files"]:
-                raise ValueError(
-                    "input files changed since the checkpoint was taken; "
-                    "partition ids no longer line up — pass resume=False"
-                )
-            if (meta["epsilon"], meta["delta"], meta["seed"]) != (
-                self.cfg.epsilon, self.cfg.delta, self.cfg.seed
-            ) or meta["n_partitions"] != n_partitions:
-                raise ValueError(
-                    "checkpoint is for a different config/partitioning; "
-                    "pass resume=False to start over"
-                )
-            done = self.completed_partitions(spark)
-        else:
-            # fresh start (resume=False or no meta): stale partials from a
-            # previous run must not survive — the dedupe would otherwise
-            # arbitrarily keep old-input partials next to new ones
-            import shutil
-
-            if os.path.isdir(self.partials_dir):
-                shutil.rmtree(self.partials_dir)
-            done = set()
-            self._write_meta(n_partitions, input_desc, fingerprint)
-
-        t0 = time.perf_counter()
-        if len(done) < n_partitions:
-            skips = frozenset(done) if done else None
-            todo = (
-                text_token_partials(df, col, self.cfg.new_sketch,
-                                    skip_partitions=skips)
-                if text_mode
-                else sketch_partials(df, col, self.cfg.new_sketch,
-                                     string_items=string_items,
-                                     skip_partitions=skips)
-            )
-            # one parquet file per task -> each partial is durable as soon as
-            # its task finishes (executor loss loses only in-flight partitions)
-            todo.write.mode("append").parquet(self.partials_dir)
-        compute_sec = time.perf_counter() - t0
-
-        partials = spark.read.parquet(self.partials_dir) \
-            .dropDuplicates(["partition_id"])
-        rows = partials.collect()
-        if {r["partition_id"] for r in rows} != set(range(n_partitions)):
-            missing = set(range(n_partitions)) - {r["partition_id"] for r in rows}
-            raise RuntimeError(f"checkpoint incomplete after run: missing {missing}")
-        merged = fold_blobs((r["sketch"] for r in rows), self.cfg.from_bytes)
-        self.metrics = {
-            "n_partitions": n_partitions,
-            "partitions_skipped": len(done),
-            "partitions_computed": n_partitions - len(done),
-            "rows_seen": int(sum(r["rows_seen"] for r in rows)),
-            "total_mass": merged.total,
-            "compute_sec": round(compute_sec, 3),
-        }
-        return merged
-
-
-class FileCheckpointedCMSBuild:
-    """File-granular lineage: one partial sketch per INPUT FILE, resume by
-    scanning only the files that have no partial yet.
-
-    This is the scale-correct resume: unlike partition-id lineage (which
-    can only skip compute while Spark still plans the full scan), pruning
-    the file list prunes the SCAN itself — on Iceberg, the exact analog is
-    planning only the data files absent from the lineage table. Requires
-    the input to be a multi-file dataset (every parquet/Iceberg table is).
-
-    Partials are produced with the grouped two-phase aggregation keyed on
-    input_file_name(), so one pass yields every file's sketch regardless
-    of how Spark packs files into splits.
-    """
+    """One partial CMS per input file of a parquet dataset; a run computes
+    the files that have no partial yet and merges every listed file's."""
 
     def __init__(self, cfg: CMSConfig, checkpoint_dir: str):
         self.cfg = cfg
         self.dir = checkpoint_dir
         self.partials_dir = os.path.join(checkpoint_dir, "file_partials")
+        self.meta_path = os.path.join(checkpoint_dir, "meta.json")
         self.metrics: dict = {}
 
-    def completed_files(self, spark) -> set[str]:
-        if not os.path.isdir(self.partials_dir):
-            return set()
-        try:
-            rows = spark.read.parquet(self.partials_dir).select("group").collect()
-        except AnalysisException:  # empty dir: nothing completed yet
-            return set()
-        return {r["group"] for r in rows}
+    def _bind_config(self) -> None:
+        """Tie the checkpoint dir to this config before any compute: a
+        partial built under another (epsilon, delta, seed) hashes into other
+        buckets and must never be merged."""
+        cfg = {"epsilon": self.cfg.epsilon, "delta": self.cfg.delta,
+               "seed": self.cfg.seed}
+        if os.path.exists(self.meta_path):
+            with open(self.meta_path) as f:
+                meta = json.load(f)
+            if {k: meta.get(k) for k in cfg} != cfg:
+                raise ValueError(
+                    f"checkpoint {self.dir} was built with a different config "
+                    f"({meta}); use a new checkpoint dir for {cfg}")
+            return
+        # partials without a meta.json have no known config
+        shutil.rmtree(self.partials_dir, ignore_errors=True)
+        os.makedirs(self.dir, exist_ok=True)
+        with open(self.meta_path, "w") as f:
+            json.dump(cfg, f, indent=2)
 
-    @staticmethod
-    def _norm(uri: str) -> str:
-        return _norm_uri(uri)
+    def _stored(self, spark, *cols) -> list:
+        if not os.path.isdir(self.partials_dir):
+            return []
+        try:
+            return spark.read.parquet(self.partials_dir).select(*cols).collect()
+        except AnalysisException:  # empty dir: nothing completed yet
+            return []
 
     def run(self, spark, input_path: str, text_col: str = "text") -> CountMinSketch:
+        """Build (or resume) the sketch of the tokens of ``text_col`` over
+        the parquet dataset at ``input_path``."""
         from pyspark.sql import functions as F
 
-        all_files = sorted(spark.read.parquet(input_path).inputFiles())
-        done = {self._norm(f) for f in self.completed_files(spark)}
-        todo = [f for f in all_files if self._norm(f) not in done]
+        self._bind_config()
+        files = {_norm_uri(f): f for f in spark.read.parquet(input_path).inputFiles()}
+        done = {_norm_uri(r["group"]) for r in self._stored(spark, "group")}
+        todo = sorted(f for p, f in files.items() if p not in done)
 
         t0 = time.perf_counter()
         if todo:
             # scan ONLY the remaining files — the resume prunes I/O, not
             # just compute
-            df = spark.read.parquet(*todo).select(text_col) \
-                .withColumn("__file", F.input_file_name())
-            toks = df.select(
-                "__file", F.explode(F.split(text_col, " ")).alias("tok")
-            ).filter(F.col("tok") != "")
-            partials = cms_grouped(toks, "__file", "tok", self.cfg, string_items=True)
-            partials.write.mode("append").parquet(self.partials_dir)
+            df = spark.read.parquet(*todo).withColumn("__file", F.input_file_name())
+            sketch_grouped_from_text(df, "__file", text_col, self.cfg.new_sketch,
+                                     self.cfg.from_bytes) \
+                .write.mode("append").parquet(self.partials_dir)
         compute_sec = time.perf_counter() - t0
 
         # dedupe on the NORMALIZED path (raw URIs can vary in scheme slashes
-        # across runs — file:/ vs file:/// — and merging both would double-
-        # count that file); the partial set is O(n_files), fine driver-side
+        # across runs and merging both would double-count that file); the
+        # partial set is O(n_files), fine driver-side
         by_path: dict[str, object] = {}
-        for r in spark.read.parquet(self.partials_dir).collect():
-            by_path.setdefault(self._norm(r["group"]), r)
-        wanted = {self._norm(f) for f in all_files}
-        missing = wanted - set(by_path)
+        for r in self._stored(spark, "group", "rows_seen", "sketch"):
+            by_path.setdefault(_norm_uri(r["group"]), r)
+        # a file this run's committed write scanned without emitting a
+        # partial holds no tokens; any other listed file must have one
+        missing = set(files) - set(by_path) - {_norm_uri(f) for f in todo}
         if missing:
-            raise RuntimeError(f"lineage incomplete after run: {missing}")
-        merged = fold_blobs(
-            (r["sketch"] for p, r in by_path.items() if p in wanted),
-            self.cfg.from_bytes,
-        )
+            raise RuntimeError(f"checkpoint incomplete after run: missing {sorted(missing)}")
+        rows = [by_path[p] for p in files if p in by_path]
+        merged = fold_blobs((r["sketch"] for r in rows), self.cfg.from_bytes)
+        if merged is None:
+            merged = self.cfg.new_sketch()
         self.metrics = {
-            "n_files": len(all_files),
-            "files_skipped": len(all_files) - len(todo),
+            "n_files": len(files),
+            "files_skipped": len(files) - len(todo),
             "files_computed": len(todo),
+            "rows_seen": int(sum(r["rows_seen"] for r in rows)),
             "total_mass": merged.total,
             "compute_sec": round(compute_sec, 3),
         }
         return merged
-
-

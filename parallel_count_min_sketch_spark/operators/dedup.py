@@ -29,10 +29,6 @@ DEFAULT_BANDS = 4   # (J~1) always collide; unrelated docs (J~0.3) at ~6e-5
 SIMHASH_BITS = 32
 
 
-def _token_set(text: str = "text") -> Column:
-    return F.array_distinct(F.filter(F.split(F.col(text), " "), lambda t: t != F.lit("")))
-
-
 def token_id_set(text: str = "text") -> Column:
     """array<bigint> of distinct token ids (djb2 over UTF-8 bytes, matching
     sketches/hashing.djb2_batch on any unicode input) — the doc's shingle

@@ -133,23 +133,18 @@ def _update_repeat_bounded(sk, values: np.ndarray, weights: np.ndarray,
 
 def sketch_partials(df, col: str, make_sketch: Callable, *,
                     weight_col: str | None = None,
-                    string_items: bool = False, as_float: bool = False,
-                    skip_partitions: frozenset[int] | None = None):
+                    string_items: bool = False, as_float: bool = False):
     """DataFrame[partition_id, rows_seen, sketch] with exactly one row per
     input partition (the per-rank partial sketch, reference
     src/mpi/mpiV2.c:131-140). ``weight_col`` feeds pre-aggregated
     ``(item, count)`` inputs — the common production shape — through the
     same rails (exactness per kernel documented in ``_weighted_update``);
-    ``rows_seen`` then counts logical mass. ``skip_partitions``:
-    checkpointed partitions whose compute (and output row) is skipped on
-    resume."""
+    ``rows_seen`` then counts logical mass."""
     cols = [col] + ([weight_col] if weight_col else [])
     proj = df.select(*cols)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tune_allocator()
-        if skip_partitions and _task_partition_id() in skip_partitions:
-            return
         sk = make_sketch()
         rows = 0
         for batch in batches:
@@ -238,8 +233,7 @@ def build_sketch(df, col: str, make_sketch: Callable, from_bytes: Callable, *,
 
 
 def text_token_partials(df, text_col: str, make_sketch: Callable, *,
-                        sep: str = " ",
-                        skip_partitions: frozenset[int] | None = None):
+                        sep: str = " "):
     """Kernel-generic doc-local token build: tokenize each Arrow batch in
     Arrow C kernels, collapse to (distinct token, count) with value_counts,
     djb2 ONCE per distinct token, and feed the kernel through the WEIGHTED
@@ -247,16 +241,13 @@ def text_token_partials(df, text_col: str, make_sketch: Callable, *,
     not 100x as many single-token rows (measured 10x on the Misra-Gries
     build, BENCH/sketch_family_scale.json). Exact per kernel: 'native'
     kernels take the counts, 'invariant' ones (distinct/membership) drop
-    them, 'repeat'-mode kernels expand bounded. ``skip_partitions`` as in
-    :func:`sketch_partials`."""
+    them, 'repeat'-mode kernels expand bounded."""
     import pyarrow.compute as pc
 
     proj = df.select(text_col)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tune_allocator()
-        if skip_partitions and _task_partition_id() in skip_partitions:
-            return
         sk = make_sketch()
         rows = 0
         for batch in batches:

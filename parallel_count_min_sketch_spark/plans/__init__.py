@@ -53,21 +53,10 @@ _NEVER_DRIVER_CHECKED = [
 
 def _registry() -> dict[str, tuple]:
     from .cms_queries import CMS_QUERIES
+    from .sketch_queries import SKETCH_QUERIES
+    from .textdata_queries import TEXTDATA_QUERIES
 
-    reg: dict[str, tuple] = {}
-    reg.update(CMS_QUERIES)
-    try:
-        from .sketch_queries import SKETCH_QUERIES
-
-        reg.update(SKETCH_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .textdata_queries import TEXTDATA_QUERIES
-
-        reg.update(TEXTDATA_QUERIES)
-    except ImportError:
-        pass
+    reg = {**CMS_QUERIES, **SKETCH_QUERIES, **TEXTDATA_QUERIES}
     front = {n: reg[n] for n in _NEVER_DRIVER_CHECKED if n in reg}
     rest = {n: t for n, t in reg.items() if n not in front}
     return {**front, **rest}

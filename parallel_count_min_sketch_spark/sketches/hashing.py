@@ -136,10 +136,3 @@ def djb2_batch(tokens) -> np.ndarray:
         # -> < 2^45, exact in int64.
         out[nonempty] = (DJB2_INIT * _POW33[lengths[nonempty]] + seg) % LONG_PRIME
     return out
-
-
-def splitmix31(x: np.ndarray, a: int, b: int) -> np.ndarray:
-    """One extra affine scramble used where a second independent 31-bit
-    hash is needed (HLL rho bits). Kept affine so oracle SQL can replay it."""
-    x = np.asarray(x, dtype=np.int64) % MERSENNE_PRIME
-    return (np.int64(a) * x + np.int64(b)) % MERSENNE_PRIME

@@ -1,11 +1,11 @@
 """Checkpoint/lineage/resume: a resumed build must be bit-identical to an
-uninterrupted one, recomputing only the missing partitions."""
+uninterrupted one, scanning only the input files that have no partial."""
 
 import os
 import shutil
 
-import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from parallel_count_min_sketch_spark.config import CMSConfig
 from parallel_count_min_sketch_spark.operators.agg import build_cms_from_text
@@ -20,145 +20,140 @@ def ckpt_dir(tmp_path):
     return str(tmp_path / "ckpt")
 
 
-def test_full_build_writes_lineage_and_matches_direct(spark, ckpt_dir):
-    df = web_pages(spark, 400, seed=3, partitions=6)
+@pytest.fixture()
+def src(tmp_path):
+    return str(tmp_path / "dataset")
+
+
+def _write(spark, path, n, seed, files, mode="append"):
+    web_pages(spark, n, seed=seed, partitions=files).write.mode(mode).parquet(path)
+
+
+def _direct(spark, path):
+    return build_cms_from_text(spark.read.parquet(path), "text", CFG).to_bytes()
+
+
+def test_full_build_writes_lineage_and_matches_direct(spark, ckpt_dir, src):
+    _write(spark, src, 400, seed=3, files=6)
     build = CheckpointedCMSBuild(CFG, ckpt_dir)
-    sk = build.run(df, "text", input_desc="web_pages(400, seed=3)")
-    direct = build_cms_from_text(df, "text", CFG)
-    assert sk.to_bytes() == direct.to_bytes()
-    assert build.metrics["n_partitions"] == 6
-    assert build.metrics["partitions_computed"] == 6
+    sk = build.run(spark, src)
+    assert sk.to_bytes() == _direct(spark, src)
+    assert build.metrics["n_files"] == 6
+    assert build.metrics["files_computed"] == 6
     assert build.metrics["rows_seen"] == sk.total
     assert os.path.exists(os.path.join(ckpt_dir, "meta.json"))
 
 
-def test_resume_after_partial_loss(spark, ckpt_dir):
-    """Simulate executor loss: drop some partials from the checkpoint,
-    resume, and verify only the missing partitions are recomputed and the
-    merged result is unchanged."""
-    df = web_pages(spark, 400, seed=3, partitions=6)
+def test_resume_after_partial_loss(spark, ckpt_dir, src):
+    """Simulate a lost write: drop two files' partials from the checkpoint,
+    resume, and verify only those files are recomputed and the merged
+    result is unchanged."""
+    _write(spark, src, 400, seed=3, files=6)
     build = CheckpointedCMSBuild(CFG, ckpt_dir)
-    sk_full = build.run(df, "text")
+    build.run(spark, src)
 
-    # knock out some completed partitions by rewriting the partials dir
-    partials = spark.read.parquet(os.path.join(ckpt_dir, "partials"))
-    kept = partials.filter("partition_id NOT IN (1, 4)").collect()
-    shutil.rmtree(os.path.join(ckpt_dir, "partials"))
-    spark.createDataFrame(kept, partials.schema).write.parquet(
-        os.path.join(ckpt_dir, "partials")
-    )
+    partials_dir = build.partials_dir
+    partials = spark.read.parquet(partials_dir)
+    lost = sorted(r["group"] for r in partials.select("group").collect())[1:3]
+    kept = partials.filter(~partials["group"].isin(lost)).collect()
+    shutil.rmtree(partials_dir)
+    spark.createDataFrame(kept, partials.schema).write.parquet(partials_dir)
 
     resumed = CheckpointedCMSBuild(CFG, ckpt_dir)
-    sk2 = resumed.run(df, "text")
-    assert resumed.metrics["partitions_skipped"] == 4
-    assert resumed.metrics["partitions_computed"] == 2
-    assert sk2.to_bytes() == sk_full.to_bytes()
+    sk2 = resumed.run(spark, src)
+    assert resumed.metrics["files_skipped"] == 4
+    assert resumed.metrics["files_computed"] == 2
+    assert sk2.to_bytes() == _direct(spark, src)
 
 
-def test_corrupt_partial_fails_resume_before_writing(spark, ckpt_dir):
+def test_corrupt_partial_fails_resume_before_writing(spark, ckpt_dir, src):
     """A corrupt partial file is an error, not an empty checkpoint: the
     resume must fail before it recomputes and appends any partial."""
-    df = web_pages(spark, 200, seed=5, partitions=4)
-    CheckpointedCMSBuild(CFG, ckpt_dir).run(df, "text")
-    partials_dir = os.path.join(ckpt_dir, "partials")
-    with open(os.path.join(partials_dir, "part-99999-corrupt.parquet"), "wb") as f:
+    _write(spark, src, 200, seed=5, files=4)
+    build = CheckpointedCMSBuild(CFG, ckpt_dir)
+    build.run(spark, src)
+    with open(os.path.join(build.partials_dir, "part-99999-corrupt.parquet"), "wb") as f:
         f.write(b"this is not a parquet file")
-    before = sorted(os.listdir(partials_dir))
+    before = sorted(os.listdir(build.partials_dir))
     with pytest.raises(Exception) as err:
-        CheckpointedCMSBuild(CFG, ckpt_dir).run(df, "text", resume=True)
+        CheckpointedCMSBuild(CFG, ckpt_dir).run(spark, src)
     assert "checkpoint incomplete" not in str(err.value)
-    assert sorted(os.listdir(partials_dir)) == before
+    assert sorted(os.listdir(build.partials_dir)) == before
 
 
-def test_noop_resume_recomputes_nothing(spark, ckpt_dir):
-    df = web_pages(spark, 200, seed=5, partitions=4)
-    CheckpointedCMSBuild(CFG, ckpt_dir).run(df, "text")
+def test_noop_resume_recomputes_nothing(spark, ckpt_dir, src):
+    _write(spark, src, 200, seed=5, files=4)
+    CheckpointedCMSBuild(CFG, ckpt_dir).run(spark, src)
     again = CheckpointedCMSBuild(CFG, ckpt_dir)
-    sk = again.run(df, "text")
-    assert again.metrics["partitions_computed"] == 0
-    assert again.metrics["partitions_skipped"] == 4
+    sk = again.run(spark, src)
+    assert again.metrics["files_computed"] == 0
+    assert again.metrics["files_skipped"] == 4
     assert sk.total > 0
+    assert sk.to_bytes() == _direct(spark, src)
 
 
-def test_file_lineage_resume_scans_only_new_files(spark, ckpt_dir, tmp_path):
-    """File-granular lineage: a resumed build must merge to the same
-    sketch as a fresh full build while computing only the new files."""
-    from parallel_count_min_sketch_spark.operators.checkpoint import FileCheckpointedCMSBuild
-
-    src = str(tmp_path / "dataset")
-    web_pages(spark, 300, seed=7, partitions=3).write.mode("append").parquet(src)
-    b1 = FileCheckpointedCMSBuild(CFG, ckpt_dir)
-    sk1 = b1.run(spark, src)
+def test_file_lineage_resume_scans_only_new_files(spark, ckpt_dir, src):
+    """A resumed build must merge to the same sketch as a fresh full build
+    while computing only the new files."""
+    _write(spark, src, 300, seed=7, files=3)
+    b1 = CheckpointedCMSBuild(CFG, ckpt_dir)
+    b1.run(spark, src)
     assert b1.metrics["files_computed"] == b1.metrics["n_files"] >= 3
 
     # new files land (late-arriving data / previously failed files)
-    web_pages(spark, 200, seed=8, partitions=2).write.mode("append").parquet(src)
-    b2 = FileCheckpointedCMSBuild(CFG, ckpt_dir)
+    _write(spark, src, 200, seed=8, files=2)
+    b2 = CheckpointedCMSBuild(CFG, ckpt_dir)
     sk2 = b2.run(spark, src)
     assert b2.metrics["files_skipped"] == b1.metrics["n_files"]
     assert b2.metrics["files_computed"] == b2.metrics["n_files"] - b1.metrics["n_files"] > 0
 
-    fresh = build_cms_from_text(spark.read.parquet(src), "text", CFG)
-    assert sk2.to_bytes() == fresh.to_bytes()
+    fresh = _direct(spark, src)
+    assert sk2.to_bytes() == fresh
     # and a no-op resume computes nothing
-    b3 = FileCheckpointedCMSBuild(CFG, ckpt_dir)
+    b3 = CheckpointedCMSBuild(CFG, ckpt_dir)
     sk3 = b3.run(spark, src)
     assert b3.metrics["files_computed"] == 0
-    assert sk3.to_bytes() == fresh.to_bytes()
+    assert sk3.to_bytes() == fresh
 
 
-def test_config_mismatch_rejected(spark, ckpt_dir):
-    df = web_pages(spark, 200, seed=5, partitions=4)
-    CheckpointedCMSBuild(CFG, ckpt_dir).run(df, "text")
+def test_config_mismatch_rejected(spark, ckpt_dir, src):
+    """A resume under another config fails before any compute, even when
+    no file is new (it must not return the old config's sketch)."""
+    _write(spark, src, 200, seed=5, files=4)
+    build = CheckpointedCMSBuild(CFG, ckpt_dir)
+    build.run(spark, src)
+    before = sorted(os.listdir(build.partials_dir))
     other = CMSConfig(epsilon=0.01, delta=0.1, seed=999)
     with pytest.raises(ValueError, match="different config"):
-        CheckpointedCMSBuild(other, ckpt_dir).run(df, "text")
-    # a shuffled input is rejected outright: partition contents shift with
-    # parallelism while the count stays fixed — resume would silently
-    # drop/double-count rows (ADVICE r1)
-    with pytest.raises(ValueError, match="lineage is unsound"):
-        CheckpointedCMSBuild(CFG, ckpt_dir).run(df.repartition(3), "text")
+        CheckpointedCMSBuild(other, ckpt_dir).run(spark, src)
+    _write(spark, src, 100, seed=6, files=1)
+    with pytest.raises(ValueError, match="different config"):
+        CheckpointedCMSBuild(other, ckpt_dir).run(spark, src)
+    assert sorted(os.listdir(build.partials_dir)) == before
 
 
-def test_salted_repartition_rejected(spark, ckpt_dir):
-    from parallel_count_min_sketch_spark.operators.skew import salted_repartition
-
-    df = salted_repartition(web_pages(spark, 100, seed=5, partitions=4), 4)
-    with pytest.raises(ValueError, match="lineage is unsound"):
-        CheckpointedCMSBuild(CFG, ckpt_dir).run(df, "text")
-
-
-def test_resume_false_clears_stale_partials(spark, ckpt_dir):
-    """Starting over must not leave old-input partials next to new ones —
-    the per-partition dedupe would arbitrarily keep stale rows."""
-    old = web_pages(spark, 200, seed=5, partitions=4)
-    CheckpointedCMSBuild(CFG, ckpt_dir).run(old, "text")
-    new = web_pages(spark, 300, seed=9, partitions=4)
-    sk = CheckpointedCMSBuild(CFG, ckpt_dir).run(new, "text", resume=False)
-    fresh = build_cms_from_text(new, "text", CFG)
-    assert sk.to_bytes() == fresh.to_bytes()
+def test_dataset_overwrite_ignores_stale_partials(spark, ckpt_dir, src):
+    """An overwritten dataset has new part-file names: the old files'
+    partials must not be merged, and the result equals a fresh build."""
+    _write(spark, src, 200, seed=5, files=4)
+    CheckpointedCMSBuild(CFG, ckpt_dir).run(spark, src)
+    _write(spark, src, 300, seed=9, files=4, mode="overwrite")
+    build = CheckpointedCMSBuild(CFG, ckpt_dir)
+    sk = build.run(spark, src)
+    assert build.metrics["files_skipped"] == 0
+    assert build.metrics["files_computed"] == 4
+    assert sk.to_bytes() == _direct(spark, src)
 
 
-def test_changed_input_files_rejected(spark, ckpt_dir, tmp_path):
-    src = str(tmp_path / "dataset")
-    web_pages(spark, 100, seed=5, partitions=2).write.mode("append").parquet(src)
-    df = spark.read.parquet(src)
-    CheckpointedCMSBuild(CFG, ckpt_dir).run(df, "text")
-    # new files land -> partition ids no longer line up with the lineage
-    web_pages(spark, 100, seed=6, partitions=2).write.mode("append").parquet(src)
-    df2 = spark.read.parquet(src)
-    with pytest.raises(ValueError, match="input files changed"):
-        CheckpointedCMSBuild(CFG, ckpt_dir).run(df2, "text")
-
-
-def test_global_sort_rejected(spark, ckpt_dir):
-    """A global orderBy range-partitions on SAMPLED boundaries — partition
-    contents are not reproducible across runs, so lineage must refuse it
-    (sortWithinPartitions keeps contents per-partition and stays fine)."""
-    df = web_pages(spark, 100, seed=5, partitions=4)
-    with pytest.raises(ValueError, match="lineage is unsound"):
-        CheckpointedCMSBuild(CFG, ckpt_dir).run(df.orderBy("page_id"), "text")
-    # non-global sort: same rows in the same partitions, only order differs
-    sk = CheckpointedCMSBuild(CFG, ckpt_dir).run(
-        df.sortWithinPartitions("page_id"), "text", resume=False)
-    assert sk.total > 0
+def test_token_free_file_is_not_missing(spark, ckpt_dir, src):
+    """A file whose text holds no token yields no partial; that is not an
+    incomplete checkpoint, on the first run or on a resume."""
+    _write(spark, src, 200, seed=5, files=2)
+    web_pages(spark, 4, seed=6, partitions=1) \
+        .withColumn("text", F.expr("IF(length(url) % 2 = 0, '  ', NULL)")) \
+        .write.mode("append").parquet(src)
+    for _ in range(2):
+        build = CheckpointedCMSBuild(CFG, ckpt_dir)
+        sk = build.run(spark, src)
+        assert build.metrics["n_files"] == 3
+        assert sk.to_bytes() == _direct(spark, src)
