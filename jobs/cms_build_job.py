@@ -5,7 +5,7 @@
         jobs/cms_build_job.py \
         --input /path/web_pages.parquet --output /path/out \
         --eps 0.001 --delta 0.1 --seed 12345 \
-        [--checkpoint /path/ckpt] [--salt-partitions 256] [--path sql|arrow]
+        [--checkpoint /path/ckpt | --salt-partitions 256] [--path sql|arrow]
 
 Pipeline: parquet/Iceberg scan (text column pruned from html by Catalyst)
 -> optional salted repartition (defuses host/language skew before the
