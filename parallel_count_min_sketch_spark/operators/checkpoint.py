@@ -93,13 +93,14 @@ class CheckpointedCMSBuild:
         self._bind_config()
         files = {_norm_uri(f): f for f in spark.read.parquet(input_path).inputFiles()}
         done = {_norm_uri(r["group"]) for r in self._stored(spark, "group")}
-        todo = sorted(f for p, f in files.items() if p not in done)
+        todo = sorted(p for p in files if p not in done)
 
         t0 = time.perf_counter()
         if todo:
             # scan ONLY the remaining files — the resume prunes I/O, not
             # just compute
-            df = spark.read.parquet(*todo).withColumn("__file", F.input_file_name())
+            df = spark.read.parquet(*(files[p] for p in todo)) \
+                .withColumn("__file", F.input_file_name())
             sketch_grouped_from_text(df, "__file", text_col, self.cfg.new_sketch,
                                      self.cfg.from_bytes) \
                 .write.mode("append").parquet(self.partials_dir)
@@ -113,7 +114,7 @@ class CheckpointedCMSBuild:
             by_path.setdefault(_norm_uri(r["group"]), r)
         # a file this run's committed write scanned without emitting a
         # partial holds no tokens; any other listed file must have one
-        missing = set(files) - set(by_path) - {_norm_uri(f) for f in todo}
+        missing = set(files) - set(by_path) - set(todo)
         if missing:
             raise RuntimeError(f"checkpoint incomplete after run: missing {sorted(missing)}")
         rows = [by_path[p] for p in files if p in by_path]
