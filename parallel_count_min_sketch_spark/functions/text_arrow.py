@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..memtune import tune_worker
+
 __all__ = [
     "doc_repetition_stats_arrow",
     "ngram_tf_rows_arrow",
@@ -112,6 +114,7 @@ def doc_repetition_stats_arrow(docs: DataFrame, id_col: str = "doc_id",
         import numpy as np
         import pyarrow as pa
 
+        tune_worker()
         for batch in batches:
             ids = batch.column(0)
             flat_ne, didx, n = _tokenize_batch(batch.column(1))
@@ -194,6 +197,7 @@ def ngram_tf_rows_arrow(docs: DataFrame, k: int, id_col: str = "doc_id",
         import pyarrow as pa
         import pyarrow.compute as pc
 
+        tune_worker()
         for batch in batches:
             ids = batch.column(0)
             flat_ne, didx, _n = _tokenize_batch(batch.column(1))
@@ -249,6 +253,7 @@ def quality_gate_cols_arrow(docs: DataFrame, stopwords: tuple,
         import pyarrow as pa
         import pyarrow.compute as pc
 
+        tune_worker()
         sw = pa.array(list(stopwords))
         for batch in batches:
             ids = batch.column(0)
@@ -299,6 +304,7 @@ def text_quality_stats_arrow(docs: DataFrame, stopwords: tuple,
         import pyarrow as pa
         import pyarrow.compute as pc
 
+        tune_worker()
         sw = pa.array(list(stopwords))
         for batch in batches:
             ids = batch.column(0)

@@ -25,7 +25,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from ..memtune import tune_allocator
+from ..memtune import tune_worker
 
 MAGIC = {
     b"\x89PNG": "png",
@@ -270,7 +270,7 @@ def sample_frames(df: DataFrame, bin_col: str, id_col: str, *,
     proj = df.select(F.col(id_col).alias("id"), F.col(bin_col).alias("data"))
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_allocator()
+        tune_worker()
         for batch in batches:
             ids = batch.column(0).to_pylist()
             blobs = batch.column(1).to_pylist()
@@ -309,7 +309,7 @@ def extract_features(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
     proj = df.select(F.col(id_col).alias("id"), F.col(bin_col).alias("data"))
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_allocator()
+        tune_worker()
         for batch in batches:
             ids = batch.column(0).to_pylist()
             blobs = batch.column(1).to_pylist()

@@ -180,10 +180,10 @@ def _minhash_mins_arrow(df: DataFrame, id_col: str, text: str = "text", *,
     def fold(batches):
         import pyarrow.compute as pc
 
-        from ..memtune import tune_allocator
+        from ..memtune import tune_worker
         from ..sketches.hashing import djb2_batch
 
-        tune_allocator()
+        tune_worker()
         for batch in batches:
             ids = batch.column(0)
             if ids.null_count:
@@ -607,10 +607,10 @@ def _simhash_arrow(df: DataFrame, id_col: str, text: str = "text", *,
     def fold(batches):
         import pyarrow.compute as pc
 
-        from ..memtune import tune_allocator
+        from ..memtune import tune_worker
         from ..sketches.hashing import djb2_batch
 
-        tune_allocator()
+        tune_worker()
         for batch in batches:
             ids = batch.column(0)
             if ids.null_count:

@@ -31,7 +31,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import CMSConfig
-from ..memtune import tune_allocator
+from ..memtune import tune_worker
 from ..sketches.hashing import djb2_batch
 from .sql_build import point_query_join
 
@@ -60,7 +60,7 @@ def candidate_tokens(df, text_col: str, k_per_partition: int, *, sep: str = " ")
     proj = df.select(text_col)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_allocator()
+        tune_worker()
         # Arrow-native throughout: per-batch value_counts stay as Arrow
         # tables, one vectorized group_by/sum + sort merges them at the
         # end. No per-distinct-token Python objects — at 100x scale a
@@ -120,7 +120,7 @@ def fused_sketch_and_candidates(df, text_col: str, cfg: CMSConfig,
     proj = df.select(text_col)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_allocator()
+        tune_worker()
         sk = cfg.new_sketch()
         parts: list[pa.Table] = []
         buffered = 0
@@ -180,7 +180,7 @@ def partials_to_table(partials_df, cfg: CMSConfig):
     element-wise merge is a partial/final SUM on (depth_row, bucket) —
     bounded by depth*width rows per partition regardless of input size."""
     def explode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_allocator()
+        tune_worker()
         for batch in batches:
             for blob in batch.column(0).to_pylist():
                 sk = cfg.from_bytes(blob)

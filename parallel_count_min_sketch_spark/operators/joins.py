@@ -40,7 +40,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from ..memtune import tune_allocator
+from ..memtune import tune_worker
 from ..sketches.bloom import BloomFilter
 from ..sketches.hashing import djb2_batch
 from .sketch_agg import build_sketch
@@ -92,7 +92,7 @@ def bloom_flag(big: DataFrame, key_col: str, bloom: BloomFilter, *,
     idx = big.columns.index(key_col)
 
     def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_allocator()
+        tune_worker()
         bf = BloomFilter.from_bytes(bits.value)
         for batch in batches:
             key_only = pa.RecordBatch.from_arrays([batch.column(idx)], names=[key_col])
@@ -113,7 +113,7 @@ def bloom_prefilter(big: DataFrame, key_col: str, bloom: BloomFilter, *,
     idx = big.columns.index(key_col)
 
     def keep(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_allocator()
+        tune_worker()
         bf = BloomFilter.from_bytes(bits.value)
         for batch in batches:
             key_only = pa.RecordBatch.from_arrays([batch.column(idx)], names=[key_col])

@@ -32,6 +32,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..config import affine_sql
+from ..memtune import tune_worker
 from ..sketches.hashing import affine_params
 
 # collapse the phase-1 accumulation whenever it exceeds this many rows —
@@ -64,6 +65,7 @@ def stratified_hash_sample(df: DataFrame, group_col: str, key_col: str,
     def part_topk(pdfs: Iterator) -> Iterator:
         import pandas as pd
 
+        tune_worker()
         acc: list = []
         held = 0
 

@@ -27,7 +27,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..memtune import tune_allocator
+from ..memtune import tune_worker
 from ..sketches.kmv import KMV_HASH_SPACE, KMVSketch
 
 PAIR_SCHEMA = (
@@ -67,7 +67,7 @@ def kmv_pair_estimates(grouped_df: DataFrame, pair_cond=None) -> DataFrame:
     pairs = a.join(F.broadcast(b), cond)
 
     def combine(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_allocator()
+        tune_worker()
         p = KMV_HASH_SPACE
         for batch in batches:
             rows: dict[str, list] = {f.name: [] for f in _PAIR_PA}

@@ -24,7 +24,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..memtune import tune_allocator
+from ..memtune import tune_worker
 from ..sketches.hashing import MERSENNE_PRIME, affine_params
 
 LSH_SEED = 7171
@@ -93,7 +93,7 @@ def cosine_topk_pandas(df: DataFrame, id_col: str, vec_col: str, query_ids: list
     out_schema = "query_id LONG, neighbor_id LONG, cos DOUBLE"
 
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_allocator()
+        tune_worker()
         qids_l, qmat_l = bq.value
         for batch in batches:
             ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)

@@ -20,7 +20,7 @@ from typing import Callable, Iterator
 import numpy as np
 import pyarrow as pa
 
-from ..memtune import tune_allocator
+from ..memtune import tune_worker
 from ..sketches.cms import CountMinSketch
 from ..sketches.hashing import djb2_batch
 from ..sketches.hll import HyperLogLog
@@ -144,7 +144,7 @@ def sketch_partials(df, col: str, make_sketch: Callable, *,
     proj = df.select(*cols)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_allocator()
+        tune_worker()
         sk = make_sketch()
         rows = 0
         for batch in batches:
@@ -210,7 +210,7 @@ def merge_sketch_partials(partials_df, from_bytes: Callable):
             rdd, blobs._jdf.schema(), False), spark)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_allocator()
+        tune_worker()
         out = fold_blobs((b for batch in batches
                           for b in batch.column(0).to_pylist()), from_bytes)
         if out is not None:
@@ -247,7 +247,7 @@ def text_token_partials(df, text_col: str, make_sketch: Callable, *,
     proj = df.select(text_col)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_allocator()
+        tune_worker()
         sk = make_sketch()
         rows = 0
         for batch in batches:
@@ -460,7 +460,7 @@ def sketch_grouped_partials(df, group_col: str, col: str, make_sketch: Callable,
     if not as_float and _stacked_fold(make_sketch()) is not None:
 
         def fold_stacked(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            tune_allocator()
+            tune_worker()
             acc = _stacked_fold(make_sketch(), string_items=string_items,
                                 weighted=weighted)
             for batch in batches:
@@ -474,7 +474,7 @@ def sketch_grouped_partials(df, group_col: str, col: str, make_sketch: Callable,
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
 
-        tune_allocator()
+        tune_worker()
         sketches: dict[str, object] = {}
         counts: dict[str, int] = {}
         for batch in batches:
@@ -507,6 +507,7 @@ def merge_grouped_partials(partials, from_bytes: Callable):
     def merge_group(pdf):
         import pandas as pd
 
+        tune_worker()
         out = fold_blobs(pdf["sketch"], from_bytes)
         return pd.DataFrame(
             {
@@ -566,7 +567,7 @@ def text_token_grouped_partials(df, group_col: str, text_col: str,
     proj = df.select(group_col, text_col)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_allocator()
+        tune_worker()
         sketches: dict[str, object] = {}
         counts: dict[str, int] = {}
         for batch in batches:
@@ -627,7 +628,7 @@ def finalize_grouped(grouped_df, finalize_fn, out_schema: str,
     names = [f.name for f in out_pa_schema]
 
     def fin(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_allocator()
+        tune_worker()
         for batch in batches:
             rows: list[tuple] = []
             for row in batch.to_pylist():

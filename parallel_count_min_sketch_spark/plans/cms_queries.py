@@ -187,12 +187,15 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sql_build import cms_table_df as _tbl, point_query_join
 
     toks = _token_df(spark, sf_dir)
-    n = toks.count()
-    thresh = int(HH_FRACTION * n)
+    # one-row broadcast threshold, not an eager count() job
+    thresh = toks.agg(F.expr(
+        f"CAST(FLOOR(CAST({HH_FRACTION!r} AS DOUBLE) * COUNT(*)) AS BIGINT)"
+    ).alias("thresh"))
     table = _tbl(toks, "tok", CFG, string_items=True)
     pts = point_query_join(table, toks.distinct(), "tok", CFG, probes_are_strings=True)
     return (
-        pts.filter(F.col("cms_estimate") >= thresh)
+        pts.crossJoin(F.broadcast(thresh))
+        .filter(F.col("cms_estimate") >= F.col("thresh"))
         .select(F.col("item").alias("token"), "cms_estimate")
         .orderBy(F.desc("cms_estimate"), "token")
     )
@@ -473,21 +476,24 @@ def q_cms_accuracy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sql_build import cms_table_df as _tbl, point_query_join
 
     li = load(spark, sf_dir, "lineitem").select("l_partkey")
-    n = li.count()
-    eps_n = int(CFG.epsilon * n)
+    # one-row broadcast (N, eps*N), not an eager count() job
+    stream = li.agg(F.count("*").alias("stream_n")).withColumn(
+        "eps_n", F.expr(
+            f"CAST(FLOOR(CAST({CFG.epsilon!r} AS DOUBLE) * stream_n) AS BIGINT)"))
     table = _tbl(li, "l_partkey", CFG)
     exact = li.groupBy(F.col("l_partkey").cast("bigint").alias("item")) \
         .agg(F.count("*").alias("exact_cnt"))
     ests = point_query_join(table, exact.select("item"), "item", CFG)
     err = F.col("cms_estimate") - F.col("exact_cnt")
-    return ests.join(exact, "item").agg(
+    return ests.join(exact, "item").crossJoin(F.broadcast(stream)).agg(
         F.count("*").alias("n_distinct"),
         F.sum(err).alias("sum_abs_err"),
         F.max(err).alias("max_abs_err"),
         F.sum(F.when(err == 0, 1).otherwise(0)).cast("bigint").alias("n_exact"),
-        F.sum(F.when(err <= eps_n, 1).otherwise(0)).cast("bigint").alias("n_within_eps"),
-        F.lit(n).cast("bigint").alias("stream_n"),
-        F.lit(eps_n).cast("bigint").alias("eps_n"),
+        F.sum(F.when(err <= F.col("eps_n"), 1).otherwise(0)).cast("bigint")
+        .alias("n_within_eps"),
+        F.max("stream_n").cast("bigint").alias("stream_n"),
+        F.max("eps_n").alias("eps_n"),
     )
 
 

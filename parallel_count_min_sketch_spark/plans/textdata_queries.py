@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import textstats as ts
+from ..memtune import tune_worker
 from ..operators import dedup as dd
 from ..operators.similarity import cosine_topk
 from ..sketches.hashing import MERSENNE_PRIME, affine_params
@@ -1020,7 +1021,6 @@ def q_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — any decoder or dispatch bug breaks the value hash."""
     import pyarrow as pa
 
-    from ..memtune import tune_allocator
     from ..multimodal.binary_ops import (
         decode_image,
         encode_bmp,
@@ -1040,7 +1040,7 @@ def q_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     def kernel(batches):
-        tune_allocator()
+        tune_worker()
         for batch in batches:
             ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
             cols = {n: [] for n in pa_schema.names}
@@ -1131,6 +1131,7 @@ def q_script_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         import pyarrow as pa
         import pyarrow.compute as pc
 
+        tune_worker()
         for batch in batches:
             ids = batch.column(0)
             ids_np = ids.to_numpy(zero_copy_only=False)
@@ -1357,7 +1358,6 @@ def q_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pyarrow as pa
 
-    from ..memtune import tune_allocator
     from ..multimodal.binary_ops import decode_wav, encode_wav
 
     docs = load_spread(spark, sf_dir, "documents", "doc_id")
@@ -1369,7 +1369,7 @@ def q_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "blob_bytes", "sum_abs", "peak")])
 
     def kernel(batches):
-        tune_allocator()
+        tune_worker()
         for batch in batches:
             ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
             cols = {n: [] for n in pa_schema.names}

@@ -43,6 +43,19 @@ def dims(epsilon: float, delta: float) -> tuple[int, int]:
     return depth, width
 
 
+def exact_bincount(idx: np.ndarray, counts: np.ndarray, minlength: int = 0) -> np.ndarray:
+    """``np.bincount(idx, weights=counts)`` as exact int64 for any int64
+    weights. The float64 ``bincount`` is exact while every partial sum
+    stays below 2^53, which holds when the absolute mass does (checked
+    against 2^52 so the check's own float rounding cannot cross 2^53);
+    heavier batches accumulate in int64 with ``np.add.at``."""
+    if np.abs(counts, dtype=np.float64).sum() < 2.0 ** 52:
+        return np.bincount(idx, weights=counts, minlength=minlength).astype(np.int64)
+    out = np.zeros(max(minlength, int(idx.max()) + 1 if idx.size else 0), dtype=np.int64)
+    np.add.at(out, idx, counts)
+    return out
+
+
 class CountMinSketch:
     """Mergeable CMS with vectorized batch update / query.
 
@@ -105,8 +118,7 @@ class CountMinSketch:
         else:
             counts = np.asarray(counts, dtype=np.int64)
             for j in range(self.depth):
-                # float64 bincount is exact for integer sums below 2^53
-                self.table[j] += np.bincount(h[j], weights=counts, minlength=self.width).astype(np.int64)
+                self.table[j] += exact_bincount(h[j], counts, self.width)
             self.total += int(counts.sum())
 
     def update_strings(self, tokens, counts=None) -> None:

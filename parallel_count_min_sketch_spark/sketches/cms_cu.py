@@ -47,7 +47,7 @@ import struct
 
 import numpy as np
 
-from .cms import dims
+from .cms import dims, exact_bincount
 from .hashing import affine_hash, affine_params, djb2_batch
 
 _MAGIC = b"CMU1"
@@ -104,7 +104,7 @@ class ConservativeCMS:
             if (counts < 0).any():
                 raise ValueError("negative weights are not allowed in sketch builds")
             uniq, inv = np.unique(items, return_inverse=True)
-            w = np.bincount(inv, weights=counts).astype(np.int64)
+            w = exact_bincount(inv, counts)
         h = affine_hash(uniq, self.a, self.b, self.width)  # [depth, m]
         t, rows = self.table, self._rows
         for i in range(uniq.size):

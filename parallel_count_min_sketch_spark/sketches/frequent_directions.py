@@ -122,7 +122,7 @@ def fd_build(df, vec_col: str, ell: int, dim: int) -> FrequentDirections:
     import pyarrow as pa
     from pyspark.sql import functions as F
 
-    from ..memtune import tune_allocator
+    from ..memtune import tune_worker
     from ..operators.sketch_agg import merge_sketch_partials
 
     proj = df.select(F.col(vec_col).alias("_v"))
@@ -135,7 +135,7 @@ def fd_build(df, vec_col: str, ell: int, dim: int) -> FrequentDirections:
             FrequentDirections as _FD,
         )
 
-        tune_allocator()
+        tune_worker()
         sk = _FD(ell, dim)
         for batch in batches:
             arr = np.asarray(batch.column(0).to_pylist(), dtype=np.float64)

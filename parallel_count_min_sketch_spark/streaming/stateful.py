@@ -65,9 +65,9 @@ def stateful_grouped_sketch(stream_df, group_col: str, text_col: str,
     from ..operators.sketch_agg import _weighted_update
 
     def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        from ..memtune import tune_allocator
+        from ..memtune import tune_worker
 
-        tune_allocator()
+        tune_worker()
         if state.exists:
             blob, mass = state.get
             sk = from_bytes(bytes(blob))

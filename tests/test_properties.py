@@ -11,6 +11,7 @@ from parallel_count_min_sketch_spark.sketches import (
     djb2_batch,
     djb2_py,
 )
+from parallel_count_min_sketch_spark.sketches.cms_cu import ConservativeCMS
 
 items_lists = st.lists(st.integers(min_value=0, max_value=2**40), min_size=0, max_size=300)
 
@@ -41,6 +42,41 @@ def test_cms_one_sided_for_any_input(xs):
     est = s.point_query(vals)
     assert (est >= counts).all()
     assert s.total == len(xs)
+
+
+# weights up to 2^56 each, at most 64 of them: sums reach 2^62 without int64
+# overflow, far past float64's exact-integer range of 2^53
+weighted_items = st.lists(
+    st.tuples(st.integers(min_value=0, max_value=50),
+              st.one_of(st.integers(min_value=0, max_value=1000),
+                        st.integers(min_value=2**50, max_value=2**56))),
+    min_size=1, max_size=64)
+
+
+@settings(max_examples=40, deadline=None)
+@given(pairs=weighted_items)
+def test_weighted_cms_one_sided_past_2_53(pairs):
+    """The weighted estimate never drops below the true mass, also where a
+    float64 sum would round it down."""
+    items = np.array([p[0] for p in pairs], dtype=np.int64)
+    weights = np.array([p[1] for p in pairs], dtype=np.int64)
+    for sk in (CountMinSketch(0.1, 0.1, seed=9), ConservativeCMS(0.1, 0.1, seed=9)):
+        sk.update_batch(items, weights)
+        truth: dict = {}
+        for it, w in pairs:
+            truth[it] = truth.get(it, 0) + w
+        keys = np.array(sorted(truth), dtype=np.int64)
+        est = sk.point_query(keys)
+        assert all(int(e) >= truth[int(k)] for e, k in zip(est, keys)), type(sk)
+        assert sk.total == sum(truth.values())
+
+
+def test_weighted_cms_exact_at_2_53_plus_1():
+    sk = CountMinSketch(0.001, 0.1, seed=1)
+    sk.update_batch(np.array([7, 7], dtype=np.int64),
+                    np.array([2**53, 1], dtype=np.int64))
+    assert sk.total == 2**53 + 1
+    assert int(sk.point_query([7])[0]) == 2**53 + 1
 
 
 @settings(max_examples=30, deadline=None)
