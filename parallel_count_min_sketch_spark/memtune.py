@@ -53,19 +53,17 @@ def tune_worker() -> None:
             _guard_zip_invalidation()
 
 
-def zip_guard_installed() -> bool:
-    return _ZIP_GUARDED
-
-
 def _set_malloc_thresholds(threshold: int = 1 << 30) -> None:
     try:
         import ctypes
 
-        libc = ctypes.CDLL("libc.so.6", use_errno=True)
-        libc.mallopt(_M_MMAP_THRESHOLD, threshold)
-        libc.mallopt(_M_TRIM_THRESHOLD, threshold)
-    except Exception:  # noqa: BLE001 - non-glibc platforms
-        pass
+        mallopt = ctypes.CDLL("libc.so.6", use_errno=True).mallopt
+    except (OSError, AttributeError):  # non-glibc platforms
+        return
+    mallopt.argtypes = (ctypes.c_int, ctypes.c_int)
+    mallopt.restype = ctypes.c_int
+    mallopt(_M_MMAP_THRESHOLD, threshold)
+    mallopt(_M_TRIM_THRESHOLD, threshold)
 
 
 def _stamp(path: str):

@@ -43,17 +43,20 @@ def dims(epsilon: float, delta: float) -> tuple[int, int]:
     return depth, width
 
 
-def exact_bincount(idx: np.ndarray, counts: np.ndarray, minlength: int = 0) -> np.ndarray:
-    """``np.bincount(idx, weights=counts)`` as exact int64 for any int64
-    weights. The float64 ``bincount`` is exact while every partial sum
-    stays below 2^53, which holds when the absolute mass does (checked
-    against 2^52 so the check's own float rounding cannot cross 2^53);
-    heavier batches accumulate in int64 with ``np.add.at``."""
+def add_weighted_counts(table: np.ndarray, rows: np.ndarray, counts: np.ndarray) -> None:
+    """``table[j] += np.bincount(rows[j], weights=counts)`` for every row j,
+    exact in int64 for any int64 weights. The float64 ``bincount`` is exact
+    while every partial sum stays below 2^53, which holds when the absolute
+    mass does (checked against 2^52 so the check's own float rounding
+    cannot cross 2^53); heavier batches accumulate with ``np.add.at``."""
+    width = table.shape[1]
     if np.abs(counts, dtype=np.float64).sum() < 2.0 ** 52:
-        return np.bincount(idx, weights=counts, minlength=minlength).astype(np.int64)
-    out = np.zeros(max(minlength, int(idx.max()) + 1 if idx.size else 0), dtype=np.int64)
-    np.add.at(out, idx, counts)
-    return out
+        weights = counts.astype(np.float64)
+        for t, row in zip(table, rows):
+            t += np.bincount(row, weights=weights, minlength=width).astype(np.int64)
+    else:
+        for t, row in zip(table, rows):
+            np.add.at(t, row, counts)
 
 
 class CountMinSketch:
@@ -117,8 +120,7 @@ class CountMinSketch:
             self.total += int(items.size)
         else:
             counts = np.asarray(counts, dtype=np.int64)
-            for j in range(self.depth):
-                self.table[j] += exact_bincount(h[j], counts, self.width)
+            add_weighted_counts(self.table, h, counts)
             self.total += int(counts.sum())
 
     def update_strings(self, tokens, counts=None) -> None:

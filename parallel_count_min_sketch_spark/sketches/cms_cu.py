@@ -47,7 +47,7 @@ import struct
 
 import numpy as np
 
-from .cms import dims, exact_bincount
+from .cms import add_weighted_counts, dims
 from .hashing import affine_hash, affine_params, djb2_batch
 
 _MAGIC = b"CMU1"
@@ -104,7 +104,8 @@ class ConservativeCMS:
             if (counts < 0).any():
                 raise ValueError("negative weights are not allowed in sketch builds")
             uniq, inv = np.unique(items, return_inverse=True)
-            w = exact_bincount(inv, counts)
+            w = np.zeros(uniq.size, dtype=np.int64)
+            add_weighted_counts(w[None], inv[None], counts)
         h = affine_hash(uniq, self.a, self.b, self.width)  # [depth, m]
         t, rows = self.table, self._rows
         for i in range(uniq.size):

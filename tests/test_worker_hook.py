@@ -172,6 +172,9 @@ def write_zip(path, modules):
 def enter_task():
     from pyspark import TaskContext
     TaskContext._getOrCreate()
+
+def guard_installed():
+    return zipimport.zipimporter.invalidate_caches.__module__ == memtune.__name__
 """
 
 
@@ -200,7 +203,7 @@ def test_unchanged_zip_is_not_reread(tmp_path):
         for _ in range(5):
             importlib.invalidate_caches()
         print(json.dumps({"reads": len(READS),
-                          "installed": memtune.zip_guard_installed()}))
+                          "installed": guard_installed()}))
     """, tmp_path)
     # the first invalidation reads once to learn the archive's stamp
     assert out == {"reads": 1, "installed": True}
@@ -236,28 +239,29 @@ def test_guard_is_a_noop_outside_a_task_and_on_313(tmp_path):
         memtune.tune_worker()
         on_313 = zipimport.zipimporter.invalidate_caches is original
         print(json.dumps({"outside": outside, "on_313": on_313,
-                          "installed": memtune.zip_guard_installed()}))
+                          "installed": guard_installed()}))
     """, tmp_path)
     assert out == {"outside": True, "on_313": True, "installed": False}
 
 
 def test_worker_reports_guard_installed(spark):
-    """A mapInArrow kernel, run twice, sees the guard from inside the worker
-    (the second run lands on reused workers)."""
-    from parallel_count_min_sketch_spark.memtune import (tune_worker,
-                                                         zip_guard_installed)
+    """A mapInArrow kernel, run twice, sees the guard from inside every
+    worker; the second run normally lands on reused workers (``pid``)."""
+    from parallel_count_min_sketch_spark import memtune
 
     def report(batches):
-        tune_worker()
         import os
+        import zipimport
 
         import pyarrow as pa
 
+        memtune.tune_worker()
         for _ in batches:
             pass
+        guard = zipimport.zipimporter.invalidate_caches
         yield pa.RecordBatch.from_pydict({
             "pid": [os.getpid()], "eager_zip": [sys.version_info < (3, 13)],
-            "installed": [zip_guard_installed()]})
+            "installed": [guard.__module__ == memtune.__name__]})
 
     df = spark.range(0, 40, numPartitions=4)
     schema = "pid BIGINT, eager_zip BOOLEAN, installed BOOLEAN"
