@@ -9,10 +9,10 @@ O(partitions x k) and reads the corpus exactly TWICE:
            (token, count) tables into BOTH a partial CMS sketch and the
            partition's exact top-k candidate set — one mapInArrow emits a
            partial-sketch row plus k candidate rows per partition;
-  stage 2: partial sketches -> (depth_row, bucket) partial/final sum (the
-           merged sketch table, bounded by depth*width rows/partition);
-           candidate union + distinct (tiny), CMS point query via the
-           broadcast sketch-table join, filter est >= phi*N;
+  stage 2: fan-in merge of the partial sketches and collect of the
+           distinct candidate union (both O(partitions x k)); the driver
+           probes the candidates with the merged numpy sketch and keeps
+           est >= phi*N;
   scan 2: exact recount of the tiny surviving set (broadcast semi-join).
 
 Guarantee: with k >= 1/phi, any item with global share >= phi has share
@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..config import CMSConfig
 from ..memtune import tune_worker
 from ..sketches.hashing import djb2_batch
-from .sql_build import point_query_join
+from .agg import merge_partials
 
 CAND_SCHEMA = "token STRING, local_count LONG"
 
@@ -174,32 +174,6 @@ def fused_sketch_and_candidates(df, text_col: str, cfg: CMSConfig,
     return proj.mapInArrow(fold, FUSED_SCHEMA)
 
 
-def partials_to_table(partials_df, cfg: CMSConfig):
-    """Serialized partial sketches -> the merged sketch as
-    DataFrame[depth_row, bucket, counter] (zero counters omitted). The
-    element-wise merge is a partial/final SUM on (depth_row, bucket) —
-    bounded by depth*width rows per partition regardless of input size."""
-    def explode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_worker()
-        for batch in batches:
-            for blob in batch.column(0).to_pylist():
-                sk = cfg.from_bytes(blob)
-                rows, cols = np.nonzero(sk.table)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(rows.astype(np.int32)),
-                     pa.array(cols.astype(np.int64)),
-                     pa.array(sk.table[rows, cols].astype(np.int64))],
-                    schema=pa.schema([("depth_row", pa.int32()),
-                                      ("bucket", pa.int64()),
-                                      ("counter", pa.int64())]),
-                )
-
-    cells = partials_df.select("sketch").mapInArrow(
-        explode, "depth_row INT, bucket BIGINT, counter BIGINT")
-    return cells.groupBy("depth_row", "bucket").agg(
-        F.sum("counter").alias("counter"))
-
-
 def heavy_hitters_scalable(df, text_col: str, cfg: CMSConfig, phi: float, *,
                            k_per_partition: int | None = None) -> DataFrame:
     """EXACT heavy hitters (token, exact_count, cms_estimate) at threshold
@@ -208,36 +182,40 @@ def heavy_hitters_scalable(df, text_col: str, cfg: CMSConfig, phi: float, *,
 
       1. fused scan: partial sketch + per-partition top-k candidates in one
          mapInArrow (pigeonhole: with k >= 1/phi the candidate union
-         contains every true heavy hitter); output persisted — it is
-         O(partitions * k) rows, tiny at any corpus size;
-      2. sketch table from the partials (partial/final sum, bounded by
-         depth*width rows/partition), then CMS prune: candidates with
-         estimate < floor(phi*N) are dropped — one-sidedness (est >= true)
-         means no true HH is lost;
+         contains every true heavy hitter); its output is O(partitions * k)
+         rows, tiny at any corpus size. It is persisted only for the eager
+         phase, which reads it twice (the fan-in sketch merge and the
+         candidate collect) and unpersists it in ``finally``;
+      2. CMS prune on the driver: the collected candidates are probed with
+         the merged numpy sketch and those with estimate < floor(phi*N)
+         are dropped — one-sidedness (est >= true) means no true HH is
+         lost;
       3. exact recount of the tiny surviving set (broadcast semi-join
          against the token stream), final filter exact_count >= threshold.
 
     Output therefore equals the exact heavy-hitter set regardless of
     partitioning — value-checkable against a plain SQL GROUP BY oracle —
-    while every shuffle stays O(partitions*k + depth*width), never
-    O(distinct tokens)."""
+    while every shuffle stays O(partitions*k), never O(distinct tokens).
+    Eager phase: the sketch merge and the candidate collect (two jobs, plus
+    fan-in levels above ``sketch_agg.FANIN`` partitions)."""
     if k_per_partition is None:
         k_per_partition = max(16, int(2.0 / phi))
     fused = fused_sketch_and_candidates(df, text_col, cfg, k_per_partition)
-    fused = fused.persist()
-    table = partials_to_table(fused.filter(F.col("kind") == 0), cfg)
-    table.cache()
-    n = (
-        table.filter(F.col("depth_row") == 0)
-        .agg(F.sum("counter").alias("n")).collect()[0]["n"]
-    )
-    thresh = int(phi * n)
-    cands = fused.filter(F.col("kind") == 1).select("token").distinct()
-    ests = point_query_join(table, cands, "token", cfg, probes_are_strings=True)
-    survivors = (
-        ests.filter(F.col("cms_estimate") >= thresh)
-        .select(F.col("item").alias("token"), "cms_estimate")
-    )
+    fused.persist()
+    try:
+        sk = merge_partials(fused.filter(F.col("kind") == 0), cfg)
+        cands = sorted({r[0] for r in fused.filter(F.col("kind") == 1)
+                        .select("token").collect()})
+    finally:
+        fused.unpersist()
+    thresh = int(phi * sk.total)
+    est = sk.point_query_strings(cands)
+    keep = est >= thresh
+    # an Arrow table becomes a JVM local relation: no Python worker scans it
+    survivors = df.sparkSession.createDataFrame(pa.table({
+        "token": pa.array(cands, pa.string()).filter(pa.array(keep)),
+        "cms_estimate": pa.array(est[keep], pa.int64()),
+    }))
     toks = df.select(F.explode(F.split(text_col, " ")).alias("tok")) \
         .filter(F.col("tok") != "")
     exact = (

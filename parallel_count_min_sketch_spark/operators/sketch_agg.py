@@ -282,6 +282,42 @@ def build_sketch_from_text(df, text_col: str, make_sketch: Callable,
     return make_sketch() if sk is None else sk
 
 
+def probe_cms(df, sk, item_col: str, est_col: str = "cms_estimate"):
+    """``df`` with a BIGINT ``est_col`` appended: the point query of ``sk``
+    at djb2 of the string column ``item_col`` (NULL for a NULL item), in
+    one ``mapInArrow`` pass; every other column passes through unchanged.
+
+    ``sk`` is a ``CountMinSketch`` or a ``ConservativeCMS``: both answer
+    min over the same hash rows, so either rides in the closure as one
+    CMS1 blob (depth*width*8 bytes, 65 KB at the 3 x 2719 default). The
+    probe side is never joined or shuffled against a sketch table, and
+    djb2 runs in numpy, not as an interpreted SQL fold."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    blob = CountMinSketch(sk.epsilon, sk.delta, sk.seed, table=sk.table,
+                          total=sk.total).to_bytes()
+    eps, delta = sk.epsilon, sk.delta
+    pos = df.columns.index(item_col)
+    names = df.columns + [est_col]
+    schema = StructType(df.schema.fields + [StructField(est_col, LongType())])
+
+    def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        tune_worker()
+        q = CountMinSketch.from_bytes(blob, eps, delta)
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            col = batch.column(pos)
+            nulls = col.is_null().to_numpy(zero_copy_only=False) \
+                if col.null_count else None
+            est = pa.array(q.point_query(djb2_batch(col)), pa.int64(),
+                           mask=nulls)
+            yield pa.RecordBatch.from_arrays(batch.columns + [est],
+                                             names=names)
+
+    return df.mapInArrow(probe, schema)
+
+
 # ---------------------------------------------------------------------------
 # Per-group sketches (one CMS per lang, one HLL per host, one KLL per day,
 # ...). Two-phase to stay skew-proof: phase 1 emits bounded

@@ -16,9 +16,13 @@ Conventions:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import CMSConfig, djb2_sql_duckdb
+from ..operators.agg import build_cms
+from ..operators.sketch_agg import probe_cms
 from ..operators.sql_build import cms_table_df, point_query_df
 from ..sources.tables import load, load_spread
 
@@ -165,11 +169,29 @@ def _token_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(F.explode(F.split("text", " ")).alias("tok")).filter(F.col("tok") != "")
 
 
+def _token_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(distinct token, n) rows: the JVM hash aggregate every string-item
+    sketch build reads, so only distinct tokens cross the Arrow boundary.
+    Weighted by n, the build equals the per-occurrence one bit for bit
+    (cms_update_int's count argument, src/core/count_min_sketch.c:5-11)."""
+    return _token_df(spark, sf_dir).groupBy("tok").agg(F.count("*").alias("n"))
+
+
 def q_cms_token_point_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String path: djb2(token) -> point query (cms_update_str /
-    cms_point_query_str analog, src/core/count_min_sketch.c:24-27,42-45)."""
-    toks = _token_df(spark, sf_dir)
-    return point_query_df(toks, "tok", CFG, TOKEN_PROBES, string_items=True).orderBy("item")
+    cms_point_query_str analog, src/core/count_min_sketch.c:24-27,42-45).
+    Eager phase: the weighted sketch build; the five probes are answered
+    on the driver, in sorted order, so the result is a local relation that
+    needs no Spark job."""
+    import pyarrow as pa
+
+    sk = build_cms(_token_pairs(spark, sf_dir), "tok", CFG, weight_col="n",
+                   string_items=True)
+    probes = sorted(TOKEN_PROBES)
+    return spark.createDataFrame(pa.table({
+        "item": pa.array(probes, pa.string()),
+        "cms_estimate": pa.array(sk.point_query_strings(probes), pa.int64()),
+    }))
 
 
 SQL_CMS_TOKEN_POINT_QUERY = _duck_point_query_sql(
@@ -183,20 +205,19 @@ SQL_CMS_TOKEN_POINT_QUERY = _duck_point_query_sql(
 def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy hitters: exact-distinct candidate set, CMS estimates, keep
     est >= floor(HH_FRACTION * N). Not in the reference (SURVEY §2.8) —
-    the north-star addition, cross-checkable exactly."""
-    from ..operators.sql_build import cms_table_df as _tbl, point_query_join
+    the north-star addition, cross-checkable exactly.
 
-    toks = _token_df(spark, sf_dir)
-    # one-row broadcast threshold, not an eager count() job
-    thresh = toks.agg(F.expr(
-        f"CAST(FLOOR(CAST({HH_FRACTION!r} AS DOUBLE) * COUNT(*)) AS BIGINT)"
-    ).alias("thresh"))
-    table = _tbl(toks, "tok", CFG, string_items=True)
-    pts = point_query_join(table, toks.distinct(), "tok", CFG, probes_are_strings=True)
+    Eager phase: the weighted sketch build over the (token, n) aggregate
+    (two jobs under AQE: the aggregate's exchange, then the build). The
+    threshold is the oracle's IEEE expression on the sketch's total; the
+    distinct tokens are probed by the numpy kernel in ``probe_cms``."""
+    pairs = _token_pairs(spark, sf_dir)
+    sk = build_cms(pairs, "tok", CFG, weight_col="n", string_items=True)
+    thresh = int(math.floor(float(HH_FRACTION) * sk.total))
     return (
-        pts.crossJoin(F.broadcast(thresh))
-        .filter(F.col("cms_estimate") >= F.col("thresh"))
-        .select(F.col("item").alias("token"), "cms_estimate")
+        probe_cms(pairs.select("tok"), sk, "tok")
+        .filter(F.col("cms_estimate") >= thresh)
+        .select(F.col("tok").alias("token"), "cms_estimate")
         .orderBy(F.desc("cms_estimate"), "token")
     )
 
@@ -384,27 +405,24 @@ def q_cms_url_host_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts' companion to the token queries. Synthesizes the web-page url
     shape from ``documents`` (deterministic: https://{source}.example/doc/
     {doc_id}), extracts the host JVM-side (operators/skew.host_of_url
-    regex — no Python in the path), sketches the host stream on the
-    string/djb2 path, and reports CMS estimate vs exact count per host.
-    Hosts are low-cardinality and heavy by construction, so this is the
-    skewed-key regime the engine's salting/two-phase rails target."""
+    regex), builds the sketch weighted from the exact (host, count)
+    aggregate, and reports CMS estimate vs exact count per host through
+    the numpy probe kernel. Hosts are low-cardinality and heavy by
+    construction, so this is the skewed-key regime the engine's
+    salting/two-phase rails target. Eager phase: the sketch build."""
     from ..operators.skew import host_of_url
-    from ..operators.sql_build import cms_table_df as _tbl, point_query_join
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "source")
     pages = docs.select(
         F.concat(F.lit("https://"), F.col("source"), F.lit(".example/doc/"),
                  F.col("doc_id").cast("string")).alias("url"))
-    hosts = pages.select(host_of_url("url").alias("host"))
-    table = _tbl(hosts, "host", CFG, string_items=True)
+    # a NULL host has no sketch cell; the oracle's inner join drops it
+    hosts = pages.select(host_of_url("url").alias("host")) \
+        .filter(F.col("host").isNotNull())
     exact = hosts.groupBy("host").agg(F.count("*").alias("exact_count"))
-    pts = point_query_join(table, exact.select("host"), "host", CFG,
-                           probes_are_strings=True)
-    return (
-        exact.join(pts.withColumnRenamed("item", "host"), "host")
-        .select("host", "exact_count", "cms_estimate")
-        .orderBy("host")
-    )
+    sk = build_cms(exact, "host", CFG, weight_col="exact_count",
+                   string_items=True)
+    return probe_cms(exact, sk, "host").orderBy("host")
 
 
 SQL_CMS_URL_HOST_COUNTS = f"""

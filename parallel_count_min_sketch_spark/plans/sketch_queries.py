@@ -529,13 +529,26 @@ def _quantile_sql() -> str:
         "SELECT l_extendedprice AS x FROM lineitem WHERE l_extendedprice IS NOT NULL")
 
 
+def _lang_token_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(lang, distinct token, n) rows from one JVM hash aggregate: the
+    grouped builds read these weighted by n, so only distinct pairs cross
+    the Arrow boundary. CMS counters and totals and HLL registers equal
+    the per-occurrence build bit for bit."""
+    docs = load(spark, sf_dir, "documents")
+    return (
+        docs.select("lang", F.explode(F.split("text", " ")).alias("tok"))
+        .filter(F.col("tok") != "")
+        .groupBy("lang", "tok").agg(F.count("*").alias("n"))
+    )
+
+
 def q_cms_grouped_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One CMS per language over document tokens (the grouped two-phase
-    Arrow path), each probed for token 'key' — group totals and estimates
-    replayed exactly by the SQL oracle. The probe runs in a distributed
-    ``finalize_grouped`` stage: sketch blobs are decoded inside executors,
-    never collected (scales to 10k+ groups — see
-    scripts/grouped_finalize_bench.py)."""
+    Arrow path, weighted by the (lang, token) aggregate), each probed for
+    token 'key' — group totals and estimates replayed exactly by the SQL
+    oracle. The probe runs in a distributed ``finalize_grouped`` stage:
+    sketch blobs are decoded inside executors, never collected (scales to
+    10k+ groups — see scripts/grouped_finalize_bench.py)."""
     import pyarrow as pa
     import pyspark.sql.functions as F
 
@@ -545,11 +558,8 @@ def q_cms_grouped_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sketches.hashing import djb2_py
 
     cfg = CMSConfig(epsilon=0.001, delta=0.1, seed=12345)
-    docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        "lang", F.explode(F.split("text", " ")).alias("tok")
-    ).filter(F.col("tok") != "")
-    grouped = cms_grouped(toks, "lang", "tok", cfg, string_items=True)
+    grouped = cms_grouped(_lang_token_pairs(spark, sf_dir), "lang", "tok", cfg,
+                          string_items=True, weight_col="n")
     probe = int(djb2_py("key"))
 
     def fin(row: dict) -> list[tuple]:
@@ -616,7 +626,9 @@ def djb2_sql_duckdb_local(expr: str) -> str:
 
 def q_hll_grouped_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One HLL per language over document tokens (generic grouped-sketch
-    rails, operators/sketch_agg.sketch_grouped) — registers, estimator, and
+    rails, operators/sketch_agg.sketch_grouped, fed the (lang, token, n)
+    aggregate: HLL is weight-invariant, and the same aggregate gives the
+    exact distinct count per language) — registers, estimator, and
     bound all replayed exactly per group by the DuckDB oracle. Estimator
     math runs in a distributed ``finalize_grouped`` stage (no blobs
     collected); the error-bound boolean is a JVM expression over the
@@ -630,12 +642,9 @@ def q_hll_grouped_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sketch_agg import finalize_grouped, sketch_grouped
     from ..sketches.hll import HyperLogLog
 
-    docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        "lang", F.explode(F.split("text", " ")).alias("tok")
-    ).filter(F.col("tok") != "")
-    grouped = sketch_grouped(toks, "lang", "tok", _mk_hll, _hll_from_bytes,
-                             string_items=True)
+    pairs = _lang_token_pairs(spark, sf_dir)
+    grouped = sketch_grouped(pairs, "lang", "tok", _mk_hll, _hll_from_bytes,
+                             string_items=True, weight_col="n")
 
     def fin(row: dict) -> list[tuple]:
         sk = HyperLogLog.from_bytes(row["sketch"])
@@ -650,8 +659,8 @@ def q_hll_grouped_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
                    ("scaled_inverse_sum", pa.int64()), ("est_floor", pa.int64()),
                    ("_est", pa.float64())]),
     )
-    exact = toks.groupBy("lang").agg(
-        F.countDistinct("tok").cast("bigint").alias("exact_distinct"))
+    exact = pairs.groupBy("lang").agg(
+        F.count("*").cast("bigint").alias("exact_distinct"))
     thr = 5 * (1.04 / math.sqrt(_mk_hll().m))
     return (
         exact.join(F.broadcast(fin_df), "lang")
@@ -1303,29 +1312,27 @@ def q_cms_cu_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     The CU table itself is partition-dependent (conservative update is a
     sequential read-modify-write — the module docstring carries the merge
     one-sidedness proof), so the oracle cannot replay counters; instead the
-    query verifies the sandwich DISTRIBUTED over every distinct token (the
-    tiny CU table is broadcast back via the same point_query_join used for
-    plain CMS — identical hash rows, directly comparable cells) and emits
-    only oracle-replayable aggregates plus the property booleans. The
-    measured overestimate reduction lives in BENCH/cu_improvement.json."""
-    from ..operators.sql_build import cms_table_df, point_query_join
+    query verifies the sandwich DISTRIBUTED over every distinct token (both
+    sketches ride to the executors in the numpy probe kernel
+    ``probe_cms`` — identical hash rows, directly comparable cells) and
+    emits only oracle-replayable aggregates plus the property booleans. The
+    measured overestimate reduction lives in BENCH/cu_improvement.json.
+
+    The plain CMS is built weighted from the exact (token, count)
+    aggregate; the CU sketch keeps its per-occurrence build, because
+    conservative update depends on the order and grouping of its input.
+    Eager phase: both sketch builds."""
+    from ..operators.agg import build_cms
+    from ..operators.sketch_agg import probe_cms
     from .cms_queries import CFG, _token_df
 
     toks = _token_df(spark, sf_dir)
     cu = build_sketch(toks, "tok", _mk_cu, _cu_from_bytes, string_items=True)
-    nz_j, nz_b = np.nonzero(cu.table)
-    cu_rows = [(int(j), int(b), int(cu.table[j, b])) for j, b in zip(nz_j, nz_b)]
-    cu_tbl = spark.createDataFrame(
-        cu_rows, "depth_row INT, bucket BIGINT, counter BIGINT")
     exact = toks.groupBy("tok").agg(F.count("*").alias("exact_cnt"))
-    cms_est = point_query_join(
-        cms_table_df(toks, "tok", CFG, string_items=True),
-        exact.select("tok"), "tok", CFG, probes_are_strings=True,
-    ).withColumnRenamed("cms_estimate", "cms_est").withColumnRenamed("item", "tok")
-    cu_est = point_query_join(
-        cu_tbl, exact.select("tok"), "tok", CFG, probes_are_strings=True,
-    ).withColumnRenamed("cms_estimate", "cu_est").withColumnRenamed("item", "tok")
-    joined = exact.join(cms_est, "tok").join(cu_est, "tok")
+    cms = build_cms(exact, "tok", CFG, weight_col="exact_cnt",
+                    string_items=True)
+    joined = probe_cms(probe_cms(exact, cms, "tok", "cms_est"), cu, "tok",
+                       "cu_est")
     n = F.count("*")
     return joined.agg(
         n.cast("bigint").alias("n_distinct"),
