@@ -187,6 +187,30 @@ def fold_blobs(blobs, from_bytes: Callable):
     return out
 
 
+def planned(df):
+    """``df`` over its own planned JVM RDD (as ``Dataset.checkpoint``,
+    without the checkpoint). Planning runs the shuffle stages AQE needs to
+    size ``df``; every plan built on the result reads their output instead
+    of recomputing them, so one aggregate can feed a sketch build and its
+    probe with one scan. Nothing is persisted: each action re-runs only
+    the final stage over the shuffle files the plan already wrote."""
+    from pyspark.sql import DataFrame
+
+    spark = df.sparkSession
+    return DataFrame(spark._jsparkSession.internalCreateDataFrame(
+        df._jdf.queryExecution().toRdd(), df._jdf.schema(), False), spark)
+
+
+def sort_bounded(df, *cols):
+    """``df`` totally ordered by ``cols`` in ONE partition, for results
+    whose size the query bounds (a per-language row, a heavy-hitter set):
+    the same order as ``orderBy`` without its ``RangePartitioner`` sampling
+    job, which re-runs every stage above the sort. The stages upstream of
+    the single-partition exchange stay parallel. Never use it on a result
+    that grows with the input."""
+    return df.repartition(1).sortWithinPartitions(*cols)
+
+
 def merge_sketch_partials(partials_df, from_bytes: Callable):
     """Fan-in merge of the ``sketch`` column of a partials DataFrame
     (MPI_Reduce analog, src/mpi/mpiV2.c:163-175); None when it has no rows.
@@ -196,18 +220,13 @@ def merge_sketch_partials(partials_df, from_bytes: Callable):
     pass. With more, ``repartition(ceil(P/FANIN))`` + ``mapInArrow``
     levels first fold the blobs about FANIN at a time, so neither a merge
     task nor the driver holds many more than FANIN sketches."""
-    from pyspark.sql import DataFrame
-
     blobs = partials_df.select("sketch")
     # size the plan through its JVM RDD: no Python worker starts, and any
     # shuffle stage AQE runs to size it is reused by the collect of this
-    # plan, or by merge levels planned over the RDD (as Dataset.checkpoint)
-    rdd = blobs._jdf.queryExecution().toRdd()
-    n = rdd.getNumPartitions()
+    # plan, or by merge levels planned over the RDD
+    n = blobs._jdf.queryExecution().toRdd().getNumPartitions()
     if n > FANIN:
-        spark = blobs.sparkSession
-        blobs = DataFrame(spark._jsparkSession.internalCreateDataFrame(
-            rdd, blobs._jdf.schema(), False), spark)
+        blobs = planned(blobs)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tune_worker()

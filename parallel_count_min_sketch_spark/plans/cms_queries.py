@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import CMSConfig, djb2_sql_duckdb
 from ..operators.agg import build_cms
-from ..operators.sketch_agg import probe_cms
+from ..operators.sketch_agg import planned, probe_cms, sort_bounded
 from ..operators.sql_build import cms_table_df, point_query_df
 from ..sources.tables import load, load_spread
 
@@ -208,18 +208,22 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the north-star addition, cross-checkable exactly.
 
     Eager phase: the weighted sketch build over the (token, n) aggregate
-    (two jobs under AQE: the aggregate's exchange, then the build). The
-    threshold is the oracle's IEEE expression on the sketch's total; the
-    distinct tokens are probed by the numpy kernel in ``probe_cms``."""
-    pairs = _token_pairs(spark, sf_dir)
+    (two jobs under AQE: the aggregate's exchange, run by ``planned``, then
+    the build). The threshold is the oracle's IEEE expression on the
+    sketch's total; the distinct tokens are probed by the numpy kernel in
+    ``probe_cms`` over the same planned aggregate, so ``documents`` is
+    scanned once. The result is at most 1/HH_FRACTION true hitters plus
+    CMS false positives, sorted in one partition: the collect runs two
+    jobs (the probe, then the sort)."""
+    pairs = planned(_token_pairs(spark, sf_dir))
     sk = build_cms(pairs, "tok", CFG, weight_col="n", string_items=True)
     thresh = int(math.floor(float(HH_FRACTION) * sk.total))
-    return (
+    hitters = (
         probe_cms(pairs.select("tok"), sk, "tok")
         .filter(F.col("cms_estimate") >= thresh)
         .select(F.col("tok").alias("token"), "cms_estimate")
-        .orderBy(F.desc("cms_estimate"), "token")
     )
+    return sort_bounded(hitters, F.desc("cms_estimate"), "token")
 
 
 SQL_CMS_HEAVY_HITTERS = f"""
@@ -409,7 +413,9 @@ def q_cms_url_host_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, and reports CMS estimate vs exact count per host through
     the numpy probe kernel. Hosts are low-cardinality and heavy by
     construction, so this is the skewed-key regime the engine's
-    salting/two-phase rails target. Eager phase: the sketch build."""
+    salting/two-phase rails target. Eager phase: the sketch build over
+    the planned (host, count) aggregate, which the probe reads again
+    without a second scan; one row per host, sorted in one partition."""
     from ..operators.skew import host_of_url
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "source")
@@ -419,10 +425,10 @@ def q_cms_url_host_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a NULL host has no sketch cell; the oracle's inner join drops it
     hosts = pages.select(host_of_url("url").alias("host")) \
         .filter(F.col("host").isNotNull())
-    exact = hosts.groupBy("host").agg(F.count("*").alias("exact_count"))
+    exact = planned(hosts.groupBy("host").agg(F.count("*").alias("exact_count")))
     sk = build_cms(exact, "host", CFG, weight_col="exact_count",
                    string_items=True)
-    return probe_cms(exact, sk, "host").orderBy("host")
+    return sort_bounded(probe_cms(exact, sk, "host"), "host")
 
 
 SQL_CMS_URL_HOST_COUNTS = f"""

@@ -530,10 +530,10 @@ def _quantile_sql() -> str:
 
 
 def _lang_token_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(lang, distinct token, n) rows from one JVM hash aggregate: the
-    grouped builds read these weighted by n, so only distinct pairs cross
-    the Arrow boundary. CMS counters and totals and HLL registers equal
-    the per-occurrence build bit for bit."""
+    """(lang, distinct token, n) rows from one JVM hash aggregate, so only
+    distinct pairs cross the Arrow boundary: weighted by n, CMS counters
+    and totals equal the per-occurrence build bit for bit; HLL registers
+    do with or without the weights."""
     docs = load(spark, sf_dir, "documents")
     return (
         docs.select("lang", F.explode(F.split("text", " ")).alias("tok"))
@@ -548,13 +548,14 @@ def q_cms_grouped_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     token 'key' — group totals and estimates replayed exactly by the SQL
     oracle. The probe runs in a distributed ``finalize_grouped`` stage:
     sketch blobs are decoded inside executors, never collected (scales to
-    10k+ groups — see scripts/grouped_finalize_bench.py)."""
+    10k+ groups — see scripts/grouped_finalize_bench.py). One row per
+    language, sorted in one partition."""
     import pyarrow as pa
     import pyspark.sql.functions as F
 
     from ..config import CMSConfig
     from ..operators.agg import cms_grouped
-    from ..operators.sketch_agg import finalize_grouped
+    from ..operators.sketch_agg import finalize_grouped, sort_bounded
     from ..sketches.hashing import djb2_py
 
     cfg = CMSConfig(epsilon=0.001, delta=0.1, seed=12345)
@@ -572,7 +573,7 @@ def q_cms_grouped_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         pa.schema([("lang", pa.string()), ("total_tokens", pa.int64()),
                    ("est_key", pa.int64())]),
     )
-    return out.orderBy("lang")
+    return sort_bounded(out, "lang")
 
 
 def _sql_cms_grouped() -> str:
@@ -626,53 +627,53 @@ def djb2_sql_duckdb_local(expr: str) -> str:
 
 def q_hll_grouped_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One HLL per language over document tokens (generic grouped-sketch
-    rails, operators/sketch_agg.sketch_grouped, fed the (lang, token, n)
-    aggregate: HLL is weight-invariant, and the same aggregate gives the
-    exact distinct count per language) — registers, estimator, and
-    bound all replayed exactly per group by the DuckDB oracle. Estimator
+    rails, operators/sketch_agg.sketch_grouped) — registers, estimator,
+    and bound all replayed exactly per group by the DuckDB oracle. The
+    build reads the distinct (lang, token) rows of one JVM aggregate
+    UNWEIGHTED: HLL is weight-invariant, so the registers equal the
+    per-occurrence build's, and each group's ``rows_seen`` is its exact
+    distinct token count. One scan of ``documents``, no join: estimator
     math runs in a distributed ``finalize_grouped`` stage (no blobs
-    collected); the error-bound boolean is a JVM expression over the
-    joined exact-distinct aggregate — identical IEEE double ops to the
-    old driver-side Python."""
+    collected), and the error-bound boolean is a JVM expression over its
+    output (identical IEEE double ops to the old driver-side Python). One
+    row per language, sorted in one partition."""
     import math
 
     import pyarrow as pa
     import pyspark.sql.functions as F
 
-    from ..operators.sketch_agg import finalize_grouped, sketch_grouped
+    from ..operators.sketch_agg import (finalize_grouped, sketch_grouped,
+                                        sort_bounded)
     from ..sketches.hll import HyperLogLog
 
     pairs = _lang_token_pairs(spark, sf_dir)
     grouped = sketch_grouped(pairs, "lang", "tok", _mk_hll, _hll_from_bytes,
-                             string_items=True, weight_col="n")
+                             string_items=True)
 
     def fin(row: dict) -> list[tuple]:
         sk = HyperLogLog.from_bytes(row["sketch"])
         s, v, est = sk.estimate_portable()
-        return [(row["group"], int(v), int(s), int(math.floor(est)), float(est))]
+        return [(row["group"], row["rows_seen"], int(v), int(s),
+                 int(math.floor(est)), float(est))]
 
     fin_df = finalize_grouped(
         grouped, fin,
-        "lang STRING, zero_registers BIGINT, scaled_inverse_sum BIGINT, "
-        "est_floor BIGINT, _est DOUBLE",
-        pa.schema([("lang", pa.string()), ("zero_registers", pa.int64()),
+        "lang STRING, exact_distinct BIGINT, zero_registers BIGINT, "
+        "scaled_inverse_sum BIGINT, est_floor BIGINT, _est DOUBLE",
+        pa.schema([("lang", pa.string()), ("exact_distinct", pa.int64()),
+                   ("zero_registers", pa.int64()),
                    ("scaled_inverse_sum", pa.int64()), ("est_floor", pa.int64()),
                    ("_est", pa.float64())]),
     )
-    exact = pairs.groupBy("lang").agg(
-        F.count("*").cast("bigint").alias("exact_distinct"))
     thr = 5 * (1.04 / math.sqrt(_mk_hll().m))
-    return (
-        exact.join(F.broadcast(fin_df), "lang")
-        .select(
-            "lang", "exact_distinct", "zero_registers", "scaled_inverse_sum",
-            "est_floor",
-            ((F.abs(F.col("_est") - F.col("exact_distinct").cast("double"))
-              / F.col("exact_distinct").cast("double")) < F.lit(thr))
-            .alias("within_bound"),
-        )
-        .orderBy("lang")
+    out = fin_df.select(
+        "lang", "exact_distinct", "zero_registers", "scaled_inverse_sum",
+        "est_floor",
+        ((F.abs(F.col("_est") - F.col("exact_distinct").cast("double"))
+          / F.col("exact_distinct").cast("double")) < F.lit(thr))
+        .alias("within_bound"),
     )
+    return sort_bounded(out, "lang")
 
 
 def _hll_grouped_sql() -> str:
@@ -1321,14 +1322,15 @@ def q_cms_cu_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     The plain CMS is built weighted from the exact (token, count)
     aggregate; the CU sketch keeps its per-occurrence build, because
     conservative update depends on the order and grouping of its input.
-    Eager phase: both sketch builds."""
+    Eager phase: both sketch builds. The probes read the planned (token,
+    count) aggregate the plain build read, so it is not recomputed."""
     from ..operators.agg import build_cms
-    from ..operators.sketch_agg import probe_cms
+    from ..operators.sketch_agg import planned, probe_cms
     from .cms_queries import CFG, _token_df
 
     toks = _token_df(spark, sf_dir)
     cu = build_sketch(toks, "tok", _mk_cu, _cu_from_bytes, string_items=True)
-    exact = toks.groupBy("tok").agg(F.count("*").alias("exact_cnt"))
+    exact = planned(toks.groupBy("tok").agg(F.count("*").alias("exact_cnt")))
     cms = build_cms(exact, "tok", CFG, weight_col="exact_cnt",
                     string_items=True)
     joined = probe_cms(probe_cms(exact, cms, "tok", "cms_est"), cu, "tok",

@@ -446,3 +446,35 @@ def test_funnel_and_cohort_plans_stay_aggregate_shaped(spark):
     assert "CartesianProduct" not in cp and "Window" not in cp, cp
     assert "SortMergeJoin" in cp or "ShuffledHashJoin" in cp or \
         "BroadcastHashJoin" in cp, cp
+
+
+def _final_plan(df) -> str:
+    """The executed plan after a collect, without the AQE initial plan
+    that its string repeats below the final one."""
+    return _plan(df, execute=True).split("== Initial Plan ==")[0]
+
+
+def test_query_mix_sketch_queries_scan_documents_once(spark, sf_dir):
+    """Heavy hitters probe the planned (token, n) aggregate their eager
+    build read, so the collected plan holds no file scan at all;
+    per-language HLL takes its exact distinct count from the build's
+    ``rows_seen``, so it scans ``documents`` once and broadcasts nothing.
+    Both results are bounded and sorted in one partition, with no
+    range-partitioning exchange (whose sampling job re-runs the kernel)."""
+    from parallel_count_min_sketch_spark.plans.cms_queries import (
+        q_cms_heavy_hitters,
+    )
+    from parallel_count_min_sketch_spark.plans.sketch_queries import (
+        q_hll_grouped_by_lang,
+    )
+
+    hh = _final_plan(q_cms_heavy_hitters(spark, sf_dir))
+    assert "MapInArrow" in hh, hh
+    assert "FileScan" not in hh, hh
+
+    hll = _final_plan(q_hll_grouped_by_lang(spark, sf_dir))
+    assert hll.count("FileScan parquet") == 1, hll
+    assert "BroadcastExchange" not in hll, hll
+
+    for plan in (hh, hll):
+        assert "rangepartitioning" not in plan.lower(), plan

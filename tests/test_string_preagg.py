@@ -65,6 +65,32 @@ def test_weighted_string_builds_equal_per_occurrence(spark, rows):
         == build_cms(toks, "tok", CFG, string_items=True).to_bytes()
 
 
+@settings(max_examples=6, deadline=None)
+@given(rows=_DOCS)
+@example(rows=[("en", None), ("de", None), (None, None)])
+@example(rows=[("en", ""), ("de", "   "), ("en", " \t ")])
+def test_unweighted_grouped_hll_counts_distinct_tokens(spark, rows):
+    """Over the distinct (lang, token) rows, the unweighted grouped HLL
+    has the weighted build's registers, and its ``rows_seen`` is each
+    language's exact distinct token count (NULL languages are dropped, as
+    the grouped fold drops NULL groups)."""
+    docs = spark.createDataFrame(rows, "lang STRING, text STRING").repartition(3)
+    toks = _tokens(docs)
+    pairs = toks.groupBy("lang", "tok").agg(F.count("*").alias("n"))
+
+    unweighted = _by_group(sketch_grouped(pairs, "lang", "tok", _mk_hll,
+                                          _hll_from_bytes, string_items=True))
+    weighted = _by_group(sketch_grouped(pairs, "lang", "tok", _mk_hll,
+                                        _hll_from_bytes, string_items=True,
+                                        weight_col="n"))
+    exact = {r["lang"]: r["d"] for r in
+             toks.filter(F.col("lang").isNotNull()).groupBy("lang")
+             .agg(F.countDistinct("tok").alias("d")).collect()}
+    assert {g: n for g, (n, _) in unweighted.items()} == exact
+    assert {g: b for g, (_, b) in unweighted.items()} \
+        == {g: b for g, (_, b) in weighted.items()}
+
+
 def test_probe_cms_equals_numpy_point_query(spark):
     toks = ["a", "", None, "key", "ü", "a", "zz z", "b"]
     rows = [(i, t, i / 3.0) for i, t in enumerate(toks)]
