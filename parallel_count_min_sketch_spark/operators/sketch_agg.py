@@ -205,9 +205,9 @@ def sort_bounded(df, *cols):
     """``df`` totally ordered by ``cols`` in ONE partition, for results
     whose size the query bounds (a per-language row, a heavy-hitter set):
     the same order as ``orderBy`` without its ``RangePartitioner`` sampling
-    job, which re-runs every stage above the sort. The stages upstream of
-    the single-partition exchange stay parallel. Never use it on a result
-    that grows with the input."""
+    job, which re-runs the plan under the sort. The stages under the
+    single-partition exchange stay parallel. Never use it on a result that
+    grows with the input."""
     return df.repartition(1).sortWithinPartitions(*cols)
 
 

@@ -635,8 +635,8 @@ def q_hll_grouped_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct token count. One scan of ``documents``, no join: estimator
     math runs in a distributed ``finalize_grouped`` stage (no blobs
     collected), and the error-bound boolean is a JVM expression over its
-    output (identical IEEE double ops to the old driver-side Python). One
-    row per language, sorted in one partition."""
+    output (the oracle's IEEE double ops). One row per language, sorted in
+    one partition."""
     import math
 
     import pyarrow as pa

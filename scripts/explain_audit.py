@@ -17,7 +17,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 AUDITED = [
     ("cms_sketch_table", "CMS build (Catalyst path): expect partial+final HashAggregate, ReadSchema without html"),
     ("cms_point_query", "point query: expect BroadcastHashJoin against the sketch table"),
-    ("cms_heavy_hitters", "heavy hitters: JVM (token, n) pre-aggregate, then the numpy probe kernel (MapInArrow) over the distinct tokens — no probe join"),
+    ("cms_heavy_hitters", "heavy hitters: the numpy probe kernel (MapInArrow) reads the planned (token, n) aggregate the eager build read (Scan ExistingRDD) — no rescan, no probe join, one-partition sort"),
     ("lsh_pairs", "MinHash-LSH: shuffle only on band keys"),
     ("embedding_knn", "kNN: broadcast query vectors, single pass over the corpus"),
     ("events_window", "windowed agg: partial+final over (window, type)"),
@@ -26,7 +26,7 @@ AUDITED = [
     ("dedup_kept_docs", "exact dedup keep-policy: one digest shuffle"),
     ("ann_ivf", "IVF ANN: literal-centroid assignment, broadcast probes, cluster equi-join"),
     ("cms_accuracy_report", "accuracy report: distinct-item estimates vs exact counts, one-row aggregate"),
-    ("cms_url_host_counts", "URL-host counts: JVM regex host extraction, (host, count) pre-aggregate, numpy probe kernel (MapInArrow) — no probe join"),
+    ("cms_url_host_counts", "URL-host counts: JVM regex host extraction, (host, count) pre-aggregate; the numpy probe kernel (MapInArrow) reads the planned aggregate the build read — no rescan, no probe join"),
     ("kmv_set_ops", "KMV set ops: bounded grouped partials, broadcast pair join, executor-side combine"),
     ("hash_sample_docs", "deterministic sample: TakeOrderedAndProject (per-partition top-k), no global sort"),
     ("mg_frequent_tokens", "Misra-Gries frequent items: summary scan + broadcast candidate recount, no distinct-universe shuffle"),
