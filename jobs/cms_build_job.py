@@ -68,7 +68,8 @@ def main() -> None:
     from parallel_count_min_sketch_spark.operators.agg import build_cms_from_text
     from parallel_count_min_sketch_spark.operators.checkpoint import CheckpointedCMSBuild
     from parallel_count_min_sketch_spark.operators.skew import salted_repartition
-    from parallel_count_min_sketch_spark.operators.sql_build import cms_table_df
+    from parallel_count_min_sketch_spark.operators.sql_build import (
+        cells_to_sketch, cms_table_df)
 
     spark = SparkSession.builder.appName("pcms-build").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -100,10 +101,7 @@ def main() -> None:
             rows, walls = timed_reps(
                 lambda: cms_table_df(toks, "tok", cfg, string_items=True).collect())
             r0 = time.perf_counter()
-            sk = cfg.new_sketch()
-            for r in rows:
-                sk.table[r["depth_row"], r["bucket"]] = r["counter"]
-            sk.total = int(sk.table[0].sum())
+            sk = cells_to_sketch(rows, cfg)
             reconstruct_sec = time.perf_counter() - r0
         metrics = {"wall_sec_runs": [round(w, 3) for w in walls]} if args.reps > 1 else {}
         if args.path == "sql":

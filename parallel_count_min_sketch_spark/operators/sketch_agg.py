@@ -131,6 +131,35 @@ def _update_repeat_bounded(sk, values: np.ndarray, weights: np.ndarray,
         sk.update_batch(np.repeat(values[lo:hi], weights[lo:hi]))
 
 
+def fold_batches(sk, batches: Iterator[pa.RecordBatch], *, weighted: bool,
+                 string_items: bool = False, as_float: bool = False) -> int:
+    """Fold Arrow batches of ``(item[, weight])`` into ``sk`` through the
+    weighted protocol (``_weighted_update``); returns the logical rows
+    consumed. NULL items and NULL weights are dropped: a NULL weight is
+    "no occurrences", like SQL SUM, not int64(nan) garbage."""
+    rows = 0
+    for batch in batches:
+        c = batch.column(0)
+        if c.null_count or (weighted and batch.column(1).null_count):
+            import pyarrow.compute as pc
+
+            keep = c.is_valid()
+            if weighted:
+                keep = pc.and_(keep, batch.column(1).is_valid())
+            batch = batch.filter(keep)
+            c = batch.column(0)
+        w_all = (
+            batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+            if weighted
+            else None
+        )
+        for lo in range(0, len(c), _CHUNK):
+            values = items_from_array(c.slice(lo, _CHUNK), string_items, as_float)
+            w = w_all[lo:lo + _CHUNK] if w_all is not None else None
+            rows += _weighted_update(sk, values, w)
+    return rows
+
+
 def sketch_partials(df, col: str, make_sketch: Callable, *,
                     weight_col: str | None = None,
                     string_items: bool = False, as_float: bool = False):
@@ -142,33 +171,13 @@ def sketch_partials(df, col: str, make_sketch: Callable, *,
     ``rows_seen`` then counts logical mass."""
     cols = [col] + ([weight_col] if weight_col else [])
     proj = df.select(*cols)
+    weighted = bool(weight_col)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tune_worker()
         sk = make_sketch()
-        rows = 0
-        for batch in batches:
-            c = batch.column(0)
-            if c.null_count or (weight_col and batch.column(1).null_count):
-                import pyarrow.compute as pc
-
-                keep = c.is_valid()
-                if weight_col:
-                    # a null weight is "no occurrences", like SQL SUM —
-                    # NOT int64(nan) garbage
-                    keep = pc.and_(keep, batch.column(1).is_valid())
-                batch = batch.filter(keep)
-                c = batch.column(0)
-            w_all = (
-                batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-                if weight_col
-                else None
-            )
-            for lo in range(0, len(c), _CHUNK):
-                values = items_from_array(c.slice(lo, _CHUNK), string_items,
-                                          as_float)
-                w = w_all[lo:lo + _CHUNK] if w_all is not None else None
-                rows += _weighted_update(sk, values, w)
+        rows = fold_batches(sk, batches, weighted=weighted,
+                            string_items=string_items, as_float=as_float)
         yield _partial_batch(rows, sk)
 
     return proj.mapInArrow(fold, PARTIAL_SCHEMA)

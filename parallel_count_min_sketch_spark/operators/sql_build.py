@@ -1,11 +1,15 @@
-"""Pure-JVM CMS build and queries as DataFrame operations.
+"""Catalyst CMS build and queries as DataFrame operations.
 
 The CMS counter matrix is just a GROUP BY: counter[j][k] = sum of weights
 of items with h_j(item) == k. Expressed declaratively, Catalyst gives us
 map-side partial aggregation (the per-partition partial sketch), a shuffle
-of at most depth*width rows per partition, and whole-stage codegen — zero
-Python in the hot path. Queries are broadcast joins against the resulting
-tiny (depth x width) table.
+of at most depth*width rows per partition, and whole-stage codegen.
+Integer items stay in the JVM end to end. String items are collapsed to
+``(item, weight)`` by a JVM hash aggregate, then hashed with djb2 and
+folded into per-partition sketches by one numpy ``mapInArrow`` kernel
+(the Arrow rail's fold), whose nonzero cells the same partial/final
+``sum`` merges. Queries are broadcast joins against the resulting tiny
+(depth x width) table.
 
 This is the "let Catalyst pick the physical strategy" counterpart of the
 Arrow kernel in ``agg.py``; both compute the same matrix (tests assert
@@ -17,26 +21,53 @@ which is how the driver's correctness oracle checks sketch values exactly.
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import CMSConfig, djb2_sql_spark
+from ..memtune import tune_worker
 from ..sketches.cms import CountMinSketch
+from .sketch_agg import fold_batches
+
+CELLS_SCHEMA = "depth_row INT, bucket BIGINT, counter BIGINT"
+_CELLS_PA = pa.schema([("depth_row", pa.int32()), ("bucket", pa.int64()),
+                       ("counter", pa.int64())])
 
 
 def with_item_id(df: DataFrame, col: str, *, string_items: bool = False,
                  out: str = "item_id") -> DataFrame:
-    """Normalize the item column to BIGINT ids (djb2 for strings —
-    cms_update_str analog, src/core/count_min_sketch.c:24-27 — JVM-side
-    via a higher-order-function fold, no Python UDF).
+    """Normalize the item column to BIGINT ids: a cast for integers, djb2
+    for strings (cms_update_str analog, src/core/count_min_sketch.c:24-27)
+    as the ``djb2_sql_spark`` higher-order-function fold, which Spark runs
+    interpreted (``CodegenFallback``), not codegen'd. No Python UDF.
 
     selectExpr, not withColumn: same projection, roughly half the
     construction wall (withColumn's per-call replace-check costs ~25 ms
-    with the djb2 expression — measured; this runs on every CMS query
-    build and every rep of the headline build)."""
+    with the djb2 expression — measured)."""
     sql = djb2_sql_spark(col) if string_items else f"CAST(`{col}` AS BIGINT)"
     if out in df.columns:  # withColumn REPLACES; select-star would duplicate
         return df.withColumn(out, F.expr(sql))
     return df.selectExpr("*", f"{sql} AS {out}")
+
+
+def _string_cells(df: DataFrame, cfg: CMSConfig, weighted: bool) -> DataFrame:
+    """The nonzero cells of one numpy CMS per partition of ``df``'s
+    ``(item[, weight])`` columns, as CELLS_SCHEMA rows: the Arrow rail's
+    fold (``sketch_agg.fold_batches``), so NULL items and NULL weights are
+    dropped and a negative weight fails."""
+    def cells(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        tune_worker()
+        sk = cfg.new_sketch()
+        fold_batches(sk, batches, weighted=weighted, string_items=True)
+        j, k = np.nonzero(sk.table)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(j.astype(np.int32)), pa.array(k), pa.array(sk.table[j, k])],
+            schema=_CELLS_PA)
+
+    return df.mapInArrow(cells, CELLS_SCHEMA)
 
 
 def cms_table_df(df: DataFrame, item_col: str, cfg: CMSConfig, *,
@@ -45,21 +76,32 @@ def cms_table_df(df: DataFrame, item_col: str, cfg: CMSConfig, *,
                  row_strategy: str = "explode") -> DataFrame:
     """The sketch matrix as DataFrame[depth_row INT, bucket BIGINT, counter BIGINT].
 
-    Omits zero counters (a dense matrix is reconstructed by zero-filling).
+    Omits zero counters (a dense matrix is reconstructed by zero-filling;
+    ``cells_to_sketch``).
+
+    String items are hashed in numpy: one ``mapInArrow`` kernel folds each
+    partition into a ``CountMinSketch`` (``djb2_batch`` + weighted
+    bincount, the Arrow rail's fold) and emits its nonzero cells, which a
+    partial/final ``sum`` merges. NULL items and NULL weights are dropped
+    and a negative weight raises, as on the Arrow rail; under
+    ``pre_aggregate`` the check sees each item's weight total. Integer
+    items stay pure JVM with SQL semantics: a NULL item lands in a NULL
+    bucket (the DuckDB oracles replay the same SQL).
 
     ``pre_aggregate`` collapses the stream to (item, total_weight) BEFORE
-    evaluating the hash expressions, so the djb2/affine arithmetic runs once
-    per DISTINCT item instead of once per occurrence. For Zipfian text
-    (e.g. 110M token occurrences over a ~9k vocabulary) this removes ~99.99%
-    of the hash work; the extra shuffle is bounded by vocab-per-partition
-    thanks to Catalyst's map-side partial aggregation, so the plan scales.
-    Defaults on for string items (djb2 fold is the expensive step) and off
-    for integer items (bucket math is cheaper than a near-distinct shuffle).
-    The resulting matrix is bit-identical either way: sum of per-occurrence
-    weights == per-item weight totals.
+    hashing, so djb2 and the bucket arithmetic run once per DISTINCT item
+    instead of once per occurrence, and only distinct items cross into
+    Python. For Zipfian text (e.g. 110M token occurrences over a ~9k
+    vocabulary) this removes ~99.99% of the hash work and of the Arrow
+    rows; the extra shuffle is bounded by vocab-per-partition thanks to
+    Catalyst's map-side partial aggregation, so the plan scales. Defaults
+    on for string items and off for integer items (bucket math is cheaper
+    than a near-distinct shuffle). The resulting matrix is bit-identical
+    either way: sum of per-occurrence weights == per-item weight totals.
 
-    ``row_strategy`` picks the physical shape of the per-occurrence build
-    (bit-identical output either way):
+    ``row_strategy`` picks the physical shape of the per-occurrence
+    integer build (bit-identical output either way; string items have one
+    build and ignore it):
 
     - ``"explode"`` (default): one scan; posexplode fans each row into
       ``depth`` (depth_row, bucket) rows before ONE hash aggregate. Right
@@ -84,7 +126,11 @@ def cms_table_df(df: DataFrame, item_col: str, cfg: CMSConfig, *,
                 else "CAST(1 AS BIGINT)")
         sel = sel.groupBy(item_col).agg(F.expr(f"sum({w_in}) AS __pcms_w"))
         weight_col = "__pcms_w"
-    base = with_item_id(sel, item_col, string_items=string_items)
+    if string_items:
+        return (_string_cells(sel, cfg, weighted=bool(weight_col))
+                .groupBy("depth_row", "bucket")
+                .agg(F.sum("counter").alias("counter")))
+    base = with_item_id(sel, item_col)
     # single parsed projection strings below (not per-depth Column
     # chains): same analyzed plan, ~35% less construction wall per call
     # — this constructor runs once per rep of the headline build
@@ -110,18 +156,27 @@ def cms_table_df(df: DataFrame, item_col: str, cfg: CMSConfig, *,
     )
 
 
+def cells_to_sketch(rows, cfg: CMSConfig) -> CountMinSketch:
+    """The dense sketch of collected ``cms_table_df`` rows. Rows with a
+    NULL bucket (a NULL integer item has no bucket) or a NULL counter (only
+    NULL weights: no occurrences) are skipped, so the sketch equals the
+    Arrow rail's build, which drops NULL items and NULL weights."""
+    sk = cfg.new_sketch()
+    for r in rows:
+        if r["bucket"] is not None and r["counter"] is not None:
+            sk.table[r["depth_row"], r["bucket"]] = r["counter"]
+    sk.total = int(sk.table[0].sum())
+    return sk
+
+
 def collect_cms(df: DataFrame, item_col: str, cfg: CMSConfig, *,
                 weight_col: str | None = None, string_items: bool = False,
                 row_strategy: str = "explode") -> CountMinSketch:
-    """Materialize the JVM-built sketch into the numpy kernel object."""
-    rows = cms_table_df(df, item_col, cfg, weight_col=weight_col,
-                        string_items=string_items,
-                        row_strategy=row_strategy).collect()
-    sk = cfg.new_sketch()
-    for r in rows:
-        sk.table[r["depth_row"], r["bucket"]] = r["counter"]
-    sk.total = int(sk.table[0].sum())
-    return sk
+    """Materialize the Catalyst-built sketch into the numpy kernel object."""
+    return cells_to_sketch(
+        cms_table_df(df, item_col, cfg, weight_col=weight_col,
+                     string_items=string_items,
+                     row_strategy=row_strategy).collect(), cfg)
 
 
 def point_query_join(table: DataFrame, probes_df: DataFrame, probe_col: str,
@@ -153,8 +208,11 @@ def point_query_df(df: DataFrame, item_col: str, cfg: CMSConfig, query_items,
                          string_items=string_items)
     if query_are_strings is None:
         query_are_strings = string_items
+    # an Arrow table plans as a JVM LocalTableScan; a list of tuples would
+    # be a Python-RDD scan that starts Python tasks on every collect
     if query_are_strings:
-        qdf = spark.createDataFrame([(str(x),) for x in query_items], "item STRING")
+        items = pa.array([str(x) for x in query_items], pa.string())
     else:
-        qdf = spark.createDataFrame([(int(x),) for x in query_items], "item BIGINT")
+        items = pa.array([int(x) for x in query_items], pa.int64())
+    qdf = spark.createDataFrame(pa.table({"item": items}))
     return point_query_join(table, qdf, "item", cfg, probes_are_strings=query_are_strings)

@@ -49,6 +49,22 @@ def test_checkpointed_job_resumes_on_appended_files(spark, tmp_path):
         assert f.read() == direct.to_bytes()
 
 
+def test_sql_and_arrow_job_paths_write_the_same_sketch(spark, tmp_path):
+    src = str(tmp_path / "pages")
+    web_pages(spark, 120, seed=13, partitions=2).write.parquet(src)
+    out = {}
+    for path in ("sql", "arrow"):
+        dst = str(tmp_path / path)
+        r = _job("--input", src, "--output", dst, "--path", path)
+        assert r.returncode == 0, r.stderr[-3000:]
+        with open(os.path.join(dst, "metrics.json")) as f:
+            mass = json.load(f)["total_mass"]
+        with open(os.path.join(dst, "sketch.bin"), "rb") as f:
+            out[path] = (f.read(), mass)
+    assert out["sql"] == out["arrow"]
+    assert out["sql"][1] > 0
+
+
 def test_checkpoint_with_salt_is_rejected(tmp_path):
     r = _job("--input", str(tmp_path), "--output", str(tmp_path / "out"),
              "--checkpoint", str(tmp_path / "ckpt"), "--salt-partitions", "8")

@@ -138,6 +138,17 @@ def test_sql_build_preaggregates_distinct_items(spark, pages_path):
     assert plan.count("partial_sum") >= 2, plan
 
 
+def test_sql_string_build_hashes_in_one_arrow_kernel(spark, pages_path):
+    """String items are hashed by the numpy cells kernel: the executed plan
+    has exactly one MapInArrow and no djb2 higher-order function."""
+    df = spark.read.parquet(pages_path)
+    toks = df.select(F.explode(F.split("text", " ")).alias("tok")).filter("tok != ''")
+    plan = _plan(cms_table_df(toks, "tok", CFG, string_items=True), execute=True)
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("MapInArrow") == 1, plan
+    assert "lambdafunction" not in plan, plan
+
+
 def test_heavy_hitter_build_never_shuffles_distinct_tokens(spark, pages_path):
     """heavy_hitters_scalable's bounded-shuffle guarantee requires the
     sketch build to aggregate on (depth_row, bucket) directly: a
