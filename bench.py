@@ -184,10 +184,10 @@ def bench_cms_build(spark, corpus_path: str) -> dict:
     stream of the corpus (text column only — html stays pruned).
 
     Two execution strategies are timed:
-    - sql:   pure-JVM Catalyst plan (distinct-item pre-aggregation, then
-             djb2 HOF + partial/final hash aggregate on buckets) — the
-             headline: no Python in the hot path, and hash arithmetic runs
-             once per distinct token.
+    - sql:   Catalyst plan: JVM explode + distinct-item pre-aggregation,
+             then one numpy mapInArrow kernel (djb2 + bincount) per
+             partition whose nonzero cells a partial/final hash aggregate
+             merges — hash arithmetic runs once per distinct token.
     - arrow: mapInArrow numpy partials + fan-in merge — the mergeable
              "UDAF" pattern shared by all sketch kernels.
     A small warmup job first spins up workers / JIT, mirroring a long-lived

@@ -111,10 +111,15 @@ def _djb2_step_sql(h: str, u: str, intdiv: str) -> str:
 
 def djb2_sql_spark(col_expr: str) -> str:
     """djb2-over-UTF-8-bytes mod LONG_PRIME as a Spark SQL higher-order-
-    function expression (JVM-side, codegen'd — no Python). Folds over code
-    points (ascii/substring) and expands each to its UTF-8 bytes in integer
-    arithmetic, so the result equals the numpy kernel's byte fold on ANY
-    unicode input (reference hash: src/core/count_min_sketch.c:14-21)."""
+    function expression (JVM-side, no Python). Spark's higher-order
+    functions are ``CodegenFallback``, so the fold runs interpreted, per
+    character: string sketch builds hash with the numpy ``djb2_batch``
+    instead, and this expression serves the JVM string probe of
+    ``sql_build.point_query_join`` and the ``dedup`` / ``heavy_hitters`` /
+    ``joins`` operators. Folds over code points (ascii/substring) and
+    expands each to its UTF-8 bytes in integer arithmetic, so the result
+    equals the numpy kernel's byte fold on ANY unicode input (reference
+    hash: src/core/count_min_sketch.c:14-21)."""
     # empty-string guard: Spark's sequence(1, 0) yields the DESCENDING
     # [1, 0] (two zero-byte fold steps), where DuckDB's range(1, 1) is
     # empty — without the CASE an '' key hashes differently per engine

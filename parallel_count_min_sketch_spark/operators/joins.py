@@ -173,8 +173,9 @@ def bloom_member_column(df: DataFrame, key_col: str, bloom: BloomFilter, *,
                         string_keys: bool = False):
     """(df + temp cols, membership Column, temp col names). The k probes
     are pure int64 arithmetic (pmod keeps parity with numpy % on any
-    sign) + element_at into the literal word array — all codegen'd JVM
-    expressions, zero Python in the row path."""
+    sign) + element_at into the literal word array — codegen'd JVM
+    expressions, zero Python in the row path. A string key is hashed by
+    the ``djb2_sql_spark`` fold, which Spark runs interpreted."""
     from ..config import djb2_sql_spark
     from ..sketches.hashing import MERSENNE_PRIME
 
