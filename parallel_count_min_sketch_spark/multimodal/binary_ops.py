@@ -1,5 +1,5 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed through Arrow-batched kernels.
+with typed metadata and numpy codecs for Arrow-batched kernels.
 
 The image path is REAL: dependency-free numpy codecs for BMP (24-bit
 uncompressed, bottom-up or top-down) AND binary PPM (P6, 8-bit maxval,
@@ -19,13 +19,9 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from typing import Iterator
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
-
-from ..memtune import tune_worker
 
 MAGIC = {
     b"\x89PNG": "png",
@@ -256,80 +252,3 @@ def byte_tensor(data: bytes) -> np.ndarray:
     digest = hashlib.sha256(data).digest()
     arr = np.frombuffer((digest * 2)[:48], dtype=np.uint8)
     return arr.reshape(4, 4, 3)
-
-
-def sample_frames(df: DataFrame, bin_col: str, id_col: str, *,
-                  n_frames: int = 4) -> DataFrame:
-    """Video frame-sampling plumbing: (id, frame_idx, frame_feat). One input
-    row fans out to ``n_frames`` output rows — the real production shape
-    (row-expanding Arrow kernel, list<float> features per frame). Frames
-    are deterministic byte ranges featurized via ``byte_tensor`` +
-    ``resize_nearest``; a real deployment swaps the byte slicing for
-    ffmpeg keyframe extraction at exactly this call site."""
-    out_schema = "id BIGINT, frame_idx INT, frame_feat ARRAY<FLOAT>"
-    proj = df.select(F.col(id_col).alias("id"), F.col(bin_col).alias("data"))
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_worker()
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            out_id, out_idx, out_feat = [], [], []
-            for i, blob in zip(ids, blobs):
-                blob = blob or b""
-                # deterministic "frame" byte ranges (stand-in for keyframes)
-                step = max(1, len(blob) // n_frames)
-                for f in range(n_frames):
-                    # final frame extends to the end so len%n_frames tail
-                    # bytes are still covered by a frame
-                    end = len(blob) if f == n_frames - 1 else (f + 1) * step
-                    chunk = blob[f * step:end] or b"\x00"
-                    img = byte_tensor(chunk)
-                    thumb = resize_nearest(img, 2, 2)
-                    out_id.append(i)
-                    out_idx.append(f)
-                    out_feat.append(thumb.mean(axis=(0, 1)).astype(np.float32).tolist())
-            yield pa.RecordBatch.from_pydict(
-                {"id": out_id, "frame_idx": out_idx, "frame_feat": out_feat},
-                schema=pa.schema([
-                    ("id", pa.int64()), ("frame_idx", pa.int32()),
-                    ("frame_feat", pa.list_(pa.float32())),
-                ]),
-            )
-
-    return proj.mapInArrow(kernel, out_schema)
-
-
-def extract_features(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
-    """Arrow-batched decode + feature extraction: (id, mean_intensity_bp,
-    feat array<float>). BMP and PPM blobs decode through the real codecs;
-    opaque blobs featurize via ``byte_tensor`` — per-blob magic dispatch,
-    so mixed-modality columns work row by row."""
-    out_schema = "id BIGINT, mean_intensity_bp BIGINT, feat ARRAY<FLOAT>"
-    proj = df.select(F.col(id_col).alias("id"), F.col(bin_col).alias("data"))
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_worker()
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            means, feats = [], []
-            for blob in blobs:
-                blob = blob or b""
-                if blob[:2] == b"BM":
-                    img = decode_bmp(blob)
-                elif blob[:2] == b"P6":
-                    img = decode_ppm(blob)
-                else:
-                    img = byte_tensor(blob)
-                means.append(int(img.mean() * 100))
-                feats.append(img.mean(axis=(0, 1)).astype(np.float32).tolist())
-            yield pa.RecordBatch.from_pydict(
-                {"id": ids, "mean_intensity_bp": means, "feat": feats},
-                schema=pa.schema([
-                    ("id", pa.int64()), ("mean_intensity_bp", pa.int64()),
-                    ("feat", pa.list_(pa.float32())),
-                ]),
-            )
-
-    return proj.mapInArrow(kernel, out_schema)

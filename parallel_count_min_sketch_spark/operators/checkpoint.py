@@ -14,27 +14,23 @@ no partial yet, so a resume prunes the scan itself, not just the compute.
 Appended files are a plain resume; partials of files the input no longer
 lists (an overwritten dataset) are ignored.
 
-Layout of a checkpoint dir:
-    meta.json                 sketch config: epsilon, delta, seed
-    file_partials/*.parquet   rows (group = input file URI, rows_seen, sketch)
-
-Partials are durable per write job, not per task: the default parquet
-commit protocol publishes a job's output only at job commit, so a failed
-run leaves none of its partials behind and the next run rescans its files.
+The checkpoint dir is a ``SketchStore`` keyed by ``file`` (the input file
+URI), so it refuses another config before any compute. Partials are
+durable per write job, not per task: the parquet commit protocol
+publishes a job's output only at job commit, so a failed run leaves none
+of its partials behind and the next run rescans its files.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
 import time
 
-from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
 
 from ..config import CMSConfig
 from ..sketches.cms import CountMinSketch
-from .sketch_agg import fold_blobs, sketch_grouped_from_text
+from .sketch_agg import sketch_grouped_from_text
+from .sketch_store import SketchStore
 
 
 def _norm_uri(uri: str) -> str:
@@ -52,47 +48,16 @@ class CheckpointedCMSBuild:
 
     def __init__(self, cfg: CMSConfig, checkpoint_dir: str):
         self.cfg = cfg
-        self.dir = checkpoint_dir
-        self.partials_dir = os.path.join(checkpoint_dir, "file_partials")
-        self.meta_path = os.path.join(checkpoint_dir, "meta.json")
+        self.store = SketchStore(checkpoint_dir, ("file",), cfg.new_sketch,
+                                 cfg.from_bytes)
         self.metrics: dict = {}
-
-    def _bind_config(self) -> None:
-        """Tie the checkpoint dir to this config before any compute: a
-        partial built under another (epsilon, delta, seed) hashes into other
-        buckets and must never be merged."""
-        cfg = {"epsilon": self.cfg.epsilon, "delta": self.cfg.delta,
-               "seed": self.cfg.seed}
-        if os.path.exists(self.meta_path):
-            with open(self.meta_path) as f:
-                meta = json.load(f)
-            if {k: meta.get(k) for k in cfg} != cfg:
-                raise ValueError(
-                    f"checkpoint {self.dir} was built with a different config "
-                    f"({meta}); use a new checkpoint dir for {cfg}")
-            return
-        # partials without a meta.json have no known config
-        shutil.rmtree(self.partials_dir, ignore_errors=True)
-        os.makedirs(self.dir, exist_ok=True)
-        with open(self.meta_path, "w") as f:
-            json.dump(cfg, f, indent=2)
-
-    def _stored(self, spark, *cols) -> list:
-        if not os.path.isdir(self.partials_dir):
-            return []
-        try:
-            return spark.read.parquet(self.partials_dir).select(*cols).collect()
-        except AnalysisException:  # empty dir: nothing completed yet
-            return []
 
     def run(self, spark, input_path: str, text_col: str = "text") -> CountMinSketch:
         """Build (or resume) the sketch of the tokens of ``text_col`` over
         the parquet dataset at ``input_path``."""
-        from pyspark.sql import functions as F
-
-        self._bind_config()
         files = {_norm_uri(f): f for f in spark.read.parquet(input_path).inputFiles()}
-        done = {_norm_uri(r["group"]) for r in self._stored(spark, "group")}
+        done = {_norm_uri(r["file"])
+                for r in self.store.read(spark).select("file").collect()}
         todo = sorted(p for p in files if p not in done)
 
         t0 = time.perf_counter()
@@ -101,26 +66,25 @@ class CheckpointedCMSBuild:
             # just compute
             df = spark.read.parquet(*(files[p] for p in todo)) \
                 .withColumn("__file", F.input_file_name())
-            sketch_grouped_from_text(df, "__file", text_col, self.cfg.new_sketch,
-                                     self.cfg.from_bytes) \
-                .write.mode("append").parquet(self.partials_dir)
+            self.store.write(
+                sketch_grouped_from_text(df, "__file", text_col,
+                                         self.cfg.new_sketch, self.cfg.from_bytes)
+                .withColumnRenamed("group", "file"))
         compute_sec = time.perf_counter() - t0
 
         # dedupe on the NORMALIZED path (raw URIs can vary in scheme slashes
         # across runs and merging both would double-count that file); the
         # partial set is O(n_files), fine driver-side
         by_path: dict[str, object] = {}
-        for r in self._stored(spark, "group", "rows_seen", "sketch"):
-            by_path.setdefault(_norm_uri(r["group"]), r)
+        for r in self.store.read(spark).select("file", "rows_seen").collect():
+            by_path.setdefault(_norm_uri(r["file"]), r)
         # a file this run's committed write scanned without emitting a
         # partial holds no tokens; any other listed file must have one
         missing = set(files) - set(by_path) - set(todo)
         if missing:
             raise RuntimeError(f"checkpoint incomplete after run: missing {sorted(missing)}")
         rows = [by_path[p] for p in files if p in by_path]
-        merged = fold_blobs((r["sketch"] for r in rows), self.cfg.from_bytes)
-        if merged is None:
-            merged = self.cfg.new_sketch()
+        merged = self.store.fold(spark, F.col("file").isin([r["file"] for r in rows]))
         self.metrics = {
             "n_files": len(files),
             "files_skipped": len(files) - len(todo),

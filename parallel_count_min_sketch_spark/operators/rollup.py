@@ -15,9 +15,10 @@ src/mpi/mpiV2.c:163-175), applied across time partitions instead of
 ranks. Build cost amortizes across every future range query; query cost
 is O(n_buckets) KB-blobs, independent of corpus size.
 
-In production the bucket DataFrame would be written once as a parquet
-rollup table partitioned by bucket (``write_rollup``); bucket-range
-predicates then prune partitions at scan time.
+In production the bucket DataFrame is written once to a
+``SketchStore`` keyed by ``bucket`` (operators/sketch_store.py): one
+partition directory per day, a re-written day replaces its own directory,
+and bucket-range predicates prune partitions at scan time.
 """
 
 from __future__ import annotations
@@ -114,43 +115,3 @@ def rollup_range_collect(buckets_df: DataFrame, lo: str, hi: str,
     ).select("bucket", "sketch").collect()
     ordered = sorted(rows, key=lambda r: r["bucket"])
     return rows, fold_blobs((r["sketch"] for r in ordered), from_bytes)
-
-
-def write_rollup(buckets_df: DataFrame, path: str, *,
-                 mode: str = "overwrite") -> None:
-    """Persist a bucket-sketch table as parquet PARTITIONED BY bucket —
-    the durable form of the rollup store. One day = one partition
-    directory holding one KB-sized blob row, so a later range query's
-    ``bucket BETWEEN lo AND hi`` predicate is a partition filter: Spark
-    lists and reads ONLY the covered day directories (partition pruning,
-    asserted in test_rollup.py), never the corpus and never the other
-    days.
-
-    ``mode="overwrite"`` (default) uses per-writer DYNAMIC partition
-    overwrite: only the day directories present in ``buckets_df`` are
-    replaced, other days are untouched — so the daily refresh job is
-    IDEMPOTENT (a retried/re-run day replaces its own directory instead
-    of double-counting). ``mode="append"`` adds rows without touching
-    existing ones; use it only for DISJOINT partial contributions (the
-    streaming store's per-batch partials), never to re-write a day a
-    sum-merge kernel has already stored."""
-    w = buckets_df.write.partitionBy("bucket")
-    if mode == "overwrite":
-        w = w.option("partitionOverwriteMode", "dynamic")
-    w.mode(mode).parquet(path)
-
-
-def read_rollup(spark, path: str) -> DataFrame:
-    """Read a persisted rollup store back into the same
-    [bucket, rows_seen, ..., sketch] shape the range-merge functions
-    take. ``bucket`` comes back as a partition column — Spark's partition
-    type inference reads ISO dates as DATE, so cast back to the STRING
-    key the merge filters compare on (lossless for ISO dates; the cast
-    composes with pruning because it sits above the partition filter).
-    Multiple rows per day (disjoint partial appends, e.g. the streaming
-    store's per-batch partials) fold correctly in the range merges by
-    associativity; a re-written FULL day must go through
-    ``write_rollup(mode="overwrite")``, not append, or sum-merge kernels
-    double-count."""
-    df = spark.read.parquet(path)
-    return df.withColumn("bucket", F.col("bucket").cast("string"))

@@ -83,8 +83,8 @@ def cms_table_df(df: DataFrame, item_col: str, cfg: CMSConfig, *,
     partition into a ``CountMinSketch`` (``djb2_batch`` + weighted
     bincount, the Arrow rail's fold) and emits its nonzero cells, which a
     partial/final ``sum`` merges. NULL items and NULL weights are dropped
-    and a negative weight raises, as on the Arrow rail; under
-    ``pre_aggregate`` the check sees each item's weight total. Integer
+    and a negative input weight raises, as on the Arrow rail (under
+    ``pre_aggregate`` the aggregate checks each weight before summing). Integer
     items stay pure JVM with SQL semantics: a NULL item lands in a NULL
     bucket (the DuckDB oracles replay the same SQL).
 
@@ -124,6 +124,10 @@ def cms_table_df(df: DataFrame, item_col: str, cfg: CMSConfig, *,
     if pre_aggregate:
         w_in = (f"CAST(`{weight_col}` AS BIGINT)" if weight_col
                 else "CAST(1 AS BIGINT)")
+        if weight_col and string_items:
+            # the kernel sees only the sums: check each input weight here
+            w_in = (f"IF({w_in} < 0, raise_error('negative weights are "
+                    f"not allowed in sketch builds'), {w_in})")
         sel = sel.groupBy(item_col).agg(F.expr(f"sum({w_in}) AS __pcms_w"))
         weight_col = "__pcms_w"
     if string_items:

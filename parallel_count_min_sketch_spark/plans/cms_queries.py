@@ -548,27 +548,32 @@ FROM pts JOIN exact e USING (item), n, epsn
 
 def q_stream_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured-Streaming parity as a driver-gated contract: the document
-    corpus is staged as multiple parquet files, streamed through the
-    foreachBatch CMS accumulator (``StreamingCMS``, availableNow trigger,
-    maxFilesPerTrigger=1 so several micro-batches really occur), and the
-    final stream-accumulated sketch is compared BYTE-FOR-BYTE against the
-    one-shot batch build over the same rows. Output columns are all
+    corpus is staged as multiple parquet files and streamed (availableNow,
+    maxFilesPerTrigger=1 so several micro-batches really occur) into a
+    sketch store (``streaming/stream_rollup.start_sketch_stream``), each
+    micro-batch writing its token CMS under ``batch_id=N`` and one
+    constant bucket. The store's fold is compared BYTE-FOR-BYTE against
+    the one-shot batch build over the same rows. Output columns are all
     oracle-replayable: total token mass and the djb2('key') point estimate
     are exact SQL arithmetic; the equality booleans are TRUE by the merge-
     associativity contract (reference src/mpi/mpiV2.c:163-175 — the same
-    element-wise merge, applied per micro-batch instead of per rank)."""
+    element-wise merge, applied per micro-batch instead of per rank). The
+    query stops its stream and removes its temp dir in ``finally``."""
     import os
     import shutil
     import tempfile
+    from functools import partial
 
     import numpy as np
+    import pyarrow as pa
 
     from ..operators.agg import build_cms_from_text
     from ..sketches.hashing import djb2_py
-    from ..streaming.stream_cms import StreamingCMS
+    from ..streaming.stream_rollup import start_sketch_stream, token_sketch
 
     docs = load(spark, sf_dir, "documents").select("text")
     tmp = tempfile.mkdtemp(prefix="pcms_stream_parity_")
+    q = None
     try:
         src = os.path.join(tmp, "incoming")
         docs.repartition(4).write.parquet(src)
@@ -578,26 +583,29 @@ def q_stream_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        acc = StreamingCMS(CFG, "text", state_path=os.path.join(tmp, "state.bin"))
-        q = acc.start(stream, os.path.join(tmp, "ckpt"), trigger_once=True)
+        mk, fb = CFG.new_sketch, CFG.from_bytes
+        q, store = start_sketch_stream(
+            stream, partial(token_sketch, text_col="text", make_sketch=mk,
+                            from_bytes=fb),
+            os.path.join(tmp, "store"), mk, fb, os.path.join(tmp, "ckpt"))
         if not q.awaitTermination(300):
             raise TimeoutError("stream did not drain within 300s")
+        n_batches = store.read(spark).select("batch_id").distinct().count()
+        sk = store.fold(spark)
         batch_sk = build_cms_from_text(docs, "text", CFG)
-        est_key = int(acc.sketch.point_query(
+        est_key = int(sk.point_query(
             np.array([djb2_py("key")], dtype=np.int64))[0])
-        row = (
-            int(acc.sketch.total),
-            est_key,
-            bool(acc.sketch.to_bytes() == batch_sk.to_bytes()),
-            bool(acc.batches_seen >= 2),
-        )
+        row = pa.table({
+            "total_tokens": pa.array([int(sk.total)], pa.int64()),
+            "est_key": pa.array([est_key], pa.int64()),
+            "stream_equals_batch": [sk.to_bytes() == batch_sk.to_bytes()],
+            "multi_batch": [n_batches >= 2],
+        })
     finally:
+        if q is not None:
+            q.stop()
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        [row],
-        "total_tokens BIGINT, est_key BIGINT, stream_equals_batch BOOLEAN, "
-        "multi_batch BOOLEAN",
-    )
+    return spark.createDataFrame(row)
 
 
 def _sql_stream_batch_parity() -> str:
@@ -735,32 +743,34 @@ def q_stream_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-maintained rollup store parity as a driver-gated contract
     (the streaming twin of ``stream_batch_parity``, for the ROLLUP store):
     the events table is staged as multiple parquet files and drained
-    through ``streaming/stream_rollup.rollup_sink`` (availableNow,
-    maxFilesPerTrigger=1 so several micro-batches really occur), each
-    micro-batch writing idempotent per-(batch, day) CMS partials. The
-    [ROLLUP_LO, ROLLUP_HI] range merge over the stream-maintained store,
-    over its compacted form (``compact_rollup``), and over a one-shot
-    batch rollup of the same rows must all be BYTE-IDENTICAL — that is
-    the associativity contract that lets a stream maintain the store
-    incrementally. Output columns are oracle-replayable: the range event
-    count and the user-49 point estimate are exact SQL arithmetic over
-    the date-filtered rows; the equality booleans are TRUE by the merge
-    contract; multi_batch proves the stream really split."""
+    through ``streaming/stream_rollup.start_sketch_stream`` (availableNow,
+    maxFilesPerTrigger=1 so several micro-batches really occur) into a
+    sketch store keyed by ``(batch_id, bucket)``, each micro-batch
+    writing idempotent per-day CMS partials. The
+    [ROLLUP_LO, ROLLUP_HI] range fold over the stream-maintained store,
+    over its compacted one-row-per-day form (``SketchStore.compact``),
+    and over a one-shot batch rollup of the same rows must all be
+    BYTE-IDENTICAL — that is the associativity contract that lets a
+    stream maintain the store incrementally. Output columns are
+    oracle-replayable: the range event count and the user-49 point
+    estimate are exact SQL arithmetic over the date-filtered rows; the
+    equality booleans are TRUE by the merge contract; multi_batch proves
+    the stream really split. The query stops its stream and removes its
+    temp dir in ``finally``."""
     import os
     import shutil
     import tempfile
+    from functools import partial
 
     import numpy as np
+    import pyarrow as pa
 
     from ..operators.rollup import sketch_rollup_range, sketch_time_buckets
-    from ..streaming.stream_rollup import (
-        compact_rollup,
-        read_stream_rollup,
-        start_rollup_stream,
-    )
+    from ..streaming.stream_rollup import start_sketch_stream
 
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     tmp = tempfile.mkdtemp(prefix="pcms_rollup_parity_")
+    q = None
     try:
         src = os.path.join(tmp, "incoming")
         ev.repartition(4).write.parquet(src)
@@ -770,40 +780,38 @@ def q_stream_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        store = os.path.join(tmp, "store")
         mk, fb = ROLLUP_CFG.new_sketch, ROLLUP_CFG.from_bytes
-        q = start_rollup_stream(stream, mk, fb, "ts", "user_id", store,
-                                os.path.join(tmp, "ckpt"))
+        q, store = start_sketch_stream(
+            stream, partial(sketch_time_buckets, ts_col="ts",
+                            item_col="user_id", make_sketch=mk,
+                            from_bytes=fb),
+            os.path.join(tmp, "store"), mk, fb, os.path.join(tmp, "ckpt"))
         if not q.awaitTermination(300):
             raise TimeoutError("rollup stream did not drain within 300s")
 
-        streamed_df = read_stream_rollup(spark, store)
-        n_batches = streamed_df.select("batch_id").distinct().count()
-        sk_stream = sketch_rollup_range(streamed_df, ROLLUP_LO, ROLLUP_HI,
-                                        mk, fb)
-        compacted = os.path.join(tmp, "compacted")
-        compact_rollup(spark, store, compacted, fb)
-        sk_compact = sketch_rollup_range(spark.read.parquet(compacted),
-                                         ROLLUP_LO, ROLLUP_HI, mk, fb)
+        n_batches = store.read(spark).select("batch_id").distinct().count()
+        in_range = F.col("bucket").between(ROLLUP_LO, ROLLUP_HI)
+        sk_stream = store.fold(spark, in_range)
+        compacted = store.compact(spark, os.path.join(tmp, "compacted"),
+                                  "bucket")
+        sk_compact = compacted.fold(spark, in_range)
         sk_batch = sketch_rollup_range(
             sketch_time_buckets(ev, "ts", "user_id", mk, fb),
             ROLLUP_LO, ROLLUP_HI, mk, fb)
         est49 = int(sk_stream.point_query(
             np.array([49], dtype=np.int64))[0])
-        row = (
-            int(sk_stream.total),
-            est49,
-            bool(sk_stream.to_bytes() == sk_batch.to_bytes()),
-            bool(sk_compact.to_bytes() == sk_batch.to_bytes()),
-            bool(n_batches >= 2),
-        )
+        row = pa.table({
+            "range_events": pa.array([int(sk_stream.total)], pa.int64()),
+            "est_user49": pa.array([est49], pa.int64()),
+            "stream_equals_batch": [sk_stream.to_bytes() == sk_batch.to_bytes()],
+            "compacted_equals_batch": [sk_compact.to_bytes() == sk_batch.to_bytes()],
+            "multi_batch": [n_batches >= 2],
+        })
     finally:
+        if q is not None:
+            q.stop()
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        [row],
-        "range_events BIGINT, est_user49 BIGINT, stream_equals_batch BOOLEAN, "
-        "compacted_equals_batch BOOLEAN, multi_batch BOOLEAN",
-    )
+    return spark.createDataFrame(row)
 
 
 def _sql_stream_rollup_parity() -> str:

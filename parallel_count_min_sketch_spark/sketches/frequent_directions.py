@@ -7,20 +7,21 @@ B (ℓ x d) of a tall matrix A (n x d) with the covariance guarantee
 i.e. every direction's squared mass is preserved to within ‖A‖_F²/ℓ.
 This is the embedding-era member of the sketch family: covariance /
 principal-subspace estimation over an `array<float>` embedding column
-at corpus scale, in one pass, mergeable — so it rides the exact same
-partial/merge rails as CMS/HLL/KLL here (per-partition Arrow partials,
-associative merge; reference merge analog src/mpi/mpiV2.c:163-175).
+at corpus scale, in one pass, mergeable — partial sketches merge
+associatively like CMS/HLL/KLL (reference merge analog
+src/mpi/mpiV2.c:163-175).
 
 Mechanics: maintain a 2ℓ-row buffer; when full, SVD, subtract the
 (ℓ+1)-th squared singular value from every σ², keep the top-ℓ shrunken
 rows (Σ'·Vᵀ). MERGE = stack the two sketches' rows and shrink once more
 — the guarantee composes additively across merges (Ghashami et al. §3),
-which is what makes the distributed build correct for ANY partitioning.
+which is what makes a merge of per-partition partials correct for ANY
+partitioning.
 
 The sketch is NOT byte-deterministic across merge orders (SVD of
 different intermediate stacks) — only the GUARANTEE is order-invariant.
 That is exactly the published contract; the tests gate the psd bound and
-the Frobenius mass bookkeeping under multiple partitionings rather than
+the Frobenius mass bookkeeping under several merge splits rather than
 byte equality, and there is deliberately no SQL oracle (no DuckDB SVD):
 this operator is pytest-gated, like the streaming near-dedup sink.
 """
@@ -106,45 +107,3 @@ class FrequentDirections:
         out.rows = np.frombuffer(blob, dtype=np.float64,
                                  offset=_HDR.size).reshape(n, dim).copy()
         return out
-
-
-def fd_from_bytes(blob: bytes) -> FrequentDirections:
-    """Package-level wrapper: the classmethod itself drags the class (and
-    its module-level struct.Struct) into cloudpickle closures."""
-    return FrequentDirections.from_bytes(blob)
-
-
-def fd_build(df, vec_col: str, ell: int, dim: int) -> FrequentDirections:
-    """Distributed FD build over an array<float> column: one FD partial
-    per partition via mapInArrow (vectors never shuffle; each partial is
-    O(ℓ·d) bytes), then the associative stack-and-shrink merge — same
-    shape as every other sketch build here."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-
-    from ..memtune import tune_worker
-    from ..operators.sketch_agg import merge_sketch_partials
-
-    proj = df.select(F.col(vec_col).alias("_v"))
-
-    def fold(batches):
-        # import inside the kernel: the closure then carries only (ell,
-        # dim) scalars — capturing the class by value drags the
-        # module-level struct.Struct along, which cloudpickle rejects
-        from parallel_count_min_sketch_spark.sketches.frequent_directions import (  # noqa: PLC0415
-            FrequentDirections as _FD,
-        )
-
-        tune_worker()
-        sk = _FD(ell, dim)
-        for batch in batches:
-            arr = np.asarray(batch.column(0).to_pylist(), dtype=np.float64)
-            if arr.size:
-                sk.update(arr)
-        # always emit: an empty partial merges as the identity
-        yield pa.RecordBatch.from_pydict(
-            {"sketch": [sk.to_bytes()]},
-            schema=pa.schema([("sketch", pa.binary())]))
-
-    partials = proj.mapInArrow(fold, "sketch BINARY")
-    return merge_sketch_partials(partials, fd_from_bytes)

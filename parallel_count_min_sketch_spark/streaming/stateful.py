@@ -1,10 +1,11 @@
 """Custom stateful streaming operator: per-group sketches maintained in
 Spark's keyed state store via applyInPandasWithState.
 
-Unlike the foreachBatch accumulator (stream_cms.py) — where the driver owns
-one global sketch — this keeps one sketch PER GROUP inside Spark's state
-store: distributed, fault-tolerant through the checkpoint, and scalable to
-arbitrarily many groups. Each trigger folds the group's new rows into its
+Unlike the foreachBatch sketch store (stream_rollup.py) — one partial
+per (micro-batch, bucket) in a parquet store, folded at read time — this
+keeps one sketch PER GROUP inside Spark's state store: distributed,
+fault-tolerant through the checkpoint, and scalable to arbitrarily many
+groups. Each trigger folds the group's new rows into its
 sketch (vectorized kernel, no per-row Python) and emits the updated
 (group, rows_in_batch, total_mass, sketch) row. ``total_mass`` is the
 CUMULATIVE token mass folded into the group's state since the stream

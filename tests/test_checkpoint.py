@@ -29,6 +29,17 @@ def _write(spark, path, n, seed, files, mode="append"):
     web_pages(spark, n, seed=seed, partitions=files).write.mode(mode).parquet(path)
 
 
+def _file_partitions(build):
+    data = build.store.data_dir
+    return sorted(os.path.join(data, d) for d in os.listdir(data)
+                  if d.startswith("file="))
+
+
+def _tree(root):
+    return sorted(os.path.relpath(os.path.join(d, f), root)
+                  for d, _, files in os.walk(root) for f in files)
+
+
 def _direct(spark, path):
     return build_cms_from_text(spark.read.parquet(path), "text", CFG).to_bytes()
 
@@ -52,12 +63,8 @@ def test_resume_after_partial_loss(spark, ckpt_dir, src):
     build = CheckpointedCMSBuild(CFG, ckpt_dir)
     build.run(spark, src)
 
-    partials_dir = build.partials_dir
-    partials = spark.read.parquet(partials_dir)
-    lost = sorted(r["group"] for r in partials.select("group").collect())[1:3]
-    kept = partials.filter(~partials["group"].isin(lost)).collect()
-    shutil.rmtree(partials_dir)
-    spark.createDataFrame(kept, partials.schema).write.parquet(partials_dir)
+    for part in _file_partitions(build)[1:3]:
+        shutil.rmtree(part)
 
     resumed = CheckpointedCMSBuild(CFG, ckpt_dir)
     sk2 = resumed.run(spark, src)
@@ -72,13 +79,14 @@ def test_corrupt_partial_fails_resume_before_writing(spark, ckpt_dir, src):
     _write(spark, src, 200, seed=5, files=4)
     build = CheckpointedCMSBuild(CFG, ckpt_dir)
     build.run(spark, src)
-    with open(os.path.join(build.partials_dir, "part-99999-corrupt.parquet"), "wb") as f:
+    part = _file_partitions(build)[0]
+    with open(os.path.join(part, "part-99999-corrupt.parquet"), "wb") as f:
         f.write(b"this is not a parquet file")
-    before = sorted(os.listdir(build.partials_dir))
+    before = _tree(ckpt_dir)
     with pytest.raises(Exception) as err:
         CheckpointedCMSBuild(CFG, ckpt_dir).run(spark, src)
     assert "checkpoint incomplete" not in str(err.value)
-    assert sorted(os.listdir(build.partials_dir)) == before
+    assert _tree(ckpt_dir) == before
 
 
 def test_noop_resume_recomputes_nothing(spark, ckpt_dir, src):
@@ -120,16 +128,15 @@ def test_config_mismatch_rejected(spark, ckpt_dir, src):
     """A resume under another config fails before any compute, even when
     no file is new (it must not return the old config's sketch)."""
     _write(spark, src, 200, seed=5, files=4)
-    build = CheckpointedCMSBuild(CFG, ckpt_dir)
-    build.run(spark, src)
-    before = sorted(os.listdir(build.partials_dir))
+    CheckpointedCMSBuild(CFG, ckpt_dir).run(spark, src)
+    before = _tree(ckpt_dir)
     other = CMSConfig(epsilon=0.01, delta=0.1, seed=999)
-    with pytest.raises(ValueError, match="different config"):
+    with pytest.raises(ValueError, match="is bound to"):
         CheckpointedCMSBuild(other, ckpt_dir).run(spark, src)
     _write(spark, src, 100, seed=6, files=1)
-    with pytest.raises(ValueError, match="different config"):
+    with pytest.raises(ValueError, match="is bound to"):
         CheckpointedCMSBuild(other, ckpt_dir).run(spark, src)
-    assert sorted(os.listdir(build.partials_dir)) == before
+    assert _tree(ckpt_dir) == before
 
 
 def test_dataset_overwrite_ignores_stale_partials(spark, ckpt_dir, src):

@@ -1,6 +1,5 @@
 """Frequent Directions matrix sketch: the psd covariance bound under any
-partitioning, merge composition, serialization, and the distributed
-build over the embeddings table."""
+partitioning, merge composition and serialization."""
 
 from __future__ import annotations
 
@@ -9,7 +8,6 @@ import pytest
 
 from parallel_count_min_sketch_spark.sketches.frequent_directions import (
     FrequentDirections,
-    fd_build,
 )
 
 
@@ -63,22 +61,3 @@ def test_fd_roundtrip_and_validation():
         sk.merge(FrequentDirections(5, 7))
     with pytest.raises(ValueError):
         FrequentDirections(0, 4)
-
-
-def test_fd_distributed_build_matches_bound(spark):
-    df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    row = df.limit(1).collect()[0]
-    dim = len(row["embedding"])
-    vecs = np.asarray(
-        [r["embedding"] for r in df.select("embedding").collect()],
-        dtype=np.float64)
-    sk = fd_build(df.repartition(5), "embedding", 16, dim)
-    _check_bound(sk, vecs)
-    sk2 = fd_build(df.coalesce(1), "embedding", 16, dim)
-    _check_bound(sk2, vecs)
-    # principal subspace is usable: top direction captures more mass
-    # than a random one
-    v1 = sk.principal_directions(1)[0]
-    rnd = np.random.default_rng(0).normal(size=dim)
-    rnd /= np.linalg.norm(rnd)
-    assert (vecs @ v1).var() >= (vecs @ rnd).var() * 0.9

@@ -1,14 +1,18 @@
-"""Hermetic queries: collecting a registry query leaves no persisted RDD
-behind. Ids are compared, not counts: the ContextCleaner may reclaim an
-RDD some earlier test leaked in the middle of a query, which would hide a
-new leak from a count."""
+"""Hermetic queries: collecting a registry query leaves no persisted RDD,
+no active stream and no ``pcms_`` temp dir behind. RDD ids are compared,
+not counts: the ContextCleaner may reclaim an RDD some earlier test leaked
+in the middle of a query, which would hide a new leak from a count."""
+
+import os
+import tempfile
 
 import pytest
 
 from parallel_count_min_sketch_spark.plans import all_queries
 
 # the string-item sketch queries built from a JVM (item, count) aggregate,
-# and the scale-path heavy hitters, whose eager phase persists its fused scan
+# the scale-path heavy hitters, whose eager phase persists its fused scan,
+# and the two streaming queries, which stage files and run a stream
 QUERIES = [
     "cms_token_point_query",
     "cms_heavy_hitters",
@@ -17,6 +21,8 @@ QUERIES = [
     "hll_grouped_by_lang",
     "cms_cu_accuracy",
     "cms_heavy_hitters_scalable",
+    "stream_batch_parity",
+    "stream_rollup_parity",
 ]
 
 
@@ -24,8 +30,14 @@ def _persisted_ids(spark) -> set[int]:
     return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keys()}
 
 
+def _temp_dirs() -> set[str]:
+    return {d for d in os.listdir(tempfile.gettempdir()) if d.startswith("pcms_")}
+
+
 @pytest.mark.parametrize("name", QUERIES)
 def test_query_leaves_no_persisted_rdds(spark, sf_dir, name):
-    before = _persisted_ids(spark)
+    before, dirs = _persisted_ids(spark), _temp_dirs()
     all_queries()[name](spark, sf_dir).collect()
     assert _persisted_ids(spark) - before == set()
+    assert spark.streams.active == []
+    assert _temp_dirs() - dirs == set()

@@ -12,6 +12,7 @@ from parallel_count_min_sketch_spark.operators.rollup import (
     sketch_rollup_range,
     sketch_time_buckets,
 )
+from parallel_count_min_sketch_spark.operators.sketch_store import SketchStore
 
 CFG = CMSConfig(epsilon=0.01, delta=0.1, seed=7)
 CMS = (CFG.new_sketch, CFG.from_bytes)
@@ -163,22 +164,21 @@ def test_kll_rollup_range_rank_accuracy(spark, events):
         assert abs(rank - q) <= 0.05, (q, e, rank)
 
 
+def _day_store(path, cfg=CFG):
+    return SketchStore(path, ("bucket",), cfg.new_sketch, cfg.from_bytes)
+
+
 def test_rollup_write_read_partition_pruned(spark, events, tmp_path):
     """The durable rollup store: write partitioned by bucket, read back,
     and a range query (a) prunes to ONLY the covered day partitions —
     the bucket predicate must appear as a PartitionFilter on the scan,
-    not a post-scan data filter — and (b) merges to the same bytes as
+    not a post-scan data filter — and (b) folds to the same bytes as
     the in-memory rollup."""
-    from parallel_count_min_sketch_spark.operators.rollup import (
-        read_rollup,
-        write_rollup,
-    )
-
     buckets = sketch_time_buckets(events, "ts", "user_id", *CMS)
-    path = str(tmp_path / "rollup_store")
-    write_rollup(buckets, path)
+    store = _day_store(str(tmp_path / "rollup_store"))
+    store.write(buckets)
 
-    back = read_rollup(spark, path)
+    back = store.read(spark)
     lo, hi = "2024-01-05", "2024-01-12"
     sel = back.filter((F.col("bucket") >= lo) & (F.col("bucket") <= hi))
     plan = sel._jdf.queryExecution().executedPlan().toString()
@@ -188,38 +188,47 @@ def test_rollup_write_read_partition_pruned(spark, events, tmp_path):
     assert re.search(r"PartitionFilters: \[[^\]]*bucket", plan), plan
     assert sel.count() == 8  # exactly the covered days survive pruning
 
-    merged = sketch_rollup_range(back, lo, hi, *CMS)
+    merged = store.fold(spark, F.col("bucket").between(lo, hi))
     direct = sketch_rollup_range(buckets, lo, hi, *CMS)
     assert merged.to_bytes() == direct.to_bytes()
 
 
 def test_rollup_rewrite_day_is_idempotent(spark, events, tmp_path):
-    """Re-running a day's build (retry/backfill) through the default
-    overwrite mode must replace that day's directory, not double-count:
-    the range merge answers identical bytes after the re-write, and only
-    the re-written day's directory is touched (other days keep their
-    rows)."""
-    from parallel_count_min_sketch_spark.operators.rollup import (
-        read_rollup,
-        write_rollup,
-    )
-
+    """Re-running a day's build (retry/backfill) must replace that day's
+    directory, not double-count: the range fold answers identical bytes
+    after the re-write, and only the re-written day's directory is
+    touched (other days keep their rows)."""
     buckets = sketch_time_buckets(events, "ts", "user_id", *CMS).persist()
-    path = str(tmp_path / "rollup_store")
-    write_rollup(buckets, path)
+    store = _day_store(str(tmp_path / "rollup_store"))
+    store.write(buckets)
     lo, hi = "2024-01-05", "2024-01-12"
-    before = sketch_rollup_range(read_rollup(spark, path), lo, hi, *CMS).to_bytes()
+    in_range = F.col("bucket").between(lo, hi)
+    before = store.fold(spark, in_range).to_bytes()
 
     # retry of one day inside the range: same content, written again
     day = buckets.filter(F.col("bucket") == "2024-01-07")
     assert day.count() == 1
-    write_rollup(day, path)
+    store.write(day)
     buckets.unpersist()
 
-    back = read_rollup(spark, path)
-    assert sketch_rollup_range(back, lo, hi, *CMS).to_bytes() == before
+    assert store.fold(spark, in_range).to_bytes() == before
+    back = store.read(spark)
     # one row per day survived: the day was replaced, not appended
     assert back.count() == back.select("bucket").distinct().count()
+
+
+def test_rollup_store_rejects_other_config(spark, events, tmp_path):
+    """A day store written under one seed refuses a reader or writer with
+    another seed before any compute: its blobs hash under the old seed."""
+    path = str(tmp_path / "rollup_store")
+    store = _day_store(path)
+    store.write(sketch_time_buckets(events, "ts", "user_id", *CMS))
+    before = store.fold(spark).to_bytes()
+    other = CMSConfig(epsilon=0.01, delta=0.1, seed=8)
+    with pytest.raises(ValueError, match="is bound to") as err:
+        _day_store(path, other)
+    assert "CountMinSketch" in str(err.value)
+    assert _day_store(path).fold(spark).to_bytes() == before
 
 
 def test_rollup_estimates_one_sided(spark, events):

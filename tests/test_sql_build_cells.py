@@ -42,10 +42,12 @@ def test_string_collect_cms_equals_arrow_build(spark, rows, weighted, partitions
 
 @pytest.mark.parametrize("pre_aggregate", [None, False])
 def test_string_build_rejects_negative_weight(spark, pre_aggregate):
-    df = spark.createDataFrame([("a", 2), ("b", -1)], "item STRING, w BIGINT")
-    with pytest.raises(Exception, match="negative weights"):
-        cms_table_df(df, "item", CFG, weight_col="w", string_items=True,
-                     pre_aggregate=pre_aggregate).collect()
+    # the second input's per-item sums are all non-negative
+    for rows in ([("a", 2), ("b", -1)], [("a", -1), ("a", 2), ("b", 1)]):
+        df = spark.createDataFrame(rows, "item STRING, w BIGINT")
+        with pytest.raises(Exception, match="negative weights"):
+            cms_table_df(df, "item", CFG, weight_col="w", string_items=True,
+                         pre_aggregate=pre_aggregate).collect()
 
 
 def test_integer_collect_cms_skips_null_items_and_weights(spark):

@@ -1,21 +1,44 @@
-"""Structured Streaming: the stream-accumulated CMS must equal the batch
-build over the same data, survive a restart from its state blob, and the
-windowed aggregation must match the batch expression."""
+"""Structured Streaming token CMS: a stream feeding a sketch store under
+one constant bucket must fold to the batch build over the same data,
+resume after a restart, absorb a replayed batch, and refuse another
+streaming checkpoint or config before the query starts."""
 
 import os
+from functools import partial
 
 import pytest
-from pyspark.sql import functions as F
 
 from parallel_count_min_sketch_spark.config import CMSConfig
 from parallel_count_min_sketch_spark.operators.agg import build_cms_from_text
+from parallel_count_min_sketch_spark.operators.sketch_store import SketchStore
 from parallel_count_min_sketch_spark.sources.web_pages import web_pages
-from parallel_count_min_sketch_spark.streaming.stream_cms import (
-    StreamingCMS,
-    windowed_token_counts,
+from parallel_count_min_sketch_spark.streaming.stream_rollup import (
+    STREAM_KEYS,
+    sketch_sink,
+    start_sketch_stream,
+    token_sketch,
 )
 
 CFG = CMSConfig(epsilon=0.01, delta=0.1, seed=8)
+
+
+def _tokens(cfg=CFG):
+    return partial(token_sketch, text_col="text", make_sketch=cfg.new_sketch,
+                   from_bytes=cfg.from_bytes)
+
+
+def _store(path, cfg=CFG):
+    return SketchStore(path, STREAM_KEYS, cfg.new_sketch, cfg.from_bytes)
+
+
+def _start(stream, path, ckpt, cfg=CFG):
+    return start_sketch_stream(stream, _tokens(cfg), path, cfg.new_sketch,
+                               cfg.from_bytes, ckpt)
+
+
+def _tree(root):
+    return sorted(os.path.relpath(os.path.join(d, f), root)
+                  for d, _, files in os.walk(root) for f in files)
 
 
 @pytest.fixture()
@@ -26,24 +49,22 @@ def staged_pages(spark, tmp_path):
     b = web_pages(spark, 150, seed=12, partitions=1)
     a.write.mode("append").parquet(src)
     b.write.mode("append").parquet(src)
-    both = a.unionByName(b)
-    return src, both, a, b
+    return src, a.unionByName(b)
 
 
 def test_stream_build_equals_batch_build(spark, tmp_path, staged_pages):
-    src, both, _, _ = staged_pages
+    src, both = staged_pages
     schema = spark.read.parquet(src).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")  # force multiple micro-batches
         .parquet(src)
     )
-    acc = StreamingCMS(CFG, "text", state_path=str(tmp_path / "cms.bin"))
-    q = acc.start(stream, str(tmp_path / "ckpt"), trigger_once=True)
+    q, store = _start(stream, str(tmp_path / "store"), str(tmp_path / "ckpt"))
     assert q.awaitTermination(180), "stream did not drain"
+    assert store.read(spark).select("batch_id").distinct().count() >= 2
     expected = build_cms_from_text(both, "text", CFG)
-    assert acc.batches_seen >= 2
-    assert acc.sketch.to_bytes() == expected.to_bytes()
+    assert store.fold(spark).to_bytes() == expected.to_bytes()
 
 
 def test_stream_resume_from_state(spark, tmp_path):
@@ -51,85 +72,75 @@ def test_stream_resume_from_state(spark, tmp_path):
     a = web_pages(spark, 120, seed=21, partitions=1)
     a.write.mode("append").parquet(src)
     schema = spark.read.parquet(src).schema
-    state = str(tmp_path / "cms.bin")
+    path = str(tmp_path / "store")
     ckpt = str(tmp_path / "ckpt")
 
-    acc1 = StreamingCMS(CFG, "text", state_path=state)
-    q = acc1.start(spark.readStream.schema(schema).parquet(src), ckpt, trigger_once=True)
+    q, _ = _start(spark.readStream.schema(schema).parquet(src), path, ckpt)
     assert q.awaitTermination(180), "stream did not drain"
-    assert os.path.exists(state)
 
-    # new data arrives; a NEW accumulator (simulated driver restart) picks up
-    # the state blob and Spark's source checkpoint skips processed files
+    # new data arrives; a restarted query under the same checkpoint folds
+    # into the same store, and Spark's source checkpoint skips the
+    # processed files
     b = web_pages(spark, 80, seed=22, partitions=1)
     b.write.mode("append").parquet(src)
-    acc2 = StreamingCMS(CFG, "text", state_path=state)
-    q2 = acc2.start(spark.readStream.schema(schema).parquet(src), ckpt, trigger_once=True)
+    q2, store = _start(spark.readStream.schema(schema).parquet(src), path, ckpt)
     assert q2.awaitTermination(180), "stream did not drain"
 
     expected = build_cms_from_text(a.unionByName(b), "text", CFG)
-    assert acc2.sketch.to_bytes() == expected.to_bytes()
+    assert store.fold(spark).to_bytes() == expected.to_bytes()
 
 
 def test_replayed_batch_is_not_double_counted(spark, tmp_path):
-    """foreachBatch is at-least-once: a crash between our state write and
-    Spark's offset commit replays the micro-batch. The batch_id watermark
-    in the state blob must make the replay a no-op (ADVICE r1)."""
+    """foreachBatch is at-least-once: a crash between the store write and
+    Spark's offset commit replays the micro-batch. The replay overwrites
+    the batch's own partition, so it changes nothing."""
     df = web_pages(spark, 60, seed=31, partitions=1)
-    state = str(tmp_path / "cms.bin")
-    acc = StreamingCMS(CFG, "text", state_path=state)
-    acc.process_batch(df, 0)
-    once = acc.sketch.to_bytes()
-    acc.process_batch(df, 0)  # replay on the live accumulator
-    assert acc.sketch.to_bytes() == once
-    # replay after a restart (state reloaded from disk) is also a no-op
-    acc2 = StreamingCMS(CFG, "text", state_path=state)
-    assert acc2.last_batch_id == 0
-    acc2.process_batch(df, 0)
-    assert acc2.sketch.to_bytes() == once
-    acc2.process_batch(df, 1)  # a genuinely new batch still merges
-    assert acc2.sketch.to_bytes() != once
+    path = str(tmp_path / "store")
+    sink = sketch_sink(_store(path), _tokens())
+    sink(df, 0)
+    once = _store(path).fold(spark).to_bytes()
+    sink(df, 0)  # replay on the live sink
+    assert _store(path).fold(spark).to_bytes() == once
+    # replay after a restart (store reopened from disk) is also a no-op
+    sink2 = sketch_sink(_store(path), _tokens())
+    sink2(df, 0)
+    assert _store(path).fold(spark).to_bytes() == once
+    sink2(df, 1)  # a genuinely new batch still merges
+    assert _store(path).fold(spark).to_bytes() != once
 
 
 def test_state_refuses_foreign_checkpoint_dir(spark, tmp_path):
     """Batch ids restart at 0 under a new streaming checkpoint dir; reusing
-    an accumulated state blob there would silently skip real data."""
+    a store there would overwrite the first stream's batches."""
     src = str(tmp_path / "incoming")
     web_pages(spark, 50, seed=41, partitions=1).write.mode("append").parquet(src)
     schema = spark.read.parquet(src).schema
-    state = str(tmp_path / "cms.bin")
-    acc1 = StreamingCMS(CFG, "text", state_path=state)
-    q = acc1.start(spark.readStream.schema(schema).parquet(src),
-                   str(tmp_path / "ckptA"), trigger_once=True)
+    path = str(tmp_path / "store")
+    q, _ = _start(spark.readStream.schema(schema).parquet(src), path,
+                  str(tmp_path / "ckptA"))
     assert q.awaitTermination(180), "stream did not drain"
+    before = _tree(path)
 
-    acc2 = StreamingCMS(CFG, "text", state_path=state)
-    with pytest.raises(ValueError, match="batch ids restart"):
-        acc2.start(spark.readStream.schema(schema).parquet(src),
-                   str(tmp_path / "ckptB"), trigger_once=True)
+    with pytest.raises(ValueError, match="stream_checkpoint"):
+        _start(spark.readStream.schema(schema).parquet(src), path,
+               str(tmp_path / "ckptB"))
+    assert spark.streams.active == []
+    assert _tree(path) == before
 
 
-def test_windowed_token_counts_matches_batch(spark, tmp_path, staged_pages):
-    src, both, _, _ = staged_pages
+def test_stream_store_rejects_other_config(spark, tmp_path):
+    """A token store streamed under one seed refuses a restart under
+    another seed, even with the same checkpoint, before the query starts."""
+    src = str(tmp_path / "incoming")
+    web_pages(spark, 50, seed=51, partitions=1).write.mode("append").parquet(src)
     schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    windowed = windowed_token_counts(stream, ts_col="warc_ts", window="1 minute",
-                                     watermark="5 minutes")
-    q = (
-        windowed.writeStream.format("memory").queryName("win_counts")
-        .outputMode("complete").trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt2")).start()
-    )
+    path, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
+    q, _ = _start(spark.readStream.schema(schema).parquet(src), path, ckpt)
     assert q.awaitTermination(180), "stream did not drain"
-    got = {
-        (r["window"]["start"], r["tok"]): r["count"]
-        for r in spark.sql("SELECT * FROM win_counts").collect()
-    }
-    exp_rows = (
-        both.select(F.window("warc_ts", "1 minute").alias("window"),
-                    F.explode(F.split("text", " ")).alias("tok"))
-        .filter("tok != ''")
-        .groupBy("window", "tok").count().collect()
-    )
-    expected = {(r["window"]["start"], r["tok"]): r["count"] for r in exp_rows}
-    assert got == expected
+    before = _tree(path)
+
+    other = CMSConfig(epsilon=0.01, delta=0.1, seed=9)
+    with pytest.raises(ValueError, match="is bound to"):
+        _start(spark.readStream.schema(schema).parquet(src), path, ckpt, other)
+    assert spark.streams.active == []
+    assert _tree(path) == before

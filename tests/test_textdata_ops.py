@@ -13,10 +13,7 @@ from parallel_count_min_sketch_spark.operators.similarity import (
     cosine_topk_pandas,
     lsh_ann_topk,
 )
-from parallel_count_min_sketch_spark.multimodal.binary_ops import (
-    binary_metadata,
-    extract_features,
-)
+from parallel_count_min_sketch_spark.multimodal.binary_ops import binary_metadata
 
 
 # ---------------------------- textstats -----------------------------------
@@ -539,27 +536,6 @@ def test_resize_nearest_matches_naive():
             assert np.array_equal(out[i, j], img[i * 6 // 4, j * 8 // 4])
 
 
-def test_frame_sampling_plumbing(spark):
-    from parallel_count_min_sketch_spark.multimodal.binary_ops import sample_frames
-
-    df = spark.createDataFrame(
-        [(1, bytearray(b"fakevideo-bytes-" * 8)), (2, bytearray(b"x"))],
-        "id LONG, blob BINARY",
-    )
-    rows = sample_frames(df, "blob", "id", n_frames=3).collect()
-    by_id: dict[int, list] = {}
-    for r in rows:
-        by_id.setdefault(r["id"], []).append(r)
-    assert set(by_id) == {1, 2}
-    for vid, frames in by_id.items():
-        assert sorted(f["frame_idx"] for f in frames) == [0, 1, 2]
-        assert all(len(f["frame_feat"]) == 3 for f in frames)
-    # determinism across runs
-    again = sample_frames(df, "blob", "id", n_frames=3).collect()
-    key = lambda r: (r["id"], r["frame_idx"])
-    assert {key(r): r["frame_feat"] for r in rows} == {key(r): r["frame_feat"] for r in again}
-
-
 def test_binary_pipeline_end_to_end(spark):
     from parallel_count_min_sketch_spark.multimodal.binary_ops import encode_bmp
 
@@ -576,19 +552,6 @@ def test_binary_pipeline_end_to_end(spark):
     assert meta[2] == ("jpeg", 11)
     assert meta[3] == ("unknown", 10)
     assert meta[4] == ("bmp", len(bmp))
-    feats = extract_features(df, "blob", "id").collect()
-    assert len(feats) == 4
-    for r in feats:
-        assert len(r["feat"]) == 3
-        assert 0 <= r["mean_intensity_bp"] <= 25500
-    by_id = {r["id"]: r for r in feats}
-    # the BMP row decoded through the REAL codec: constant-100 image
-    assert by_id[4]["mean_intensity_bp"] == 100 * 100
-    assert by_id[4]["feat"] == [100.0, 100.0, 100.0]
-    # determinism across partitionings
-    feats2 = extract_features(df.repartition(3), "blob", "id").collect()
-    assert {r["id"]: r["mean_intensity_bp"] for r in feats} == \
-        {r["id"]: r["mean_intensity_bp"] for r in feats2}
 
 
 def test_embedding_near_dups_hot_bucket_capped(spark):
