@@ -14,8 +14,11 @@ no partial yet, so a resume prunes the scan itself, not just the compute.
 Appended files are a plain resume; partials of files the input no longer
 lists (an overwritten dataset) are ignored.
 
-The checkpoint dir is a ``SketchStore`` keyed by ``file`` (the input file
-URI), so it refuses another config before any compute. Partials are
+The checkpoint dir is a ``SketchStore`` with the input file URI as its
+row key, so it refuses another config before any compute. Each run that
+computes files writes them under its own ``run`` partition (a digest of
+the files it computes), so reads list one dir per run, not per file, and
+a retried run replaces its own partition. Partials are
 durable per write job, not per task: the parquet commit protocol
 publishes a job's output only at job commit, so a failed run leaves none
 of its partials behind and the next run rescans its files.
@@ -23,6 +26,7 @@ of its partials behind and the next run rescans its files.
 
 from __future__ import annotations
 
+import hashlib
 import time
 
 from pyspark.sql import functions as F
@@ -48,8 +52,8 @@ class CheckpointedCMSBuild:
 
     def __init__(self, cfg: CMSConfig, checkpoint_dir: str):
         self.cfg = cfg
-        self.store = SketchStore(checkpoint_dir, ("file",), cfg.new_sketch,
-                                 cfg.from_bytes)
+        self.store = SketchStore(checkpoint_dir, ("run",), cfg.new_sketch,
+                                 cfg.from_bytes, row_key="file")
         self.metrics: dict = {}
 
     def run(self, spark, input_path: str, text_col: str = "text") -> CountMinSketch:
@@ -66,10 +70,12 @@ class CheckpointedCMSBuild:
             # just compute
             df = spark.read.parquet(*(files[p] for p in todo)) \
                 .withColumn("__file", F.input_file_name())
+            run_id = hashlib.sha1("\n".join(todo).encode()).hexdigest()
             self.store.write(
                 sketch_grouped_from_text(df, "__file", text_col,
                                          self.cfg.new_sketch, self.cfg.from_bytes)
-                .withColumnRenamed("group", "file"))
+                .select(F.lit(run_id).alias("run"), F.col("group").alias("file"),
+                        "rows_seen", "sketch"))
         compute_sec = time.perf_counter() - t0
 
         # dedupe on the NORMALIZED path (raw URIs can vary in scheme slashes

@@ -2,7 +2,7 @@
 
 Every persisted partial in the package (the per-file checkpoint, the
 per-day rollup, the stream-maintained rollup, the streaming token CMS) is
-a row ``(key columns..., rows_seen, sketch)`` and is answered by folding
+a row ``(key columns..., [row key,] rows_seen, sketch)`` and is answered by folding
 blobs — one sketch per immutable dataset, unioned at query time, the
 design of *Approximate Distinct Counts for Billions of Datasets* (SIGMOD
 2019) and the reference's associative reduce of partial sketches
@@ -10,8 +10,12 @@ design of *Approximate Distinct Counts for Billions of Datasets* (SIGMOD
 
 Layout of a store dir:
     meta.json   binding: kernel class, digest of its empty sketch, key
-                columns, and the streaming checkpoint of a stream writer
-    data/       parquet partitioned by the key columns
+                columns, row key, and the streaming checkpoint of a
+                stream writer
+    data/       parquet partitioned by the key columns; the optional row
+                key is a data column naming a row inside a partition
+                (the checkpoint's input file: a partition dir per file
+                would make every read list one dir per file)
 
 The empty sketch's bytes encode the kernel's whole config (CMS depth,
 width and seed; HLL precision and seed; KLL k and seed; MG k), so a store
@@ -31,9 +35,9 @@ import json
 import os
 from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from .sketch_agg import fold_blobs, merge_grouped_partials
+from .sketch_agg import fold_blobs
 
 
 def _abs(path: str) -> str:
@@ -41,56 +45,66 @@ def _abs(path: str) -> str:
 
 
 class SketchStore:
-    """Opening a store binds it: a new dir records this kernel, config and
-    key layout (and ``stream_checkpoint``, when a stream writes it); an
-    existing one must match them or the constructor raises ``ValueError``.
-    A reader passes no checkpoint and is not checked against one."""
+    """Opening a store checks it: an existing store must match this
+    kernel, config, keys and row key (and ``stream_checkpoint``, when a
+    stream writes it) or the constructor raises ``ValueError``. Opening
+    creates nothing; the first ``write`` records the binding, so a reader
+    that opens a new path first (it passes no checkpoint and is not
+    checked against one) leaves it unbound."""
 
     def __init__(self, path: str, keys: Sequence[str], make_sketch: Callable,
-                 from_bytes: Callable, *, stream_checkpoint: str | None = None):
+                 from_bytes: Callable, *, row_key: str | None = None,
+                 stream_checkpoint: str | None = None):
         self.path = path
         self.keys = tuple(keys)
+        self.columns = self.keys + ((row_key,) if row_key else ())
         self.make_sketch = make_sketch
         self.from_bytes = from_bytes
         self.data_dir = os.path.join(path, "data")
+        self.meta_path = os.path.join(path, "meta.json")
         empty = make_sketch()
-        want = {"kernel": type(empty).__name__,
-                "config_sha256": hashlib.sha256(empty.to_bytes()).hexdigest(),
-                "keys": list(self.keys)}
+        digest = hashlib.sha256(empty.to_bytes()).hexdigest()
+        self.binding = {"kernel": type(empty).__name__,
+                        "config_sha256": digest, "keys": list(self.keys),
+                        "row_key": row_key}
         if stream_checkpoint is not None:
-            want["stream_checkpoint"] = _abs(stream_checkpoint)
-        meta_path = os.path.join(path, "meta.json")
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
+            self.binding["stream_checkpoint"] = _abs(stream_checkpoint)
+        if os.path.exists(self.meta_path):
+            with open(self.meta_path) as f:
                 have = json.load(f)
-            if {k: have.get(k) for k in want} != want:
+            if {k: have.get(k) for k in self.binding} != self.binding:
                 raise ValueError(
-                    f"sketch store {path} is bound to {have}, not {want}; "
-                    "use a new store dir")
-            return
-        if os.path.exists(self.data_dir):
+                    f"sketch store {path} is bound to {have}, not "
+                    f"{self.binding}; use a new store dir")
+        elif os.path.exists(self.data_dir):
             raise ValueError(f"sketch store {path} holds data without a "
-                             f"meta.json, so its config is unknown; not {want}")
-        os.makedirs(self.data_dir)
-        tmp = meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(want, f, indent=2)
-        os.replace(tmp, meta_path)
+                             f"meta.json, so its config is unknown; not "
+                             f"{self.binding}")
 
     def write(self, df: DataFrame) -> None:
-        """Persist ``df[keys..., rows_seen, sketch]``. Per-writer dynamic
-        partition overwrite replaces only the keys ``df`` holds, so a
-        retried or replayed write is idempotent and other keys stay."""
-        (df.select(*self.keys, "rows_seen", "sketch")
+        """Persist ``df[keys..., row_key, rows_seen, sketch]``. Per-writer
+        dynamic partition overwrite replaces only the keys ``df`` holds,
+        so a retried or replayed write is idempotent and other keys stay.
+        The first write records the binding before any data lands."""
+        if not os.path.exists(self.meta_path):
+            os.makedirs(self.path, exist_ok=True)
+            tmp = self.meta_path + ".tmp"
+            with open(tmp, "w") as f:
+                json.dump(self.binding, f, indent=2)
+            os.replace(tmp, self.meta_path)
+        (df.select(*self.columns, "rows_seen", "sketch")
          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
          .partitionBy(*self.keys).parquet(self.data_dir))
 
     def read(self, spark) -> DataFrame:
-        """DataFrame[keys..., rows_seen, sketch] with every key read back
-        as STRING (partition inference would make ISO days DATE and batch
-        ids INT). A key predicate on it is a partition filter."""
-        schema = ", ".join([f"`{k}` STRING" for k in self.keys]
+        """DataFrame[keys..., row_key, rows_seen, sketch] with every key
+        read back as STRING (partition inference would make ISO days DATE
+        and batch ids INT). A key predicate on it is a partition filter.
+        A store with no write yet reads as empty."""
+        schema = ", ".join([f"`{k}` STRING" for k in self.columns]
                            + ["rows_seen BIGINT", "sketch BINARY"])
+        if not os.path.exists(self.data_dir):
+            return spark.createDataFrame([], schema)
         return spark.read.schema(schema).parquet(self.data_dir)
 
     def fold(self, spark, where=None):
@@ -101,18 +115,7 @@ class SketchStore:
         df = self.read(spark)
         if where is not None:
             df = df.filter(where)
-        rows = sorted(df.select(*self.keys, "sketch").collect(),
-                      key=lambda r: tuple(r[k] or "" for k in self.keys))
+        rows = sorted(df.select(*self.columns, "sketch").collect(),
+                      key=lambda r: tuple(r[k] or "" for k in self.columns))
         sk = fold_blobs((r["sketch"] for r in rows), self.from_bytes)
         return self.make_sketch() if sk is None else sk
-
-    def compact(self, spark, path: str, key: str) -> "SketchStore":
-        """Fold this store into a new one at ``path`` keyed by ``key`` alone
-        (one row per key value), e.g. per-(batch, day) stream partials into
-        one row per day. A pure merge: every fold answers the same bytes."""
-        out = SketchStore(path, (key,), self.make_sketch, self.from_bytes)
-        grouped = self.read(spark).select(F.col(key).alias("group"),
-                                          "rows_seen", "sketch")
-        out.write(merge_grouped_partials(grouped, self.from_bytes)
-                  .withColumnRenamed("group", key))
-        return out

@@ -748,7 +748,7 @@ def q_stream_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch store keyed by ``(batch_id, bucket)``, each micro-batch
     writing idempotent per-day CMS partials. The
     [ROLLUP_LO, ROLLUP_HI] range fold over the stream-maintained store,
-    over its compacted one-row-per-day form (``SketchStore.compact``),
+    over its compacted one-row-per-day form (``stream_rollup.compact``),
     and over a one-shot batch rollup of the same rows must all be
     BYTE-IDENTICAL — that is the associativity contract that lets a
     stream maintain the store incrementally. Output columns are
@@ -766,7 +766,7 @@ def q_stream_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
 
     from ..operators.rollup import sketch_rollup_range, sketch_time_buckets
-    from ..streaming.stream_rollup import start_sketch_stream
+    from ..streaming.stream_rollup import compact, start_sketch_stream
 
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     tmp = tempfile.mkdtemp(prefix="pcms_rollup_parity_")
@@ -792,8 +792,7 @@ def q_stream_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_batches = store.read(spark).select("batch_id").distinct().count()
         in_range = F.col("bucket").between(ROLLUP_LO, ROLLUP_HI)
         sk_stream = store.fold(spark, in_range)
-        compacted = store.compact(spark, os.path.join(tmp, "compacted"),
-                                  "bucket")
+        compacted = compact(store, spark, os.path.join(tmp, "compacted"))
         sk_compact = compacted.fold(spark, in_range)
         sk_batch = sketch_rollup_range(
             sketch_time_buckets(ev, "ts", "user_id", mk, fb),

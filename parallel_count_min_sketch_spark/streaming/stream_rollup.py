@@ -25,7 +25,10 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..operators.sketch_agg import sketch_grouped_from_text
+from ..operators.sketch_agg import (
+    merge_grouped_partials,
+    sketch_grouped_from_text,
+)
 from ..operators.sketch_store import SketchStore
 
 STREAM_KEYS = ("batch_id", "bucket")
@@ -56,6 +59,19 @@ def sketch_sink(store: SketchStore, sketch_batch: Callable):
                     .withColumn("batch_id", F.lit(int(batch_id))))
 
     return process
+
+
+def compact(store: SketchStore, spark, path: str) -> SketchStore:
+    """Fold the stream store ``store`` into a new store at ``path`` keyed
+    by ``bucket`` alone (one row per bucket instead of one per touching
+    micro-batch), so a long-running maintainer can bound its file count.
+    A pure merge: every fold answers the same bytes (tested)."""
+    out = SketchStore(path, ("bucket",), store.make_sketch, store.from_bytes)
+    grouped = store.read(spark).select(F.col("bucket").alias("group"),
+                                       "rows_seen", "sketch")
+    out.write(merge_grouped_partials(grouped, store.from_bytes)
+              .withColumnRenamed("group", "bucket"))
+    return out
 
 
 def start_sketch_stream(stream_df: DataFrame, sketch_batch: Callable,

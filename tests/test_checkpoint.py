@@ -29,10 +29,10 @@ def _write(spark, path, n, seed, files, mode="append"):
     web_pages(spark, n, seed=seed, partitions=files).write.mode(mode).parquet(path)
 
 
-def _file_partitions(build):
+def _run_partitions(build):
     data = build.store.data_dir
     return sorted(os.path.join(data, d) for d in os.listdir(data)
-                  if d.startswith("file="))
+                  if d.startswith("run="))
 
 
 def _tree(root):
@@ -56,15 +56,18 @@ def test_full_build_writes_lineage_and_matches_direct(spark, ckpt_dir, src):
 
 
 def test_resume_after_partial_loss(spark, ckpt_dir, src):
-    """Simulate a lost write: drop two files' partials from the checkpoint,
-    resume, and verify only those files are recomputed and the merged
-    result is unchanged."""
-    _write(spark, src, 400, seed=3, files=6)
+    """Simulate a lost write: drop the partials of the run that computed
+    two of the files, resume, and verify only those files are recomputed
+    and the merged result is unchanged."""
+    _write(spark, src, 300, seed=3, files=4)
     build = CheckpointedCMSBuild(CFG, ckpt_dir)
     build.run(spark, src)
+    first = _run_partitions(build)
+    _write(spark, src, 100, seed=4, files=2)
+    build.run(spark, src)
 
-    for part in _file_partitions(build)[1:3]:
-        shutil.rmtree(part)
+    (lost,) = set(_run_partitions(build)) - set(first)
+    shutil.rmtree(lost)
 
     resumed = CheckpointedCMSBuild(CFG, ckpt_dir)
     sk2 = resumed.run(spark, src)
@@ -79,7 +82,7 @@ def test_corrupt_partial_fails_resume_before_writing(spark, ckpt_dir, src):
     _write(spark, src, 200, seed=5, files=4)
     build = CheckpointedCMSBuild(CFG, ckpt_dir)
     build.run(spark, src)
-    part = _file_partitions(build)[0]
+    (part,) = _run_partitions(build)
     with open(os.path.join(part, "part-99999-corrupt.parquet"), "wb") as f:
         f.write(b"this is not a parquet file")
     before = _tree(ckpt_dir)
@@ -150,6 +153,23 @@ def test_dataset_overwrite_ignores_stale_partials(spark, ckpt_dir, src):
     assert build.metrics["files_skipped"] == 0
     assert build.metrics["files_computed"] == 4
     assert sk.to_bytes() == _direct(spark, src)
+
+
+def test_long_input_path_checkpoints_and_resumes(spark, tmp_path, ckpt_dir):
+    """The input file URI is a data column, not a partition dir name, so
+    a source path far past one directory name's 255-byte limit still
+    checkpoints and resumes."""
+    src = str(tmp_path.joinpath(*["d" * 60] * 4, "dataset"))
+    assert len(src) > 250
+    _write(spark, src, 200, seed=5, files=2)
+    build = CheckpointedCMSBuild(CFG, ckpt_dir)
+    sk = build.run(spark, src)
+    (part,) = _run_partitions(build)
+    assert len(os.path.basename(part)) == len("run=") + 40
+    assert sk.to_bytes() == _direct(spark, src)
+    again = CheckpointedCMSBuild(CFG, ckpt_dir)
+    assert again.run(spark, src).to_bytes() == sk.to_bytes()
+    assert again.metrics["files_computed"] == 0
 
 
 def test_token_free_file_is_not_missing(spark, ckpt_dir, src):

@@ -1,10 +1,11 @@
 """The sketch store's binding and the rule that one module knows the
 persisted-sketch layout.
 
-- Opening a store records its kernel, config digest and key columns;
-  reopening it with another kernel, config or key layout raises before
-  any compute, naming both sides (no Spark needed: the binding is
-  checked in the constructor).
+- The first write records a store's kernel, config digest, key columns
+  and row key (and a stream writer's checkpoint); reopening it with
+  another kernel, config, key layout or checkpoint raises in the constructor,
+  before any compute, naming both sides. Opening alone creates nothing,
+  so a reader that opens a new path first does not bind it.
 - A source scan: only ``operators/sketch_store.py`` names ``meta.json``,
   and only it and ``streaming/stream_near_dedup.py`` (LSH band rows and
   kept documents, not sketches) use ``partitionOverwriteMode``.
@@ -25,11 +26,23 @@ from parallel_count_min_sketch_spark.sketches.hll import HyperLogLog
 PKG_DIR = Path(__file__).resolve().parents[1] / "parallel_count_min_sketch_spark"
 CFG = CMSConfig(epsilon=0.01, delta=0.1, seed=7)
 CMS = (CFG.new_sketch, CFG.from_bytes)
+STREAM = ("batch_id", "bucket")
 
 
-def test_reopen_checks_kernel_config_and_keys(tmp_path):
+def _write_one(spark, store):
+    """One (keys..., rows_seen, sketch) row: a single token's sketch."""
+    sk = CFG.new_sketch()
+    sk.update_strings(["a"])
+    row = tuple("0" for _ in store.keys) + (1, sk.to_bytes())
+    store.write(spark.createDataFrame(
+        [row], ", ".join([f"`{k}` STRING" for k in store.keys]
+                         + ["rows_seen BIGINT", "sketch BINARY"])))
+    return sk
+
+
+def test_reopen_checks_kernel_config_and_keys(spark, tmp_path):
     path = str(tmp_path / "store")
-    SketchStore(path, ("bucket",), *CMS)
+    _write_one(spark, SketchStore(path, ("bucket",), *CMS))
     with open(os.path.join(path, "meta.json")) as f:
         meta = json.load(f)
     assert meta["kernel"] == "CountMinSketch"
@@ -44,19 +57,41 @@ def test_reopen_checks_kernel_config_and_keys(tmp_path):
         with pytest.raises(ValueError, match="is bound to") as err:
             SketchStore(path, keys, mk, fb)
         assert meta["config_sha256"] in str(err.value)
+    with pytest.raises(ValueError, match="is bound to"):
+        SketchStore(path, ("bucket",), *CMS, row_key="file")
     with open(os.path.join(path, "meta.json")) as f:
         assert json.load(f) == meta
 
 
-def test_stream_checkpoint_is_checked_only_when_given(tmp_path):
+def test_stream_checkpoint_is_checked_only_when_given(spark, tmp_path):
     path = str(tmp_path / "store")
-    SketchStore(path, ("batch_id", "bucket"), *CMS,
-                stream_checkpoint=str(tmp_path / "ckptA"))
-    SketchStore(path, ("batch_id", "bucket"), *CMS)  # a reader
-    SketchStore(path, ("batch_id", "bucket"), *CMS,
-                stream_checkpoint=str(tmp_path / "ckptA"))
+    ckpt_a = str(tmp_path / "ckptA")
+    _write_one(spark, SketchStore(path, STREAM, *CMS, stream_checkpoint=ckpt_a))
+    SketchStore(path, STREAM, *CMS)  # a reader
+    SketchStore(path, STREAM, *CMS, stream_checkpoint=ckpt_a)
     with pytest.raises(ValueError, match="ckptA.*ckptB"):
-        SketchStore(path, ("batch_id", "bucket"), *CMS,
+        SketchStore(path, STREAM, *CMS,
+                    stream_checkpoint=str(tmp_path / "ckptB"))
+
+
+def test_reader_first_leaves_a_new_store_unbound(spark, tmp_path):
+    """A reader opening a path before any writer creates nothing and reads
+    an empty store; the stream that writes it later binds it to its own
+    checkpoint."""
+    path = str(tmp_path / "store")
+    reader = SketchStore(path, STREAM, *CMS)
+    assert not os.path.exists(path)
+    assert reader.read(spark).count() == 0
+    assert reader.fold(spark).to_bytes() == CFG.new_sketch().to_bytes()
+
+    ckpt_a = str(tmp_path / "ckptA")
+    sk = _write_one(spark, SketchStore(path, STREAM, *CMS,
+                                       stream_checkpoint=ckpt_a))
+    with open(os.path.join(path, "meta.json")) as f:
+        assert json.load(f)["stream_checkpoint"] == ckpt_a
+    assert reader.fold(spark).to_bytes() == sk.to_bytes()
+    with pytest.raises(ValueError, match="stream_checkpoint"):
+        SketchStore(path, STREAM, *CMS,
                     stream_checkpoint=str(tmp_path / "ckptB"))
 
 

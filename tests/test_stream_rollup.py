@@ -18,6 +18,7 @@ from parallel_count_min_sketch_spark.operators.rollup import (
 from parallel_count_min_sketch_spark.operators.sketch_store import SketchStore
 from parallel_count_min_sketch_spark.streaming.stream_rollup import (
     STREAM_KEYS,
+    compact,
     sketch_sink,
     start_sketch_stream,
 )
@@ -99,7 +100,7 @@ def test_compact_rollup_preserves_range_bytes(spark, tmp_path, events):
     raw = store.read(spark)
     assert raw.count() > raw.select("bucket").distinct().count()
 
-    compacted = store.compact(spark, str(tmp_path / "compacted"), "bucket")
+    compacted = compact(store, spark, str(tmp_path / "compacted"))
     back = compacted.read(spark)
     assert back.count() == back.select("bucket").distinct().count()
     assert (compacted.fold(spark, _in_range()).to_bytes()
@@ -156,20 +157,23 @@ def test_generic_stream_rollup_hll_equals_batch(spark, tmp_path, events,
     assert merged.to_bytes() == direct.to_bytes()
 
 
-def test_stream_rollup_store_rejects_other_config(spark, tmp_path, events):
-    """A stream store written under one seed refuses a stream under
-    another seed before the query starts."""
-    path = str(tmp_path / "store")
-    sketch_sink(_store(path), _days(*CMS))(events, 0)
+def test_stream_rollup_store_rejects_other_config(spark, tmp_path,
+                                                  staged_events):
+    """A stream store written under one seed refuses a restart under
+    another seed with the same streaming checkpoint, so only the config
+    differs, before the query starts."""
+    path, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
+    q, _ = start_sketch_stream(_stream(spark, staged_events, 1), _days(*CMS),
+                               path, *CMS, ckpt)
+    assert q.awaitTermination(180), "stream did not drain within 180s"
     before = _tree(path)
     other = CMSConfig(epsilon=0.01, delta=0.1, seed=8)
-    src = str(tmp_path / "incoming")
-    events.coalesce(1).write.parquet(src)
-    with pytest.raises(ValueError, match="is bound to"):
-        start_sketch_stream(_stream(spark, src, 1),
+    with pytest.raises(ValueError, match="is bound to") as err:
+        start_sketch_stream(_stream(spark, staged_events, 1),
                             _days(other.new_sketch, other.from_bytes), path,
-                            other.new_sketch, other.from_bytes,
-                            str(tmp_path / "ckpt"))
+                            other.new_sketch, other.from_bytes, ckpt)
+    assert SketchStore(path, STREAM_KEYS, *CMS).binding["config_sha256"] \
+        in str(err.value)
     assert spark.streams.active == []
     assert _tree(path) == before
 
