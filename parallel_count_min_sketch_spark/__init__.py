@@ -8,8 +8,8 @@ partial-sketch -> associative-merge execution model that both MPI_Reduce
 and Spark's partial/final aggregation share.
 
 Layout:
-- ``sketches/``   pure numpy kernels (no Spark imports) + a pure-Python
-                  sequential reference implementation for byte-equality tests
+- ``sketches/``   pure numpy kernels (no Spark imports)
+- ``_arrow_np``   pandas-free Arrow <-> numpy conversions for worker code
 - ``operators/``  Spark aggregation layer (mapInArrow partials, merges,
                   grouped sketches, checkpoint/lineage, dedup, similarity)
 - ``functions/``  column-level helpers (tokenize, hashing exprs, text quality,

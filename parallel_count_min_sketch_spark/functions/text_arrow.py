@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import _arrow_np as anp
 from ..memtune import tune_worker
 
 __all__ = [
@@ -46,19 +47,8 @@ def _tokenize_batch(texts):
     Returns ``(flat_ne, didx, n)`` — the kept tokens in document order
     (Arrow StringArray), the doc index of each kept token (int64 numpy,
     nondecreasing), and the batch row count."""
-    import numpy as np
-    import pyarrow.compute as pc
-
-    toks = pc.split_pattern(texts, " ")
-    lens = pc.fill_null(pc.list_value_length(toks), 0) \
-        .to_numpy(zero_copy_only=False).astype(np.int64)
-    flat = pc.list_flatten(toks)  # NULL lists contribute no tokens
-    mask = pc.not_equal(flat, "")
-    flat_ne = pc.filter(flat, mask)
-    mask_np = mask.to_numpy(zero_copy_only=False).astype(bool)
-    n = len(lens)
-    didx = np.repeat(np.arange(n, dtype=np.int64), lens)[mask_np]
-    return flat_ne, didx, n
+    flat_ne, didx = anp.doc_tokens(texts)
+    return flat_ne, didx, len(texts)
 
 
 def _codes(flat_ne):
@@ -69,7 +59,7 @@ def _codes(flat_ne):
     import numpy as np
 
     denc = flat_ne.dictionary_encode()
-    codes = denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    codes = anp.values(denc.indices, np.int64)
     return codes, denc.dictionary
 
 
@@ -158,15 +148,15 @@ def doc_repetition_stats_arrow(docs: DataFrame, id_col: str = "doc_id",
             nb = n_bigrams[keep]
             tb = top_big[keep]
             yield pa.RecordBatch.from_pydict({
-                "doc_id": ids.filter(pa.array(keep)),
-                "n_tokens": pa.array(nt),
-                "n_distinct": pa.array(nd),
-                "top_tok_tf": pa.array(tt),
-                "n_bigrams": pa.array(nb),
-                "top_bigram_tf": pa.array(tb),
-                "distinct_ppm": pa.array(nd * REP_SCALE // nt),
-                "top_tok_ppm": pa.array(tt * REP_SCALE // nt),
-                "top_bigram_ppm": pa.array(
+                "doc_id": ids.filter(anp.array(keep)),
+                "n_tokens": anp.array(nt),
+                "n_distinct": anp.array(nd),
+                "top_tok_tf": anp.array(tt),
+                "n_bigrams": anp.array(nb),
+                "top_bigram_tf": anp.array(tb),
+                "distinct_ppm": anp.array(nd * REP_SCALE // nt),
+                "top_tok_ppm": anp.array(tt * REP_SCALE // nt),
+                "top_bigram_ppm": anp.array(
                     np.where(nb > 0, tb * REP_SCALE // np.maximum(nb, 1), 0)),
             })
 
@@ -198,6 +188,7 @@ def ngram_tf_rows_arrow(docs: DataFrame, k: int, id_col: str = "doc_id",
         import pyarrow.compute as pc
 
         tune_worker()
+        space = anp.from_list([" "], pa.string())[0]
         for batch in batches:
             ids = batch.column(0)
             flat_ne, didx, _n = _tokenize_batch(batch.column(1))
@@ -220,15 +211,13 @@ def ngram_tf_rows_arrow(docs: DataFrame, k: int, id_col: str = "doc_id",
             uniq, first, tf = np.unique(key, return_index=True,
                                         return_counts=True)
             rep = vpos[first]  # a representative start position per row
-            rep_pa = pa.array(rep)
-            parts = [flat_ne.take(pa.array(rep + j)) for j in range(k)] \
-                if k > 1 else [flat_ne.take(rep_pa)]
+            parts = [flat_ne.take(anp.array(rep + j)) for j in range(k)]
             ngram = parts[0] if k == 1 else \
-                pc.binary_join_element_wise(*parts, " ")
+                pc.binary_join_element_wise(*parts, space)
             yield pa.RecordBatch.from_pydict({
-                "_id": ids.take(pa.array(uniq // s)),
+                "_id": ids.take(anp.array(uniq // s)),
                 "ngram": ngram,
-                "tf": pa.array(tf.astype(np.int64)),
+                "tf": anp.array(tf, pa.int64()),
             })
 
     return proj.mapInArrow(
@@ -254,16 +243,14 @@ def quality_gate_cols_arrow(docs: DataFrame, stopwords: tuple,
         import pyarrow.compute as pc
 
         tune_worker()
-        sw = pa.array(list(stopwords))
+        sw = anp.from_list(stopwords, pa.string())
         for batch in batches:
             ids = batch.column(0)
             texts = batch.column(1)
-            null_mask = pc.is_null(texts).to_numpy(zero_copy_only=False) \
-                .astype(bool)
+            ok = anp.valid(texts)
             flat_ne, didx, n = _tokenize_batch(texts)
             n_tokens = np.bincount(didx, minlength=n)
-            sw_mask = pc.is_in(flat_ne, value_set=sw) \
-                .to_numpy(zero_copy_only=False).astype(bool)
+            sw_mask = anp.values(pc.is_in(flat_ne, value_set=sw))
             sw_count = np.bincount(didx[sw_mask], minlength=n)
             denom = np.maximum(n_tokens, 1)
             sw_bp = np.floor(sw_count * 10000.0 / denom).astype(np.int64)
@@ -273,9 +260,9 @@ def quality_gate_cols_arrow(docs: DataFrame, stopwords: tuple,
             yield pa.RecordBatch.from_pydict({
                 "doc_id": ids,
                 "text": texts,
-                "n_tokens": pa.array(n_tokens, mask=null_mask),
-                "quality_score_bp": pa.array(
-                    np.where(null_mask, 5000, quality)),
+                "n_tokens": anp.array(n_tokens, valid=ok),
+                "quality_score_bp": anp.array(
+                    np.where(~ok, 5000, quality)),
             })
 
     return proj.mapInArrow(
@@ -305,20 +292,17 @@ def text_quality_stats_arrow(docs: DataFrame, stopwords: tuple,
         import pyarrow.compute as pc
 
         tune_worker()
-        sw = pa.array(list(stopwords))
+        sw = anp.from_list(stopwords, pa.string())
         for batch in batches:
             ids = batch.column(0)
             texts = batch.column(1)
-            null_mask = pc.is_null(texts).to_numpy(zero_copy_only=False) \
-                .astype(bool)
+            ok = anp.valid(texts)
             flat_ne, didx, n = _tokenize_batch(texts)
             n_tokens = np.bincount(didx, minlength=n)
-            tok_len = pc.utf8_length(flat_ne).to_numpy(zero_copy_only=False) \
-                .astype(np.int64)
+            tok_len = anp.values(pc.utf8_length(flat_ne), np.int64)
             total_len = np.bincount(didx, weights=tok_len, minlength=n) \
                 .astype(np.int64)
-            sw_mask = pc.is_in(flat_ne, value_set=sw) \
-                .to_numpy(zero_copy_only=False).astype(bool)
+            sw_mask = anp.values(pc.is_in(flat_ne, value_set=sw))
             sw_count = np.bincount(didx[sw_mask], minlength=n)
             bpe = pc.count_substring_regex(texts, bpe_pattern)
             denom = np.maximum(n_tokens, 1)
@@ -331,17 +315,15 @@ def text_quality_stats_arrow(docs: DataFrame, stopwords: tuple,
             # total_len aggregate over NULL is NULL => avg/sw ratios NULL;
             # quality = 0 + least(NULL*5, 5000) = 5000 (Spark least skips
             # NULLs), matching the codegen expression semantics exactly.
-            nm = pa.array(null_mask)
             yield pa.RecordBatch.from_pydict({
                 "doc_id": ids,
-                "n_tokens": pa.array(n_tokens, mask=null_mask),
+                "n_tokens": anp.array(n_tokens, valid=ok),
                 "bpe_ish_tokens": bpe.cast(pa.int64()),
-                "avg_token_len_bp": pa.array(avg_len_bp, mask=null_mask),
-                "stopword_ratio_bp": pa.array(sw_bp, mask=null_mask),
-                "quality_score_bp": pa.array(
-                    np.where(null_mask, 5000, quality)),
+                "avg_token_len_bp": anp.array(avg_len_bp, valid=ok),
+                "stopword_ratio_bp": anp.array(sw_bp, valid=ok),
+                "quality_score_bp": anp.array(
+                    np.where(~ok, 5000, quality)),
             })
-            del nm
 
     return proj.mapInArrow(
         kernel,

@@ -26,6 +26,13 @@ fixes two per-process costs, each once per worker process:
   again; a changed or new archive still is, so ``addPyFile`` keeps
   working. It is installed only inside a Spark task (never in the
   driver) and only before 3.13, where invalidation became lazy.
+
+A third per-process cost is left to the kernels themselves: importing
+pandas (about 0.5 s and 30 MB per fresh worker), which pyarrow does from
+several of its conversion calls. Kernels convert between Arrow and numpy
+through ``_arrow_np``, whose docstring lists those calls and what to use
+instead; nothing blocks pandas, so a user's pandas UDF in the same worker
+still runs.
 """
 
 from __future__ import annotations

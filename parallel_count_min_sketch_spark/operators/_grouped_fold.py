@@ -24,6 +24,7 @@ import numpy as np
 import pyarrow as pa
 
 from ..sketches.hashing import djb2_batch
+from .. import _arrow_np as anp
 
 
 def items_from_array(col: pa.Array, string_items: bool,
@@ -33,8 +34,9 @@ def items_from_array(col: pa.Array, string_items: bool,
     plain int64 item ids otherwise."""
     if string_items:
         return djb2_batch(col)
-    dtype = np.float64 if as_float else np.int64
-    return col.to_numpy(zero_copy_only=False).astype(dtype, copy=False)
+    if as_float and pa.types.is_decimal(col.type):
+        col = col.cast(pa.float64())
+    return anp.values(col, np.float64 if as_float else np.int64)
 
 
 def iter_group_segments(batch: pa.RecordBatch, values: np.ndarray,
@@ -47,7 +49,7 @@ def iter_group_segments(batch: pa.RecordBatch, values: np.ndarray,
     import pyarrow.compute as pc
 
     enc = pc.dictionary_encode(batch.column(0))
-    codes = enc.indices.to_numpy(zero_copy_only=False)
+    codes = anp.values(enc.indices)
     key_by_code = enc.dictionary.to_pylist()
     order = np.argsort(codes, kind="stable")
     sorted_codes = codes[order]
@@ -107,15 +109,14 @@ class GroupedFoldBase:
         if batch.num_rows == 0:
             return
         if self.weighted:
-            wts = (batch.column(2).to_numpy(zero_copy_only=False)
-                   .astype(np.int64, copy=False))
+            wts = anp.values(batch.column(2), np.int64)
             if (wts < 0).any():
                 raise ValueError(
                     "negative weights are not allowed in sketch builds")
             keep_w = wts > 0
             if not keep_w.all():
                 wts = wts[keep_w]
-                batch = batch.filter(pa.array(keep_w))
+                batch = batch.filter(anp.array(keep_w))
             if batch.num_rows == 0:
                 return
         else:
@@ -125,8 +126,7 @@ class GroupedFoldBase:
         # only UNIQUE group strings cross into Python; rows map to slots
         # through a numpy gather over the dictionary codes
         enc = pc.dictionary_encode(batch.column(0))
-        codes = (enc.indices.to_numpy(zero_copy_only=False)
-                 .astype(np.int64, copy=False))
+        codes = anp.values(enc.indices, np.int64)
         uniq = enc.dictionary.to_pylist()
         slot_of = self._slot
         keys = self._keys

@@ -178,8 +178,7 @@ def _minhash_mins_arrow(df: DataFrame, id_col: str, text: str = "text", *,
     p = MERSENNE_PRIME
 
     def fold(batches):
-        import pyarrow.compute as pc
-
+        from .. import _arrow_np as anp
         from ..memtune import tune_worker
         from ..sketches.hashing import djb2_batch
 
@@ -189,17 +188,10 @@ def _minhash_mins_arrow(df: DataFrame, id_col: str, text: str = "text", *,
             if ids.null_count:
                 raise ValueError(f"fingerprint tables require non-null {id_col}")
             n = batch.num_rows
-            toks = pc.split_pattern(batch.column(1), " ")
-            lens = pc.fill_null(pc.list_value_length(toks), 0) \
-                .to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = pc.list_flatten(toks)  # NULL lists contribute no tokens
-            mask = pc.not_equal(flat, "")
-            flat_ne = pc.filter(flat, mask)
-            mask_np = mask.to_numpy(zero_copy_only=False).astype(bool)
-            # per-doc nonempty-token counts: doc index repeated per token,
-            # then bincount over the kept tokens
-            didx = np.repeat(np.arange(n, dtype=np.int64), lens)
-            counts = np.bincount(didx[mask_np], minlength=n)
+            # NULL texts contribute no tokens; per-doc nonempty-token
+            # counts are a bincount of the kept tokens' doc indices
+            flat_ne, didx = anp.doc_tokens(batch.column(1))
+            counts = np.bincount(didx, minlength=n)
             ends = np.cumsum(counts)
             starts = ends - counts
             sel = counts > 0
@@ -214,10 +206,9 @@ def _minhash_mins_arrow(df: DataFrame, id_col: str, text: str = "text", *,
             # every per-doc min is bit-identical to the per-occurrence
             # form (equality-tested in tests/test_fingerprint_kernels.py).
             enc = flat_ne.dictionary_encode()
-            codes = enc.indices.to_numpy(zero_copy_only=False)
+            codes = anp.values(enc.indices)
             xu = djb2_batch(enc.dictionary) % p  # token ids, already < p
             cols = {"_id": ids}
-            null_mask = ~sel
             for j in range(num_perms):
                 hu = (a_list[j] * xu + b_list[j]) % p
                 res = np.zeros(n, dtype=np.int64)
@@ -225,7 +216,7 @@ def _minhash_mins_arrow(df: DataFrame, id_col: str, text: str = "text", *,
                     # tokens are contiguous per doc (np.repeat order), so
                     # each reduceat segment [st_i, st_{i+1}) is one doc
                     res[sel] = np.minimum.reduceat(hu[codes], st)
-                cols[f"_m{j}"] = pa.array(res, mask=null_mask)
+                cols[f"_m{j}"] = anp.array(res, valid=sel)
             yield pa.RecordBatch.from_pydict(cols)
 
     partials = proj.mapInArrow(fold, out_schema)
@@ -607,6 +598,7 @@ def _simhash_arrow(df: DataFrame, id_col: str, text: str = "text", *,
     def fold(batches):
         import pyarrow.compute as pc
 
+        from .. import _arrow_np as anp
         from ..memtune import tune_worker
         from ..sketches.hashing import djb2_batch
 
@@ -616,24 +608,19 @@ def _simhash_arrow(df: DataFrame, id_col: str, text: str = "text", *,
             if ids.null_count:
                 raise ValueError(f"fingerprint tables require non-null {id_col}")
             enc = pc.dictionary_encode(ids)
-            codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+            codes = anp.values(enc.indices, np.int64)
             uids = enc.dictionary
             g = len(uids)
-            toks = pc.split_pattern(batch.column(1), " ")
-            lens = pc.fill_null(pc.list_value_length(toks), 0) \
-                .to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = pc.list_flatten(toks)
-            mask = pc.not_equal(flat, "")
-            mask_np = mask.to_numpy(zero_copy_only=False).astype(bool)
-            didx = np.repeat(codes, lens)[mask_np]
+            flat_ne, row = anp.doc_tokens(batch.column(1))
+            didx = codes[row]
             # djb2 once per batch-distinct token, gathered per occurrence
             # (same values as hashing each occurrence; the unique() below
             # must still dedupe on tid — the vote domain is the hash
             # VALUE, so two tokens colliding in djb2 count once, exactly
             # as the Catalyst twin and the oracle replay it)
-            enc_t = pc.filter(flat, mask).dictionary_encode()
+            enc_t = flat_ne.dictionary_encode()
             tid = djb2_batch(enc_t.dictionary)[
-                enc_t.indices.to_numpy(zero_copy_only=False)
+                anp.values(enc_t.indices)
             ]  # < LONG_PRIME < 2^33
             # per-doc distinct (doc, token): pack into one int64 key
             # (doc index < 2^29 per batch, tid < 2^33 -> 63 bits)
@@ -650,7 +637,7 @@ def _simhash_arrow(df: DataFrame, id_col: str, text: str = "text", *,
             # n == 0 (no tokens / NULL text) leaves fp 0 — same as the
             # table form's coalesce(_sh, 0)
             yield pa.RecordBatch.from_pydict(
-                {"_id": uids, "_sh": pa.array(fp)})
+                {"_id": uids, "_sh": anp.array(fp)})
 
     partials = proj.mapInArrow(fold, out_schema)
     agg = partials.groupBy("_id").agg(

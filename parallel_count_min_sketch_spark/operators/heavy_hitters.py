@@ -30,6 +30,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
+from .. import _arrow_np as anp
 from ..config import CMSConfig
 from ..memtune import tune_worker
 from ..sketches.hashing import djb2_batch
@@ -53,57 +54,74 @@ _SK_CHUNK = 1 << 17
 _COLLAPSE_ROWS = 1 << 20
 
 
-def candidate_tokens(df, text_col: str, k_per_partition: int, *, sep: str = " "):
-    """Per-partition exact top-k tokens (one small row set per partition)."""
+class _TokenTally:
+    """A partition's exact (token, count) totals: per-batch value_counts
+    are held as Arrow tokens + numpy counts and summed by dictionary code
+    whenever more than _COLLAPSE_ROWS rows are held. Without the collapse a
+    token repeated across batches is held once PER BATCH, so peak memory
+    would be O(sum of per-batch distinct) instead of O(partition-distinct).
+    No per-distinct-token Python objects: at 100x scale a partition's
+    distinct set is millions of entries."""
+
+    def __init__(self):
+        self.tokens: list[pa.Array] = []
+        self.counts: list[np.ndarray] = []
+        self.held = 0
+
+    def add(self, tokens: pa.Array, counts: np.ndarray) -> None:
+        self.tokens.append(tokens)
+        self.counts.append(counts)
+        self.held += len(tokens)
+        if self.held >= _COLLAPSE_ROWS and len(self.tokens) > 1:
+            self._collapse()
+
+    def _collapse(self) -> None:
+        import pyarrow.compute as pc
+
+        enc = pc.dictionary_encode(pa.concat_arrays(self.tokens))
+        sums = np.zeros(len(enc.dictionary), dtype=np.int64)
+        np.add.at(sums, anp.values(enc.indices), np.concatenate(self.counts))
+        self.tokens, self.counts, self.held = [enc.dictionary], [sums], len(sums)
+
+    def top(self, k: int) -> pa.Table | None:
+        """The k most frequent tokens, ties by token descending."""
+        if not self.tokens:
+            return None
+        self._collapse()
+        t = pa.table({"token": self.tokens[0].cast(pa.string()),
+                      "cnt": anp.array(self.counts[0])})
+        return t.sort_by([("cnt", "descending"), ("token", "descending")])[:k]
+
+
+def _batch_token_counts(col: pa.Array, sep: str):
+    """(distinct non-empty tokens, int64 counts) of one text batch, or
+    None when it has no token; tokenized in Arrow C kernels."""
     import pyarrow.compute as pc
 
+    toks = anp.nonempty_tokens(col, sep)
+    if len(toks) == 0:
+        return None
+    vc = pc.value_counts(toks)
+    return vc.field("values"), anp.values(vc.field("counts"), np.int64)
+
+
+def candidate_tokens(df, text_col: str, k_per_partition: int, *, sep: str = " "):
+    """Per-partition exact top-k tokens (one small row set per partition)."""
     proj = df.select(text_col)
+    schema = pa.schema([("token", pa.string()), ("local_count", pa.int64())])
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tune_worker()
-        # Arrow-native throughout: per-batch value_counts stay as Arrow
-        # tables, one vectorized group_by/sum + sort merges them at the
-        # end. No per-distinct-token Python objects — at 100x scale a
-        # partition's distinct set is millions of entries and a Python
-        # dict fold would dominate the partition's wall time.
-        #
-        # Buffered rows are collapsed (group_by/sum) whenever they cross
-        # _COLLAPSE_ROWS: without that, a token repeated across batches is
-        # held once PER BATCH until end-of-partition, so peak memory would
-        # be O(sum of per-batch distinct) instead of O(partition-distinct).
-        parts: list[pa.Table] = []
-        buffered = 0
-
-        def collapse(tables: list[pa.Table]) -> pa.Table:
-            t = pa.concat_tables(tables).group_by("token").aggregate([("cnt", "sum")])
-            return t.rename_columns(["token", "cnt"])
-
+        tally = _TokenTally()
         for batch in batches:
-            col = batch.column(0)
-            if col.null_count:
-                col = col.drop_null()
-            toks = pc.list_flatten(pc.split_pattern(col, sep))
-            if len(toks) == 0:
-                continue
-            vc = pc.value_counts(toks)
-            parts.append(pa.table({"token": vc.field("values"),
-                                   "cnt": vc.field("counts")}))
-            buffered += len(vc)
-            if buffered >= _COLLAPSE_ROWS and len(parts) > 1:
-                parts = [collapse(parts)]
-                buffered = parts[0].num_rows
-        if parts:
-            merged = pa.concat_tables(parts) \
-                .group_by("token").aggregate([("cnt", "sum")])
-            merged = merged.filter(pc.not_equal(merged.column("token"), ""))
-            top = merged.sort_by([("cnt_sum", "descending"),
-                                  ("token", "descending")])[:k_per_partition]
+            tc = _batch_token_counts(batch.column(0), sep)
+            if tc is not None:
+                tally.add(*tc)
+        top = tally.top(k_per_partition)
+        if top is not None:
             yield pa.RecordBatch.from_arrays(
-                [top.column("token").combine_chunks().cast(pa.string()),
-                 top.column("cnt_sum").combine_chunks().cast(pa.int64())],
-                schema=pa.schema([("token", pa.string()),
-                                  ("local_count", pa.int64())]),
-            )
+                [top.column("token").combine_chunks(),
+                 top.column("cnt").combine_chunks()], schema=schema)
 
     return proj.mapInArrow(fold, CAND_SCHEMA)
 
@@ -115,61 +133,35 @@ def fused_sketch_and_candidates(df, text_col: str, cfg: CMSConfig,
     (token, count) tables are computed once and feed both folds — this
     also removes the duplicate tokenize/value_counts work the separate
     build + candidate scans used to do."""
-    import pyarrow.compute as pc
-
     proj = df.select(text_col)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tune_worker()
         sk = cfg.new_sketch()
-        parts: list[pa.Table] = []
-        buffered = 0
-
-        def collapse(tables: list[pa.Table]) -> pa.Table:
-            t = pa.concat_tables(tables).group_by("token").aggregate([("cnt", "sum")])
-            return t.rename_columns(["token", "cnt"])
-
+        tally = _TokenTally()
         for batch in batches:
-            col = batch.column(0)
-            if col.null_count:
-                col = col.drop_null()
-            toks = pc.list_flatten(pc.split_pattern(col, sep))
-            if len(toks):
-                toks = pc.filter(toks, pc.not_equal(toks, ""))
-            if len(toks) == 0:
+            tc = _batch_token_counts(batch.column(0), sep)
+            if tc is None:
                 continue
-            vc = pc.value_counts(toks)
-            vals = vc.field("values")
-            counts = vc.field("counts").to_numpy(zero_copy_only=False) \
-                .astype(np.int64, copy=False)
+            vals, counts = tc
             # sketch fold: djb2 + weighted update once per DISTINCT token
             for lo in range(0, len(vals), _SK_CHUNK):
                 sk.update_batch(djb2_batch(vals.slice(lo, _SK_CHUNK)),
                                 counts[lo:lo + _SK_CHUNK])
-            # candidate fold: same bounded-buffer shape as candidate_tokens
-            parts.append(pa.table({"token": vals, "cnt": vc.field("counts")}))
-            buffered += len(vals)
-            if buffered >= _COLLAPSE_ROWS and len(parts) > 1:
-                parts = [collapse(parts)]
-                buffered = parts[0].num_rows
-        if parts:
-            merged = pa.concat_tables(parts) \
-                .group_by("token").aggregate([("cnt", "sum")])
-            top = merged.sort_by([("cnt_sum", "descending"),
-                                  ("token", "descending")])[:k_per_partition]
+            tally.add(vals, counts)
+        top = tally.top(k_per_partition)
+        if top is not None:
             n_c = top.num_rows
             yield pa.RecordBatch.from_arrays(
-                [pa.array([1] * n_c, pa.int32()),
-                 top.column("token").combine_chunks().cast(pa.string()),
-                 top.column("cnt_sum").combine_chunks().cast(pa.int64()),
-                 pa.array([None] * n_c, pa.binary())],
+                [anp.array(np.ones(n_c, dtype=np.int32)),
+                 top.column("token").combine_chunks(),
+                 top.column("cnt").combine_chunks(),
+                 pa.nulls(n_c, pa.binary())],
                 schema=_FUSED_PA,
             )
-        yield pa.RecordBatch.from_pydict(
-            {"kind": [0], "token": [None], "local_count": [int(sk.total)],
-             "sketch": [sk.to_bytes()]},
-            schema=_FUSED_PA,
-        )
+        yield anp.batch({"kind": [0], "token": [None],
+                         "local_count": [int(sk.total)],
+                         "sketch": [sk.to_bytes()]}, _FUSED_PA)
 
     return proj.mapInArrow(fold, FUSED_SCHEMA)
 

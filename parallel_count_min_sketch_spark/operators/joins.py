@@ -40,6 +40,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
+from .. import _arrow_np as anp
 from ..memtune import tune_worker
 from ..sketches.bloom import BloomFilter
 from ..sketches.hashing import djb2_batch
@@ -66,14 +67,8 @@ def _key_batches(batch: pa.RecordBatch, string_keys: bool) -> tuple[np.ndarray, 
     semantics say a NULL key matches nothing, so they must neither pass
     the filter nor count as matches."""
     col = batch.column(0)
-    valid = np.asarray(col.is_valid())
-    if string_keys:
-        keys = djb2_batch(col.fill_null(""))
-    else:
-        keys = np.asarray(
-            col.fill_null(0).to_numpy(zero_copy_only=False), dtype=np.int64
-        )
-    return keys, valid
+    keys = djb2_batch(col) if string_keys else anp.values(col, np.int64, null=0)
+    return keys, anp.valid(col)
 
 
 def bloom_flag(big: DataFrame, key_col: str, bloom: BloomFilter, *,
@@ -99,7 +94,7 @@ def bloom_flag(big: DataFrame, key_col: str, bloom: BloomFilter, *,
             keys, valid = _key_batches(key_only, string_keys)
             member = bf.contains_batch(keys) & valid
             arrays = [batch.column(i) for i in range(batch.num_columns)]
-            arrays.append(pa.array(member, type=pa.bool_()))
+            arrays.append(anp.array(member))
             yield pa.RecordBatch.from_arrays(arrays, names=batch.schema.names + [flag_col])
 
     return big.mapInArrow(probe, schema)
@@ -122,7 +117,7 @@ def bloom_prefilter(big: DataFrame, key_col: str, bloom: BloomFilter, *,
             if member.all():
                 yield batch
             elif member.any():
-                yield batch.filter(pa.array(member))
+                yield batch.filter(anp.array(member))
 
     return big.mapInArrow(keep, big.schema)
 

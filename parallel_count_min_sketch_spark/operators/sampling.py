@@ -16,8 +16,8 @@ Equivalent in distribution to uniform-without-replacement per group
 Scale shape (the reason this is not just a Window query): a global
 ROW_NUMBER over the corpus shuffles every projected row into a
 per-group sort. Phase 1 here cuts each scan partition down to <= k rows
-per group it actually holds (pandas sort + group head inside
-mapInPandas, memory bounded by the projected partition slice), so the
+per group it actually holds (a numpy lexsort + first k per group inside
+mapInArrow, memory bounded by the projected partition slice), so the
 one window that does run only ever sees <= partitions * groups_present
 * k candidate rows — independent of corpus size. Phase 2 is the exact
 global per-group top-k over that tiny set. Output equals the Window
@@ -53,48 +53,60 @@ def stratified_hash_sample(df: DataFrame, group_col: str, key_col: str,
     h = F.expr(affine_sql(int(a[0]), int(b[0]), f"CAST({key_col} AS BIGINT)"))
     cols = [group_col, key_col] + [c for c in (payload_cols or [])
                                    if c not in (group_col, key_col)]
-    # NULL keys have no defined position in the hash order — and worse,
-    # phase 1 (pandas sort: NaN LAST) and phase 2 (Spark window asc:
-    # NULLS FIRST) would disagree on where a NULL sample_h ranks, so a
-    # NULL-key row could be cut in phase 1 yet rank inside the top k in
-    # phase 2. Contract: NULL keys are excluded from the sample frame.
+    # NULL keys have no defined position in the hash order, and phase 1
+    # and phase 2 (Spark window asc: NULLS FIRST) could disagree on where
+    # a NULL sample_h ranks, so a NULL-key row could be cut in phase 1 yet
+    # rank inside the top k in phase 2. Contract: NULL keys are excluded
+    # from the sample frame (so phase 1 sorts on non-NULL numbers only).
     proj = (df.select(*cols).withColumn("sample_h", h)
             .filter(F.col("sample_h").isNotNull()))
     schema = proj.schema
 
-    def part_topk(pdfs: Iterator) -> Iterator:
-        import pandas as pd
-
+    def part_topk(batches: Iterator) -> Iterator:
         tune_worker()
         acc: list = []
         held = 0
-
-        def cut(frames: list):
-            merged = pd.concat(frames, ignore_index=True)
-            merged = merged.sort_values(["sample_h", key_col], kind="mergesort")
-            # dropna=False: a NULL group is a group — the phase-2 window
-            # and the ROW_NUMBER oracle both keep a NULL partition, so
-            # dropping it here would silently lose those rows
-            return merged.groupby(group_col, sort=False, dropna=False).head(k)
-
-        for pdf in pdfs:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            acc.append(pdf)
-            held += len(pdf)
+            acc.append(batch)
+            held += batch.num_rows
             if held > _COLLAPSE_ROWS and len(acc) > 1:
-                acc = [cut(acc)]
-                held = len(acc[0])
+                acc = [_first_k_per_group(acc, k)]
+                held = acc[0].num_rows
         if acc:
-            yield cut(acc)
+            yield _first_k_per_group(acc, k)
 
-    cand = proj.mapInPandas(part_topk, schema)
+    cand = proj.mapInArrow(part_topk, schema)
     w = Window.partitionBy(group_col).orderBy("sample_h", key_col)
     return (
         cand.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)
         .drop("_rn")
     )
+
+
+def _first_k_per_group(batches: list, k: int):
+    """The first k rows per group of ``batches`` (columns: group, key, ...,
+    sample_h) in (sample_h, key) order, as one RecordBatch: a numpy lexsort
+    over (group code, sample_h, key). A NULL group is a group: the phase-2
+    window and the ROW_NUMBER oracle both keep a NULL partition."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from .. import _arrow_np as anp
+
+    batch = pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
+    enc = pc.dictionary_encode(batch.column(0))
+    group = anp.values(enc.indices, np.int64, null=-1)
+    order = np.lexsort((anp.values(batch.column(1)),
+                        anp.values(batch.column(batch.num_columns - 1)),
+                        group))
+    g = group[order]
+    starts = np.flatnonzero(np.r_[True, g[1:] != g[:-1]])
+    rank = np.arange(len(g)) - np.repeat(starts, np.diff(np.r_[starts, len(g)]))
+    return batch.take(anp.array(order[rank < k]))
 
 
 # weighted priority sampling: priority = floor(w * 2^31 / (h+1)) with

@@ -27,6 +27,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import _arrow_np as anp
 from ..memtune import tune_worker
 from ..sketches.kmv import KMV_HASH_SPACE, KMVSketch
 
@@ -99,6 +100,6 @@ def kmv_pair_estimates(grouped_df: DataFrame, pair_cond=None) -> DataFrame:
                 rows["union_floor"].append(union_floor)
                 rows["jaccard_bp"].append(jac_bp)
             if rows["group_a"]:
-                yield pa.RecordBatch.from_pydict(rows, schema=_PAIR_PA)
+                yield anp.batch(rows, _PAIR_PA)
 
     return pairs.mapInArrow(combine, PAIR_SCHEMA)

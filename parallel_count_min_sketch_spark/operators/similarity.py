@@ -21,9 +21,9 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .. import _arrow_np as anp
 from ..memtune import tune_worker
 from ..sketches.hashing import MERSENNE_PRIME, affine_params
 
@@ -91,12 +91,14 @@ def cosine_topk_pandas(df: DataFrame, id_col: str, vec_col: str, query_ids: list
     bq = spark.sparkContext.broadcast((qids, qmat))
 
     out_schema = "query_id LONG, neighbor_id LONG, cos DOUBLE"
+    out_pa = pa.schema([("query_id", pa.int64()), ("neighbor_id", pa.int64()),
+                        ("cos", pa.float64())])
 
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tune_worker()
         qids_l, qmat_l = bq.value
         for batch in batches:
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+            ids = anp.values(batch.column(0), np.int64)
             la = batch.column(1)
             if len(la) == 0:
                 continue
@@ -104,14 +106,13 @@ def cosine_topk_pandas(df: DataFrame, id_col: str, vec_col: str, query_ids: list
             # one contiguous values buffer -> reshape (no per-row pylists).
             # reshape silently misaligns rows if any vector's length
             # differs (and drops null rows' slots), so validate first.
-            lens = pc.list_value_length(la).to_numpy(zero_copy_only=False)
+            lens = anp.lengths(la)
             if la.null_count or len(np.unique(lens)) != 1 or lens[0] == 0:
                 raise ValueError(
                     f"{vec_col!r} must be non-null fixed-dimension vectors; "
                     f"got null_count={la.null_count}, lengths="
                     f"{np.unique(lens)[:5].tolist()}")
-            mat = (la.flatten().to_numpy(zero_copy_only=False)
-                   .astype(np.float64).reshape(len(la), -1))
+            mat = anp.values(la.flatten()).astype(np.float64).reshape(len(la), -1)
             norms = np.linalg.norm(mat, axis=1, keepdims=True)
             norms[norms == 0] = 1.0
             mat /= norms
@@ -119,18 +120,12 @@ def cosine_topk_pandas(df: DataFrame, id_col: str, vec_col: str, query_ids: list
             # local top-k per query within the batch
             kk = min(k + 1, sims.shape[1])
             idx = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            rows_q, rows_n, rows_c = [], [], []
-            for qi in range(len(qids_l)):
-                for j in idx[qi]:
-                    if ids[j] != qids_l[qi]:
-                        rows_q.append(int(qids_l[qi]))
-                        rows_n.append(int(ids[j]))
-                        rows_c.append(float(sims[qi, j]))
-            yield pa.RecordBatch.from_pydict(
-                {"query_id": rows_q, "neighbor_id": rows_n, "cos": rows_c},
-                schema=pa.schema([("query_id", pa.int64()), ("neighbor_id", pa.int64()),
-                                  ("cos", pa.float64())]),
-            )
+            qi = np.repeat(np.arange(len(qids_l)), kk)
+            nj = idx.ravel()
+            keep = ids[nj] != qids_l[qi]
+            yield anp.batch({"query_id": qids_l[qi][keep],
+                             "neighbor_id": ids[nj][keep],
+                             "cos": sims[qi, nj][keep]}, out_pa)
 
     local = df.select(id_col, vec_col).mapInArrow(scan, out_schema)
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))

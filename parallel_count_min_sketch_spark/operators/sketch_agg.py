@@ -24,6 +24,7 @@ from ..memtune import tune_worker
 from ..sketches.cms import CountMinSketch
 from ..sketches.hashing import djb2_batch
 from ..sketches.hll import HyperLogLog
+from .. import _arrow_np as anp
 from ._grouped_fold import (GroupedFoldBase, items_from_array,
                             iter_group_segments, salted_pre_shuffle)
 
@@ -44,14 +45,9 @@ def _task_partition_id() -> int:
 
 def _partial_batch(rows: int, sk) -> pa.RecordBatch:
     """The one partial row of this task: (partition_id, rows_seen, sketch)."""
-    return pa.RecordBatch.from_pydict(
-        {
-            "partition_id": [_task_partition_id()],
-            "rows_seen": [rows],
-            "sketch": [sk.to_bytes()],
-        },
-        schema=_PARTIAL_PA,
-    )
+    return anp.batch({"partition_id": [_task_partition_id()],
+                      "rows_seen": [rows], "sketch": [sk.to_bytes()]},
+                     _PARTIAL_PA)
 
 
 def _weighted_update(sk, values: np.ndarray, weights: np.ndarray | None) -> int:
@@ -148,11 +144,7 @@ def fold_batches(sk, batches: Iterator[pa.RecordBatch], *, weighted: bool,
                 keep = pc.and_(keep, batch.column(1).is_valid())
             batch = batch.filter(keep)
             c = batch.column(0)
-        w_all = (
-            batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            if weighted
-            else None
-        )
+        w_all = anp.values(batch.column(1), np.int64) if weighted else None
         for lo in range(0, len(c), _CHUNK):
             values = items_from_array(c.slice(lo, _CHUNK), string_items, as_float)
             w = w_all[lo:lo + _CHUNK] if w_all is not None else None
@@ -187,9 +179,9 @@ FANIN = 16  # the driver folds at most this many partials, a merge task about as
 _BLOB_PA = pa.schema([("sketch", pa.binary())])
 
 
-def fold_blobs(blobs, from_bytes: Callable):
-    """Merge serialized sketches in iteration order; None when empty."""
-    out = None
+def fold_blobs(blobs, from_bytes: Callable, out=None):
+    """Merge serialized sketches in iteration order into ``out`` (a sketch,
+    or None to start from the first blob); None when both are empty."""
     for blob in blobs:
         sk = from_bytes(bytes(blob))
         out = sk if out is None else out.merge(sk)
@@ -242,8 +234,7 @@ def merge_sketch_partials(partials_df, from_bytes: Callable):
         out = fold_blobs((b for batch in batches
                           for b in batch.column(0).to_pylist()), from_bytes)
         if out is not None:
-            yield pa.RecordBatch.from_pydict({"sketch": [out.to_bytes()]},
-                                             schema=_BLOB_PA)
+            yield anp.batch({"sketch": [out.to_bytes()]}, _BLOB_PA)
 
     while n > FANIN:
         n = math.ceil(n / FANIN)
@@ -283,17 +274,14 @@ def text_token_partials(df, text_col: str, make_sketch: Callable, *,
             if col.null_count:
                 col = col.drop_null()
             # tokenize + flatten + filter entirely in Arrow C kernels
-            tokens = pc.list_flatten(pc.split_pattern(col, sep))
-            if len(tokens):
-                tokens = pc.filter(tokens, pc.not_equal(tokens, ""))
+            tokens = anp.nonempty_tokens(col, sep)
             if len(tokens) == 0:
                 continue
             # (distinct token, count) in Arrow C before hashing: djb2 and
             # the counter update run once per DISTINCT token per batch
             vc = pc.value_counts(tokens)
             vals = vc.field("values")
-            counts = vc.field("counts").to_numpy(zero_copy_only=False) \
-                .astype(np.int64, copy=False)
+            counts = anp.values(vc.field("counts"), np.int64)
             for lo in range(0, len(vals), _CHUNK):
                 chunk = vals.slice(lo, _CHUNK)
                 w = counts[lo:lo + _CHUNK]
@@ -336,10 +324,8 @@ def probe_cms(df, sk, item_col: str, est_col: str = "cms_estimate"):
             if batch.num_rows == 0:
                 continue
             col = batch.column(pos)
-            nulls = col.is_null().to_numpy(zero_copy_only=False) \
-                if col.null_count else None
-            est = pa.array(q.point_query(djb2_batch(col)), pa.int64(),
-                           mask=nulls)
+            est = anp.array(q.point_query(djb2_batch(col)), pa.int64(),
+                            valid=anp.valid(col))
             yield pa.RecordBatch.from_arrays(batch.columns + [est],
                                              names=names)
 
@@ -362,10 +348,8 @@ _GROUPED_PA = pa.schema(
 def _grouped_batch(groups: list, rows: list, blobs: list) -> pa.RecordBatch:
     """One RecordBatch of (group, rows_seen, sketch) partial rows — ONE
     copy of the grouped emit contract for every grouped builder."""
-    return pa.RecordBatch.from_pydict(
-        {"group": groups, "rows_seen": rows, "sketch": blobs},
-        schema=_GROUPED_PA,
-    )
+    return anp.batch({"group": groups, "rows_seen": rows, "sketch": blobs},
+                     _GROUPED_PA)
 
 
 def _emit_grouped_partials(sketches: dict, counts: dict):
@@ -550,8 +534,7 @@ def sketch_grouped_partials(df, group_col: str, col: str, make_sketch: Callable,
             if batch.num_rows == 0:
                 continue
             values = items_from_array(batch.column(1), string_items, as_float)
-            w_all = (batch.column(2).to_numpy(zero_copy_only=False)
-                     .astype(np.int64, copy=False) if weight_col else None)
+            w_all = anp.values(batch.column(2), np.int64) if weight_col else None
             for g, seg, wseg in iter_group_segments(batch, values, w_all):
                 sk = sketches.get(g)
                 if sk is None:
@@ -564,24 +547,61 @@ def sketch_grouped_partials(df, group_col: str, col: str, make_sketch: Callable,
     return proj.mapInArrow(fold, GROUPED_SCHEMA)
 
 
+_MERGE_EMIT_BYTES = 1 << 26  # blob bytes per output batch, far below int32 offsets
+
+
 def merge_grouped_partials(partials, from_bytes: Callable):
     """Phase 2 of every grouped build: shuffle only the small
-    (partition, group) partial rows and merge per group."""
+    (partition, group) partial rows by group, sort each partition by
+    (group, sketch) and fold every contiguous group segment with
+    ``fold_blobs`` in one ``mapInArrow`` pass. The open segment carries
+    across Arrow batches. The fixed in-group order (by blob bytes) makes
+    order-sensitive merges (KLL, t-digest) reproducible."""
 
-    def merge_group(pdf):
-        import pandas as pd
+    def merge(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import pyarrow.compute as pc
 
         tune_worker()
-        out = fold_blobs(pdf["sketch"], from_bytes)
-        return pd.DataFrame(
-            {
-                "group": [pdf["group"].iloc[0]],
-                "rows_seen": [int(pdf["rows_seen"].sum())],
-                "sketch": [out.to_bytes()],
-            }
-        )
+        key, rows, sk = None, 0, None  # the open group segment
+        out: dict[str, list] = {"group": [], "rows_seen": [], "sketch": []}
+        held = 0
 
-    return partials.groupBy("group").applyInPandas(merge_group, GROUPED_SCHEMA)
+        def close() -> int:
+            out["group"].append(key)
+            out["rows_seen"].append(rows)
+            out["sketch"].append(sk.to_bytes())
+            return len(out["sketch"][-1])
+
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            enc = pc.dictionary_encode(batch.column(0))
+            codes = anp.values(enc.indices, np.int64, null=-1)
+            groups = enc.dictionary.to_pylist() + [None]  # code -1: NULL
+            starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])
+            bounds = np.append(starts, len(codes)).tolist()
+            seg_rows = np.add.reduceat(
+                anp.values(batch.column(1), np.int64, null=0), starts).tolist()
+            blobs = batch.column(2).to_pylist()
+            for i, lo in enumerate(bounds[:-1]):
+                g = groups[codes[lo]]
+                if sk is not None and g != key:
+                    held += close()
+                    rows, sk = 0, None
+                key, rows = g, rows + seg_rows[i]
+                sk = fold_blobs(blobs[lo:bounds[i + 1]], from_bytes, sk)
+            if held >= _MERGE_EMIT_BYTES:
+                yield anp.batch(out, _GROUPED_PA)
+                out = {n: [] for n in out}
+                held = 0
+        if sk is not None:
+            close()
+        if out["group"]:
+            yield anp.batch(out, _GROUPED_PA)
+
+    return (partials.repartition("group")
+            .sortWithinPartitions("group", "sketch")
+            .mapInArrow(merge, GROUPED_SCHEMA))
 
 
 def sketch_grouped(df, group_col: str, col: str, make_sketch: Callable,
@@ -644,16 +664,12 @@ def text_token_grouped_partials(df, group_col: str, text_col: str,
             text = batch.column(1)
             row_idx = np.arange(batch.num_rows, dtype=np.int64)
             for g, seg_idx, _w in iter_group_segments(batch, row_idx):
-                texts = pc.take(text, pa.array(seg_idx, type=pa.int64()))
-                tokens = pc.list_flatten(pc.split_pattern(texts, sep))
-                if len(tokens):
-                    tokens = pc.filter(tokens, pc.not_equal(tokens, ""))
+                tokens = anp.nonempty_tokens(pc.take(text, anp.array(seg_idx)), sep)
                 if len(tokens) == 0:
                     continue
                 vc = pc.value_counts(tokens)
                 vals = vc.field("values")
-                w = vc.field("counts").to_numpy(zero_copy_only=False) \
-                    .astype(np.int64, copy=False)
+                w = anp.values(vc.field("counts"), np.int64)
                 sk = sketches.get(g)
                 if sk is None:
                     sk = make_sketch()
@@ -698,9 +714,7 @@ def finalize_grouped(grouped_df, finalize_fn, out_schema: str,
             for row in batch.to_pylist():
                 rows.extend(finalize_fn(row))
             if rows:
-                yield pa.RecordBatch.from_pydict(
-                    {n: [r[i] for r in rows] for i, n in enumerate(names)},
-                    schema=out_pa_schema,
-                )
+                yield anp.batch({n: [r[i] for r in rows]
+                                 for i, n in enumerate(names)}, out_pa_schema)
 
     return grouped_df.mapInArrow(fin, out_schema)

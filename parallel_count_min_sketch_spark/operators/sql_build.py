@@ -27,6 +27,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
+from .. import _arrow_np as anp
 from ..config import CMSConfig, djb2_sql_spark
 from ..memtune import tune_worker
 from ..sketches.cms import CountMinSketch
@@ -64,7 +65,7 @@ def _string_cells(df: DataFrame, cfg: CMSConfig, weighted: bool) -> DataFrame:
         fold_batches(sk, batches, weighted=weighted, string_items=True)
         j, k = np.nonzero(sk.table)
         yield pa.RecordBatch.from_arrays(
-            [pa.array(j.astype(np.int32)), pa.array(k), pa.array(sk.table[j, k])],
+            [anp.array(j, pa.int32()), anp.array(k), anp.array(sk.table[j, k])],
             schema=_CELLS_PA)
 
     return df.mapInArrow(cells, CELLS_SCHEMA)

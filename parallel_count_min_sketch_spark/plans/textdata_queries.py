@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .. import _arrow_np as anp
 from ..functions import textstats as ts
 from ..memtune import tune_worker
 from ..operators import dedup as dd
@@ -1042,7 +1043,7 @@ def q_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     def kernel(batches):
         tune_worker()
         for batch in batches:
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+            ids = anp.values(batch.column(0), np.int64)
             cols = {n: [] for n in pa_schema.names}
             for did in ids.tolist():
                 w, h = 4 + did % IMG_WMOD, 4 + did % IMG_HMOD
@@ -1061,7 +1062,7 @@ def q_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cols["px_sum"].append(int(dec.sum()))
                 cols["chan0_sum"].append(int(dec[:, :, 0].sum()))
                 cols["resized_sum"].append(int(rs.sum()))
-            yield pa.RecordBatch.from_pydict(cols, schema=pa_schema)
+            yield anp.batch(cols, pa_schema)
 
     return docs.mapInArrow(kernel, out_schema).orderBy("doc_id")
 
@@ -1132,30 +1133,29 @@ def q_script_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         import pyarrow.compute as pc
 
         tune_worker()
+        empty = anp.from_list([""], pa.string())[0]
         for batch in batches:
             ids = batch.column(0)
-            ids_np = ids.to_numpy(zero_copy_only=False)
+            ids_np = anp.values(ids)
             suffix = np.where(
                 ids_np % 3 == 0, " привет мир",
                 np.where(ids_np % 4 == 1, " 你好世界", ""))
             t = pc.binary_join_element_wise(
-                batch.column(1), pa.array(suffix), "")
-            lat = pc.count_substring_regex(t, "[a-zA-Z]") \
-                .to_numpy(zero_copy_only=False).astype(np.int64)
-            cyr = pc.count_substring_regex(t, "[а-яА-Я]") \
-                .to_numpy(zero_copy_only=False).astype(np.int64)
-            cjk = pc.count_substring_regex(t, "[一-鿿]") \
-                .to_numpy(zero_copy_only=False).astype(np.int64)
+                batch.column(1), anp.from_list(suffix.tolist(), pa.string()),
+                empty)
+            lat, cyr, cjk = (
+                anp.values(pc.count_substring_regex(t, pat), np.int64)
+                for pat in ("[a-zA-Z]", "[а-яА-Я]", "[一-鿿]"))
             dom = np.where(
                 (cyr > 0) & (cyr >= cjk), "cyrillic",
                 np.where(cjk > 0, "cjk",
                          np.where(lat > 0, "latin", "none")))
             yield pa.RecordBatch.from_pydict({
                 "doc_id": ids,
-                "latin_chars": pa.array(lat),
-                "cyrillic_chars": pa.array(cyr),
-                "cjk_chars": pa.array(cjk),
-                "dominant_script": pa.array(dom),
+                "latin_chars": anp.array(lat),
+                "cyrillic_chars": anp.array(cyr),
+                "cjk_chars": anp.array(cjk),
+                "dominant_script": anp.from_list(dom.tolist(), pa.string()),
             })
 
     return docs.mapInArrow(
@@ -1371,7 +1371,7 @@ def q_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     def kernel(batches):
         tune_worker()
         for batch in batches:
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+            ids = anp.values(batch.column(0), np.int64)
             cols = {n: [] for n in pa_schema.names}
             for did in ids.tolist():
                 frames = 200 + did % AUD_FMOD
@@ -1389,7 +1389,7 @@ def q_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cols["blob_bytes"].append(len(blob))
                 cols["sum_abs"].append(int(np.abs(dec.astype(np.int64)).sum()))
                 cols["peak"].append(int(dec.max()))
-            yield pa.RecordBatch.from_pydict(cols, schema=pa_schema)
+            yield anp.batch(cols, pa_schema)
 
     return docs.mapInArrow(kernel, out_schema).orderBy("doc_id")
 

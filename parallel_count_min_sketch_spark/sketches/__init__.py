@@ -5,7 +5,6 @@ from .hashing import LONG_PRIME, MERSENNE_PRIME, affine_hash, affine_params, djb
 from .hll import HyperLogLog
 from .kll import KLLSketch
 from .kmv import KMVSketch
-from .reference_cms import SequentialCMS
 from .tdigest import TDigest
 
 __all__ = [
@@ -15,7 +14,6 @@ __all__ = [
     "HyperLogLog",
     "KLLSketch",
     "KMVSketch",
-    "SequentialCMS",
     "TDigest",
     "bloom_dims",
     "dims",

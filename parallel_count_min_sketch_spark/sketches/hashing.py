@@ -93,20 +93,23 @@ def djb2_batch(tokens) -> np.ndarray:
     """
     import pyarrow as pa
 
+    from .._arrow_np import from_list, valid
+
     if isinstance(tokens, pa.ChunkedArray):
         arr = tokens.combine_chunks()
     elif isinstance(tokens, pa.Array):
         arr = tokens
     else:
-        arr = pa.array(tokens, type=pa.string())
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
+        arr = from_list(tokens, pa.string())
     if arr.type == pa.large_string():
-        import pyarrow.compute as pc
+        arr = arr.cast(pa.string())
+    out = _djb2_offsets(arr)
+    if arr.null_count:  # a NULL hashes as the empty string
+        out[~valid(arr)] = DJB2_INIT % LONG_PRIME
+    return out
 
-        arr = pc.cast(arr, pa.string())
-    if arr.null_count:
-        arr = arr.fill_null("")
+
+def _djb2_offsets(arr) -> np.ndarray:
     buffers = arr.buffers()
     raw_offsets = np.frombuffer(buffers[1], dtype=np.int32, count=arr.offset + len(arr) + 1)
     raw_offsets = raw_offsets[arr.offset:].astype(np.int64)

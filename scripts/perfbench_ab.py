@@ -11,7 +11,8 @@ first, so running both sides from one tree would time that tree twice.
 Pair order: pair k (seed A+k) runs the parent first when k is even and the
 change first when k is odd; the workloads of ``BENCHMARK.json`` alternate
 within each k. After the untraced pairs, one traced pair per workload runs
-on seed B+1 (``--trace 1``) for the per-layer metrics.
+on seed B+1 (``--trace 1``) for the per-layer metrics; ``--traced-extra W``
+adds one traced pair of a workload outside the manifest (``host_groups``).
 
 The output keeps every raw run, and a ``summary`` per workload: quartiles of
 each end-to-end metric on both sides, pairs where the change is better, the
@@ -196,6 +197,10 @@ def main(argv=None) -> int:
     ap.add_argument("--seeds", type=parse_seeds, required=True,
                     help="inclusive range A-B; seed B+1 runs the traced pair")
     ap.add_argument("--out", required=True)
+    ap.add_argument("--traced-extra", action="append", default=[],
+                    metavar="WORKLOAD",
+                    help="one more traced pair of a workload outside "
+                         "BENCHMARK.json (repeatable)")
     args = ap.parse_args(argv)
 
     with open(os.path.join(ROOT, "BENCHMARK.json"), encoding="utf-8") as fh:
@@ -220,7 +225,9 @@ def main(argv=None) -> int:
                     "even, the change first when k is odd; the workloads "
                     "alternate within each k"),
             "trace": (f"the same with --trace 1 on seed {args.seeds[-1] + 1}, "
-                      "once per side and workload"),
+                      "once per side and workload"
+                      + "".join(f", and for {w} (outside the manifest)"
+                                for w in args.traced_extra)),
             "no_regression_rule": NO_REGRESSION_RULE,
             "gain_rule": GAIN_RULE,
         },
@@ -237,8 +244,8 @@ def main(argv=None) -> int:
             fh.write("\n")
 
     plan = [(*key, 0) for key in pair_order(args.seeds, workloads)]
-    plan += [(args.seeds[-1] + 1, wl, side, 1) for wl in workloads
-             for side in SIDES]
+    plan += [(args.seeds[-1] + 1, wl, side, 1)
+             for wl in workloads + args.traced_extra for side in SIDES]
     try:
         for i, (seed, wl, side, trace) in enumerate(plan, 1):
             run = run_one(checkouts[side], side, wl, seed, seconds, trace)

@@ -4,8 +4,8 @@ reference's sequential implementation (src/sequential/cms_linear.c).
 Deliberately scalar (one item at a time, like the reference's fgets loop,
 src/sequential/cms_linear.c:26-42) and sharing ONLY the seed with the numpy
 kernel. Same seed => identical hash params => byte-identical counter
-matrices. Used by tests to prove the vectorized kernel computes exactly
-what the sequential reference computes.
+matrices. The oracle of ``test_cms_kernel.py``: it proves the vectorized
+kernel computes exactly what the sequential reference computes.
 """
 
 from __future__ import annotations
@@ -14,7 +14,8 @@ import math
 
 import numpy as np
 
-from .hashing import DJB2_INIT, LONG_PRIME, MERSENNE_PRIME, affine_params
+from parallel_count_min_sketch_spark.sketches.hashing import (
+    DJB2_INIT, LONG_PRIME, MERSENNE_PRIME, affine_params)
 
 
 class SequentialCMS:

@@ -9,12 +9,12 @@ from parallel_count_min_sketch_spark.config import CMSConfig
 from parallel_count_min_sketch_spark.operators.sketch_agg import fold_blobs
 from parallel_count_min_sketch_spark.sketches import (
     CountMinSketch,
-    SequentialCMS,
     affine_params,
     djb2_batch,
     djb2_py,
 )
 from parallel_count_min_sketch_spark.sketches.cms import dims
+from reference_cms import SequentialCMS
 
 
 def mixture_items(n: int, seed: int = 12345) -> np.ndarray:

@@ -190,7 +190,9 @@ def test_bucket_caps_avoid_window_exchange(spark, pages_path):
 def test_grouped_finalize_runs_in_executors(spark):
     """The grouped-sketch contract queries must finalize via a distributed
     MapInArrow stage over the grouped blobs — not a driver collect+decode
-    loop (whose plan would be a LocalTableScan of driver-built rows)."""
+    loop (whose plan would be a LocalTableScan of driver-built rows) — and
+    merge the per-group partials in a sorted MapInArrow fold, not one
+    pandas call per group (FlatMapGroupsInPandas)."""
     from parallel_count_min_sketch_spark.plans.sketch_queries import (
         q_cms_grouped_by_lang,
         q_hll_grouped_by_lang,
@@ -201,7 +203,7 @@ def test_grouped_finalize_runs_in_executors(spark):
         df = q(spark, "/root/testdata/sf0.001")
         plan = _plan(df)
         assert "MapInArrow" in plan, plan
-        assert "FlatMapGroupsInPandas" in plan, plan
+        assert "FlatMapGroupsInPandas" not in plan, plan
         assert not plan.strip().startswith("LocalTableScan"), plan
 
 

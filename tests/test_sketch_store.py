@@ -6,9 +6,8 @@ persisted-sketch layout.
   another kernel, config, key layout or checkpoint raises in the constructor,
   before any compute, naming both sides. Opening alone creates nothing,
   so a reader that opens a new path first does not bind it.
-- A source scan: only ``operators/sketch_store.py`` names ``meta.json``,
-  and only it and ``streaming/stream_near_dedup.py`` (LSH band rows and
-  kept documents, not sketches) use ``partitionOverwriteMode``.
+- A source scan: only ``operators/sketch_store.py`` names ``meta.json``
+  or uses ``partitionOverwriteMode``.
 """
 
 import ast
@@ -128,4 +127,4 @@ def _modules_using(needle):
 def test_one_module_knows_the_store_layout():
     assert _modules_using("meta.json") == {"operators/sketch_store.py"}
     assert _modules_using("partitionOverwriteMode") == {
-        "operators/sketch_store.py", "streaming/stream_near_dedup.py"}
+        "operators/sketch_store.py"}

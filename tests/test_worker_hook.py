@@ -2,6 +2,10 @@
 
 - Every function the package hands to Spark as Python task code calls it
   first (an AST check over the package source).
+- No package code hands Spark a pandas kernel (``applyInPandas``,
+  ``mapInPandas``, ``applyInPandasWithState``, ``pandas_udf``): workers
+  stay pandas-free (an AST check; ``test_pandas_free_workers.py`` checks
+  the running workers).
 - Its zip-directory guard skips the re-read of an unchanged archive, still
   re-reads a changed one, and is installed only inside a Spark task on
   Python < 3.13. These run in a subprocess, so the patched ``zipimport``
@@ -115,7 +119,7 @@ def _missing_hook(pkg_dir: Path):
 
 def test_every_python_kernel_calls_the_worker_hook_first():
     found, missing = _missing_hook(PKG_DIR)
-    assert found >= 27, found  # the scan must keep seeing the kernels
+    assert found >= 26, found  # the scan must keep seeing the kernels
     assert not missing, "\n".join(missing)
 
 
@@ -148,6 +152,40 @@ def test_hook_check_sees_inline_and_nested_kernels(tmp_path):
     assert found == 4
     assert sorted(m.split(" ")[0] for m in missing) == [
         "m.py:16", "m.py:19", "m.py:22"], missing
+
+
+PANDAS_KERNEL_APIS = {"applyInPandas", "mapInPandas",
+                      "applyInPandasWithState", "pandas_udf"}
+
+
+def _pandas_kernel_uses(pkg_dir: Path):
+    found = []
+    for path in sorted(pkg_dir.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.ImportFrom):
+                names = [a.name for a in node.names]
+            else:
+                names = [_name(node)]
+            for name in names:
+                if name in PANDAS_KERNEL_APIS:
+                    found.append(f"{path.relative_to(pkg_dir)}:{node.lineno} {name}")
+    return found
+
+
+def test_no_pandas_kernel_in_the_package():
+    assert _pandas_kernel_uses(PKG_DIR) == []
+
+
+def test_pandas_kernel_check_sees_calls_and_imports(tmp_path):
+    (tmp_path / "m.py").write_text(textwrap.dedent('''
+        from pyspark.sql.functions import pandas_udf
+
+        def f(df, fn):
+            a = df.groupBy("g").applyInPandas(fn, df.schema)
+            return a.mapInPandas(fn, df.schema), df.mapInArrow(fn, df.schema)
+    '''))
+    assert sorted(_pandas_kernel_uses(tmp_path)) == [
+        "m.py:2 pandas_udf", "m.py:5 applyInPandas", "m.py:6 mapInPandas"]
 
 
 # --- the zip-directory guard, each case in a fresh interpreter -------------
