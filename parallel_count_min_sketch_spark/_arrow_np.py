@@ -21,6 +21,8 @@ Use instead:
 
 - ``values(arr)``: a numpy view of a fixed-width or boolean column;
 - ``valid(arr)``: its validity as a numpy bool mask;
+- ``offsets(arr)``: the offsets of a string, binary or list column, a
+  numpy view;
 - ``lengths(arr)``: per-row lengths of a string, binary or list column,
   read from its offsets;
 - ``array(np_values, type, valid=...)``: ``pa.Array.from_buffers`` over a
@@ -28,6 +30,16 @@ Use instead:
 - ``from_list(py_values, type)``: a Python list, ``None`` for NULL;
 - ``RecordBatch.from_arrays(arrays, schema=...)`` for batches, and
   ``dictionary_encode`` + numpy for grouped sums.
+
+``token_counts(texts, sep)`` is the one tokenizer of the token-count
+kernels: it yields ``(distinct tokens, int64 counts)`` per slice of a text
+column, cut at row boundaries by text bytes so a worker's transient
+memory follows string bytes, not Arrow batch rows. The first slice holds
+``_SLICE_BYTES`` (1 MB) of text; the next is ``_SLICE_GROWTH`` (4) times
+larger while the current slice's distinct tokens are under a quarter of
+its tokens (repetitive text collapses to few rows, and fewer, larger
+slices save per-slice hashing and update work), and goes back to 1 MB
+otherwise.
 
 Compute kernels whose arguments are all Arrow arrays (``split_pattern``,
 ``dictionary_encode``, ``value_counts``, ``is_in``, ``filter``/``take``
@@ -41,6 +53,11 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+
+# token_counts' slice bounds: the first slice's text bytes, and the growth
+# factor while a slice's distinct tokens are under 1/_SLICE_GROWTH of them
+_SLICE_BYTES = 1 << 20
+_SLICE_GROWTH = 4
 
 
 def _np_dtype(t: pa.DataType) -> np.dtype:
@@ -88,19 +105,26 @@ def values(arr: pa.Array, dtype=None, *, null=None) -> np.ndarray:
     return out
 
 
-def lengths(arr: pa.Array) -> np.ndarray:
-    """Per-row int64 lengths of a string, binary or list column (bytes for
-    strings, elements for lists), 0 for NULL rows."""
+def offsets(arr: pa.Array) -> np.ndarray:
+    """The ``len(arr) + 1`` offsets of a string, binary or list column: a
+    read-only int32 view (int64 for the ``large_`` types) where row i
+    spans ``[out[i], out[i + 1])`` of its data buffer (bytes for strings,
+    child elements for lists)."""
     large = (pa.types.is_large_string(arr.type)
              or pa.types.is_large_binary(arr.type)
              or pa.types.is_large_list(arr.type))
+    dtype = np.int64 if large else np.int32
     n, off = len(arr), arr.offset
     if n == 0:
-        return np.zeros(0, dtype=np.int64)
-    offsets = np.frombuffer(arr.buffers()[1],
-                            dtype=np.int64 if large else np.int32,
-                            count=off + n + 1)[off:]
-    out = np.diff(offsets).astype(np.int64, copy=False)
+        return np.zeros(1, dtype=dtype)
+    return np.frombuffer(arr.buffers()[1], dtype=dtype,
+                         count=off + n + 1)[off:]
+
+
+def lengths(arr: pa.Array) -> np.ndarray:
+    """Per-row int64 lengths of a string, binary or list column (bytes for
+    strings, elements for lists), 0 for NULL rows."""
+    out = np.diff(offsets(arr)).astype(np.int64, copy=False)
     if arr.null_count:
         out = np.where(valid(arr), out, 0)
     return out
@@ -171,14 +195,44 @@ def batch(columns: dict, schema: pa.Schema) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
-def nonempty_tokens(texts: pa.Array, sep: str = " ") -> pa.Array:
-    """The non-empty pieces of ``split(text, sep)`` over a string column,
-    flattened in row order; a NULL text has none."""
+def token_counts(texts: pa.Array, sep: str = " "):
+    """Yield ``(distinct tokens, int64 counts)`` for successive row slices
+    of a string column: the non-empty pieces of ``split(text, sep)``,
+    collapsed with ``value_counts``. NULL texts have no tokens, and a slice
+    with none yields nothing. Summed over the slices, the counts are the
+    column's token counts.
+
+    Slices are cut at row boundaries by text bytes, not rows, so the
+    tokenizer's and ``value_counts``' transient memory follows string
+    bytes. The first slice holds ``_SLICE_BYTES`` of text (or the one row
+    that is longer). The next is ``_SLICE_GROWTH`` times larger while the
+    current slice's distinct tokens are under ``1 / _SLICE_GROWTH`` of its
+    tokens, since repetitive text collapses to few distinct rows and
+    larger slices then save per-slice hashing and update work; otherwise
+    it goes back to ``_SLICE_BYTES``.
+    """
     import pyarrow.compute as pc
 
-    toks = pc.list_flatten(pc.split_pattern(texts, sep))
-    keep = lengths(toks) > 0
-    return toks if keep.all() else toks.filter(array(keep))
+    offs = offsets(texts)
+    budget, lo, n = _SLICE_BYTES, 0, len(texts)
+    while lo < n:
+        end = min(int(offs[lo]) + budget, int(offs[-1]))
+        hi = max(int(np.searchsorted(offs, end, "right")) - 1, lo + 1)
+        toks = pc.list_flatten(pc.split_pattern(texts.slice(lo, hi - lo), sep))
+        lo = hi
+        tok_offs = offsets(toks)
+        keep = tok_offs[1:] != tok_offs[:-1]  # non-empty: 1 byte per token
+        if not keep.all():
+            toks = toks.filter(array(keep))
+        if len(toks) == 0:
+            budget = _SLICE_BYTES
+            continue
+        vc = pc.value_counts(toks)
+        vals, counts = vc.field("values"), values(vc.field("counts"), np.int64)
+        repetitive = len(vals) * _SLICE_GROWTH < len(toks)
+        del toks, vc  # free the tokens before the caller folds this slice
+        yield vals, counts
+        budget = budget * _SLICE_GROWTH if repetitive else _SLICE_BYTES
 
 
 def doc_tokens(texts: pa.Array, sep: str = " "):

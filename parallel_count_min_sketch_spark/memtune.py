@@ -10,9 +10,20 @@ fixes two per-process costs, each once per worker process:
   temporary above the mmap threshold re-faults its pages — an effective
   100x slowdown on vectorized kernels. The hook raises the malloc
   mmap/trim thresholds so big blocks come from (and return to) the
-  reusable heap; a safe no-op where mallopt is unavailable. The numpy
-  kernels additionally process input in bounded chunks so the one-time
-  fault cost per worker stays small.
+  reusable heap; a safe no-op where mallopt is unavailable. The kernels
+  additionally bound their transient memory by string bytes, not by
+  Arrow batch rows (Spark caps a batch at 10,000 rows, whatever their
+  size), so the heap a worker faults in once stays small:
+
+  - ``sketches/hashing._BLOCK_BYTES`` (64 KB): ``djb2_batch`` holds its
+    per-byte int64 temporaries for at most this much UTF-8 at a time, for
+    every caller (item folds, ``probe_cms``, the grouped folds, ``joins``,
+    ``dedup``, the ``sql_build`` cells kernel);
+  - ``_arrow_np._SLICE_BYTES`` (1 MB, growing 4x on repetitive text):
+    ``_arrow_np.token_counts`` tokenizes and ``value_counts`` a text
+    column in slices of this much text, for the token-count kernels
+    (``sketch_agg.text_token_partials``, ``text_token_grouped_partials``,
+    ``heavy_hitters.candidate_tokens``, ``fused_sketch_and_candidates``).
 - **Zip-directory re-reads.** Workers import PySpark from
   ``$SPARK_HOME/python/lib/pyspark.zip``. Before every task, a reused
   worker calls ``importlib.invalidate_caches()``

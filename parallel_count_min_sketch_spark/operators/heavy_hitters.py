@@ -33,8 +33,8 @@ from pyspark.sql import DataFrame, functions as F
 from .. import _arrow_np as anp
 from ..config import CMSConfig
 from ..memtune import tune_worker
-from ..sketches.hashing import djb2_batch
 from .agg import merge_partials
+from .sketch_agg import fold_token_counts
 
 CAND_SCHEMA = "token STRING, local_count LONG"
 
@@ -47,19 +47,17 @@ _FUSED_PA = pa.schema([
     ("local_count", pa.int64()), ("sketch", pa.binary()),
 ])
 
-_SK_CHUNK = 1 << 17
-
-# collapse the buffered per-batch value_counts tables once this many rows
+# collapse the buffered per-slice value_counts tables once this many rows
 # are held — bounds candidate_tokens' peak memory at O(partition-distinct)
 _COLLAPSE_ROWS = 1 << 20
 
 
 class _TokenTally:
-    """A partition's exact (token, count) totals: per-batch value_counts
+    """A partition's exact (token, count) totals: per-slice value_counts
     are held as Arrow tokens + numpy counts and summed by dictionary code
     whenever more than _COLLAPSE_ROWS rows are held. Without the collapse a
-    token repeated across batches is held once PER BATCH, so peak memory
-    would be O(sum of per-batch distinct) instead of O(partition-distinct).
+    token repeated across slices is held once PER SLICE, so peak memory
+    would be O(sum of per-slice distinct) instead of O(partition-distinct).
     No per-distinct-token Python objects: at 100x scale a partition's
     distinct set is millions of entries."""
 
@@ -93,18 +91,6 @@ class _TokenTally:
         return t.sort_by([("cnt", "descending"), ("token", "descending")])[:k]
 
 
-def _batch_token_counts(col: pa.Array, sep: str):
-    """(distinct non-empty tokens, int64 counts) of one text batch, or
-    None when it has no token; tokenized in Arrow C kernels."""
-    import pyarrow.compute as pc
-
-    toks = anp.nonempty_tokens(col, sep)
-    if len(toks) == 0:
-        return None
-    vc = pc.value_counts(toks)
-    return vc.field("values"), anp.values(vc.field("counts"), np.int64)
-
-
 def candidate_tokens(df, text_col: str, k_per_partition: int, *, sep: str = " "):
     """Per-partition exact top-k tokens (one small row set per partition)."""
     proj = df.select(text_col)
@@ -114,9 +100,8 @@ def candidate_tokens(df, text_col: str, k_per_partition: int, *, sep: str = " ")
         tune_worker()
         tally = _TokenTally()
         for batch in batches:
-            tc = _batch_token_counts(batch.column(0), sep)
-            if tc is not None:
-                tally.add(*tc)
+            for vals, counts in anp.token_counts(batch.column(0), sep):
+                tally.add(vals, counts)
         top = tally.top(k_per_partition)
         if top is not None:
             yield pa.RecordBatch.from_arrays(
@@ -140,15 +125,10 @@ def fused_sketch_and_candidates(df, text_col: str, cfg: CMSConfig,
         sk = cfg.new_sketch()
         tally = _TokenTally()
         for batch in batches:
-            tc = _batch_token_counts(batch.column(0), sep)
-            if tc is None:
-                continue
-            vals, counts = tc
-            # sketch fold: djb2 + weighted update once per DISTINCT token
-            for lo in range(0, len(vals), _SK_CHUNK):
-                sk.update_batch(djb2_batch(vals.slice(lo, _SK_CHUNK)),
-                                counts[lo:lo + _SK_CHUNK])
-            tally.add(vals, counts)
+            for vals, counts in anp.token_counts(batch.column(0), sep):
+                # sketch fold: djb2 + weighted update once per DISTINCT token
+                fold_token_counts(sk, vals, counts)
+                tally.add(vals, counts)
         top = tally.top(k_per_partition)
         if top is not None:
             n_c = top.num_rows

@@ -1,14 +1,11 @@
 """Similarity search over embedding columns (array<float>).
 
-Three tiers:
+Two tiers:
 - ``cosine_topk``      brute-force exact top-k: broadcast the (small) query
                        set, JVM zip_with/aggregate dot products, window
                        rank. The 100 TB story: the corpus side streams;
                        only queries are broadcast; one narrow shuffle for
                        the per-query top-k.
-- ``cosine_topk_pandas`` same semantics through a vectorized Arrow kernel
-                       (numpy matmul per batch) — the fast path when the
-                       query set is hundreds+ (matmul beats per-row exprs).
 - ``lsh_ann_topk``     random-hyperplane LSH: seed-derived planes, sign-bit
                        bucket key, candidates only within the probe's
                        bucket — the sublinear scale path (recall tested
@@ -17,14 +14,8 @@ Three tiers:
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .. import _arrow_np as anp
-from ..memtune import tune_worker
 from ..sketches.hashing import MERSENNE_PRIME, affine_params
 
 LSH_SEED = 7171
@@ -74,66 +65,6 @@ def cosine_topk(df: DataFrame, id_col: str, vec_col: str, query_ids: list[int],
             F.col("nid").alias("neighbor_id"),
             F.floor(F.col("cos") * 10000.0).cast("bigint").alias("cosine_bp"),
         )
-    )
-
-
-def cosine_topk_pandas(df: DataFrame, id_col: str, vec_col: str, query_ids: list[int],
-                       k: int = 5) -> DataFrame:
-    """Same result via a vectorized Arrow kernel: per-batch numpy matmul
-    against the broadcast query matrix, local top-k per batch, global top-k
-    in a tiny final aggregation."""
-    spark = df.sparkSession
-    qrows = df.filter(F.col(id_col).isin(query_ids)) \
-        .select(id_col, vec_col).collect()
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    qmat /= np.linalg.norm(qmat, axis=1, keepdims=True)
-    bq = spark.sparkContext.broadcast((qids, qmat))
-
-    out_schema = "query_id LONG, neighbor_id LONG, cos DOUBLE"
-    out_pa = pa.schema([("query_id", pa.int64()), ("neighbor_id", pa.int64()),
-                        ("cos", pa.float64())])
-
-    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_worker()
-        qids_l, qmat_l = bq.value
-        for batch in batches:
-            ids = anp.values(batch.column(0), np.int64)
-            la = batch.column(1)
-            if len(la) == 0:
-                continue
-            # zero-copy-ish ingestion: flatten() applies the list offsets,
-            # one contiguous values buffer -> reshape (no per-row pylists).
-            # reshape silently misaligns rows if any vector's length
-            # differs (and drops null rows' slots), so validate first.
-            lens = anp.lengths(la)
-            if la.null_count or len(np.unique(lens)) != 1 or lens[0] == 0:
-                raise ValueError(
-                    f"{vec_col!r} must be non-null fixed-dimension vectors; "
-                    f"got null_count={la.null_count}, lengths="
-                    f"{np.unique(lens)[:5].tolist()}")
-            mat = anp.values(la.flatten()).astype(np.float64).reshape(len(la), -1)
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            mat /= norms
-            sims = qmat_l @ mat.T  # (nq, batch)
-            # local top-k per query within the batch
-            kk = min(k + 1, sims.shape[1])
-            idx = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            qi = np.repeat(np.arange(len(qids_l)), kk)
-            nj = idx.ravel()
-            keep = ids[nj] != qids_l[qi]
-            yield anp.batch({"query_id": qids_l[qi][keep],
-                             "neighbor_id": ids[nj][keep],
-                             "cos": sims[qi, nj][keep]}, out_pa)
-
-    local = df.select(id_col, vec_col).mapInArrow(scan, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", F.col("neighbor_id"),
-                F.floor(F.col("cos") * 10000.0).cast("bigint").alias("cosine_bp"))
     )
 
 

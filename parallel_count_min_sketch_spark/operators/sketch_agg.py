@@ -251,18 +251,28 @@ def build_sketch(df, col: str, make_sketch: Callable, from_bytes: Callable, *,
     return make_sketch() if sk is None else sk
 
 
+def fold_token_counts(sk, vals: pa.Array, counts: np.ndarray) -> int:
+    """Fold one ``(distinct tokens, counts)`` slice into ``sk`` through
+    the WEIGHTED protocol, djb2-hashing ``_CHUNK`` tokens at a time;
+    returns the token occurrences consumed."""
+    rows = 0
+    for lo in range(0, len(vals), _CHUNK):
+        rows += _weighted_update(sk, djb2_batch(vals.slice(lo, _CHUNK)),
+                                 counts[lo:lo + _CHUNK])
+    return rows
+
+
 def text_token_partials(df, text_col: str, make_sketch: Callable, *,
                         sep: str = " "):
     """Kernel-generic doc-local token build: tokenize each Arrow batch in
-    Arrow C kernels, collapse to (distinct token, count) with value_counts,
-    djb2 ONCE per distinct token, and feed the kernel through the WEIGHTED
-    protocol — no JVM-side explode, so the Arrow channel moves documents,
-    not 100x as many single-token rows (measured 10x on the Misra-Gries
-    build, BENCH/sketch_family_scale.json). Exact per kernel: 'native'
-    kernels take the counts, 'invariant' ones (distinct/membership) drop
-    them, 'repeat'-mode kernels expand bounded."""
-    import pyarrow.compute as pc
-
+    Arrow C kernels, collapse to (distinct token, count) with value_counts
+    (``_arrow_np.token_counts``, in slices bounded by text bytes), djb2
+    ONCE per distinct token per slice, and feed the kernel through the
+    WEIGHTED protocol — no JVM-side explode, so the Arrow channel moves
+    documents, not 100x as many single-token rows (measured 10x on the
+    Misra-Gries build, BENCH/sketch_family_scale.json). Exact per kernel:
+    'native' kernels take the counts, 'invariant' ones (distinct/
+    membership) drop them, 'repeat'-mode kernels expand bounded."""
     proj = df.select(text_col)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -270,22 +280,8 @@ def text_token_partials(df, text_col: str, make_sketch: Callable, *,
         sk = make_sketch()
         rows = 0
         for batch in batches:
-            col = batch.column(0)
-            if col.null_count:
-                col = col.drop_null()
-            # tokenize + flatten + filter entirely in Arrow C kernels
-            tokens = anp.nonempty_tokens(col, sep)
-            if len(tokens) == 0:
-                continue
-            # (distinct token, count) in Arrow C before hashing: djb2 and
-            # the counter update run once per DISTINCT token per batch
-            vc = pc.value_counts(tokens)
-            vals = vc.field("values")
-            counts = anp.values(vc.field("counts"), np.int64)
-            for lo in range(0, len(vals), _CHUNK):
-                chunk = vals.slice(lo, _CHUNK)
-                w = counts[lo:lo + _CHUNK]
-                rows += _weighted_update(sk, djb2_batch(chunk), w)
+            for vals, counts in anp.token_counts(batch.column(0), sep):
+                rows += fold_token_counts(sk, vals, counts)
         yield _partial_batch(rows, sk)
 
     return proj.mapInArrow(fold, PARTIAL_SCHEMA)
@@ -643,9 +639,10 @@ def text_token_grouped_partials(df, group_col: str, text_col: str,
     kernels — the grouped sibling of :func:`text_token_partials`. The
     Arrow channel moves (group, document) rows, never the exploded token
     stream; per batch each group's texts are segmented once
-    (dictionary-coded argsort via ``iter_group_segments``), tokenized,
-    collapsed with value_counts, djb2-hashed once per distinct token and
-    fed through the WEIGHTED protocol."""
+    (dictionary-coded argsort via ``iter_group_segments``), tokenized and
+    collapsed with value_counts (``_arrow_np.token_counts``), djb2-hashed
+    once per distinct token per slice and fed through the WEIGHTED
+    protocol."""
     import pyarrow.compute as pc
 
     proj = df.select(group_col, text_col)
@@ -664,21 +661,13 @@ def text_token_grouped_partials(df, group_col: str, text_col: str,
             text = batch.column(1)
             row_idx = np.arange(batch.num_rows, dtype=np.int64)
             for g, seg_idx, _w in iter_group_segments(batch, row_idx):
-                tokens = anp.nonempty_tokens(pc.take(text, anp.array(seg_idx)), sep)
-                if len(tokens) == 0:
-                    continue
-                vc = pc.value_counts(tokens)
-                vals = vc.field("values")
-                w = anp.values(vc.field("counts"), np.int64)
-                sk = sketches.get(g)
-                if sk is None:
-                    sk = make_sketch()
-                    sketches[g] = sk
-                    counts[g] = 0
-                for lo in range(0, len(vals), _CHUNK):
-                    counts[g] += _weighted_update(
-                        sk, djb2_batch(vals.slice(lo, _CHUNK)),
-                        w[lo:lo + _CHUNK])
+                seg = pc.take(text, anp.array(seg_idx))
+                for vals, w in anp.token_counts(seg, sep):
+                    sk = sketches.get(g)
+                    if sk is None:
+                        sk = sketches[g] = make_sketch()
+                        counts[g] = 0
+                    counts[g] += fold_token_counts(sk, vals, w)
         yield from _emit_grouped_partials(sketches, counts)
 
     return proj.mapInArrow(fold, GROUPED_SCHEMA)

@@ -38,6 +38,8 @@ DJB2_INIT = 5381
 
 # Maximum token byte-length supported by the vectorized djb2 kernel.
 _MAX_TOKEN_LEN = 4096
+# Most UTF-8 bytes djb2_batch hashes at once (its per-byte temporaries).
+_BLOCK_BYTES = 1 << 16
 _POW33 = np.empty(_MAX_TOKEN_LEN + 1, dtype=np.int64)
 _POW33[0] = 1
 for _i in range(1, _MAX_TOKEN_LEN + 1):
@@ -88,12 +90,19 @@ def djb2_batch(tokens) -> np.ndarray:
 
     Folding mod p each step equals evaluating the polynomial
     ``5381*33^n + sum(c_i * 33^(n-1-i))`` mod p, which vectorizes:
-    concatenate all UTF-8 bytes, weight each byte by 33^(distance from
-    token end), segment-sum with np.add.reduceat. No per-row Python.
+    weight each UTF-8 byte by 33^(distance from token end) and
+    segment-sum with np.add.reduceat. No per-row Python.
+
+    The per-byte temporaries (about five int64 arrays per byte) are held
+    for at most ``_BLOCK_BYTES`` of input at a time: the tokens are cut
+    into blocks at token boundaries, each hashed into its slice of one
+    output array, so a call costs O(rows) + O(_BLOCK_BYTES) memory
+    whatever the total string bytes. A token longer than the block bound
+    (up to ``_MAX_TOKEN_LEN``) is a block of its own.
     """
     import pyarrow as pa
 
-    from .._arrow_np import from_list, valid
+    from .._arrow_np import from_list, offsets, valid
 
     if isinstance(tokens, pa.ChunkedArray):
         arr = tokens.combine_chunks()
@@ -101,41 +110,41 @@ def djb2_batch(tokens) -> np.ndarray:
         arr = tokens
     else:
         arr = from_list(tokens, pa.string())
-    if arr.type == pa.large_string():
-        arr = arr.cast(pa.string())
-    out = _djb2_offsets(arr)
+    offs = offsets(arr)
+    lengths = np.diff(offs)
+    if lengths.max(initial=0) > _MAX_TOKEN_LEN:
+        raise ValueError(f"token longer than {_MAX_TOKEN_LEN} bytes")
+    out = np.full(len(arr), DJB2_INIT % LONG_PRIME, dtype=np.int64)
+    if int(offs[-1]) > int(offs[0]):
+        data = np.frombuffer(arr.buffers()[2], dtype=np.uint8, count=int(offs[-1]))
+        lo, n = 0, len(arr)
+        while lo < n:
+            end = min(int(offs[lo]) + _BLOCK_BYTES, int(offs[-1]))
+            hi = max(int(np.searchsorted(offs, end, "right")) - 1, lo + 1)
+            _djb2_block(data, offs[lo:hi + 1].astype(np.int64), out[lo:hi])
+            lo = hi
     if arr.null_count:  # a NULL hashes as the empty string
         out[~valid(arr)] = DJB2_INIT % LONG_PRIME
     return out
 
 
-def _djb2_offsets(arr) -> np.ndarray:
-    buffers = arr.buffers()
-    raw_offsets = np.frombuffer(buffers[1], dtype=np.int32, count=arr.offset + len(arr) + 1)
-    raw_offsets = raw_offsets[arr.offset:].astype(np.int64)
-    first = int(raw_offsets[0])
-    offsets = raw_offsets - first
-    nbytes = int(offsets[-1])
+def _djb2_block(data: np.ndarray, offs: np.ndarray, out: np.ndarray) -> None:
+    """Hash the tokens ``data[offs[i]:offs[i + 1]]`` into ``out[i]``."""
+    first = int(offs[0])
+    nbytes = int(offs[-1]) - first
     if nbytes == 0:
-        return np.full(len(arr), DJB2_INIT % LONG_PRIME, dtype=np.int64)
-    data = np.frombuffer(buffers[2], dtype=np.uint8, count=first + nbytes)[first:]
-    lengths = np.diff(offsets)
-    if lengths.max(initial=0) > _MAX_TOKEN_LEN:
-        raise ValueError(f"token longer than {_MAX_TOKEN_LEN} bytes")
+        return
+    starts = offs[:-1] - first
+    lengths = np.diff(offs)
     # distance-from-end exponent for every byte position
-    ends = np.repeat(offsets[1:], lengths)
-    pos = np.arange(nbytes, dtype=np.int64)
-    exp = ends - pos - 1
-    terms = (data.astype(np.int64) * _POW33[exp]) % LONG_PRIME
-    # segment sums at token starts (np.add.reduceat needs non-empty segments)
-    starts = offsets[:-1]
-    out = np.full(len(arr), (DJB2_INIT * 1) % LONG_PRIME, dtype=np.int64)
+    exp = np.repeat(offs[1:] - first - 1, lengths)
+    exp -= np.arange(nbytes, dtype=np.int64)
+    terms = _POW33[exp]
+    terms *= data[first:first + nbytes]
+    terms %= LONG_PRIME
+    # segment sums at token starts (np.add.reduceat needs non-empty
+    # segments). Each term < LONG_PRIME (< 2^33) and a segment holds at
+    # most _MAX_TOKEN_LEN of them -> < 2^45, exact in int64.
     nonempty = lengths > 0
-    if nonempty.any():
-        red_starts = starts[nonempty]
-        seg = np.add.reduceat(terms, red_starts)
-        # reduceat sums between consecutive start indices; trailing segment ok.
-        # Sum of terms: each term < LONG_PRIME (<2^33); max segment len 4096
-        # -> < 2^45, exact in int64.
-        out[nonempty] = (DJB2_INIT * _POW33[lengths[nonempty]] + seg) % LONG_PRIME
-    return out
+    seg = np.add.reduceat(terms, starts[nonempty])
+    out[nonempty] = (DJB2_INIT * _POW33[lengths[nonempty]] + seg) % LONG_PRIME

@@ -42,8 +42,6 @@ from pyspark.sql import SparkSession
 import __spark_entry__ as entry
 from parallel_count_min_sketch_spark.config import CMSConfig
 from parallel_count_min_sketch_spark.operators import agg, sql_build
-from parallel_count_min_sketch_spark.operators.similarity import (
-    cosine_topk_pandas)
 
 sf = {sf!r}
 spark = (SparkSession.builder.master("local[2]")
@@ -58,8 +56,6 @@ assert (arrow.table == catalyst.table).all()
 queries = entry.queries()
 for name in {queries!r}:
     queries[name](spark, sf).collect()
-emb = spark.read.parquet(sf + "/embeddings.parquet")
-cosine_topk_pandas(emb, "vec_id", "embedding", [1, 2], 3).collect()
 
 
 def children():

@@ -10,7 +10,6 @@ from parallel_count_min_sketch_spark.functions import textstats as ts
 from parallel_count_min_sketch_spark.operators import dedup as dd
 from parallel_count_min_sketch_spark.operators.similarity import (
     cosine_topk,
-    cosine_topk_pandas,
     lsh_ann_topk,
 )
 from parallel_count_min_sketch_spark.multimodal.binary_ops import binary_metadata
@@ -259,20 +258,6 @@ def test_ngram_jaccard_values(spark):
 
 
 # ---------------------------- similarity -----------------------------------
-@pytest.fixture(scope="module")
-def emb_df(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
-def test_pandas_knn_matches_jvm_knn(spark, emb_df):
-    jvm = cosine_topk(emb_df, "vec_id", "embedding", [0, 1], k=5).collect()
-    pnd = cosine_topk_pandas(emb_df, "vec_id", "embedding", [0, 1], k=5).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    jvm_map = {key(r): (r["neighbor_id"], r["cosine_bp"]) for r in jvm}
-    pnd_map = {key(r): (r["neighbor_id"], r["cosine_bp"]) for r in pnd}
-    assert jvm_map == pnd_map
-
-
 def test_lsh_ann_recall_on_clustered_data(spark):
     rng = np.random.default_rng(1)
     dim = 16
