@@ -88,9 +88,10 @@ def cubic_sql(c3: int, c2: int, c1: int, c0: int, item_expr: str) -> str:
 
 
 def _djb2_step_sql(h: str, u: str, intdiv: str) -> str:
-    """One fold step: expand code point ``u`` to its UTF-8 bytes
-    arithmetically and fold each byte in (h*33+byte), taking mod p once per
-    character — exact, since the pre-mod intermediate stays < 2^55 in int64.
+    """One step of the DuckDB oracles' djb2 fold (``djb2_sql_duckdb``):
+    expand code point ``u`` to its UTF-8 bytes arithmetically and fold
+    each byte in (h*33+byte), taking mod p once per character — exact,
+    since the pre-mod intermediate stays < 2^55 in int64.
 
     This makes the SQL fold byte-identical to the numpy kernel
     (sketches/hashing.djb2_batch hashes UTF-8 *bytes*) while keeping the
@@ -106,29 +107,6 @@ def _djb2_step_sql(h: str, u: str, intdiv: str) -> str:
         f"ELSE (((({h} * 33 + (240 + {u} {d} 262144)) * 33 "
         f"+ (128 + ({u} {d} 4096) % 64)) * 33 + (128 + ({u} {d} 64) % 64)) * 33 "
         f"+ (128 + {u} % 64)) % {LONG_PRIME} END"
-    )
-
-
-def djb2_sql_spark(col_expr: str) -> str:
-    """djb2-over-UTF-8-bytes mod LONG_PRIME as a Spark SQL higher-order-
-    function expression (JVM-side, no Python). Spark's higher-order
-    functions are ``CodegenFallback``, so the fold runs interpreted, per
-    character: string sketch builds hash with the numpy ``djb2_batch``
-    instead, and this expression serves the JVM string probe of
-    ``sql_build.point_query_join`` and the ``dedup`` / ``heavy_hitters`` /
-    ``joins`` operators. Folds over code points (ascii/substring) and
-    expands each to its UTF-8 bytes in integer arithmetic, so the result
-    equals the numpy kernel's byte fold on ANY unicode input (reference
-    hash: src/core/count_min_sketch.c:14-21)."""
-    # empty-string guard: Spark's sequence(1, 0) yields the DESCENDING
-    # [1, 0] (two zero-byte fold steps), where DuckDB's range(1, 1) is
-    # empty — without the CASE an '' key hashes differently per engine
-    # (and differently from the numpy kernel, which returns DJB2_INIT).
-    return (
-        f"CASE WHEN length({col_expr}) = 0 THEN CAST({DJB2_INIT} AS BIGINT) "
-        f"ELSE aggregate(transform(sequence(1, length({col_expr})), i -> "
-        f"CAST(ascii(substring({col_expr}, i, 1)) AS BIGINT)), "
-        f"CAST({DJB2_INIT} AS BIGINT), (h, u) -> {_djb2_step_sql('h', 'u', 'DIV')}) END"
     )
 
 

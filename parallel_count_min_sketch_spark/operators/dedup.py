@@ -1,18 +1,20 @@
 """Deduplication operators for training-data pipelines: exact (hash
-groupBy), MinHash+LSH, SimHash, and n-gram Jaccard — all pure-JVM
-DataFrame expressions (codegen'd, no Python in the hot path), with the
-hash constants seed-derived so DuckDB oracles replay them exactly.
+groupBy), MinHash+LSH, SimHash, and n-gram Jaccard, with the hash
+constants seed-derived so DuckDB oracles replay them exactly. Token ids
+are djb2 over UTF-8 bytes, computed by the numpy ``djb2_batch`` (in the
+doc-local kernels, and through ``sketch_agg.with_djb2`` in the Catalyst
+table forms).
 
 Scale notes (100 TB): exact dedup is one shuffle on a 128-bit digest.
-MinHash mins default to the DOC-LOCAL Arrow kernel (_minhash_mins_arrow):
-min-over-multiset equals min-over-set, so no token stream ever shuffles —
-one narrow vectorized pass plus a thin per-doc min agg. (The Catalyst
-table form — distinct (doc, token) stream + vocabulary join — remains for
-low-vocab corpora, but on web-like text the vocabulary is nearly
-corpus-sized and that shape shuffles O(corpus) rows twice; measured ~7x
-slower end-to-end at 2M docs.) SimHash routes through its codegen table
-form. LSH candidate pairs shuffle only (band_key, doc_id) rows and
-self-join per bucket, never all-pairs. n-gram Jaccard is for verifying
+MinHash mins and SimHash fingerprints run in DOC-LOCAL Arrow kernels
+(_minhash_mins_arrow, _simhash_arrow), so no token stream ever shuffles —
+one narrow vectorized pass plus a thin per-doc agg. (The Catalyst table
+forms — distinct (doc, token) stream + vocabulary join — are kept as
+references and for SimHash ids whose rows span Arrow batches; on web-like
+text the vocabulary is nearly corpus-sized and that shape shuffles
+O(corpus) rows twice, measured ~7x slower end-to-end at 2M docs.) LSH
+candidate pairs shuffle only (band_key, doc_id) rows and self-join per
+bucket, never all-pairs. n-gram Jaccard is for verifying
 candidate pairs (quadratic only within a candidate set).
 """
 
@@ -20,24 +22,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..config import djb2_sql_spark
 from ..sketches.hashing import MERSENNE_PRIME, affine_params
+from .sketch_agg import with_djb2
 
 MINHASH_SEED = 4242
 DEFAULT_PERMS = 32  # 4 bands x 8 rows: P(band collision) = J^8 — near-dups
 DEFAULT_BANDS = 4   # (J~1) always collide; unrelated docs (J~0.3) at ~6e-5
 SIMHASH_BITS = 32
-
-
-def token_id_set(text: str = "text") -> Column:
-    """array<bigint> of distinct token ids (djb2 over UTF-8 bytes, matching
-    sketches/hashing.djb2_batch on any unicode input) — the doc's shingle
-    set. Emitted as one SQL HOF expression so the byte-exact fold from
-    config._djb2_step_sql is shared verbatim with the CMS path."""
-    from ..config import djb2_sql_spark
-
-    toks = f"array_distinct(filter(split({text}, ' '), t -> t != ''))"
-    return F.expr(f"transform({toks}, t -> {djb2_sql_spark('t')})")
 
 
 def _guarded_id(id_col: str) -> Column:
@@ -65,85 +56,38 @@ def _doc_tokens(df: DataFrame, id_col: str, text: str) -> DataFrame:
     )
 
 
-def minhash_signature(text: str = "text", *, num_perms: int = DEFAULT_PERMS,
-                      seed: int = MINHASH_SEED) -> Column:
-    """array<bigint>[num_perms]: min over the token-id set of each seeded
-    affine permutation (a_j*x+b_j mod p) — the standard MinHash estimator
-    of Jaccard similarity."""
-    a, b = affine_params(seed, num_perms)
-    ids = token_id_set(text)
-
-    def _perm(aj: int, bj: int):
-        # closure factory: PySpark infers HOF arity from the lambda signature,
-        # so extra default args would break it
-        return lambda x: (F.lit(aj) * (x % MERSENNE_PRIME) + F.lit(bj)) % MERSENNE_PRIME
-
-    sigs = [
-        F.array_min(F.transform(ids, _perm(int(a[j]), int(b[j]))))
-        for j in range(num_perms)
-    ]
-    return F.array(*sigs)
-
-
 def minhash_table(df: DataFrame, id_col: str, text: str = "text", *,
                   num_perms: int = DEFAULT_PERMS,
                   seed: int = MINHASH_SEED) -> DataFrame:
-    """MinHash signatures as DataFrame[(_id, _sig array<bigint>)] on the
-    codegen path: explode -> distinct (doc, token) -> djb2 + the
-    ``num_perms`` affine permutations once per DISTINCT token -> columnar
-    MIN aggregates per doc. Identical values to ``minhash_signature()``
-    (equality-tested) — the Column form's per-permutation HOF transforms
-    are interpreted per array element, this stays inside whole-stage
-    codegen and hashes each distinct token once instead of once per doc.
-    Docs with no tokens keep the Column form's all-NULL signature.
+    """MinHash signatures as DataFrame[(_id, _sig array<bigint>)]: for
+    each of ``num_perms`` seeded affine permutations (a_j*x+b_j mod p),
+    the min over the doc's token ids — the standard MinHash estimator of
+    Jaccard similarity — from the columnar ``_minhash_mins_arrow``. Docs
+    with no tokens get the all-NULL signature.
 
     ``id_col`` is the document identity: rows sharing an id union their
     token sets into one signature; NULL ids raise at runtime."""
-    mins = _minhash_mins(df, id_col, text, num_perms=num_perms, seed=seed)
+    mins = _minhash_mins_arrow(df, id_col, text, num_perms=num_perms, seed=seed)
     return mins.select(
         "_id", F.array(*[F.col(f"_m{j}") for j in range(num_perms)]).alias("_sig"))
-
-
-def _minhash_mins(df: DataFrame, id_col: str, text: str = "text", *,
-                  num_perms: int = DEFAULT_PERMS,
-                  seed: int = MINHASH_SEED, impl: str = "arrow") -> DataFrame:
-    """Columnar MinHash mins DataFrame[(_id, _m0.._m{num_perms-1})] — the
-    shared core of minhash_table and lsh_band_rows. Every doc of the input
-    appears exactly once; docs with no tokens carry NULL mins (the array
-    form renders them as the all-NULL signature, the band form's NULL band
-    keys never equi-join).
-
-    Two value-identical implementations (equality-tested):
-      'arrow' (default): doc-local vectorized numpy kernel via mapInArrow —
-          ZERO shuffle before the final per-id min agg. min-over-multiset
-          equals min-over-set, so no (doc, token) distinct is needed at
-          all. This is the 100-TB shape: on web-like corpora the vocabulary
-          is nearly corpus-sized, and the table form's global distinct +
-          vocabulary join shuffles O(corpus) rows twice (measured 4-5x
-          slower end-to-end at 2M docs).
-      'table': whole-stage-codegen Catalyst form — distinct (doc, token)
-          stream joined against a hashed distinct vocabulary. Wins only
-          when vocab << corpus (each distinct token is hashed once).
-    """
-    if impl == "arrow":
-        return _minhash_mins_arrow(df, id_col, text, num_perms=num_perms, seed=seed)
-    return _minhash_mins_table(df, id_col, text, num_perms=num_perms, seed=seed)
 
 
 def _minhash_mins_table(df: DataFrame, id_col: str, text: str = "text", *,
                         num_perms: int = DEFAULT_PERMS,
                         seed: int = MINHASH_SEED) -> DataFrame:
-    """Catalyst table form of ``_minhash_mins`` (see dispatch docstring)."""
+    """Catalyst table form of ``_minhash_mins_arrow``, value-identical:
+    distinct (doc, token) stream joined against the distinct vocabulary,
+    each vocabulary token hashed once. On web-like text the vocabulary is
+    nearly corpus-sized and this shape shuffles O(corpus) rows twice
+    (measured 4-5x slower end-to-end than the Arrow form at 2M docs); it
+    is kept as the tests' reference."""
     a, b = affine_params(seed, num_perms)
     toks = _doc_tokens(df, id_col, text)
-    vocab = (
-        toks.select("_tok").distinct()
-        .withColumn("_tid", F.expr(djb2_sql_spark("_tok")) % MERSENNE_PRIME)
-        .select(
-            "_tok",
-            *[((F.lit(int(a[j])) * F.col("_tid") + F.lit(int(b[j]))) % MERSENNE_PRIME)
-              .alias(f"_p{j}") for j in range(num_perms)],
-        )
+    tid = F.col("_tid") % MERSENNE_PRIME
+    vocab = with_djb2(toks.select("_tok").distinct(), "_tok", "_tid").select(
+        "_tok",
+        *[((F.lit(int(a[j])) * tid + F.lit(int(b[j]))) % MERSENNE_PRIME)
+          .alias(f"_p{j}") for j in range(num_perms)],
     )
     mins = toks.join(vocab, "_tok").groupBy("_id").agg(
         *[F.min(f"_p{j}").alias(f"_m{j}") for j in range(num_perms)])
@@ -154,11 +98,19 @@ def _minhash_mins_table(df: DataFrame, id_col: str, text: str = "text", *,
 def _minhash_mins_arrow(df: DataFrame, id_col: str, text: str = "text", *,
                         num_perms: int = DEFAULT_PERMS,
                         seed: int = MINHASH_SEED) -> DataFrame:
-    """Doc-local MinHash mins: one narrow ``mapInArrow`` pass (tokenize,
-    djb2, ``num_perms`` affine permutations, per-doc segment-min — all
+    """Columnar MinHash mins DataFrame[(_id, _m0.._m{num_perms-1})] — the
+    shared core of minhash_table and lsh_band_rows. Every doc of the input
+    appears exactly once; docs with no tokens carry NULL mins (the array
+    form renders them as the all-NULL signature, the band form's NULL band
+    keys never equi-join).
+
+    Doc-local: one narrow ``mapInArrow`` pass (tokenize, djb2,
+    ``num_perms`` affine permutations, per-doc segment-min — all
     vectorized numpy over Arrow batches), then a single thin
     ``groupBy(_id).min`` that unions rows sharing an id and merges
-    per-partition partials. No token stream ever shuffles.
+    per-partition partials. No token stream ever shuffles:
+    min-over-multiset equals min-over-set, so no (doc, token) distinct is
+    needed.
 
     Value-identical to the table form: same djb2-over-UTF-8-bytes token
     ids, same (a_j*x+b_j) mod p permutations, duplicates inside a doc
@@ -245,7 +197,7 @@ def lsh_band_rows(df: DataFrame, id_col: str, text: str = "text", *,
     instead of interpreted per array element. Empty docs have NULL mins,
     so their band keys are NULL and never equi-join."""
     rows_per_band = num_perms // bands
-    mins = _minhash_mins(df, id_col, text, num_perms=num_perms, seed=seed)
+    mins = _minhash_mins_arrow(df, id_col, text, num_perms=num_perms, seed=seed)
 
     # ONE parsed SQL expression for the whole banded-key array: the
     # Column-API fold costs ~4 py4j round-trips per chain step (~0.25 s
@@ -499,64 +451,35 @@ def incremental_dedup_report(spark, new_df: DataFrame, id_col: str,
     )
 
 
-def simhash(text: str = "text", *, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash fingerprint: bit i is the sign of sum over distinct tokens
-    of +/-1 by bit i of the token id. Near-dup docs differ in few bits."""
-    ids = token_id_set(text)
-
-    def _vote(sh: int):
-        return lambda acc, x: acc + F.when(
-            F.shiftright(x, sh).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-        ).otherwise(F.lit(-1))
-
-    bit_cols = []
-    for i in range(bits):
-        vote = F.aggregate(ids, F.lit(0).cast("bigint"), _vote(i))
-        bit_cols.append(F.when(vote > 0, F.lit(1 << i).cast("bigint")).otherwise(F.lit(0).cast("bigint")))
-    out = bit_cols[0]
-    for c in bit_cols[1:]:
-        out = out + c
-    return out
-
-
 def simhash_table(df: DataFrame, id_col: str, text: str = "text", *,
-                  bits: int = SIMHASH_BITS, impl: str = "arrow") -> DataFrame:
-    """SimHash fingerprints as DataFrame[(_id, _sh)].
-
-    'arrow' (default): doc-local vectorized kernel — zero token shuffle
-    (see ``_simhash_arrow``; measured 5-10x faster than the Catalyst form
-    at 2M web-like docs, value parity equality-tested). 'table': the
-    whole-stage-codegen Catalyst form below — wins only when the
-    vocabulary is much smaller than the corpus."""
-    if impl == "arrow":
-        return _simhash_arrow(df, id_col, text, bits=bits)
-    return _simhash_table_catalyst(df, id_col, text, bits=bits)
+                  bits: int = SIMHASH_BITS) -> DataFrame:
+    """SimHash fingerprints as DataFrame[(_id, _sh)]: bit i is the sign of
+    the sum over the doc's distinct token ids of +/-1 by bit i of the id,
+    so near-dup docs differ in few bits. Doc-local vectorized kernel with
+    zero token shuffle (``_simhash_arrow``; measured 5-10x faster than the
+    Catalyst form at 2M web-like docs, value parity equality-tested)."""
+    return _simhash_arrow(df, id_col, text, bits=bits)
 
 
 def _simhash_table_catalyst(df: DataFrame, id_col: str, text: str = "text", *,
                             bits: int = SIMHASH_BITS) -> DataFrame:
-    """SimHash fingerprints as DataFrame[(_id, _sh)] on the codegen path.
+    """SimHash fingerprints as DataFrame[(_id, _sh)] on the Catalyst path:
+    explode -> distinct (doc, token) -> djb2 once per DISTINCT token
+    (``with_djb2``) -> ``bits`` columnar bit-count sums. Scale shape: one
+    (doc, token) distinct shuffle + one groupBy(doc) — the same shape as
+    exact dedup — and the vocabulary join is AQE-sized (broadcast for real
+    vocabularies). ``_simhash_arrow`` runs it for ids whose rows span
+    Arrow batches; the tests use it as the reference.
 
-    Identical values to ``simhash()`` (equality-tested), but computed via
-    explode -> distinct (doc, token) -> djb2 once per DISTINCT token ->
-    ``bits`` columnar bit-count sums. The Column form's HOF folds are
-    interpreted per array element by Spark (never whole-stage codegen'd),
-    which makes them the bottleneck at corpus scale; this formulation keeps
-    every hot expression inside codegen. Scale shape: one (doc, token)
-    distinct shuffle + one groupBy(doc) — the same shape as exact dedup —
-    and the vocabulary join is AQE-sized (broadcast for real vocabularies).
-
-    Bit rule matches simhash(): bit i set iff the +/-1 vote sum over the
-    doc's distinct token ids is > 0, i.e. 2 * count(ids with bit i) > n.
-    Docs with no tokens fingerprint to 0 (empty vote vector), as in the
-    Column form.
+    Bit rule: bit i set iff the +/-1 vote sum over the doc's distinct
+    token ids is > 0, i.e. 2 * count(ids with bit i) > n. Docs with no
+    tokens fingerprint to 0 (empty vote vector).
 
     ``id_col`` is the document identity: rows sharing an id union their
     token sets into one fingerprint; NULL ids raise at runtime.
     """
     toks = _doc_tokens(df, id_col, text)
-    vocab = toks.select("_tok").distinct() \
-        .withColumn("_tid", F.expr(djb2_sql_spark("_tok")))
+    vocab = with_djb2(toks.select("_tok").distinct(), "_tok", "_tid")
     joined = toks.join(vocab, "_tok")
     # parsed SQL strings, not per-bit Column chains: the Column-API form
     # costs ~6 py4j round-trips per bit twice over (~0.5 s per

@@ -34,7 +34,7 @@ from .. import _arrow_np as anp
 from ..config import CMSConfig
 from ..memtune import tune_worker
 from .agg import merge_partials
-from .sketch_agg import fold_token_counts
+from .sketch_agg import fold_token_counts, with_djb2
 
 CAND_SCHEMA = "token STRING, local_count LONG"
 
@@ -229,7 +229,6 @@ def mg_frequent_tokens(df, text_col: str, k: int, phi: float) -> DataFrame:
     GROUP BY oracle."""
     from functools import partial
 
-    from ..config import djb2_sql_spark
     from ..sketches.misra_gries import MisraGries
     from .sketch_agg import build_sketch_from_text
 
@@ -261,16 +260,12 @@ def mg_frequent_tokens(df, text_col: str, k: int, phi: float) -> DataFrame:
     ub = mg.counts + offset
     keep = ub >= thresh
     spark = df.sparkSession
-    cand = spark.createDataFrame(
-        [(int(i), int(c)) for i, c in zip(mg.items[keep], mg.counts[keep])],
-        "item_id LONG, mg_lower LONG",
-    )
-    # coalesce marks the hash non-nullable (it never IS null for the
-    # non-empty tokens here): without it the broadcast equi-join infers
-    # isnotnull(item_id) and predicate pushdown inlines the whole djb2
-    # fold into a Filter - every token hashed TWICE
-    toks_id = toks.withColumn(
-        "item_id", F.expr(f"coalesce({djb2_sql_spark('tok')}, 0)"))
+    # an Arrow table plans as a JVM LocalTableScan; a list of tuples would
+    # be a Python-RDD scan that starts Python tasks on every collect
+    cand = spark.createDataFrame(pa.table({
+        "item_id": pa.array(mg.items[keep], pa.int64()),
+        "mg_lower": pa.array(mg.counts[keep], pa.int64())}))
+    toks_id = with_djb2(toks, "tok")
     exact = (
         toks_id.join(F.broadcast(cand), "item_id")
         .groupBy("tok", "mg_lower")
@@ -304,9 +299,6 @@ def mg_grouped_frequent_tokens(df, group_col: str, text_col: str,
     GROUP BY oracle."""
     from functools import partial
 
-    import pyarrow as pa
-
-    from ..config import djb2_sql_spark
     from ..sketches.misra_gries import MisraGries
     from .sketch_agg import finalize_grouped, sketch_grouped_from_text
 
@@ -346,12 +338,7 @@ def mg_grouped_frequent_tokens(df, group_col: str, text_col: str,
                    ("mg_lower", pa.int64()), ("n_g", pa.int64()),
                    ("mg_offset", pa.int64())]),
     )
-    # coalesce marks the hash non-nullable (it never IS null for the
-    # non-empty tokens here): without it the broadcast equi-join infers
-    # isnotnull(item_id) and predicate pushdown inlines the whole djb2
-    # fold into a Filter - every token hashed TWICE
-    toks_id = toks.withColumn(
-        "item_id", F.expr(f"coalesce({djb2_sql_spark('tok')}, 0)"))
+    toks_id = with_djb2(toks, "tok")
     exact = (
         toks_id.join(F.broadcast(cand), ["group", "item_id"])
         .groupBy("group", "tok", "mg_lower", "n_g", "mg_offset")

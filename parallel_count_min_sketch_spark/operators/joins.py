@@ -169,16 +169,20 @@ def bloom_member_column(df: DataFrame, key_col: str, bloom: BloomFilter, *,
     """(df + temp cols, membership Column, temp col names). The k probes
     are pure int64 arithmetic (pmod keeps parity with numpy % on any
     sign) + element_at into the literal word array — codegen'd JVM
-    expressions, zero Python in the row path. A string key is hashed by
-    the ``djb2_sql_spark`` fold, which Spark runs interpreted."""
-    from ..config import djb2_sql_spark
+    expressions, zero Python in the row path for integer keys. A string
+    key is first hashed by the numpy ``djb2_batch`` (``with_djb2``)."""
     from ..sketches.hashing import MERSENNE_PRIME
+    from .sketch_agg import with_djb2
 
     words = F.array(*[F.lit(w) for w in _bloom_words(bloom)])
     tmp = ["_bloom_words_"]
     out = df.withColumn("_bloom_words_", words)
-    key_sql = (djb2_sql_spark(key_col) if string_keys
-               else f"CAST({key_col} AS BIGINT)")
+    if string_keys:
+        out = with_djb2(out, key_col, "_bloom_h_")
+        tmp.append("_bloom_h_")
+        key_sql = "_bloom_h_"
+    else:
+        key_sql = f"CAST({key_col} AS BIGINT)"
     out = out.withColumn("_bloom_x_", F.expr(f"pmod({key_sql}, {MERSENNE_PRIME})"))
     tmp.append("_bloom_x_")
     tests = []

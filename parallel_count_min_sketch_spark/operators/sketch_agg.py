@@ -294,38 +294,61 @@ def build_sketch_from_text(df, text_col: str, make_sketch: Callable,
     return make_sketch() if sk is None else sk
 
 
-def probe_cms(df, sk, item_col: str, est_col: str = "cms_estimate"):
-    """``df`` with a BIGINT ``est_col`` appended: the point query of ``sk``
-    at djb2 of the string column ``item_col`` (NULL for a NULL item), in
-    one ``mapInArrow`` pass; every other column passes through unchanged.
-
-    ``sk`` is a ``CountMinSketch`` or a ``ConservativeCMS``: both answer
-    min over the same hash rows, so either rides in the closure as one
-    CMS1 blob (depth*width*8 bytes, 65 KB at the 3 x 2719 default). The
-    probe side is never joined or shuffled against a sketch table, and
-    djb2 runs in numpy, not as an interpreted SQL fold."""
+def _append_long(df, in_col: str, out_col: str, make_fn: Callable):
+    """``df`` with a BIGINT ``out_col`` appended (replacing any column of
+    that name) in one ``mapInArrow`` pass: ``make_fn()``, called once per
+    task, returns the function from each batch's ``in_col`` Arrow column to
+    int64 numpy. A NULL ``in_col`` gives a NULL ``out_col``; every other
+    column passes through unchanged."""
     from pyspark.sql.types import LongType, StructField, StructType
 
-    blob = CountMinSketch(sk.epsilon, sk.delta, sk.seed, table=sk.table,
-                          total=sk.total).to_bytes()
-    eps, delta = sk.epsilon, sk.delta
-    pos = df.columns.index(item_col)
-    names = df.columns + [est_col]
-    schema = StructType(df.schema.fields + [StructField(est_col, LongType())])
+    pos = df.columns.index(in_col)
+    keep = [i for i, c in enumerate(df.columns) if c != out_col]
+    names = [df.columns[i] for i in keep] + [out_col]
+    schema = StructType([df.schema.fields[i] for i in keep]
+                        + [StructField(out_col, LongType())])
 
-    def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tune_worker()
-        q = CountMinSketch.from_bytes(blob, eps, delta)
+        fn = make_fn()
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             col = batch.column(pos)
-            est = anp.array(q.point_query(djb2_batch(col)), pa.int64(),
-                            valid=anp.valid(col))
-            yield pa.RecordBatch.from_arrays(batch.columns + [est],
-                                             names=names)
+            out = anp.array(fn(col), pa.int64(), valid=anp.valid(col))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(i) for i in keep] + [out], names=names)
 
-    return df.mapInArrow(probe, schema)
+    return df.mapInArrow(kernel, schema)
+
+
+def with_djb2(df, col: str, out: str = "item_id"):
+    """``df`` with a BIGINT ``out`` appended: ``djb2_batch`` of the string
+    column ``col`` (``''`` hashes to 5381, a NULL stays NULL). This is
+    the one Spark-side string hash: sketch builds, probes, Misra-Gries
+    recounts, fingerprint vocabularies and Bloom probes all run it in
+    numpy, never as an interpreted SQL fold."""
+    return _append_long(df, col, out, lambda: djb2_batch)
+
+
+def probe_cms(df, sk, item_col: str, est_col: str = "cms_estimate"):
+    """``df`` with a BIGINT ``est_col`` appended: the point query of ``sk``
+    at djb2 of the string column ``item_col`` (NULL for a NULL item), in
+    the ``with_djb2`` kernel; every other column passes through unchanged.
+
+    ``sk`` is a ``CountMinSketch`` or a ``ConservativeCMS``: both answer
+    min over the same hash rows, so either rides in the closure as one
+    CMS1 blob (depth*width*8 bytes, 65 KB at the 3 x 2719 default). The
+    probe side is never joined or shuffled against a sketch table."""
+    blob = CountMinSketch(sk.epsilon, sk.delta, sk.seed, table=sk.table,
+                          total=sk.total).to_bytes()
+    eps, delta = sk.epsilon, sk.delta
+
+    def make_probe():
+        q = CountMinSketch.from_bytes(blob, eps, delta)
+        return lambda col: q.point_query(djb2_batch(col))
+
+    return _append_long(df, item_col, est_col, make_probe)
 
 
 # ---------------------------------------------------------------------------

@@ -28,10 +28,10 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from .. import _arrow_np as anp
-from ..config import CMSConfig, djb2_sql_spark
+from ..config import CMSConfig
 from ..memtune import tune_worker
 from ..sketches.cms import CountMinSketch
-from .sketch_agg import fold_batches
+from .sketch_agg import fold_batches, with_djb2
 
 CELLS_SCHEMA = "depth_row INT, bucket BIGINT, counter BIGINT"
 _CELLS_PA = pa.schema([("depth_row", pa.int32()), ("bucket", pa.int64()),
@@ -42,13 +42,15 @@ def with_item_id(df: DataFrame, col: str, *, string_items: bool = False,
                  out: str = "item_id") -> DataFrame:
     """Normalize the item column to BIGINT ids: a cast for integers, djb2
     for strings (cms_update_str analog, src/core/count_min_sketch.c:24-27)
-    as the ``djb2_sql_spark`` higher-order-function fold, which Spark runs
-    interpreted (``CodegenFallback``), not codegen'd. No Python UDF.
+    by the numpy ``djb2_batch`` kernel (``sketch_agg.with_djb2``, which
+    puts ``out`` last).
 
     selectExpr, not withColumn: same projection, roughly half the
-    construction wall (withColumn's per-call replace-check costs ~25 ms
-    with the djb2 expression — measured)."""
-    sql = djb2_sql_spark(col) if string_items else f"CAST(`{col}` AS BIGINT)"
+    construction wall (withColumn's per-call replace-check cost ~25 ms
+    with the former SQL djb2 expression — measured)."""
+    if string_items:
+        return with_djb2(df, col, out)
+    sql = f"CAST(`{col}` AS BIGINT)"
     if out in df.columns:  # withColumn REPLACES; select-star would duplicate
         return df.withColumn(out, F.expr(sql))
     return df.selectExpr("*", f"{sql} AS {out}")

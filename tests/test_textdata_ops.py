@@ -143,13 +143,52 @@ def test_lsh_bucket_cap_bounds_degenerate_buckets(spark):
     assert len(uncapped) >= (300 * 299) // 2
 
 
-def test_token_id_set_byte_exact_on_unicode(spark):
-    """The HOF token ids must equal the numpy byte fold for non-ASCII."""
+# plain-Python references: token ids are djb2 over UTF-8 bytes of the
+# distinct non-empty space-split tokens
+def _ref_ids(text):
     from parallel_count_min_sketch_spark.sketches.hashing import djb2_py
 
-    df = spark.createDataFrame([("héllo 日本語 café",)], "text STRING")
-    ids = df.select(dd.token_id_set("text").alias("ids")).collect()[0]["ids"]
-    assert sorted(ids) == sorted(djb2_py(t) for t in ["héllo", "日本語", "café"])
+    return {djb2_py(t) for t in (text or "").split(" ") if t}
+
+
+def _ref_minhash(text, num_perms=dd.DEFAULT_PERMS, seed=dd.MINHASH_SEED):
+    from parallel_count_min_sketch_spark.sketches.hashing import (
+        MERSENNE_PRIME as P,
+        affine_params,
+    )
+
+    ids = _ref_ids(text)
+    a, b = affine_params(seed, num_perms)
+    if not ids:
+        return [None] * num_perms
+    return [min((int(a[j]) * (x % P) + int(b[j])) % P for x in ids)
+            for j in range(num_perms)]
+
+
+def _ref_simhash(text, bits=dd.SIMHASH_BITS):
+    ids = _ref_ids(text)
+    return sum(1 << i for i in range(bits)
+               if 2 * sum((x >> i) & 1 for x in ids) > len(ids))
+
+
+def test_fingerprint_token_ids_byte_exact_on_unicode(spark):
+    """Token ids equal the scalar byte fold for non-ASCII tokens, in the
+    Arrow kernels and the Catalyst table forms: a one-token doc's SimHash
+    is the low 32 bits of its id, and its MinHash mins pin the id."""
+    from parallel_count_min_sketch_spark.sketches.hashing import djb2_py
+
+    toks = ["héllo", "日本語", "café", "🦀"]
+    df = spark.createDataFrame(list(enumerate(toks)), "doc_id LONG, text STRING")
+    want_sh = {i: djb2_py(t) & 0xFFFFFFFF for i, t in enumerate(toks)}
+    want_sig = {i: _ref_minhash(t) for i, t in enumerate(toks)}
+    for table in (dd.simhash_table, dd._simhash_table_catalyst):
+        assert {r["_id"]: r["_sh"] for r in table(df, "doc_id").collect()} \
+            == want_sh
+    assert {r["_id"]: r["_sig"] for r in dd.minhash_table(df, "doc_id").collect()} \
+        == want_sig
+    mins = dd._minhash_mins_table(df, "doc_id").collect()
+    assert {r["_id"]: [r[f"_m{j}"] for j in range(dd.DEFAULT_PERMS)]
+            for r in mins} == want_sig
 
 
 def test_simhash_near_dup_small_hamming(spark):
@@ -159,46 +198,38 @@ def test_simhash_near_dup_small_hamming(spark):
     df = spark.createDataFrame(
         [(1, base), (2, near), (3, far)], "doc_id LONG, text STRING"
     )
-    rows = {r["doc_id"]: r["sh"] for r in
-            df.select("doc_id", dd.simhash("text").alias("sh")).collect()}
+    rows = {r["_id"]: r["_sh"] for r in dd.simhash_table(df, "doc_id").collect()}
     ham_near = bin(rows[1] ^ rows[2]).count("1")
     ham_far = bin(rows[1] ^ rows[3]).count("1")
     assert ham_near <= 8
     assert ham_far > ham_near
 
 
-def test_minhash_table_equals_column_form(spark):
-    """The codegen-path signature table must match the HOF Column form
-    exactly, including empty docs (all-NULL signature)."""
-    df = spark.createDataFrame(
-        [(1, "a b c a"), (2, "héllo 日本語 café"), (3, ""), (4, "a b c a")],
-        "doc_id LONG, text STRING",
-    )
-    col_form = {r["doc_id"]: r["sig"] for r in
-                df.select("doc_id",
-                          dd.minhash_signature("text").alias("sig")).collect()}
+_REF_DOCS = [(1, "a b c a"), (2, "héllo 日本語 café"), (3, ""), (4, "x"),
+             (5, "a b c a")]
+
+
+def test_minhash_table_equals_python_reference(spark):
+    """The signature table equals the plain-Python MinHash, including
+    empty docs (all-NULL signature)."""
+    df = spark.createDataFrame(_REF_DOCS, "doc_id LONG, text STRING")
     tbl_form = {r["_id"]: r["_sig"] for r in
                 dd.minhash_table(df, "doc_id").collect()}
-    assert col_form == tbl_form
+    assert tbl_form == {i: _ref_minhash(t) for i, t in _REF_DOCS}
     assert tbl_form[3] == [None] * dd.DEFAULT_PERMS
-    assert tbl_form[1] == tbl_form[4]
-
-
-def test_simhash_table_equals_column_form(spark):
-    """The codegen-path fingerprint table must match the HOF Column form
-    exactly, including empty and unicode docs (empty -> fingerprint 0)."""
-    df = spark.createDataFrame(
-        [(1, "a b c a"), (2, "héllo 日本語 café"), (3, ""), (4, "x"),
-         (5, "a b c a")],
-        "doc_id LONG, text STRING",
-    )
-    col_form = {r["doc_id"]: r["sh"] for r in
-                df.select("doc_id", dd.simhash("text").alias("sh")).collect()}
-    tbl_form = {r["_id"]: r["_sh"] for r in
-                dd.simhash_table(df, "doc_id").collect()}
-    assert col_form == tbl_form
-    assert tbl_form[3] == 0
     assert tbl_form[1] == tbl_form[5]
+
+
+def test_simhash_table_equals_python_reference(spark):
+    """The fingerprint table and its Catalyst form equal the plain-Python
+    SimHash, including empty and unicode docs (empty -> fingerprint 0)."""
+    df = spark.createDataFrame(_REF_DOCS, "doc_id LONG, text STRING")
+    want = {i: _ref_simhash(t) for i, t in _REF_DOCS}
+    for table in (dd.simhash_table, dd._simhash_table_catalyst):
+        got = {r["_id"]: r["_sh"] for r in table(df, "doc_id").collect()}
+        assert got == want
+    assert want[3] == 0
+    assert want[1] == want[5]
 
 
 def test_fingerprint_tables_id_semantics(spark):
