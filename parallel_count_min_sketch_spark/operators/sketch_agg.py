@@ -295,18 +295,16 @@ def build_sketch_from_text(df, text_col: str, make_sketch: Callable,
 
 
 def _append_long(df, in_col: str, out_col: str, make_fn: Callable):
-    """``df`` with a BIGINT ``out_col`` appended (replacing any column of
-    that name) in one ``mapInArrow`` pass: ``make_fn()``, called once per
-    task, returns the function from each batch's ``in_col`` Arrow column to
-    int64 numpy. A NULL ``in_col`` gives a NULL ``out_col``; every other
-    column passes through unchanged."""
+    """``df`` with a BIGINT ``out_col`` appended in one ``mapInArrow``
+    pass: ``make_fn()``, called once per task, returns the function from
+    each batch's ``in_col`` Arrow column to int64 numpy. A NULL ``in_col``
+    gives a NULL ``out_col``; every other column passes through
+    unchanged."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     pos = df.columns.index(in_col)
-    keep = [i for i, c in enumerate(df.columns) if c != out_col]
-    names = [df.columns[i] for i in keep] + [out_col]
-    schema = StructType([df.schema.fields[i] for i in keep]
-                        + [StructField(out_col, LongType())])
+    names = df.columns + [out_col]
+    schema = StructType(df.schema.fields + [StructField(out_col, LongType())])
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tune_worker()
@@ -316,18 +314,19 @@ def _append_long(df, in_col: str, out_col: str, make_fn: Callable):
                 continue
             col = batch.column(pos)
             out = anp.array(fn(col), pa.int64(), valid=anp.valid(col))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in keep] + [out], names=names)
+            yield pa.RecordBatch.from_arrays(batch.columns + [out],
+                                             names=names)
 
     return df.mapInArrow(kernel, schema)
 
 
 def with_djb2(df, col: str, out: str = "item_id"):
     """``df`` with a BIGINT ``out`` appended: ``djb2_batch`` of the string
-    column ``col`` (``''`` hashes to 5381, a NULL stays NULL). This is
-    the one Spark-side string hash: sketch builds, probes, Misra-Gries
-    recounts, fingerprint vocabularies and Bloom probes all run it in
-    numpy, never as an interpreted SQL fold."""
+    column ``col`` (``''`` hashes to 5381, a NULL stays NULL). Every
+    Spark-side string hash is ``djb2_batch``: the sketch folds call it
+    directly, and every other string id (CMS probes, Misra-Gries
+    recounts, fingerprint vocabularies, Bloom string keys) comes from
+    this kernel, never from an interpreted SQL fold."""
     return _append_long(df, col, out, lambda: djb2_batch)
 
 

@@ -42,8 +42,7 @@ def with_item_id(df: DataFrame, col: str, *, string_items: bool = False,
                  out: str = "item_id") -> DataFrame:
     """Normalize the item column to BIGINT ids: a cast for integers, djb2
     for strings (cms_update_str analog, src/core/count_min_sketch.c:24-27)
-    by the numpy ``djb2_batch`` kernel (``sketch_agg.with_djb2``, which
-    puts ``out`` last).
+    by the numpy ``djb2_batch`` kernel (``sketch_agg.with_djb2``).
 
     selectExpr, not withColumn: same projection, roughly half the
     construction wall (withColumn's per-call replace-check cost ~25 ms

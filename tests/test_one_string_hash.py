@@ -44,14 +44,12 @@ def test_with_djb2_equals_scalar(spark, texts, partitions):
         assert r["item_id"] == (None if text is None else djb2_py(text))
 
 
-def test_with_djb2_empty_null_and_replace(spark):
+def test_with_djb2_empty_and_null(spark):
     df = _ids_df(spark, ["", None, "héllo 日本語"], 1)
-    got = {r["id"]: r["h"] for r in with_djb2(df, "t", "h").collect()}
-    assert got == {0: DJB2_INIT, 1: None, 2: djb2_py("héllo 日本語")}
-    # an existing column of the output name is replaced, not duplicated
-    replaced = with_djb2(df, "t", "t")
-    assert replaced.columns == ["id", "t"]
-    assert dict(replaced.dtypes)["t"] == "bigint"
+    got = with_djb2(df, "t", "h")
+    assert got.dtypes == [("id", "bigint"), ("t", "string"), ("h", "bigint")]
+    assert {r["id"]: r["h"] for r in got.collect()} \
+        == {0: DJB2_INIT, 1: None, 2: djb2_py("héllo 日本語")}
 
 
 def _executed_plan(df) -> str:
