@@ -174,15 +174,19 @@ def bloom_member_column(df: DataFrame, key_col: str, bloom: BloomFilter, *,
     from ..sketches.hashing import MERSENNE_PRIME
     from .sketch_agg import with_djb2
 
-    words = F.array(*[F.lit(w) for w in _bloom_words(bloom)])
-    tmp = ["_bloom_words_"]
-    out = df.withColumn("_bloom_words_", words)
+    tmp = []
+    out = df
     if string_keys:
+        # before the word array joins the row: the kernel's Arrow rows
+        # carry every column
         out = with_djb2(out, key_col, "_bloom_h_")
         tmp.append("_bloom_h_")
         key_sql = "_bloom_h_"
     else:
         key_sql = f"CAST({key_col} AS BIGINT)"
+    words = F.array(*[F.lit(w) for w in _bloom_words(bloom)])
+    out = out.withColumn("_bloom_words_", words)
+    tmp.append("_bloom_words_")
     out = out.withColumn("_bloom_x_", F.expr(f"pmod({key_sql}, {MERSENNE_PRIME})"))
     tmp.append("_bloom_x_")
     tests = []
