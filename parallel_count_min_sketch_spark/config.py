@@ -111,7 +111,10 @@ def _djb2_step_sql(h: str, u: str, intdiv: str) -> str:
 
 
 def djb2_sql_duckdb(col_expr: str) -> str:
-    """Same byte-exact fold in DuckDB (list_reduce over ord code points)."""
+    """djb2-over-UTF-8-bytes mod LONG_PRIME as DuckDB SQL (list_reduce
+    over ord code points, each expanded to its UTF-8 bytes): the oracles'
+    replay of ``djb2_batch``, equal to it on any unicode input, ``''``
+    included (reference hash: src/core/count_min_sketch.c:14-21)."""
     return (
         f"list_reduce(list_prepend(CAST({DJB2_INIT} AS BIGINT), "
         f"list_transform(range(1, length({col_expr}) + 1), i -> "
