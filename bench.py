@@ -184,10 +184,12 @@ def bench_cms_build(spark, corpus_path: str) -> dict:
     stream of the corpus (text column only — html stays pruned).
 
     Two execution strategies are timed:
-    - sql:   Catalyst plan: JVM explode + distinct-item pre-aggregation,
-             then one numpy mapInArrow kernel (djb2 + bincount) per
-             partition whose nonzero cells a partial/final hash aggregate
-             merges — hash arithmetic runs once per distinct token.
+    - sql:   Catalyst plan: JVM explode, then in the same scan-stage
+             tasks one numpy mapInArrow kernel per partition that
+             collapses each Arrow batch to its distinct tokens, hashes
+             only those (djb2 + weighted bincount), and emits the nonzero
+             cells a partial/final hash aggregate merges — hash arithmetic
+             runs once per batch-distinct token, with one exchange.
     - arrow: mapInArrow numpy partials + fan-in merge — the mergeable
              "UDAF" pattern shared by all sketch kernels.
     A small warmup job first spins up workers / JIT, mirroring a long-lived
@@ -302,7 +304,7 @@ def bench_reference_parity(spark, n_items: int) -> dict:
     # distinct-first plan: the mixture is ~9k distinct values, so a
     # partial/final count-by-value bounds every partition's agg output by
     # the (tiny) cardinality and the hash arithmetic runs once per DISTINCT
-    # item — the same two-phase plan the text build uses. Bit-identical
+    # item (the text build collapses per Arrow batch instead). Bit-identical
     # sketch (sum of per-occurrence weights == per-item totals; asserted).
     from parallel_count_min_sketch_spark.operators.sql_build import cms_table_df
     preagg_runs = []

@@ -563,8 +563,14 @@ def _simhash_arrow(df: DataFrame, id_col: str, text: str = "text", *,
                 {"_id": uids, "_sh": anp.array(fp)})
 
     partials = proj.mapInArrow(fold, out_schema)
+    # _id and _sh are never NULL (the fold raises on a NULL id), so this
+    # filter keeps every row. It makes both branches below read min(_sh)
+    # and filter _id alike (the join infers that filter for its side), so
+    # they plan one partial aggregate and share one Exchange: the fold
+    # kernel runs once.
     agg = partials.groupBy("_id").agg(
-        F.min("_sh").alias("_sh"), F.count(F.lit(1)).alias("_c"))
+        F.min("_sh").alias("_sh"), F.count(F.lit(1)).alias("_c")) \
+        .filter(F.col("_id").isNotNull() & F.col("_sh").isNotNull())
     clean = agg.filter(F.col("_c") == 1).select("_id", "_sh")
     dup_ids = agg.filter(F.col("_c") > 1).select(F.col("_id").alias("__dup_id"))
     dup_src = df.join(F.broadcast(dup_ids),

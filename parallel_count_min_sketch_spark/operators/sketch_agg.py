@@ -33,7 +33,7 @@ _PARTIAL_PA = pa.schema(
     [("partition_id", pa.int32()), ("rows_seen", pa.int64()), ("sketch", pa.binary())]
 )
 
-_CHUNK = 1 << 17
+_CHUNK = 1 << 15
 
 
 def _task_partition_id() -> int:

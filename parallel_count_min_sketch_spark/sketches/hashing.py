@@ -141,10 +141,10 @@ def _djb2_block(data: np.ndarray, offs: np.ndarray, out: np.ndarray) -> None:
     exp -= np.arange(nbytes, dtype=np.int64)
     terms = _POW33[exp]
     terms *= data[first:first + nbytes]
-    terms %= LONG_PRIME
     # segment sums at token starts (np.add.reduceat needs non-empty
-    # segments). Each term < LONG_PRIME (< 2^33) and a segment holds at
-    # most _MAX_TOKEN_LEN of them -> < 2^45, exact in int64.
+    # segments), with no per-byte modulo: each term is 33^e mod p (< 2^33)
+    # times a byte (< 2^8), so < 2^41, and a segment holds at most
+    # _MAX_TOKEN_LEN = 2^12 of them -> < 2^53, exact in int64.
     nonempty = lengths > 0
     seg = np.add.reduceat(terms, starts[nonempty])
     out[nonempty] = (DJB2_INIT * _POW33[lengths[nonempty]] + seg) % LONG_PRIME

@@ -2,18 +2,21 @@
 
 - ``djb2_batch`` hashes in blocks of at most ``hashing._BLOCK_BYTES`` of
   UTF-8; with the bound monkeypatched down to a few bytes it still equals
-  the scalar ``djb2_py`` token by token, and a token over
+  the scalar ``djb2_py`` token by token, the largest UTF-8 bytes at the
+  maximum length stay exact without a per-byte modulo, and a token over
   ``_MAX_TOKEN_LEN`` bytes still raises.
 - ``_arrow_np.token_counts`` tokenizes a text column in slices bounded by
   text bytes. With the slice bound monkeypatched small, every token-count
   kernel (the CMS and HLL text partials, the grouped text partials,
   ``candidate_tokens`` and both outputs of ``fused_sketch_and_candidates``)
   is byte-identical to a one-slice run. The kernels are the real worker
-  functions, captured from ``mapInArrow`` with a stub DataFrame.
+  functions, captured from ``mapInArrow`` with a stub DataFrame, as is
+  the Catalyst string build's cells kernel, which hashes only each
+  batch's distinct tokens.
 - A fresh interpreter with the worker's malloc settings folds an 8 MB
   high-cardinality text batch into a CMS (``token_counts`` +
   ``fold_token_counts``, which hashes with ``djb2_batch``) with a bounded
-  ``VmHWM`` growth.
+  ``VmHWM`` growth, for Zipf and for near-all-distinct tokens.
 """
 
 import functools
@@ -30,7 +33,8 @@ from hypothesis import given, settings, strategies as st
 
 from parallel_count_min_sketch_spark import _arrow_np as anp
 from parallel_count_min_sketch_spark.config import CMSConfig
-from parallel_count_min_sketch_spark.operators import heavy_hitters, sketch_agg
+from parallel_count_min_sketch_spark.operators import (heavy_hitters,
+                                                       sketch_agg, sql_build)
 from parallel_count_min_sketch_spark.sketches import hashing
 from parallel_count_min_sketch_spark.sketches.hashing import djb2_batch, djb2_py
 from parallel_count_min_sketch_spark.sketches.hll import HyperLogLog
@@ -56,6 +60,16 @@ def test_djb2_blocks_equal_scalar(tokens, block, offset, large):
         mp.setattr(hashing, "_BLOCK_BYTES", block)
         got = djb2_batch(arr)
     assert got.tolist() == [djb2_py(t or "") for t in tokens]
+
+
+def test_djb2_largest_bytes_at_max_len_equal_scalar():
+    """The kernel sums a token's terms with no per-byte modulo: 4,096 bytes
+    of ``F4 8F BF BF`` (the largest UTF-8 bytes, at the maximum length)
+    keep every segment sum below 2^53, so the hash stays exact."""
+    top = "\U0010FFFF" * 1024
+    assert len(top.encode("utf-8")) == hashing._MAX_TOKEN_LEN
+    for tokens in ([top], ["a", top, "", "日本", top, "zz", None]):
+        assert djb2_batch(tokens).tolist() == [djb2_py(t or "") for t in tokens]
 
 
 def test_djb2_token_over_max_len_raises():
@@ -130,6 +144,33 @@ def test_sliced_kernels_equal_one_slice(name, monkeypatch):
     assert sliced.equals(whole)
     if name == "fused_sketch_and_candidates":  # both outputs are present
         assert set(whole.column("kind").to_pylist()) == {0, 1}
+
+
+def test_string_cells_hash_only_batch_distinct_tokens(monkeypatch):
+    """The Catalyst string build's cells kernel collapses each Arrow batch
+    before hashing: ``djb2_batch`` sees each batch's distinct non-NULL
+    tokens once, and the cells equal a per-occurrence CMS build."""
+    batches = [["a", "b", "a", None, "a", "日本", "b"], ["b", "b", None],
+               [None], ["日本", "c", "c"]]
+    seen = []
+
+    def recording_djb2(arr):
+        seen.append(arr.to_pylist())
+        return djb2_batch(arr)
+
+    monkeypatch.setattr(sketch_agg, "djb2_batch", recording_djb2)
+    kernel = sql_build._string_cells(_StubDF(), CFG, weighted=False)
+    out = pa.Table.from_batches(list(kernel(
+        pa.record_batch([pa.array(b, pa.string())], names=["tok"])
+        for b in batches)))
+    assert [sorted(s) for s in seen] == [["a", "b", "日本"], ["b"],
+                                          ["c", "日本"]]
+    exp = CFG.new_sketch()
+    exp.update_batch(djb2_batch([t for b in batches for t in b if t is not None]))
+    got = CFG.new_sketch()
+    got.table[out.column("depth_row").to_numpy(),
+              out.column("bucket").to_numpy()] = out.column("counter").to_numpy()
+    assert np.array_equal(got.table, exp.table)
 
 
 def test_token_counts_slices_grow_on_repetitive_text(monkeypatch):
@@ -208,6 +249,29 @@ _GUARD = textwrap.dedent("""
                     reason="needs /proc/self/status (Linux)")
 def test_token_fold_heap_growth_is_bounded_by_string_bytes():
     out = subprocess.run([sys.executable, "-c", _GUARD.format(root=str(ROOT))],
+                         capture_output=True, text=True, timeout=300, check=True)
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["tokens"] == 930_000 + 100 and got["text_mb"] > 7.9
+    assert got["growth_mb"] < 24, got
+
+
+# The same fold over near-all-distinct text: uniform ids over 400k words
+# leave most of each slice distinct, so ``value_counts`` and the CMS update
+# over ``sketch_agg._CHUNK`` items carry nearly every token.
+_ZIPF_DRAW = ("n_tok, width, chunk, vocab = 930_000, 9, 1 << 14, 2_000_000",
+              "ids = np.floor(np.exp(u * np.log(vocab))).astype(np.int64) - 1")
+_UNIFORM_DRAW = ("n_tok, width, chunk, vocab = 930_000, 9, 1 << 14, 400_000",
+                 "ids = np.floor(u * vocab).astype(np.int64)")
+
+
+@pytest.mark.skipif(not Path("/proc/self/status").exists(),
+                    reason="needs /proc/self/status (Linux)")
+def test_near_distinct_token_fold_heap_growth_is_bounded():
+    guard = _GUARD
+    for zipf, uniform in zip(_ZIPF_DRAW, _UNIFORM_DRAW):
+        assert guard.count(zipf) == 1
+        guard = guard.replace(zipf, uniform)
+    out = subprocess.run([sys.executable, "-c", guard.format(root=str(ROOT))],
                          capture_output=True, text=True, timeout=300, check=True)
     got = json.loads(out.stdout.strip().splitlines()[-1])
     assert got["tokens"] == 930_000 + 100 and got["text_mb"] > 7.9

@@ -5,7 +5,7 @@
   (5381) and NULL (stays NULL), under 1 and 3 partitions.
 - The executed plans of the Misra-Gries recounts and of the SimHash
   fallback hold no ``lambdafunction`` (no interpreted SQL fold) and hash
-  in a ``MapInArrow``.
+  in a ``MapInArrow``; SimHash's doc-local kernel runs once per query.
 - The Misra-Gries candidate relation is a JVM local scan: no
   ``PythonRDD`` anywhere in the query's lineage.
 """
@@ -87,6 +87,23 @@ def test_simhash_fallback_hashes_in_numpy(spark):
                for line in final.splitlines()), final
     got = {r["_id"]: r["_sh"] for r in fps.collect()}
     assert got[1] == got[2]
+
+
+def test_simhash_kernel_runs_once(spark):
+    """The ``clean`` and fallback branches of ``_simhash_arrow`` read the
+    per-id aggregate through one Exchange, so the tokenize + vote kernel
+    (``fold``) appears once in the executed plan."""
+    from parallel_count_min_sketch_spark.operators.dedup import _simhash_arrow
+
+    df = spark.createDataFrame(
+        [(1, "a b"), (1, "c d"), (2, "a b c d"), (3, "héllo")],
+        "doc_id LONG, text STRING")
+    fps = _simhash_arrow(df, "doc_id")
+    final = _executed_plan(fps).split("== Initial Plan ==")[0]
+    assert final.count("MapInArrow fold") == 1, final
+    assert "ReusedExchange" in final, final
+    got = {r["_id"]: r["_sh"] for r in fps.collect()}
+    assert sorted(got) == [1, 2, 3] and got[1] == got[2]
 
 
 def _rdd_scan_lineages(df) -> list[str]:

@@ -126,16 +126,21 @@ def test_partials_single_pass_no_shuffle_before_udf(spark, pages_path):
     assert "Exchange" not in below, f"shuffle below the partial UDF:\n{plan}"
 
 
-def test_sql_build_preaggregates_distinct_items(spark, pages_path):
-    """String builds must run the djb2/bucket arithmetic once per DISTINCT
-    item: the plan carries TWO partial/final aggregate pairs — the raw-token
-    pre-aggregation feeding the bucket aggregation — so hash work scales
-    with vocabulary, not occurrences."""
+def test_sql_string_build_folds_in_the_scan_stage(spark, pages_path):
+    """String builds fold each partition in the scan stage: the executed
+    plan has no hash aggregate keyed on the token and exactly one
+    Exchange, which carries the (depth_row, bucket) cells, with the cells
+    kernel below it over scan -> explode -> filter."""
     df = spark.read.parquet(pages_path)
     toks = df.select(F.explode(F.split("text", " ")).alias("tok")).filter("tok != ''")
-    plan = _plan(cms_table_df(toks, "tok", CFG, string_items=True), execute=True)
-    assert plan.count("HashAggregate") >= 4, plan
-    assert plan.count("partial_sum") >= 2, plan
+    final = _plan(cms_table_df(toks, "tok", CFG, string_items=True),
+                  execute=True).split("== Initial Plan ==")[0]
+    assert not re.search(r"HashAggregate\(keys=\[tok#", final), final
+    exchanges = re.findall(r"(?<![A-Za-z])Exchange [^\n]*", final)
+    assert len(exchanges) == 1, final
+    assert exchanges[0].startswith("Exchange hashpartitioning(depth_row#"), final
+    below = final[final.index(exchanges[0]):]
+    assert "MapInArrow cells" in below and "FileScan parquet" in below, final
 
 
 def test_sql_string_build_hashes_in_one_arrow_kernel(spark, pages_path):
