@@ -116,8 +116,12 @@ def cms_table_df(df: DataFrame, item_col: str, cfg: CMSConfig, *,
     distinct-first build of the ~9k-value reference mixture), and for
     callers that ask for that plan explicitly. For string items the
     in-stage batch collapse already bounds the hash work, so the default
-    skips the extra exchange. The resulting matrix is bit-identical
-    either way: sum of per-occurrence weights == per-item weight totals.
+    skips the extra exchange; every occurrence still crosses the Arrow
+    boundary, though, so a stream over a few dozen distinct strings
+    builds faster with ``pre_aggregate=True`` (0.41 s against 0.47 s for
+    270,704 tokens over 31 words, ``local[4]``, 4 vCPUs). The resulting
+    matrix is bit-identical either way: sum of per-occurrence weights ==
+    per-item weight totals.
 
     ``row_strategy`` picks the physical shape of the per-occurrence
     integer build (bit-identical output either way; string items have one

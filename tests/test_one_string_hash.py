@@ -70,17 +70,22 @@ def test_mg_recounts_hash_in_numpy(spark, sf_dir):
         mg_grouped_frequent_tokens(docs, "lang", "text", 512, 0.02))
 
 
-def test_simhash_fallback_hashes_in_numpy(spark):
-    """Four rows in four partitions: id 1's rows span Arrow batches, so
-    the Catalyst fallback of ``_simhash_arrow`` runs: its vocabulary ids
-    (``_tid``) come out of a MapInArrow of the final plan."""
+def _split_id_fingerprints(spark):
+    """``_simhash_arrow`` over four rows in four partitions: id 1's rows
+    span Arrow batches, so its Catalyst fallback runs."""
     from parallel_count_min_sketch_spark.operators.dedup import _simhash_arrow
 
     df = spark.createDataFrame(
         [(1, "a b"), (1, "c d"), (2, "a b c d"), (3, "héllo")],
         "doc_id LONG, text STRING")
     assert df.rdd.getNumPartitions() == 4
-    fps = _simhash_arrow(df, "doc_id")
+    return _simhash_arrow(df, "doc_id")
+
+
+def test_simhash_fallback_hashes_in_numpy(spark):
+    """The Catalyst fallback's vocabulary ids (``_tid``) come out of a
+    MapInArrow of the final plan."""
+    fps = _split_id_fingerprints(spark)
     _assert_numpy_hashed(fps)
     final = _executed_plan(fps).split("== Initial Plan ==")[0]
     assert any("MapInArrow" in line and "_tid" in line
@@ -93,12 +98,7 @@ def test_simhash_kernel_runs_once(spark):
     """The ``clean`` and fallback branches of ``_simhash_arrow`` read the
     per-id aggregate through one Exchange, so the tokenize + vote kernel
     (``fold``) appears once in the executed plan."""
-    from parallel_count_min_sketch_spark.operators.dedup import _simhash_arrow
-
-    df = spark.createDataFrame(
-        [(1, "a b"), (1, "c d"), (2, "a b c d"), (3, "héllo")],
-        "doc_id LONG, text STRING")
-    fps = _simhash_arrow(df, "doc_id")
+    fps = _split_id_fingerprints(spark)
     final = _executed_plan(fps).split("== Initial Plan ==")[0]
     assert final.count("MapInArrow fold") == 1, final
     assert "ReusedExchange" in final, final

@@ -133,8 +133,7 @@ def test_sql_string_build_folds_in_the_scan_stage(spark, pages_path):
     kernel below it over scan -> explode -> filter."""
     df = spark.read.parquet(pages_path)
     toks = df.select(F.explode(F.split("text", " ")).alias("tok")).filter("tok != ''")
-    final = _plan(cms_table_df(toks, "tok", CFG, string_items=True),
-                  execute=True).split("== Initial Plan ==")[0]
+    final = _final_plan(cms_table_df(toks, "tok", CFG, string_items=True))
     assert not re.search(r"HashAggregate\(keys=\[tok#", final), final
     exchanges = re.findall(r"(?<![A-Za-z])Exchange [^\n]*", final)
     assert len(exchanges) == 1, final
