@@ -185,11 +185,9 @@ def bench_cms_build(spark, corpus_path: str) -> dict:
 
     Two execution strategies are timed:
     - sql:   Catalyst plan: JVM explode, then in the same scan-stage
-             tasks one numpy mapInArrow kernel per partition that
-             collapses each Arrow batch to its distinct tokens, hashes
-             only those (djb2 + weighted bincount), and emits the nonzero
-             cells a partial/final hash aggregate merges — hash arithmetic
-             runs once per batch-distinct token, with one exchange.
+             tasks one numpy mapInArrow kernel per partition (djb2 +
+             bincount of every token) that emits the nonzero cells a
+             partial/final hash aggregate merges over one exchange.
     - arrow: mapInArrow numpy partials + fan-in merge — the mergeable
              "UDAF" pattern shared by all sketch kernels.
     A small warmup job first spins up workers / JIT, mirroring a long-lived
@@ -304,8 +302,8 @@ def bench_reference_parity(spark, n_items: int) -> dict:
     # distinct-first plan: the mixture is ~9k distinct values, so a
     # partial/final count-by-value bounds every partition's agg output by
     # the (tiny) cardinality and the hash arithmetic runs once per DISTINCT
-    # item (the text build collapses per Arrow batch instead). Bit-identical
-    # sketch (sum of per-occurrence weights == per-item totals; asserted).
+    # item. Bit-identical sketch (sum of per-occurrence weights ==
+    # per-item totals; asserted).
     from parallel_count_min_sketch_spark.operators.sql_build import cms_table_df
     preagg_runs = []
     for _ in range(BUILD_RUNS):

@@ -6,11 +6,10 @@ map-side partial aggregation (the per-partition partial sketch), a shuffle
 of at most depth*width rows per partition, and whole-stage codegen.
 Integer items stay in the JVM end to end. String items are folded in the
 scan stage: one numpy ``mapInArrow`` kernel, in the same tasks as the
-scan, collapses each Arrow batch to its distinct tokens, hashes only those
-with djb2 and folds them into a per-partition sketch (the reference's
-per-rank partial, src/mpi/mpiV2.c:131-140), whose nonzero cells are the
-only rows the partial/final ``sum`` shuffles. Queries are broadcast joins
-against the resulting tiny (depth x width) table.
+scan, hashes each token with djb2 and folds it into a per-partition sketch
+(the reference's per-rank partial, src/mpi/mpiV2.c:131-140), whose nonzero
+cells are the only rows the partial/final ``sum`` shuffles. Queries are
+broadcast joins against the resulting tiny (depth x width) table.
 
 This is the "let Catalyst pick the physical strategy" counterpart of the
 Arrow kernel in ``agg.py``; both compute the same matrix (tests assert
@@ -32,7 +31,7 @@ from .. import _arrow_np as anp
 from ..config import CMSConfig
 from ..memtune import tune_worker
 from ..sketches.cms import CountMinSketch
-from .sketch_agg import fold_batches, fold_token_counts, with_djb2
+from .sketch_agg import fold_batches, with_djb2
 
 CELLS_SCHEMA = "depth_row INT, bucket BIGINT, counter BIGINT"
 _CELLS_PA = pa.schema([("depth_row", pa.int32()), ("bucket", pa.int64()),
@@ -58,26 +57,13 @@ def with_item_id(df: DataFrame, col: str, *, string_items: bool = False,
 
 def _string_cells(df: DataFrame, cfg: CMSConfig, weighted: bool) -> DataFrame:
     """The nonzero cells of one numpy CMS per partition of ``df``'s
-    ``(item[, weight])`` columns, as CELLS_SCHEMA rows. NULL items and NULL
-    weights are dropped and a negative weight fails, as on the Arrow rail.
-
-    Unweighted, each Arrow batch is collapsed to ``(distinct token,
-    count)`` with ``value_counts`` and only the distinct tokens are hashed
-    (``fold_token_counts``): exact, because counter additions commute.
-    Weighted rows fold one by one (``fold_batches``), so each input
-    weight is checked."""
+    ``(item[, weight])`` columns, as CELLS_SCHEMA rows: the Arrow rail's
+    fold (``sketch_agg.fold_batches``), so NULL items and NULL weights are
+    dropped and a negative weight fails."""
     def cells(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
-
         tune_worker()
         sk = cfg.new_sketch()
-        if weighted:
-            fold_batches(sk, batches, weighted=True, string_items=True)
-        else:
-            for batch in batches:
-                vc = pc.value_counts(batch.column(0).drop_null())
-                fold_token_counts(sk, vc.field("values"),
-                                  anp.values(vc.field("counts"), np.int64))
+        fold_batches(sk, batches, weighted=weighted, string_items=True)
         j, k = np.nonzero(sk.table)
         yield pa.RecordBatch.from_arrays(
             [anp.array(j, pa.int32()), anp.array(k), anp.array(sk.table[j, k])],
@@ -96,32 +82,22 @@ def cms_table_df(df: DataFrame, item_col: str, cfg: CMSConfig, *,
     ``cells_to_sketch``).
 
     String items are folded in the scan stage: one ``mapInArrow`` kernel
-    (``_string_cells``) runs in the scan's tasks, collapses each Arrow
-    batch to its distinct tokens, hashes only those (``djb2_batch``) and
-    folds them into a ``CountMinSketch`` with a weighted bincount (the
-    Arrow rail's fold); only its nonzero cells cross the one Exchange,
-    into a partial/final ``sum``. Hash work thus scales with each batch's
-    vocabulary, not with occurrences, without a JVM pre-aggregate. NULL
-    items and NULL weights are dropped and a negative input weight raises,
-    as on the Arrow rail (under ``pre_aggregate`` the aggregate checks each
-    weight before summing). Integer items stay pure JVM with SQL
-    semantics: a NULL item lands in a NULL bucket (the DuckDB oracles
-    replay the same SQL).
+    (``_string_cells``) runs in the scan's tasks, hashes every occurrence
+    (``djb2_batch``) and folds it into a ``CountMinSketch`` with a weighted
+    bincount (the Arrow rail's fold); only its nonzero cells cross the one
+    Exchange, into a partial/final ``sum``. NULL items and NULL weights
+    are dropped and a negative input weight raises, as on the Arrow rail.
+    Integer items stay pure JVM with SQL semantics: a NULL item lands in a
+    NULL bucket (the DuckDB oracles replay the same SQL).
 
-    ``pre_aggregate=True`` first collapses the whole stream to (item,
-    total_weight) with a JVM hash aggregate and an extra exchange, so the
-    hash and bucket arithmetic run once per DISTINCT item of the input.
-    It pays where that arithmetic runs per occurrence over a small
-    vocabulary, i.e. integer items with heavy repetition (``bench.py``'s
-    distinct-first build of the ~9k-value reference mixture), and for
-    callers that ask for that plan explicitly. For string items the
-    in-stage batch collapse already bounds the hash work, so the default
-    skips the extra exchange; every occurrence still crosses the Arrow
-    boundary, though, so a stream over a few dozen distinct strings
-    builds faster with ``pre_aggregate=True`` (0.41 s against 0.47 s for
-    270,704 tokens over 31 words, ``local[4]``, 4 vCPUs). The resulting
-    matrix is bit-identical either way: sum of per-occurrence weights ==
-    per-item weight totals.
+    ``pre_aggregate=True`` (integer items) first collapses the stream to
+    (item, total_weight) with a JVM hash aggregate and an extra exchange,
+    so the bucket arithmetic runs once per DISTINCT item instead of once
+    per occurrence: it pays on heavily repeated items (``bench.py``'s
+    distinct-first build of the ~9k-value reference mixture). The
+    resulting matrix is bit-identical either way: sum of per-occurrence
+    weights == per-item weight totals. String items have one build and
+    ignore it.
 
     ``row_strategy`` picks the physical shape of the per-occurrence
     integer build (bit-identical output either way; string items have one
@@ -143,19 +119,15 @@ def cms_table_df(df: DataFrame, item_col: str, cfg: CMSConfig, *,
     if row_strategy not in ("explode", "rescan"):
         raise ValueError(f"row_strategy must be explode|rescan, got {row_strategy!r}")
     sel = df.select(item_col, *([weight_col] if weight_col else []))
-    if pre_aggregate:
-        w_in = (f"CAST(`{weight_col}` AS BIGINT)" if weight_col
-                else "CAST(1 AS BIGINT)")
-        if weight_col and string_items:
-            # the kernel sees only the sums: check each input weight here
-            w_in = (f"IF({w_in} < 0, raise_error('negative weights are "
-                    f"not allowed in sketch builds'), {w_in})")
-        sel = sel.groupBy(item_col).agg(F.expr(f"sum({w_in}) AS __pcms_w"))
-        weight_col = "__pcms_w"
     if string_items:
         return (_string_cells(sel, cfg, weighted=bool(weight_col))
                 .groupBy("depth_row", "bucket")
                 .agg(F.sum("counter").alias("counter")))
+    if pre_aggregate:
+        w_in = (f"CAST(`{weight_col}` AS BIGINT)" if weight_col
+                else "CAST(1 AS BIGINT)")
+        sel = sel.groupBy(item_col).agg(F.expr(f"sum({w_in}) AS __pcms_w"))
+        weight_col = "__pcms_w"
     base = with_item_id(sel, item_col)
     # single parsed projection strings below (not per-depth Column
     # chains): same analyzed plan, ~35% less construction wall per call

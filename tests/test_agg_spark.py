@@ -92,6 +92,19 @@ def test_pre_aggregate_plan_is_bit_identical(spark, items_df):
             == table(sdf, string_items=True, pre_aggregate=False))
 
 
+def test_string_build_checks_each_weight_under_pre_aggregate(spark):
+    """String items have one build: with ``pre_aggregate=True`` the kernel
+    still folds row by row, so a negative weight fails even where every
+    item's total is non-negative."""
+    from parallel_count_min_sketch_spark.operators.sql_build import cms_table_df
+
+    df = spark.createDataFrame([("a", -1), ("a", 2), ("b", 1)],
+                               "item STRING, w BIGINT")
+    with pytest.raises(Exception, match="negative weights"):
+        cms_table_df(df, "item", CFG, weight_col="w", string_items=True,
+                     pre_aggregate=True).collect()
+
+
 def test_rescan_strategy_is_bit_identical(spark, items_df):
     """The rescan per-occurrence plan (depth unioned single-bucket groupBys,
     no posexplode) must produce the same matrix as the explode plan — for

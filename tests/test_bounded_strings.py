@@ -10,9 +10,7 @@
   kernel (the CMS and HLL text partials, the grouped text partials,
   ``candidate_tokens`` and both outputs of ``fused_sketch_and_candidates``)
   is byte-identical to a one-slice run. The kernels are the real worker
-  functions, captured from ``mapInArrow`` with a stub DataFrame, as is
-  the Catalyst string build's cells kernel, which hashes only each
-  batch's distinct tokens.
+  functions, captured from ``mapInArrow`` with a stub DataFrame.
 - A fresh interpreter with the worker's malloc settings folds an 8 MB
   high-cardinality text batch into a CMS (``token_counts`` +
   ``fold_token_counts``, which hashes with ``djb2_batch``) with a bounded
@@ -33,8 +31,7 @@ from hypothesis import given, settings, strategies as st
 
 from parallel_count_min_sketch_spark import _arrow_np as anp
 from parallel_count_min_sketch_spark.config import CMSConfig
-from parallel_count_min_sketch_spark.operators import (heavy_hitters,
-                                                       sketch_agg, sql_build)
+from parallel_count_min_sketch_spark.operators import heavy_hitters, sketch_agg
 from parallel_count_min_sketch_spark.sketches import hashing
 from parallel_count_min_sketch_spark.sketches.hashing import djb2_batch, djb2_py
 from parallel_count_min_sketch_spark.sketches.hll import HyperLogLog
@@ -144,33 +141,6 @@ def test_sliced_kernels_equal_one_slice(name, monkeypatch):
     assert sliced.equals(whole)
     if name == "fused_sketch_and_candidates":  # both outputs are present
         assert set(whole.column("kind").to_pylist()) == {0, 1}
-
-
-def test_string_cells_hash_only_batch_distinct_tokens(monkeypatch):
-    """The Catalyst string build's cells kernel collapses each Arrow batch
-    before hashing: ``djb2_batch`` sees each batch's distinct non-NULL
-    tokens once, and the cells equal a per-occurrence CMS build."""
-    batches = [["a", "b", "a", None, "a", "日本", "b"], ["b", "b", None],
-               [None], ["日本", "c", "c"]]
-    seen = []
-
-    def recording_djb2(arr):
-        seen.append(arr.to_pylist())
-        return djb2_batch(arr)
-
-    monkeypatch.setattr(sketch_agg, "djb2_batch", recording_djb2)
-    kernel = sql_build._string_cells(_StubDF(), CFG, weighted=False)
-    out = pa.Table.from_batches(list(kernel(
-        pa.record_batch([pa.array(b, pa.string())], names=["tok"])
-        for b in batches)))
-    assert [sorted(s) for s in seen] == [["a", "b", "日本"], ["b"],
-                                          ["c", "日本"]]
-    exp = CFG.new_sketch()
-    exp.update_batch(djb2_batch([t for b in batches for t in b if t is not None]))
-    got = CFG.new_sketch()
-    got.table[out.column("depth_row").to_numpy(),
-              out.column("bucket").to_numpy()] = out.column("counter").to_numpy()
-    assert np.array_equal(got.table, exp.table)
 
 
 def test_token_counts_slices_grow_on_repetitive_text(monkeypatch):
