@@ -1,8 +1,9 @@
-"""Per-process set-up for Python workers: ``tune_worker()``.
+"""Per-process and per-task set-up for Python workers: ``tune_worker()``.
 
 Every function the package hands to Spark as Python task code calls
 ``tune_worker()`` first (``tests/test_worker_hook.py`` checks this). It
-fixes two per-process costs, each once per worker process:
+fixes two per-process costs, each once per worker process, and one
+per-task cost, on every call inside a Spark task:
 
 - **Allocator thresholds.** In slow-page-fault sandboxes, freshly mmap'd
   pages fault at ~20 MB/s (Firecracker lazy faulting), while warm memory
@@ -39,6 +40,23 @@ fixes two per-process costs, each once per worker process:
   again; a changed or new archive still is, so ``addPyFile`` keeps
   working. It is installed only inside a Spark task (never in the
   driver) and only before 3.13, where invalidation became lazy.
+- **Delayed-ACK stall (per task).** The JVM writes a task's input to the
+  worker over a loopback TCP connection, and sends its last small
+  segment under Nagle's algorithm: it waits until the worker ACKs the
+  previous one. Linux delays that ACK by its 40 ms minimum once the
+  connection looks interactive, so a small task's input arrives 40 ms
+  late. The hook sets ``TCP_QUICKACK`` on the worker's end, which sends
+  the pending ACK at once. The option is a per-socket flag that Linux
+  clears on its own, so the hook sets it again for every task; the
+  connection's fd is found once per process (a reused worker keeps one
+  connection for its life) by scanning ``/proc/self/fd`` for a connected
+  TCP socket. In a one-task ``mapInArrow`` over 10 rows, the kernel's
+  input read fell from 40.6 ms to 1.4 ms (median of 15 runs,
+  ``local[4]``, 4 vCPUs). It does nothing without ``socket.TCP_QUICKACK``
+  (non-Linux) or over a Unix-socket connection
+  (``spark.python.unix.domain.socket.enabled``, which avoids the stall
+  itself), sets no option on any other fd, and ignores a failing
+  ``setsockopt``; it changes no machine setting.
 
 A third per-process cost is left to the kernels themselves: importing
 pandas (about 0.5 s and 30 MB per fresh worker), which pyarrow does from
@@ -51,26 +69,32 @@ still runs.
 from __future__ import annotations
 
 import os
+import socket
+import stat
 import sys
 
 _TUNED = False
 _ZIP_GUARDED = False
+_JVM_FD: int | None = None  # the worker's TCP connection to the JVM; -1: none
 
 _M_TRIM_THRESHOLD = -1
 _M_MMAP_THRESHOLD = -3
 
 
 def tune_worker() -> None:
-    """Idempotent per-process hook; call it first in every task function."""
+    """Per-task hook, idempotent per process; call it first in every task
+    function."""
     global _TUNED
     if not _TUNED:
         _TUNED = True
         _set_malloc_thresholds()
-    if not _ZIP_GUARDED and sys.version_info < (3, 13):
-        from pyspark import TaskContext
+    from pyspark import TaskContext
 
-        if TaskContext.get() is not None:
-            _guard_zip_invalidation()
+    if TaskContext.get() is None:  # the driver
+        return
+    if not _ZIP_GUARDED and sys.version_info < (3, 13):
+        _guard_zip_invalidation()
+    _quickack_jvm_connection()
 
 
 def _set_malloc_thresholds(threshold: int = 1 << 30) -> None:
@@ -120,3 +144,62 @@ def _guard_zip_invalidation() -> None:
     invalidate_caches.__doc__ = reread.__doc__
     zipimport.zipimporter.invalidate_caches = invalidate_caches
     _ZIP_GUARDED = True
+
+
+def _quickack_jvm_connection() -> None:
+    """Set ``TCP_QUICKACK`` on the worker's TCP connection to the JVM, which
+    sends the ACK the kernel is delaying and so releases the segment the
+    JVM holds back under Nagle's algorithm. Linux clears quick-ack mode on
+    its own, so this runs once per task. No-op without ``TCP_QUICKACK``
+    (non-Linux) or without a TCP connection (a Unix-socket session)."""
+    global _JVM_FD
+    quickack = getattr(socket, "TCP_QUICKACK", None)
+    if quickack is None:
+        return
+    if _JVM_FD is None:
+        _JVM_FD = _tcp_connection_fd()
+    if _JVM_FD < 0:
+        return
+    try:
+        sock = socket.socket(fileno=_JVM_FD)
+    except OSError:  # the fd was closed
+        return
+    try:
+        if _is_tcp_connection(sock):
+            sock.setsockopt(socket.IPPROTO_TCP, quickack, 1)
+    except OSError:
+        pass
+    finally:
+        sock.detach()  # the fd belongs to the worker
+
+
+def _is_tcp_connection(sock: socket.socket) -> bool:
+    return (sock.family in (socket.AF_INET, socket.AF_INET6)
+            and sock.type == socket.SOCK_STREAM
+            and not sock.getsockopt(socket.SOL_SOCKET, socket.SO_ACCEPTCONN))
+
+
+def _tcp_connection_fd() -> int:
+    """The lowest fd of this process that is a connected TCP socket, or -1.
+    A Python worker's only one is its connection to the JVM (the daemon
+    closes its listening socket in the forked worker)."""
+    try:
+        fds = sorted(int(fd) for fd in os.listdir("/proc/self/fd"))
+    except OSError:
+        return -1
+    for fd in fds:
+        try:
+            if not stat.S_ISSOCK(os.fstat(fd).st_mode):
+                continue
+            sock = socket.socket(fileno=fd)
+        except OSError:
+            continue
+        try:
+            if _is_tcp_connection(sock):
+                sock.getpeername()  # raises unless connected
+                return fd
+        except OSError:
+            pass
+        finally:
+            sock.detach()
+    return -1

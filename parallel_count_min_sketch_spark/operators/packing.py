@@ -26,6 +26,7 @@ so a DuckDB window replays them exactly.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 
@@ -67,8 +68,9 @@ def concat_split_packing(df: DataFrame, order_col: str, ntok_col: str,
     for row in sorted(totals, key=lambda r: r["_pid"]):
         offsets[row["_pid"]] = acc
         acc += int(row["_tot"] or 0)
-    off_df = parts.sparkSession.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid INT, _off LONG")
+    off_df = parts.sparkSession.createDataFrame(pa.table({
+        "_pid": pa.array(list(offsets), pa.int32()),
+        "_off": pa.array(list(offsets.values()), pa.int64())}))
     w = (Window.partitionBy("_pid").orderBy(order_col)
          .rowsBetween(Window.unboundedPreceding, -1))
     local = F.coalesce(F.sum(F.col(ntok_col).cast("long")).over(w),

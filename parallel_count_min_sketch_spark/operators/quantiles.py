@@ -22,6 +22,7 @@ from __future__ import annotations
 import math
 from typing import Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 
@@ -46,9 +47,10 @@ def exact_discrete_quantiles(df: DataFrame, col: str, qs: Sequence[float],
         .withColumn("lo", F.col("cum") - F.col("c"))
     )
     spark = df.sparkSession
-    ranks = spark.createDataFrame(
-        [(float(q), rank_of_quantile(q, n)) for q in qs], "q DOUBLE, r BIGINT"
-    )
+    ranks = spark.createDataFrame(pa.table({
+        "q": pa.array([float(q) for q in qs], pa.float64()),
+        "r": pa.array([rank_of_quantile(q, n) for q in qs], pa.int64()),
+    }))
     hit = cum.join(
         F.broadcast(ranks), (F.col("r") > F.col("lo")) & (F.col("r") <= F.col("cum"))
     ).select("q", "r", "x")
@@ -56,50 +58,10 @@ def exact_discrete_quantiles(df: DataFrame, col: str, qs: Sequence[float],
     return [(float(q), got[float(q)][0], float(got[float(q)][1])) for q in qs]
 
 
-def exact_discrete_quantiles_grouped(
-    df: DataFrame, group_col: str, col: str, qs: Sequence[float],
-) -> dict[str, list[tuple[float, int, float]]]:
-    """Per-group inverse-CDF discrete quantiles: {group: [(q, rank, value)]}.
-    Same shape as ``exact_discrete_quantiles`` with the histogram, cumsum
-    window, and rank join all partitioned by the group — one value-histogram
-    shuffle regardless of group count."""
-    vals = df.select(F.col(group_col).alias("g"), F.col(col).alias("x")) \
-        .filter(F.col("x").isNotNull() & F.col("g").isNotNull())
-    # the histogram already carries the per-group n (sum of counts) — cache
-    # it so deriving n does NOT rescan the raw table
-    cnts = vals.groupBy("g", "x").agg(F.count("*").alias("c")).cache()
-    ns = {r["g"]: r["n"] for r in
-          cnts.groupBy("g").agg(F.sum("c").alias("n")).collect()}
-    w = Window.partitionBy("g").orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
-    cum = (
-        cnts.withColumn("cum", F.sum("c").over(w))
-        .withColumn("lo", F.col("cum") - F.col("c"))
-    )
-    spark = df.sparkSession
-    rank_rows = [
-        (g, float(q), rank_of_quantile(q, n))
-        for g, n in ns.items() for q in qs
-    ]
-    ranks = spark.createDataFrame(rank_rows, "g STRING, q DOUBLE, r BIGINT")
-    hit = cum.join(
-        F.broadcast(ranks),
-        ["g"],
-    ).filter((F.col("r") > F.col("lo")) & (F.col("r") <= F.col("cum"))) \
-        .select("g", "q", "r", "x")
-    out: dict[str, list[tuple[float, int, float]]] = {g: [] for g in ns}
-    got = {(row["g"], row["q"]): (row["r"], row["x"]) for row in hit.collect()}
-    cnts.unpersist()
-    for g in ns:
-        for q in qs:
-            r, x = got[(g, float(q))]
-            out[g].append((float(q), int(r), float(x)))
-    return out
-
-
 def exact_discrete_quantiles_grouped_df(
     df: DataFrame, group_col: str, col: str, qs: Sequence[float],
 ) -> DataFrame:
-    """Fully-lazy DataFrame form of ``exact_discrete_quantiles_grouped``:
+    """Per-group inverse-CDF discrete quantiles, fully lazy:
     DataFrame[g, q_idx, q, q_pct, n, exact_disc_value] with NOTHING
     collected to the driver — per-group n and inverse-CDF ranks are
     computed as (tiny, broadcast) DataFrames so the shape survives 10k+
@@ -114,10 +76,11 @@ def exact_discrete_quantiles_grouped_df(
         cnts.withColumn("cum", F.sum("c").over(w))
         .withColumn("lo", F.col("cum") - F.col("c"))
     )
-    qmap = df.sparkSession.createDataFrame(
-        [(i, float(q), int(round(q * 100))) for i, q in enumerate(qs)],
-        "q_idx INT, q DOUBLE, q_pct BIGINT",
-    )
+    qmap = df.sparkSession.createDataFrame(pa.table({
+        "q_idx": pa.array(range(len(qs)), pa.int32()),
+        "q": pa.array([float(q) for q in qs], pa.float64()),
+        "q_pct": pa.array([int(round(q * 100)) for q in qs], pa.int64()),
+    }))
     ranks = ns.crossJoin(F.broadcast(qmap)).withColumn(
         "r", F.greatest(F.lit(1).cast("bigint"), F.ceil(F.col("q") * F.col("n"))))
     return (

@@ -35,6 +35,7 @@ import json
 import os
 from typing import Callable, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from .sketch_agg import fold_blobs
@@ -101,10 +102,13 @@ class SketchStore:
         read back as STRING (partition inference would make ISO days DATE
         and batch ids INT). A key predicate on it is a partition filter.
         A store with no write yet reads as empty."""
+        if not os.path.exists(self.data_dir):
+            return spark.createDataFrame(pa.schema(
+                [(k, pa.string()) for k in self.columns]
+                + [("rows_seen", pa.int64()), ("sketch", pa.binary())]
+            ).empty_table())
         schema = ", ".join([f"`{k}` STRING" for k in self.columns]
                            + ["rows_seen BIGINT", "sketch BINARY"])
-        if not os.path.exists(self.data_dir):
-            return spark.createDataFrame([], schema)
         return spark.read.schema(schema).parquet(self.data_dir)
 
     def fold(self, spark, where=None):

@@ -1,4 +1,4 @@
-"""The per-process worker hook ``memtune.tune_worker()``.
+"""The worker hook ``memtune.tune_worker()``.
 
 - Every function the package hands to Spark as Python task code calls it
   first (an AST check over the package source).
@@ -6,10 +6,20 @@
   ``mapInPandas``, ``applyInPandasWithState``, ``pandas_udf``): workers
   stay pandas-free (an AST check; ``test_pandas_free_workers.py`` checks
   the running workers).
+- No ``createDataFrame`` under ``operators/`` takes a list, tuple or
+  comprehension of rows: that table would be a Python-RDD scan, Python
+  tasks the hook cannot reach (an AST check).
 - Its zip-directory guard skips the re-read of an unchanged archive, still
   re-reads a changed one, and is installed only inside a Spark task on
-  Python < 3.13. These run in a subprocess, so the patched ``zipimport``
-  never reaches the test interpreter.
+  Python < 3.13.
+- Inside a task it sets ``TCP_QUICKACK`` on the TCP connection only (not
+  on an AF_UNIX socket, a listening socket or a regular file), keeps no
+  fd open, and does nothing outside a task or without the option. A live
+  one-task ``mapInArrow`` then reads its 10 rows in well under the 40 ms
+  delayed-ACK stall.
+
+The zip and socket cases run in a fresh interpreter, so the patched
+``zipimport`` and ``socket`` never reach the test interpreter.
 """
 
 import ast
@@ -188,6 +198,46 @@ def test_pandas_kernel_check_sees_calls_and_imports(tmp_path):
         "m.py:2 pandas_udf", "m.py:5 applyInPandas", "m.py:6 mapInPandas"]
 
 
+# createDataFrame arguments that Spark plans as a Python-RDD scan
+_PYTHON_ROWS = (ast.List, ast.Tuple, ast.ListComp, ast.SetComp,
+                ast.GeneratorExp)
+
+
+def _python_rdd_tables(pkg_dir: Path):
+    found = []
+    for path in sorted(pkg_dir.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not (isinstance(node, ast.Call)
+                    and _name(node.func) == "createDataFrame"):
+                continue
+            data = node.args[0] if node.args else next(
+                (k.value for k in node.keywords if k.arg == "data"), None)
+            if isinstance(data, _PYTHON_ROWS):
+                found.append(f"{path.relative_to(pkg_dir)}:{node.lineno}")
+    return found
+
+
+def test_no_python_rdd_table_under_operators():
+    """Local rows go to ``createDataFrame`` as a ``pyarrow.Table`` (a JVM
+    ``LocalTableScan``): a list of rows is a Python-RDD scan whose tasks
+    run no package code, so the hook never reaches them."""
+    assert _python_rdd_tables(PKG_DIR / "operators") == []
+
+
+def test_python_rdd_table_check_sees_rows_and_comprehensions(tmp_path):
+    (tmp_path / "m.py").write_text(textwrap.dedent('''
+        import pyarrow as pa
+
+        def f(spark, rows, offsets):
+            a = spark.createDataFrame([], "x INT")
+            b = spark.createDataFrame([(k, v) for k, v in offsets], "k INT, v INT")
+            c = spark.createDataFrame(data=((1,),), schema="x INT")
+            d = spark.createDataFrame(rows, "x INT")
+            return a, b, c, d, spark.createDataFrame(pa.table({"x": [1]}))
+    '''))
+    assert _python_rdd_tables(tmp_path) == ["m.py:5", "m.py:6", "m.py:7"]
+
+
 # --- the zip-directory guard, each case in a fresh interpreter -------------
 
 _PRELUDE = f"""
@@ -280,6 +330,98 @@ def test_guard_is_a_noop_outside_a_task_and_on_313(tmp_path):
                           "installed": guard_installed()}))
     """, tmp_path)
     assert out == {"outside": True, "on_313": True, "installed": False}
+
+
+# --- TCP_QUICKACK on the JVM connection, in a fresh interpreter ------------
+
+_QUICKACK_PRELUDE = """
+import socket
+listener = socket.create_server(("127.0.0.1", 0))
+tcp = socket.create_connection(listener.getsockname())
+peer, _ = listener.accept()
+unix_a, unix_b = socket.socketpair()
+regular = open(sys.executable, "rb")
+CALLS = []
+_setsockopt = socket.socket.setsockopt
+def recording_setsockopt(self, *args):
+    CALLS.append((self.fileno(), *args))
+    return _setsockopt(self, *args)
+socket.socket.setsockopt = recording_setsockopt
+def open_fds():
+    return len(os.listdir("/proc/self/fd"))
+"""
+
+
+def _run_with_sockets(body: str, tmp_path) -> dict:
+    return _run(_QUICKACK_PRELUDE + textwrap.dedent(body), tmp_path)
+
+needs_quickack = pytest.mark.skipif(
+    not hasattr(__import__("socket"), "TCP_QUICKACK"),
+    reason="TCP_QUICKACK is Linux-only")
+
+
+@needs_quickack
+def test_quickack_set_on_the_tcp_connection_only(tmp_path):
+    out = _run_with_sockets("""
+        fds = open_fds()
+        memtune.tune_worker()
+        outside = list(CALLS)
+        enter_task()
+        memtune.tune_worker()
+        memtune.tune_worker()
+        tcp_fds = {tcp.fileno(), peer.fileno()}
+        print(json.dumps({
+            "outside": outside,
+            "calls": [[fd in tcp_fds, level, opt, value]
+                      for fd, level, opt, value in CALLS],
+            "quickack": [socket.IPPROTO_TCP, socket.TCP_QUICKACK],
+            "fds_unchanged": open_fds() == fds}))
+    """, tmp_path)
+    # one call per task, each on a TCP end, never on the AF_UNIX pair,
+    # the listening socket or the regular file
+    assert out["outside"] == []
+    assert out["calls"] == [[True, *out["quickack"], 1]] * 2
+    assert out["fds_unchanged"]
+
+
+@needs_quickack
+def test_quickack_is_a_noop_without_the_option(tmp_path):
+    out = _run_with_sockets("""
+        del socket.TCP_QUICKACK
+        fds = open_fds()
+        enter_task()
+        memtune.tune_worker()
+        print(json.dumps({"calls": CALLS, "fds_unchanged": open_fds() == fds}))
+    """, tmp_path)
+    assert out == {"calls": [], "fds_unchanged": True}
+
+
+def test_worker_input_read_does_not_stall(spark):
+    """A one-task ``mapInArrow`` over 10 rows reads its input without the
+    JVM's last segment waiting for the worker's delayed ACK (40 ms on
+    Linux without the hook)."""
+    import statistics
+
+    from parallel_count_min_sketch_spark import memtune
+
+    def timed_read(batches):
+        import time
+
+        import pyarrow as pa
+
+        memtune.tune_worker()
+        t0 = time.perf_counter()
+        rows = sum(b.num_rows for b in batches)
+        yield pa.RecordBatch.from_pydict({
+            "ms": [(time.perf_counter() - t0) * 1e3], "rows": [rows]})
+
+    df = spark.range(0, 10, numPartitions=1).mapInArrow(
+        timed_read, "ms DOUBLE, rows BIGINT")
+    for _ in range(3):  # a fresh connection does not delay its ACKs yet
+        df.collect()
+    runs = [df.collect()[0] for _ in range(7)]
+    assert all(r.rows == 10 for r in runs)
+    assert statistics.median(r.ms for r in runs) < 20, [r.ms for r in runs]
 
 
 def test_worker_reports_guard_installed(spark):
