@@ -24,6 +24,7 @@ The zip and socket cases run in a fresh interpreter, so the patched
 
 import ast
 import json
+import socket
 import subprocess
 import sys
 import textwrap
@@ -355,8 +356,9 @@ def open_fds():
 def _run_with_sockets(body: str, tmp_path) -> dict:
     return _run(_QUICKACK_PRELUDE + textwrap.dedent(body), tmp_path)
 
+
 needs_quickack = pytest.mark.skipif(
-    not hasattr(__import__("socket"), "TCP_QUICKACK"),
+    not hasattr(socket, "TCP_QUICKACK"),
     reason="TCP_QUICKACK is Linux-only")
 
 
