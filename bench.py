@@ -277,9 +277,11 @@ def bench_reference_parity(spark, n_items: int) -> dict:
     cfg = CMSConfig(epsilon=0.001, delta=0.1, seed=12345)
     df = items_df(spark, n_items).cache()
     n_exact_123 = df.filter("item = 123").count()  # materializes the cache too
-    # JVM path only: integer items need no djb2, and the Arrow path's
-    # 8B/item JVM->Python transfer dominates at this scale (measured 138s
-    # vs 12s at 250M) — path equality is covered by tests at small n.
+    # JVM plans only: integer items need no djb2, and on 20M cached items
+    # (the integer-rail table in ROADMAP.md, 4 vCPUs) the best JVM plan beat
+    # the Arrow rail on the reference mixture (0.67 vs 1.88 s) and on
+    # all-distinct items (1.61 vs 4.56 s) — path equality is covered by
+    # tests at small n.
     collect_cms(df.limit(100_000), "item", cfg)  # warm JIT
     per_occ_runs = []
     for _ in range(BUILD_RUNS):

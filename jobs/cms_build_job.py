@@ -5,11 +5,11 @@
         jobs/cms_build_job.py \
         --input /path/web_pages.parquet --output /path/out \
         --eps 0.001 --delta 0.1 --seed 12345 \
-        [--checkpoint /path/ckpt | --salt-partitions 256] [--path sql|arrow]
+        [--checkpoint /path/ckpt | --salt-partitions 256] [--reps 3]
 
 Pipeline: parquet/Iceberg scan (text column pruned from html by Catalyst)
 -> optional salted repartition (defuses host/language skew before the
-sketch stage) -> CMS build (JVM Catalyst path or Arrow-kernel partials)
+sketch stage) -> CMS build (Arrow-kernel partials, ``build_cms_from_text``)
 -> sketch blob + metrics written to the output dir. Prints one JSON metrics
 line to stdout.
 
@@ -43,33 +43,27 @@ def main() -> None:
     ap.add_argument("--checkpoint", default=None)
     ap.add_argument("--salt-partitions", type=int, default=0,
                     help="salted repartition width (0 = keep scan partitioning)")
-    ap.add_argument("--path", choices=["sql", "arrow"], default="sql")
     ap.add_argument("--reps", type=int, default=1,
                     help="repeat the build and report best warm wall (the "
                          "reference's own benchmark averages repeated runs; "
-                         "rep 1 is JVM/page-cache warmup). sql/arrow paths "
-                         "only — checkpointed builds are single-run by nature. "
-                         "wall_sec covers the distributed build + collect; the "
-                         "sql path's driver-side sketch-array reconstruction "
-                         "is reported separately as reconstruct_sec")
+                         "rep 1 is JVM/page-cache warmup). Plain builds "
+                         "only — checkpointed builds are single-run by nature")
     args = ap.parse_args()
     if args.reps < 1:
         ap.error("--reps must be >= 1")
     if args.checkpoint and args.reps > 1:
-        ap.error("--reps applies to the sql/arrow paths only")
+        ap.error("--reps applies to plain builds only")
     if args.checkpoint and args.salt_partitions:
         ap.error("--checkpoint and --salt-partitions conflict: the "
                  "checkpointed build scans --input file by file, so a salted "
                  "repartition would be ignored")
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import SparkSession
 
     from parallel_count_min_sketch_spark.config import CMSConfig
     from parallel_count_min_sketch_spark.operators.agg import build_cms_from_text
     from parallel_count_min_sketch_spark.operators.checkpoint import CheckpointedCMSBuild
     from parallel_count_min_sketch_spark.operators.skew import salted_repartition
-    from parallel_count_min_sketch_spark.operators.sql_build import (
-        cells_to_sketch, cms_table_df)
 
     spark = SparkSession.builder.appName("pcms-build").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -84,37 +78,19 @@ def main() -> None:
         df = spark.read.parquet(args.input).select(args.text_col)
         if args.salt_partitions:
             df = salted_repartition(df, args.salt_partitions, seed=args.seed)
-
-        def timed_reps(fn):
-            walls, out = [], None
-            for _ in range(args.reps):
-                r0 = time.perf_counter()
-                out = fn()
-                walls.append(time.perf_counter() - r0)
-            return out, walls
-
-        if args.path == "arrow":
-            sk, walls = timed_reps(lambda: build_cms_from_text(df, args.text_col, cfg))
-        else:
-            toks = df.select(F.explode(F.split(args.text_col, " ")).alias("tok")) \
-                .filter(F.col("tok") != "")
-            rows, walls = timed_reps(
-                lambda: cms_table_df(toks, "tok", cfg, string_items=True).collect())
+        walls = []
+        for _ in range(args.reps):
             r0 = time.perf_counter()
-            sk = cells_to_sketch(rows, cfg)
-            reconstruct_sec = time.perf_counter() - r0
+            sk = build_cms_from_text(df, args.text_col, cfg)
+            walls.append(time.perf_counter() - r0)
         metrics = {"wall_sec_runs": [round(w, 3) for w in walls]} if args.reps > 1 else {}
-        if args.path == "sql":
-            # scope note: wall_sec = distributed build + collect only; the
-            # O(depth*width) driver-side array fill is this separate metric
-            metrics["reconstruct_sec"] = round(reconstruct_sec, 3)
     wall = min(walls) if not args.checkpoint else time.perf_counter() - t0
 
     os.makedirs(args.output, exist_ok=True)
     with open(os.path.join(args.output, "sketch.bin"), "wb") as f:
         f.write(sk.to_bytes())
     out = {
-        "path": "checkpoint-arrow" if args.checkpoint else args.path,
+        "path": "checkpoint-arrow" if args.checkpoint else "arrow",
         "wall_sec": round(wall, 3),
         "total_mass": sk.total,
         "tokens_per_sec": round(sk.total / wall, 1),

@@ -8,12 +8,13 @@ Integer items stay in the JVM end to end. String items are folded in the
 scan stage: one numpy ``mapInArrow`` kernel, in the same tasks as the
 scan, hashes each token with djb2 and folds it into a per-partition sketch
 (the reference's per-rank partial, src/mpi/mpiV2.c:131-140), whose nonzero
-cells are the only rows the partial/final ``sum`` shuffles. Queries are
-broadcast joins against the resulting tiny (depth x width) table.
+cells are the only rows the partial/final ``sum`` shuffles. Point queries
+over integer items are broadcast joins against the resulting tiny
+(depth x width) table.
 
 This is the "let Catalyst pick the physical strategy" counterpart of the
-Arrow kernel in ``agg.py``; both compute the same matrix (tests assert
-equality), and ``bench.py`` races them.
+Arrow kernel in ``sketch_agg.py``; both compute the same matrix (tests
+assert equality), and ``bench.py`` races them.
 
 The same SQL text (emitted by CMSConfig.bucket_sql) runs verbatim in DuckDB,
 which is how the driver's correctness oracle checks sketch values exactly.
@@ -31,24 +32,19 @@ from .. import _arrow_np as anp
 from ..config import CMSConfig
 from ..memtune import tune_worker
 from ..sketches.cms import CountMinSketch
-from .sketch_agg import fold_batches, with_djb2
+from .sketch_agg import fold_batches
 
 CELLS_SCHEMA = "depth_row INT, bucket BIGINT, counter BIGINT"
 _CELLS_PA = pa.schema([("depth_row", pa.int32()), ("bucket", pa.int64()),
                        ("counter", pa.int64())])
 
 
-def with_item_id(df: DataFrame, col: str, *, string_items: bool = False,
-                 out: str = "item_id") -> DataFrame:
-    """Normalize the item column to BIGINT ids: a cast for integers, djb2
-    for strings (cms_update_str analog, src/core/count_min_sketch.c:24-27)
-    by the numpy ``djb2_batch`` kernel (``sketch_agg.with_djb2``).
+def with_item_id(df: DataFrame, col: str, *, out: str = "item_id") -> DataFrame:
+    """Cast the integer item column to BIGINT ids.
 
     selectExpr, not withColumn: same projection, roughly half the
     construction wall (withColumn's per-call replace-check cost ~25 ms
     with the former SQL djb2 expression — measured)."""
-    if string_items:
-        return with_djb2(df, col, out)
     sql = f"CAST(`{col}` AS BIGINT)"
     if out in df.columns:  # withColumn REPLACES; select-star would duplicate
         return df.withColumn(out, F.expr(sql))
@@ -178,7 +174,7 @@ def collect_cms(df: DataFrame, item_col: str, cfg: CMSConfig, *,
 
 
 def point_query_join(table: DataFrame, probes_df: DataFrame, probe_col: str,
-                     cfg: CMSConfig, *, probes_are_strings: bool = False) -> DataFrame:
+                     cfg: CMSConfig) -> DataFrame:
     """Distributed CMS point query against a prebuilt sketch table:
     est(x) = min over depth rows of counter[j][h_j(x)].
 
@@ -186,10 +182,10 @@ def point_query_join(table: DataFrame, probes_df: DataFrame, probe_col: str,
     so it is always broadcast — the probe side can be arbitrarily large
     (e.g. every distinct token for heavy-hitter extraction) and never
     shuffles against the data, only a map-side join + small groupBy.
-    Missing buckets are zero counters.
+    Missing buckets are zero counters. Probes are integer items.
     """
     qdf = with_item_id(probes_df.select(F.col(probe_col).alias("item")), "item",
-                       string_items=probes_are_strings, out="qid")
+                       out="qid")
     arr = "array(" + ", ".join(cfg.bucket_sql_all_rows("qid")) + ")"
     probes = qdf.selectExpr("item", f"posexplode({arr}) AS (depth_row, bucket)")
     joined = probes.join(F.broadcast(table), ["depth_row", "bucket"], "left")
@@ -198,19 +194,12 @@ def point_query_join(table: DataFrame, probes_df: DataFrame, probe_col: str,
 
 
 def point_query_df(df: DataFrame, item_col: str, cfg: CMSConfig, query_items,
-                   *, weight_col: str | None = None, string_items: bool = False,
-                   query_are_strings: bool | None = None) -> DataFrame:
-    """Point query for an explicit list of items -> DataFrame[item, cms_estimate]."""
-    spark = df.sparkSession
-    table = cms_table_df(df, item_col, cfg, weight_col=weight_col,
-                         string_items=string_items)
-    if query_are_strings is None:
-        query_are_strings = string_items
+                   *, weight_col: str | None = None) -> DataFrame:
+    """Point query for an explicit list of integer items ->
+    DataFrame[item, cms_estimate]."""
+    table = cms_table_df(df, item_col, cfg, weight_col=weight_col)
     # an Arrow table plans as a JVM LocalTableScan; a list of tuples would
     # be a Python-RDD scan that starts Python tasks on every collect
-    if query_are_strings:
-        items = pa.array([str(x) for x in query_items], pa.string())
-    else:
-        items = pa.array([int(x) for x in query_items], pa.int64())
-    qdf = spark.createDataFrame(pa.table({"item": items}))
-    return point_query_join(table, qdf, "item", cfg, probes_are_strings=query_are_strings)
+    items = pa.array([int(x) for x in query_items], pa.int64())
+    qdf = df.sparkSession.createDataFrame(pa.table({"item": items}))
+    return point_query_join(table, qdf, "item", cfg)

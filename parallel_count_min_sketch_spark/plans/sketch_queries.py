@@ -548,8 +548,8 @@ def q_cms_grouped_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     token 'key' — group totals and estimates replayed exactly by the SQL
     oracle. The probe runs in a distributed ``finalize_grouped`` stage:
     sketch blobs are decoded inside executors, never collected (scales to
-    10k+ groups — see scripts/grouped_finalize_bench.py). One row per
-    language, sorted in one partition."""
+    10k+ groups; BENCH/grouped_finalize.json). One row per language, sorted
+    in one partition."""
     import pyarrow as pa
     import pyspark.sql.functions as F
 

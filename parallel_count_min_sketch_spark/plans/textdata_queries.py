@@ -1758,8 +1758,8 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def tfidf_top_terms_df(docs: DataFrame) -> DataFrame:
     """Core of :func:`q_tfidf_top_terms` over any ``(doc_id, text)``
-    DataFrame — split out so scale benches can drive it on synthetic
-    corpora (scripts/text_ops_bench.py).
+    DataFrame, so it runs on synthetic corpora as well as the registry's
+    ``documents`` table.
 
     Plan shape: term frequencies are doc-local (one map-only Arrow
     pass, functions/text_arrow — r6 replacement for the interpreted-HOF
@@ -1850,7 +1850,7 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def doc_repetition_df(docs: DataFrame) -> DataFrame:
     """Core of :func:`q_doc_repetition` over any ``(doc_id, text)``
-    DataFrame (scale benches drive it on synthetic corpora).
+    DataFrame.
 
     Plan shape: MAP-ONLY, one Arrow pass (functions/text_arrow) — the
     r5 form computed the same doc-local signals with Catalyst
@@ -2139,12 +2139,11 @@ def q_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def benchmark_contamination_df(docs: DataFrame) -> DataFrame:
     """Core of :func:`q_benchmark_contamination` over any
-    ``(doc_id, text)`` DataFrame (scale benches drive it on synthetic
-    corpora). ``doc_id`` must be unique per row — the one-pass groupBy
-    folds stats per id, so rows SHARING an id would get their shingle
-    counts summed and fanned back out to every copy (and would diverge
-    from the per-row DuckDB oracle); run exact dedup first if ids can
-    repeat."""
+    ``(doc_id, text)`` DataFrame. ``doc_id`` must be unique per row —
+    the one-pass groupBy folds stats per id, so rows SHARING an id would
+    get their shingle counts summed and fanned back out to every copy
+    (and would diverge from the per-row DuckDB oracle); run exact dedup
+    first if ids can repeat."""
     from ..functions.text_arrow import ngram_tf_rows_arrow
 
     k, mod = CONTAM_SHINGLE_K, CONTAM_BENCH_MOD

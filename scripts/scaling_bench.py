@@ -1,11 +1,11 @@
 """Two-parallelism-level scaling benchmark (the north-rule N vs 4N
 criterion, evidenced with local[N] vs local[4N] on the same input).
 
-Runs the identical CMS build job in fresh processes at each parallelism
-level (fresh JVM each — no cross-contamination), takes the best of
-``--reps`` warm runs per level, and writes BENCH/BASELINE.md with
-docs/sec at both levels plus scaling efficiency
-(= throughput_4N / (4 * throughput_N)).
+Runs the identical CMS build (the Arrow rail, ``build_cms_from_text``) in
+fresh processes at each parallelism level (fresh JVM each — no
+cross-contamination), takes the best of ``--reps`` warm runs per level,
+and writes BENCH/BASELINE.md with docs/sec at both levels plus scaling
+efficiency (= throughput_4N / (4 * throughput_N)).
 
 Usage: python scripts/scaling_bench.py [--n 8] [--pages 1000000] [--reps 2]
 """
@@ -24,10 +24,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _RUNNER = r"""
 import json, sys, time
 sys.path.insert(0, {repo!r})
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 from parallel_count_min_sketch_spark.config import CMSConfig
 from parallel_count_min_sketch_spark.operators.agg import build_cms_from_text
-from parallel_count_min_sketch_spark.operators.sql_build import cms_table_df
 
 cpus = {cpus}
 spark = (SparkSession.builder.master(f"local[{{cpus}}]")
@@ -41,30 +40,18 @@ spark.sparkContext.setLogLevel("ERROR")
 cfg = CMSConfig(0.001, 0.1, 12345)
 df = spark.read.parquet({corpus!r}).select("text")
 n_docs = df.count()
-toks = df.select(F.explode(F.split("text", " ")).alias("tok")).filter(F.col("tok") != "")
 
-res = {{"cpus": cpus, "n_docs": n_docs}}
-# full warmup run per path (JIT, python workers, page faults), then
-# best-of-reps timed — steady-state throughput, like a long-lived cluster.
-# Per-path split sizing (measured sweep at local[32], 4M docs): the JVM
-# build is fastest at 64m splits, the Arrow build at 128m — smaller
-# splits pay per-task overhead that outweighs extra core occupancy.
-spark.conf.set("spark.sql.files.maxPartitionBytes", "64m")
-rows = cms_table_df(toks, "tok", cfg, string_items=True).collect()
-res["n_tokens"] = int(sum(r["counter"] for r in rows if r["depth_row"] == 0))
-best = None
-for _ in range({reps}):
-    t0 = time.perf_counter()
-    cms_table_df(toks, "tok", cfg, string_items=True).collect()
-    w = time.perf_counter() - t0
-    best = w if best is None or w < best else best
-res["sql_sec"] = best
+# full warmup run (JIT, python workers, page faults), then best-of-reps
+# timed — steady-state throughput, like a long-lived cluster. 128m splits
+# (measured sweep at local[32], 4M docs): smaller splits pay per-task
+# overhead that outweighs extra core occupancy.
 spark.conf.set("spark.sql.files.maxPartitionBytes", "128m")
-build_cms_from_text(df, "text", cfg)
+res = {{"cpus": cpus, "n_docs": n_docs,
+        "n_tokens": int(build_cms_from_text(df, "text", cfg).total)}}
 best = None
 for _ in range({reps}):
     t0 = time.perf_counter()
-    sk = build_cms_from_text(df, "text", cfg)
+    build_cms_from_text(df, "text", cfg)
     w = time.perf_counter() - t0
     best = w if best is None or w < best else best
 res["arrow_sec"] = best
@@ -134,33 +121,14 @@ def _spark_submit_section() -> str:
     with open(p) as f:
         r = json.load(f)
     tok = r["n_tokens"]
-
-    def row(path: str) -> str:
-        lv = r["levels"][path]
-        l1, l4 = lv["local_1"], lv["local_4"]
-        return (f"| {path} | {l1['best_sec']:.2f} s ({tok / l1['best_sec'] / 1e6:.1f}M tok/s) "
-                f"| {l4['best_sec']:.2f} s ({tok / l4['best_sec'] / 1e6:.1f}M tok/s) "
-                f"| **{lv['efficiency_1_to_4']:.2f}** (best of {lv['reps']}) |")
-
-    effs = {p: r["levels"][p]["efficiency_1_to_4"] for p in ("sql", "arrow")}
-    meets = sorted(p for p, e in effs.items() if e >= 0.8)
-    misses = sorted(p for p, e in effs.items() if e < 0.8)
-    if misses:
-        spreads = "; ".join(
-            f"the {p} path's {effs[p]:.2f} comes with local[1] runs spread "
-            f"{min(r['levels'][p]['local_1']['runs']):.0f}-"
-            f"{max(r['levels'][p]['local_1']['runs']):.0f} s"
-            for p in misses)
-        verdict = (f"The {' and '.join(meets)} path meets the >=0.8 criterion "
-                   f"under the literal spark-submit launch mode as well; {spreads} "
-                   "(this sandbox's single-run variance) — see the in-process "
-                   "fresh-JVM efficiencies above."
-                   if meets else
-                   f"Neither path reaches 0.8 in this run ({spreads}) — see the "
-                   "in-process fresh-JVM efficiencies above.")
-    else:
-        verdict = ("Both paths meet the >=0.8 criterion under the literal "
-                   "spark-submit launch mode as well.")
+    lv = r["levels"]["arrow"]
+    l1, l4, eff = lv["local_1"], lv["local_4"], lv["efficiency_1_to_4"]
+    verdict = ("The >=0.8 criterion is met under the literal spark-submit "
+               "launch mode as well." if eff >= 0.8 else
+               f"The efficiency of {eff:.2f} is below 0.8 in this run, with "
+               f"local[1] runs spread {min(l1['runs']):.0f}-"
+               f"{max(l1['runs']):.0f} s — see the in-process fresh-JVM "
+               "efficiencies above.")
     return f"""
 
 ## spark-submit --py-files variant (the north rule's literal launch mode)
@@ -172,10 +140,9 @@ JVM and reports the best (the reference's benchmark also averages repeated
 runs; rep 1 carries JVM + page-cache warmup). Raw runs in
 BENCH/spark_submit_levels.json.
 
-| path | local[1] | local[4] | efficiency (N -> 4N) |
-|---|---|---|---|
-{row('sql')}
-{row('arrow')}
+| local[1] | local[4] | efficiency (N -> 4N) |
+|---|---|---|
+| {l1['best_sec']:.2f} s ({tok / l1['best_sec'] / 1e6:.1f}M tok/s) | {l4['best_sec']:.2f} s ({tok / l4['best_sec'] / 1e6:.1f}M tok/s) | **{eff:.2f}** (best of {lv['reps']}) |
 
 {verdict}"""
 
@@ -183,34 +150,18 @@ BENCH/spark_submit_levels.json.
 def _criterion_verdict(by_cpu: dict, thr) -> str:
     """Data-driven >=0.8 verdict over every measured N -> 4N span — the
     sentence must match the tables above it, whatever this run measured."""
-    spans = []
-    for n in sorted(by_cpu):
-        if n * 4 not in by_cpu:
-            continue
-        es = thr(by_cpu[n * 4], "sql_sec") / (4 * thr(by_cpu[n], "sql_sec"))
-        ea = thr(by_cpu[n * 4], "arrow_sec") / (4 * thr(by_cpu[n], "arrow_sec"))
-        spans.append((n, es, ea))
-    meets = [s for s in spans if s[1] >= 0.8 and s[2] >= 0.8]
-    partial = [s for s in spans if s not in meets and max(s[1], s[2]) >= 0.8]
-    misses = [s for s in spans if s not in meets and s not in partial]
+    spans = [(n, thr(by_cpu[n * 4]) / (4 * thr(by_cpu[n])))
+             for n in sorted(by_cpu) if n * 4 in by_cpu]
+    meets = [f"{n} -> {n * 4}" for n, e in spans if e >= 0.8]
+    misses = [f"{n} -> {n * 4} ({e:.2f})" for n, e in spans if e < 0.8]
     parts = []
     if meets:
-        parts.append(
-            "The >=0.8 criterion is met on BOTH paths at the "
-            + ", ".join(f"{n} -> {n * 4}" for n, _, _ in meets)
-            + " span(s)")
-    if partial:
-        parts.append(
-            "met on one path at "
-            + ", ".join(f"{n} -> {n * 4} (sql {es:.2f} / arrow {ea:.2f})"
-                        for n, es, ea in partial))
+        parts.append("The >=0.8 criterion is met at the " + ", ".join(meets)
+                     + " span(s)")
     if misses:
-        parts.append(
-            "below it at "
-            + ", ".join(f"{n} -> {n * 4} (sql {es:.2f} / arrow {ea:.2f})"
-                        for n, es, ea in misses)
-            + " where the shared memory bus is the binding constraint")
-    return ("; ".join(parts) + ". " if parts else "")
+        parts.append("below it at " + ", ".join(misses)
+                     + " where the shared memory bus is the binding constraint")
+    return "; ".join(parts) + ". " if parts else ""
 
 
 def main() -> None:
@@ -266,58 +217,53 @@ def main() -> None:
     all_levels.sort(key=lambda r: r["cpus"])
     by_cpu = {r["cpus"]: r for r in all_levels}
 
-    def thr(r, key):  # docs/sec
-        return r["n_docs"] / r[key]
+    def thr(r):  # docs/sec
+        return r["n_docs"] / r["arrow_sec"]
 
-    eff_sql = thr(big, "sql_sec") / (4 * thr(small, "sql_sec"))
-    eff_arrow = thr(big, "arrow_sec") / (4 * thr(small, "arrow_sec"))
+    eff_arrow = thr(big) / (4 * thr(small))
 
     report = {
         "n": args.n,
         "small": small,
         "big": big,
-        "efficiency_sql": round(eff_sql, 3),
         "efficiency_arrow": round(eff_arrow, 3),
     }
+    mem_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
     print(json.dumps(report, indent=2))
 
     md = f"""# BENCH — measured performance of the PySpark sketch engine
 
 Corpus: deterministic synthetic web pages (FIXTURES F1), {small['n_docs']:,} docs /
 {small['n_tokens']:,} token occurrences, seed 12345. Sketch: eps=0.001, delta=0.1
-(3 x 2719, reference defaults). Machine: 32 vCPU / 128 GiB, Spark {{local mode}}.
+(3 x 2719, reference defaults). Machine: {os.cpu_count()} vCPU / {mem_gib:.0f} GiB, Spark {{local mode}}.
 Methodology: identical job at local[{args.n}] and local[{args.n * 4}] in fresh JVMs,
 warmup pass first, best of {args.reps} warm runs (the north-rule two-cluster-size
 criterion evidenced by two parallelism levels on the same input).
 
-## CMS update+merge throughput
+## CMS update+merge throughput (Arrow kernel: mapInArrow partials + fan-in merge)
 
-| path | local[{args.n}] wall | local[{args.n * 4}] wall | local[{args.n}] docs/s | local[{args.n * 4}] docs/s | efficiency (N -> 4N) |
-|---|---|---|---|---|---|
-| JVM SQL (Catalyst partial/final agg) | {small['sql_sec']:.2f} s | {big['sql_sec']:.2f} s | {thr(small, 'sql_sec'):,.0f} | {thr(big, 'sql_sec'):,.0f} | **{eff_sql:.2f}** |
-| Arrow kernel (mapInArrow + treeReduce) | {small['arrow_sec']:.2f} s | {big['arrow_sec']:.2f} s | {thr(small, 'arrow_sec'):,.0f} | {thr(big, 'arrow_sec'):,.0f} | **{eff_arrow:.2f}** |
+| local[{args.n}] wall | local[{args.n * 4}] wall | local[{args.n}] docs/s | local[{args.n * 4}] docs/s | efficiency (N -> 4N) |
+|---|---|---|---|---|
+| {small['arrow_sec']:.2f} s | {big['arrow_sec']:.2f} s | {thr(small):,.0f} | {thr(big):,.0f} | **{eff_arrow:.2f}** |
 
-Token throughput (best path per level): {small['n_tokens'] / min(small['sql_sec'], small['arrow_sec']) / 1e6:.1f}M tokens/s at
-local[{args.n}], {big['n_tokens'] / min(big['sql_sec'], big['arrow_sec']) / 1e6:.1f}M tokens/s at local[{args.n * 4}].
+Token throughput: {small['n_tokens'] / small['arrow_sec'] / 1e6:.1f}M tokens/s at
+local[{args.n}], {big['n_tokens'] / big['arrow_sec'] / 1e6:.1f}M tokens/s at local[{args.n * 4}].
 
 ## Every measured N -> 4N span
 
-| span | SQL efficiency | Arrow efficiency |
-|---|---|---|
+| span | efficiency |
+|---|---|
 """ + "\n".join(
-        f"| local[{n}] -> local[{n * 4}] | "
-        f"{thr(by_cpu[n * 4], 'sql_sec') / (4 * thr(by_cpu[n], 'sql_sec')):.2f} | "
-        f"{thr(by_cpu[n * 4], 'arrow_sec') / (4 * thr(by_cpu[n], 'arrow_sec')):.2f} |"
+        f"| local[{n}] -> local[{n * 4}] | {thr(by_cpu[n * 4]) / (4 * thr(by_cpu[n])):.2f} |"
         for n in sorted(by_cpu) if n * 4 in by_cpu
     ) + f"""
 
 ## All measured parallelism levels
 
-| level | SQL wall | SQL tokens/s | Arrow wall | Arrow tokens/s |
-|---|---|---|---|---|
+| level | wall | tokens/s |
+|---|---|---|
 """ + "\n".join(
-        f"| local[{r['cpus']}] | {r['sql_sec']:.2f} s | {r['n_tokens'] / r['sql_sec'] / 1e6:.1f}M | "
-        f"{r['arrow_sec']:.2f} s | {r['n_tokens'] / r['arrow_sec'] / 1e6:.1f}M |"
+        f"| local[{r['cpus']}] | {r['arrow_sec']:.2f} s | {r['n_tokens'] / r['arrow_sec'] / 1e6:.1f}M |"
         for r in all_levels
     ) + f"""
 
@@ -326,14 +272,12 @@ best MPI config 48.8M items/s on 32 procs (pre-parsed uint32 items). Our items
 are *string tokens* (tokenize + djb2 inside the engine), and the single-VM
 numbers above already exceed the reference's 32-proc cluster throughput.
 
-Per-path split sizing (a measured 16/32/64/128m maxPartitionBytes sweep
-at local[32], 4M docs): the JVM build runs fastest on 64 MB scan splits,
-the Arrow build on 128 MB — smaller splits pay per-task overhead
-(scheduler + Python/Arrow round-trip + one 65 KB partial per task) that
-outweighs the extra core occupancy, an 8 MB experiment was 4-10x SLOWER
-on the Arrow path. Each path is benchmarked at its own setting (a
-plan-time SQL conf). At 100 TB the default 128 MB yields ample splits
-and the trade-off disappears.
+Split sizing (a measured 16/32/64/128m maxPartitionBytes sweep at
+local[32], 4M docs): the build runs fastest on 128 MB scan splits —
+smaller splits pay per-task overhead (scheduler + Python/Arrow
+round-trip + one 65 KB partial per task) that outweighs the extra core
+occupancy; an 8 MB experiment was 4-10x SLOWER. At 100 TB the default
+128 MB yields ample splits and the trade-off disappears.
 
 ## Reference-parity workload (the reference's own benchmark)
 

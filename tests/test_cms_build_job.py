@@ -49,20 +49,19 @@ def test_checkpointed_job_resumes_on_appended_files(spark, tmp_path):
         assert f.read() == direct.to_bytes()
 
 
-def test_sql_and_arrow_job_paths_write_the_same_sketch(spark, tmp_path):
-    src = str(tmp_path / "pages")
+def test_job_writes_the_text_build_sketch(spark, tmp_path):
+    src, dst = str(tmp_path / "pages"), str(tmp_path / "out")
     web_pages(spark, 120, seed=13, partitions=2).write.parquet(src)
-    out = {}
-    for path in ("sql", "arrow"):
-        dst = str(tmp_path / path)
-        r = _job("--input", src, "--output", dst, "--path", path)
-        assert r.returncode == 0, r.stderr[-3000:]
-        with open(os.path.join(dst, "metrics.json")) as f:
-            mass = json.load(f)["total_mass"]
-        with open(os.path.join(dst, "sketch.bin"), "rb") as f:
-            out[path] = (f.read(), mass)
-    assert out["sql"] == out["arrow"]
-    assert out["sql"][1] > 0
+    r = _job("--input", src, "--output", dst)
+    assert r.returncode == 0, r.stderr[-3000:]
+    with open(os.path.join(dst, "metrics.json")) as f:
+        m = json.load(f)
+    direct = build_cms_from_text(spark.read.parquet(src), "text",
+                                 CMSConfig(EPS, DELTA, SEED))
+    assert m["path"] == "arrow"
+    assert m["total_mass"] == direct.total > 0
+    with open(os.path.join(dst, "sketch.bin"), "rb") as f:
+        assert f.read() == direct.to_bytes()
 
 
 def test_checkpoint_with_salt_is_rejected(tmp_path):

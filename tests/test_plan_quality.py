@@ -59,11 +59,10 @@ def test_sql_build_uses_partial_aggregation(spark, pages_path):
     assert "WholeStageCodegen" in plan or re.search(r"\*\(\d+\) HashAggregate", plan), plan
 
 
-def test_point_query_broadcasts_sketch_table(spark, pages_path):
+def test_point_query_broadcasts_sketch_table(spark):
     """Probing must broadcast the tiny sketch table, never shuffle it."""
-    df = spark.read.parquet(pages_path)
-    toks = df.select(F.explode(F.split("text", " ")).alias("tok")).filter("tok != ''")
-    q = point_query_df(toks, "tok", CFG, ["tok123", "zzz"], string_items=True)
+    items = spark.range(5000).selectExpr("id % 97 AS item")
+    q = point_query_df(items, "item", CFG, [3, 42, 10**6])
     plan = _plan(q)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan
     assert "SortMergeJoin" not in plan

@@ -1,6 +1,7 @@
-"""Every package name the scripts, jobs, bench harnesses and perfbench
+"""Every package name the scripts, jobs, bench harness and perfbench
 import must still exist. The files are parsed, never imported or run:
-some of them start Spark at module level."""
+some of them start Spark at module level. Every script must also be
+documented, so a one-off cannot outlive the run it was written for."""
 
 import ast
 import importlib
@@ -12,7 +13,7 @@ ROOT = Path(__file__).resolve().parents[1]
 PKG = "parallel_count_min_sketch_spark"
 SOURCES = sorted(
     [*ROOT.glob("scripts/*.py"), *ROOT.glob("jobs/*.py"),
-     ROOT / "bench.py", ROOT / "bench_extra.py", *ROOT.glob("perfbench/*.py")]
+     ROOT / "bench.py", *ROOT.glob("perfbench/*.py")]
 )
 
 
@@ -46,3 +47,11 @@ def test_package_imports_resolve(path):
                for line, module, name in _package_imports(path)
                if not _resolves(module, name)]
     assert not missing, "\n".join(missing)
+
+
+def test_every_script_is_documented():
+    docs = "".join((ROOT / p).read_text()
+                   for p in ("README.md", ".claude/skills/verify/SKILL.md"))
+    orphans = [p.name for p in sorted(ROOT.glob("scripts/*.py"))
+               if f"scripts/{p.name}" not in docs]
+    assert not orphans, f"scripts named in neither README.md nor SKILL.md: {orphans}"
