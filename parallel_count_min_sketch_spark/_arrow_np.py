@@ -31,7 +31,7 @@ Use instead:
 - ``RecordBatch.from_arrays(arrays, schema=...)`` for batches, and
   ``dictionary_encode`` + numpy for grouped sums.
 
-``token_counts(texts, sep)`` is the one tokenizer of the token-count
+``token_counts(texts)`` is the one tokenizer of the token-count
 kernels: it yields ``(distinct tokens, int64 counts)`` per slice of a text
 column, cut at row boundaries by text bytes so a worker's transient
 memory follows string bytes, not Arrow batch rows. The first slice holds
@@ -53,6 +53,10 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+
+# the one token separator: the Arrow tokenizers split on it, and so does
+# the Catalyst ``textstats.tokens_col``
+SEP = " "
 
 # token_counts' slice bounds: the first slice's text bytes, and the growth
 # factor while a slice's distinct tokens are under 1/_SLICE_GROWTH of them
@@ -195,9 +199,9 @@ def batch(columns: dict, schema: pa.Schema) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
-def token_counts(texts: pa.Array, sep: str = " "):
+def token_counts(texts: pa.Array):
     """Yield ``(distinct tokens, int64 counts)`` for successive row slices
-    of a string column: the non-empty pieces of ``split(text, sep)``,
+    of a string column: the non-empty pieces of ``split(text, SEP)``,
     collapsed with ``value_counts``. NULL texts have no tokens, and a slice
     with none yields nothing. Summed over the slices, the counts are the
     column's token counts.
@@ -218,7 +222,7 @@ def token_counts(texts: pa.Array, sep: str = " "):
     while lo < n:
         end = min(int(offs[lo]) + budget, int(offs[-1]))
         hi = max(int(np.searchsorted(offs, end, "right")) - 1, lo + 1)
-        toks = pc.list_flatten(pc.split_pattern(texts.slice(lo, hi - lo), sep))
+        toks = pc.list_flatten(pc.split_pattern(texts.slice(lo, hi - lo), SEP))
         lo = hi
         tok_offs = offsets(toks)
         keep = tok_offs[1:] != tok_offs[:-1]  # non-empty: 1 byte per token
@@ -235,12 +239,12 @@ def token_counts(texts: pa.Array, sep: str = " "):
         budget = budget * _SLICE_GROWTH if repetitive else _SLICE_BYTES
 
 
-def doc_tokens(texts: pa.Array, sep: str = " "):
-    """``(tokens, didx)``: the non-empty pieces of ``split(text, sep)`` in
+def doc_tokens(texts: pa.Array):
+    """``(tokens, didx)``: the non-empty pieces of ``split(text, SEP)`` in
     row order, and the int64 row index of each (nondecreasing)."""
     import pyarrow.compute as pc
 
-    lists = pc.split_pattern(texts, sep)
+    lists = pc.split_pattern(texts, SEP)
     toks = pc.list_flatten(lists)
     didx = np.repeat(np.arange(len(lists), dtype=np.int64), lengths(lists))
     keep = lengths(toks) > 0

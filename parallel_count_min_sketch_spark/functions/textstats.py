@@ -8,17 +8,19 @@ same arithmetic can be emitted as DuckDB SQL by the oracle builders
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
+from .._arrow_np import SEP
 from ..sketches.hashing import MERSENNE_PRIME
 
 STOPWORDS = ("the", "a", "of", "and", "to")
 FINGERPRINT_BASE = 131
 
 
-def tokens_col(text: str = "text", sep: str = " ") -> Column:
-    """Non-empty whitespace tokens of a text column."""
-    return F.filter(F.split(F.col(text), sep), lambda t: t != F.lit(""))
+def tokens_col(text: str = "text") -> Column:
+    """Non-empty tokens of a text column, split on ``_arrow_np.SEP`` like
+    the Arrow tokenizers."""
+    return F.filter(F.split(F.col(text), SEP), lambda t: t != F.lit(""))
 
 
 def n_tokens(text: str = "text") -> Column:
@@ -29,15 +31,6 @@ def stopword_count(text: str = "text") -> Column:
     toks = tokens_col(text)
     sw = F.array(*[F.lit(s) for s in STOPWORDS])
     return F.size(F.filter(toks, lambda t: F.array_contains(sw, t))).cast("bigint")
-
-
-def avg_token_len_bp(text: str = "text") -> Column:
-    """Mean token length in basis points (x100, floored) — integer-exact,
-    so the DuckDB oracle matches bit-for-bit."""
-    toks = tokens_col(text)
-    total_len = F.aggregate(toks, F.lit(0).cast("bigint"),
-                            lambda acc, t: acc + F.length(t).cast("bigint"))
-    return F.floor(total_len * 100.0 / F.greatest(F.size(toks), F.lit(1))).cast("bigint")
 
 
 def stopword_ratio_bp(text: str = "text") -> Column:

@@ -19,13 +19,13 @@ per-task cost, on every call inside a Spark task:
   - ``sketches/hashing._BLOCK_BYTES`` (64 KB): ``djb2_batch`` holds its
     per-byte int64 temporaries for at most this much UTF-8 at a time, for
     every caller (item folds, the ``with_djb2`` kernel that ``probe_cms``,
-    ``heavy_hitters``, ``joins`` and ``dedup`` use, the grouped folds, the
+    ``heavy_hitters`` and ``dedup`` use, the grouped folds, the
     doc-local ``dedup`` kernels, the ``sql_build`` cells kernel);
   - ``_arrow_np._SLICE_BYTES`` (1 MB, growing 4x on repetitive text):
     ``_arrow_np.token_counts`` tokenizes and ``value_counts`` a text
     column in slices of this much text, for the token-count kernels
     (``sketch_agg.text_token_partials``, ``text_token_grouped_partials``,
-    ``heavy_hitters.candidate_tokens``, ``fused_sketch_and_candidates``).
+    ``heavy_hitters.fused_sketch_and_candidates``).
 - **Zip-directory re-reads.** Workers import PySpark from
   ``$SPARK_HOME/python/lib/pyspark.zip``. Before every task, a reused
   worker calls ``importlib.invalidate_caches()``

@@ -1,5 +1,5 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata and numpy codecs for Arrow-batched kernels.
+"""Multimodal codecs: numpy encoders and decoders for image and audio
+blobs, called inside Arrow-batched kernels.
 
 The image path is REAL: dependency-free numpy codecs for BMP (24-bit
 uncompressed, bottom-up or top-down) AND binary PPM (P6, 8-bit maxval,
@@ -10,18 +10,14 @@ REAL too: ``encode_wav``/``decode_wav`` implement the RIFF/WAVE PCM16
 container with proper chunk walking (unknown chunks skipped, word
 alignment honored). Formats whose codecs are genuinely absent from this
 container (PNG/JPEG/GIF, compressed audio) raise ``NotImplementedError``
-with the library a deployment would drop in; opaque non-image blobs
-route through ``byte_tensor``, a deterministic digest-derived featurizer
-(a real featurizer for arbitrary bytes — NOT a decode stand-in).
+with the library a deployment would drop in.
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F
 
 MAGIC = {
     b"\x89PNG": "png",
@@ -32,29 +28,8 @@ MAGIC = {
     b"P6": "ppm",
 }
 
-META_SCHEMA = "byte_len BIGINT, sniffed_format STRING, sha1 STRING"
-
 _BMP_FILE_HEADER = struct.Struct("<2sIHHI")   # magic, file size, res, res, px offset
 _BMP_INFO_HEADER = struct.Struct("<IiiHHIIiiII")  # BITMAPINFOHEADER
-
-
-def binary_metadata(df: DataFrame, bin_col: str, *, keep_cols: tuple[str, ...] = ()) -> DataFrame:
-    """Typed metadata for a binary column — pure JVM (no decode): length,
-    magic-byte format sniff, digest."""
-    b = F.col(bin_col)
-    head = F.substring(b, 1, 4)
-    fmt = F.lit("unknown")
-    for magic, name in MAGIC.items():
-        prefix = F.lit(bytearray(magic))
-        fmt = F.when(F.substring(b, 1, len(magic)) == F.substring(prefix, 1, len(magic)),
-                     F.lit(name)).otherwise(fmt)
-    return df.select(
-        *keep_cols,
-        F.octet_length(b).cast("bigint").alias("byte_len"),
-        fmt.alias("sniffed_format"),
-        F.sha1(b).alias("sha1"),
-        head.alias("_head"),
-    ).drop("_head")
 
 
 def bmp_row_size(width: int) -> int:
@@ -243,12 +218,3 @@ def decode_image(data: bytes) -> np.ndarray:
                 "present in this container; BMP/PPM are the built-in paths")
     raise ValueError("unrecognized image format (no known magic bytes)")
 
-
-def byte_tensor(data: bytes) -> np.ndarray:
-    """Deterministic 4x4x3 uint8 tensor from a digest of the bytes — a
-    content-fingerprint featurizer for OPAQUE (non-image) blobs, stable
-    across runs/executors. Shaped like a small decoded image so downstream
-    feature code treats image and non-image blobs uniformly."""
-    digest = hashlib.sha256(data).digest()
-    arr = np.frombuffer((digest * 2)[:48], dtype=np.uint8)
-    return arr.reshape(4, 4, 3)

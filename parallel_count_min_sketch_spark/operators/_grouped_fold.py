@@ -141,18 +141,3 @@ class GroupedFoldBase:
         self._ensure_capacity(len(keys))
         self._scatter(code_slot[codes], items, wts)
 
-
-def salted_pre_shuffle(df, group_col: str, col: str, salt: int,
-                       n_partitions: int | None, salt_seed: int):
-    """One raw-row repartition on hash(group, item-salt % s) — the shared
-    pre-shuffle of the salted grouped build (``sketch_agg.sketch_grouped``):
-    caps per-group partials at ``salt`` per group instead of one per scan
-    partition, while splitting hot groups over ``salt`` tasks (measured in
-    BENCH/grouped_skew.json)."""
-    from pyspark.sql import functions as F
-
-    salt_col = F.pmod(F.xxhash64(F.col(col), F.lit(int(salt_seed))),
-                      F.lit(int(salt)))
-    keys = [F.col(group_col), salt_col]
-    return (df.repartition(n_partitions, *keys) if n_partitions
-            else df.repartition(*keys))

@@ -38,10 +38,10 @@ def cms_partials(df, item_col: str, cfg: CMSConfig, *, weight_col: str | None = 
                            string_items=string_items)
 
 
-def cms_text_partials(df, text_col: str, cfg: CMSConfig, *, sep: str = " "):
+def cms_text_partials(df, text_col: str, cfg: CMSConfig):
     """One CMS partial per partition over the tokens of a text column,
     tokenized in Arrow C kernels (no JVM-side explode)."""
-    return text_token_partials(df, text_col, cfg.new_sketch, sep=sep)
+    return text_token_partials(df, text_col, cfg.new_sketch)
 
 
 def merge_partials(partials_df, cfg: CMSConfig) -> CountMinSketch:
@@ -65,13 +65,8 @@ def build_cms_from_text(df, text_col: str, cfg: CMSConfig) -> CountMinSketch:
 
 
 def cms_grouped(df, group_col: str, item_col: str, cfg: CMSConfig, *,
-                string_items: bool = False, weight_col: str | None = None,
-                pre_shuffle_salt: int | None = None,
-                n_partitions: int | None = None):
+                string_items: bool = False, weight_col: str | None = None):
     """DataFrame[group, rows_seen, sketch]: one merged CMS per group value
-    (``sketch_agg.sketch_grouped`` with the stacked scatter-add fold).
-    The salt of ``pre_shuffle_salt`` is seeded by ``cfg.seed``."""
+    (``sketch_agg.sketch_grouped`` with the stacked scatter-add fold)."""
     return sketch_grouped(df, group_col, item_col, cfg.new_sketch, cfg.from_bytes,
-                          string_items=string_items, weight_col=weight_col,
-                          pre_shuffle_salt=pre_shuffle_salt,
-                          n_partitions=n_partitions, salt_seed=cfg.seed)
+                          string_items=string_items, weight_col=weight_col)

@@ -32,15 +32,13 @@ __all__ = ["connected_components"]
 
 
 def connected_components(edges: DataFrame, src: str, dst: str, *,
-                         max_iter: int = 50,
-                         stats: dict | None = None) -> DataFrame:
+                         max_iter: int = 50) -> DataFrame:
     """(node, component) for every node appearing in ``edges``, where
     ``component`` is the MINIMUM node id reachable from the node
     (deterministic canonical label). NULL endpoints are dropped (an edge
     to NULL asserts nothing). Raises RuntimeError if the fixpoint is not
     reached within ``max_iter`` rounds — with pointer jumping that takes
-    a component diameter over ~2^max_iter, i.e. never in practice.
-    ``stats``, if given, receives {"rounds": n} (benchmark telemetry)."""
+    a component diameter over ~2^max_iter, i.e. never in practice."""
     e = (
         edges.select(F.col(src).cast("long").alias("s"),
                      F.col(dst).cast("long").alias("t"))
@@ -61,7 +59,7 @@ def connected_components(edges: DataFrame, src: str, dst: str, *,
     prev_sum = labels.agg(_wit).first()[0]
 
     try:
-        for rounds in range(1, max_iter + 1):
+        for _ in range(max_iter):
             # one hop: every node takes min over its neighbors' labels
             msgs = e.join(labels, e["s"] == labels["node"]) \
                 .select(F.col("t").alias("node"), "comp")
@@ -79,8 +77,6 @@ def connected_components(edges: DataFrame, src: str, dst: str, *,
             labels = jumped.localCheckpoint(eager=True)
             cur_sum = labels.agg(_wit).first()[0]
             if cur_sum == prev_sum:
-                if stats is not None:
-                    stats["rounds"] = rounds
                 return labels.select(
                     "node", F.col("comp").alias("component"))
             prev_sum = cur_sum

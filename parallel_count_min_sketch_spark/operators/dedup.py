@@ -328,29 +328,11 @@ def write_lsh_index(df: DataFrame, id_col: str, path: str, text: str = "text",
         .write.mode("overwrite").parquet(path + "/oversized")
 
 
-def append_lsh_index(df: DataFrame, id_col: str, path: str, text: str = "text",
-                     *, num_perms: int = DEFAULT_PERMS,
-                     bands: int = DEFAULT_BANDS,
-                     seed: int = MINHASH_SEED) -> None:
-    """Append a (deduped) batch's band rows to an existing index — the
-    closing step of the nightly loop: report -> keep set -> corpus append
-    + this. Cost is O(batch). The ``oversized`` keys are NOT refreshed
-    here (the cap is a pair-explosion guard, not a correctness bound);
-    refresh them by re-running the write_lsh_index size aggregation over
-    ``bands`` — an index-scale, text-free job — on whatever cadence the
-    bucket-stats audit suggests."""
-    lsh_band_rows(df, id_col, text, num_perms=num_perms, bands=bands,
-                  seed=seed) \
-        .withColumnRenamed("_id", "corpus_id") \
-        .write.mode("append").parquet(path + "/bands")
-
-
 def incremental_lsh_matches(spark, new_df: DataFrame, id_col: str,
                             index_path: str, text: str = "text", *,
                             num_perms: int = DEFAULT_PERMS,
                             bands: int = DEFAULT_BANDS,
                             seed: int = MINHASH_SEED,
-                            broadcast_new: bool = True,
                             index_bands: DataFrame | None = None,
                             new_band_rows: DataFrame | None = None) -> DataFrame:
     """Candidate near-dup matches of a NEW batch against a stored corpus
@@ -366,9 +348,6 @@ def incremental_lsh_matches(spark, new_df: DataFrame, id_col: str,
     band rows falling in a corpus-oversized bucket are dropped first via
     a broadcast anti-join against the tiny precomputed ``oversized``
     relation (same degenerate-clique guard as ``lsh_candidate_pairs``).
-    Set ``broadcast_new=False`` when the batch itself is too large to
-    broadcast — the join then shuffles both sides on (band, band_key),
-    still never rescanning corpus text.
 
     Empty docs have NULL band keys on both sides and never equi-join.
     """
@@ -380,13 +359,11 @@ def incremental_lsh_matches(spark, new_df: DataFrame, id_col: str,
         new_band_rows = lsh_band_rows(new_df, id_col, text,
                                       num_perms=num_perms, bands=bands,
                                       seed=seed)
-    new_bands = (
+    new_bands = F.broadcast(
         new_band_rows
         .withColumnRenamed("_id", "new_id")
         .join(F.broadcast(oversized), ["band", "band_key"], "left_anti")
     )
-    if broadcast_new:
-        new_bands = F.broadcast(new_bands)
     return (
         idx.join(new_bands, ["band", "band_key"])
         .select("new_id", "corpus_id")
@@ -702,8 +679,9 @@ def duplicate_span_stats(docs: DataFrame, *, id_col: str = "doc_id",
     2. per-doc scoring: re-shingle (positional, duplicates kept) and join
        the dictionary on the int64 hash. The dictionary is the SMALL side
        (duplicated spans are rare at web scale) — broadcast here; when it
-       outgrows a broadcast, swap in bloom_semi_join + shuffle join, the
-       corpus side still never shuffles.
+       outgrows a broadcast, a Bloom probe on the hash
+       (``joins.build_key_bloom`` + ``bloom_flag``) in front of a shuffle
+       join keeps the corpus shuffle to the spans that may match.
 
     Returns one row per input doc: ``(doc_id, n_spans, dup_spans,
     has_dup)`` — docs shorter than K tokens keep ``n_spans = 0``.

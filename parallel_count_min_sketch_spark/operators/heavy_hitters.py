@@ -36,7 +36,6 @@ from ..memtune import tune_worker
 from .agg import merge_partials
 from .sketch_agg import fold_token_counts, with_djb2
 
-CAND_SCHEMA = "token STRING, local_count LONG"
 
 # fused scan output: kind=0 rows carry one partial sketch blob per
 # partition (token NULL); kind=1 rows carry the partition's top-k
@@ -48,7 +47,7 @@ _FUSED_PA = pa.schema([
 ])
 
 # collapse the buffered per-slice value_counts tables once this many rows
-# are held — bounds candidate_tokens' peak memory at O(partition-distinct)
+# are held — bounds the candidate tally's peak memory at O(partition-distinct)
 _COLLAPSE_ROWS = 1 << 20
 
 
@@ -91,28 +90,8 @@ class _TokenTally:
         return t.sort_by([("cnt", "descending"), ("token", "descending")])[:k]
 
 
-def candidate_tokens(df, text_col: str, k_per_partition: int, *, sep: str = " "):
-    """Per-partition exact top-k tokens (one small row set per partition)."""
-    proj = df.select(text_col)
-    schema = pa.schema([("token", pa.string()), ("local_count", pa.int64())])
-
-    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tune_worker()
-        tally = _TokenTally()
-        for batch in batches:
-            for vals, counts in anp.token_counts(batch.column(0), sep):
-                tally.add(vals, counts)
-        top = tally.top(k_per_partition)
-        if top is not None:
-            yield pa.RecordBatch.from_arrays(
-                [top.column("token").combine_chunks(),
-                 top.column("cnt").combine_chunks()], schema=schema)
-
-    return proj.mapInArrow(fold, CAND_SCHEMA)
-
-
 def fused_sketch_and_candidates(df, text_col: str, cfg: CMSConfig,
-                                k_per_partition: int, *, sep: str = " "):
+                                k_per_partition: int):
     """ONE pass over the corpus emitting, per partition, both the partial
     CMS sketch and the partition's exact top-k candidates. The per-batch
     (token, count) tables are computed once and feed both folds — this
@@ -125,7 +104,7 @@ def fused_sketch_and_candidates(df, text_col: str, cfg: CMSConfig,
         sk = cfg.new_sketch()
         tally = _TokenTally()
         for batch in batches:
-            for vals, counts in anp.token_counts(batch.column(0), sep):
+            for vals, counts in anp.token_counts(batch.column(0)):
                 # sketch fold: djb2 + weighted update once per DISTINCT token
                 fold_token_counts(sk, vals, counts)
                 tally.add(vals, counts)

@@ -42,7 +42,6 @@ def _day_bucket(df: DataFrame, ts_col: str) -> DataFrame:
 
 def sketch_time_buckets(df: DataFrame, ts_col: str, item_col: str,
                         make_sketch: Callable, from_bytes: Callable, *,
-                        string_items: bool = False,
                         as_float: bool = False,
                         pre_aggregate: bool = False) -> DataFrame:
     """DataFrame[bucket, rows_seen, sketch]: one merged sketch per
@@ -69,12 +68,10 @@ def sketch_time_buckets(df: DataFrame, ts_col: str, item_col: str,
         pre = bucketed.groupBy("__bucket", item_col).agg(
             F.count("*").alias("__w"))
         out = sketch_grouped(pre, "__bucket", item_col, make_sketch,
-                             from_bytes, string_items=string_items,
-                             as_float=as_float, weight_col="__w")
+                             from_bytes, as_float=as_float, weight_col="__w")
     else:
         out = sketch_grouped(bucketed, "__bucket", item_col,
-                             make_sketch, from_bytes,
-                             string_items=string_items, as_float=as_float)
+                             make_sketch, from_bytes, as_float=as_float)
     return out.withColumnRenamed("group", "bucket")
 
 

@@ -21,25 +21,18 @@ from ..sketches.hashing import MERSENNE_PRIME, affine_params
 LSH_SEED = 7171
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-                       F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _norm(a):
-    return F.sqrt(_dot(a, a))
-
-
 def _dot_sql(a: str, b: str) -> str:
-    """SQL text twin of ``_dot`` over named columns — same zip_with/
-    aggregate fold, parsed in one py4j round-trip instead of ~20."""
+    """Dot product of two named array columns as SQL text: a left fold
+    (``aggregate``) over ``zip_with`` of the DOUBLE-cast elements, parsed
+    in one py4j round-trip."""
     return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
             f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, (acc, v) -> acc + v)")
 
 
 def _cos_expr(q: str, n: str):
     """cosine(q, n) as ONE parsed expression: dot / (norm(q) * norm(n)),
-    the exact tree the ``_dot``/``_norm`` Column form builds."""
+    with each norm the square root of the vector's ``_dot_sql`` with
+    itself."""
     return F.expr(
         f"{_dot_sql(q, n)} / (SQRT({_dot_sql(q, q)}) * SQRT({_dot_sql(n, n)}))")
 
@@ -285,7 +278,7 @@ def ivf_ann_topk(df: DataFrame, id_col: str, vec_col: str, query_ids: list[int],
         if len(v) != dim:
             raise ValueError(f"centroid {cid} has dim {len(v)}, expected {dim}")
         nrm = 0.0
-        for x in v:  # left fold, same op order as _dot / the SQL oracle
+        for x in v:  # left fold, same op order as _dot_sql / the SQL oracle
             nrm = nrm + x * x
         if nrm == 0.0:
             raise ValueError(f"centroid {cid} is the zero vector")

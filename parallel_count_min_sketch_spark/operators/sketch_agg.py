@@ -25,8 +25,7 @@ from ..sketches.cms import CountMinSketch
 from ..sketches.hashing import djb2_batch
 from ..sketches.hll import HyperLogLog
 from .. import _arrow_np as anp
-from ._grouped_fold import (GroupedFoldBase, items_from_array,
-                            iter_group_segments, salted_pre_shuffle)
+from ._grouped_fold import GroupedFoldBase, items_from_array, iter_group_segments
 
 PARTIAL_SCHEMA = "partition_id INT, rows_seen LONG, sketch BINARY"
 _PARTIAL_PA = pa.schema(
@@ -262,8 +261,7 @@ def fold_token_counts(sk, vals: pa.Array, counts: np.ndarray) -> int:
     return rows
 
 
-def text_token_partials(df, text_col: str, make_sketch: Callable, *,
-                        sep: str = " "):
+def text_token_partials(df, text_col: str, make_sketch: Callable):
     """Kernel-generic doc-local token build: tokenize each Arrow batch in
     Arrow C kernels, collapse to (distinct token, count) with value_counts
     (``_arrow_np.token_counts``, in slices bounded by text bytes), djb2
@@ -280,7 +278,7 @@ def text_token_partials(df, text_col: str, make_sketch: Callable, *,
         sk = make_sketch()
         rows = 0
         for batch in batches:
-            for vals, counts in anp.token_counts(batch.column(0), sep):
+            for vals, counts in anp.token_counts(batch.column(0)):
                 rows += fold_token_counts(sk, vals, counts)
         yield _partial_batch(rows, sk)
 
@@ -288,8 +286,8 @@ def text_token_partials(df, text_col: str, make_sketch: Callable, *,
 
 
 def build_sketch_from_text(df, text_col: str, make_sketch: Callable,
-                           from_bytes: Callable, *, sep: str = " "):
-    partials = text_token_partials(df, text_col, make_sketch, sep=sep)
+                           from_bytes: Callable):
+    partials = text_token_partials(df, text_col, make_sketch)
     sk = merge_sketch_partials(partials, from_bytes)
     return make_sketch() if sk is None else sk
 
@@ -624,38 +622,25 @@ def merge_grouped_partials(partials, from_bytes: Callable):
 
 def sketch_grouped(df, group_col: str, col: str, make_sketch: Callable,
                    from_bytes: Callable, *, string_items: bool = False,
-                   as_float: bool = False, weight_col: str | None = None,
-                   pre_shuffle_salt: int | None = None,
-                   n_partitions: int | None = None,
-                   salt_seed: int = 0):
+                   as_float: bool = False, weight_col: str | None = None):
     """DataFrame[group, rows_seen, sketch]: one merged sketch per group.
     ``weight_col`` feeds pre-aggregated (group, item, count) inputs through
     the per-kernel WEIGHTED dispatch (``_weighted_update``).
 
-    ``pre_shuffle_salt=s``: one raw-row shuffle on hash(group, item-salt%s)
-    before phase 1 — use at HIGH group cardinality, where otherwise every
-    scan partition emits a partial for every group and phase-2 shuffle
-    volume is partitions x groups x blob bytes; salting caps it at
-    groups x s while splitting hot groups over s tasks (measured in
-    BENCH/grouped_skew.json). The salt is a deterministic hash of the item
-    column seeded by ``salt_seed``, so re-runs and retries repartition
-    identically. CMS/HLL/Bloom/KMV merge to identical state under any
-    partitioning; KLL and t-digest state depends on how rows were grouped
-    into partials (randomized compaction / centroid order), but their
-    published error bounds hold regardless — same caveat as any
-    repartition."""
-    src = df
-    if pre_shuffle_salt:
-        src = salted_pre_shuffle(df, group_col, col, pre_shuffle_salt,
-                                 n_partitions, salt_seed)
-    partials = sketch_grouped_partials(src, group_col, col, make_sketch,
+    Phase 1 folds one partial per (scan partition, group); phase 2 merges
+    them in one sorted fold (``merge_grouped_partials``). CMS/HLL/Bloom/KMV
+    merge to identical state under any partitioning; KLL and t-digest
+    state depends on how rows were grouped into partials (randomized
+    compaction / centroid order), but their published error bounds hold
+    regardless — same caveat as any repartition."""
+    partials = sketch_grouped_partials(df, group_col, col, make_sketch,
                                        string_items=string_items,
                                        as_float=as_float, weight_col=weight_col)
     return merge_grouped_partials(partials, from_bytes)
 
 
 def text_token_grouped_partials(df, group_col: str, text_col: str,
-                                make_sketch: Callable, *, sep: str = " "):
+                                make_sketch: Callable):
     """Doc-local GROUPED token build: one partial sketch per
     (partition, group) over a text column, tokenizing inside Arrow C
     kernels — the grouped sibling of :func:`text_token_partials`. The
@@ -684,7 +669,7 @@ def text_token_grouped_partials(df, group_col: str, text_col: str,
             row_idx = np.arange(batch.num_rows, dtype=np.int64)
             for g, seg_idx, _w in iter_group_segments(batch, row_idx):
                 seg = pc.take(text, anp.array(seg_idx))
-                for vals, w in anp.token_counts(seg, sep):
+                for vals, w in anp.token_counts(seg):
                     sk = sketches.get(g)
                     if sk is None:
                         sk = sketches[g] = make_sketch()
@@ -696,10 +681,8 @@ def text_token_grouped_partials(df, group_col: str, text_col: str,
 
 
 def sketch_grouped_from_text(df, group_col: str, text_col: str,
-                             make_sketch: Callable, from_bytes: Callable, *,
-                             sep: str = " "):
-    partials = text_token_grouped_partials(df, group_col, text_col,
-                                           make_sketch, sep=sep)
+                             make_sketch: Callable, from_bytes: Callable):
+    partials = text_token_grouped_partials(df, group_col, text_col, make_sketch)
     return merge_grouped_partials(partials, from_bytes)
 
 

@@ -5,13 +5,11 @@ FIXTURES F1 plants exactly that). A plain hash repartition on host would
 send a hot host's pages to one task; salting spreads every key over
 ``n_partitions`` uniformly while keeping the mapping deterministic in
 (seed). For the global sketch the partition key is irrelevant (merge is
-commutative), so salting costs nothing and bounds task skew; for grouped
-sketches the two-phase partial merge of ``sketch_agg.sketch_grouped`` caps
-per-group shuffle at (#partitions x #groups) partial rows; when group
-cardinality is high enough that every partition sees every group, use
-``sketch_grouped(pre_shuffle_salt=s)`` instead — one raw-row shuffle on
-hash(group, salt%s) caps partials at (#groups x s) while still splitting
-hot groups over s tasks (choice rule measured in BENCH/grouped_skew.json).
+commutative), so salting costs nothing and bounds task skew; the CMS
+build job's ``--salt-partitions`` runs ``salted_repartition`` in front of
+its build. Grouped sketches need no salt: the two-phase partial merge of
+``sketch_agg.sketch_grouped`` already caps per-group shuffle at
+(#partitions x #groups) partial rows.
 """
 
 from __future__ import annotations

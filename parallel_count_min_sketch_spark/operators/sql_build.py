@@ -164,13 +164,11 @@ def cells_to_sketch(rows, cfg: CMSConfig) -> CountMinSketch:
 
 
 def collect_cms(df: DataFrame, item_col: str, cfg: CMSConfig, *,
-                weight_col: str | None = None, string_items: bool = False,
                 row_strategy: str = "explode") -> CountMinSketch:
-    """Materialize the Catalyst-built sketch into the numpy kernel object."""
+    """Materialize the Catalyst-built sketch of unweighted integer items
+    into the numpy kernel object."""
     return cells_to_sketch(
-        cms_table_df(df, item_col, cfg, weight_col=weight_col,
-                     string_items=string_items,
-                     row_strategy=row_strategy).collect(), cfg)
+        cms_table_df(df, item_col, cfg, row_strategy=row_strategy).collect(), cfg)
 
 
 def point_query_join(table: DataFrame, probes_df: DataFrame, probe_col: str,
@@ -193,11 +191,11 @@ def point_query_join(table: DataFrame, probes_df: DataFrame, probe_col: str,
     return per_row.groupBy("item").agg(F.min("counter").alias("cms_estimate"))
 
 
-def point_query_df(df: DataFrame, item_col: str, cfg: CMSConfig, query_items,
-                   *, weight_col: str | None = None) -> DataFrame:
+def point_query_df(df: DataFrame, item_col: str, cfg: CMSConfig,
+                   query_items) -> DataFrame:
     """Point query for an explicit list of integer items ->
     DataFrame[item, cms_estimate]."""
-    table = cms_table_df(df, item_col, cfg, weight_col=weight_col)
+    table = cms_table_df(df, item_col, cfg)
     # an Arrow table plans as a JVM LocalTableScan; a list of tuples would
     # be a Python-RDD scan that starts Python tasks on every collect
     items = pa.array([int(x) for x in query_items], pa.int64())

@@ -29,10 +29,11 @@ EMB_DIM = 64  # embeddings.embedding length (TESTDATA.md)
 
 
 def _duck_fold_dot(a: str, b: str, dim: int = EMB_DIM) -> str:
-    """Replicate Spark's _dot (zip_with + aggregate) EXACTLY: a left fold of
-    double products starting at 0.0. DuckDB's list_dot_product uses a
-    different summation order/precision and can flip floor(cos*1e4) or a
-    rank at the ulp level (bit for identical vectors where cos == 1)."""
+    """Replicate Spark's ``similarity._dot_sql`` (zip_with + aggregate)
+    EXACTLY: a left fold of double products starting at 0.0. DuckDB's
+    list_dot_product uses a different summation order/precision and can
+    flip floor(cos*1e4) or a rank at the ulp level (bit for identical
+    vectors where cos == 1)."""
     prods = (f"list_transform(range(1, {dim} + 1), "
              f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))")
     return f"list_reduce(list_prepend(CAST(0 AS DOUBLE), {prods}), (acc, v) -> acc + v)"
@@ -1751,26 +1752,14 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     No distinct-universe collect, no cross join, no float.
 
     Beyond-reference training-data operator (the reference has no
-    document scoring); the tf/df rails match ``q_vocab_stats``."""
-    return tfidf_top_terms_df(
-        load_spread(spark, sf_dir, "documents", "doc_id", "text"))
+    document scoring); the tf/df rails match ``q_vocab_stats``.
 
-
-def tfidf_top_terms_df(docs: DataFrame) -> DataFrame:
-    """Core of :func:`q_tfidf_top_terms` over any ``(doc_id, text)``
-    DataFrame, so it runs on synthetic corpora as well as the registry's
-    ``documents`` table.
-
-    Plan shape: term frequencies are doc-local (one map-only Arrow
-    pass, functions/text_arrow — r6 replacement for the interpreted-HOF
-    sorted-run kernel), df folds from that stream with a bounded
-    groupBy(tok), and the tf←→df join shuffles on tok. The tf subtree
-    feeds two join children (Catalyst does not CSE across them) and is
-    recomputed per child — a MAP-ONLY scan each time, measured cheaper
-    than materializing the stream. (A window-over-tok df — one shuffle
-    fewer on paper — was measured 20x SLOWER: WindowExec buffers per
-    partition-key group, and millions of tiny token groups drown it in
-    per-group overhead. Rejected.)"""
+    The tf subtree feeds two join children (Catalyst does not CSE across
+    them) and is recomputed per child — a MAP-ONLY scan each time,
+    measured cheaper than materializing the stream. (A window-over-tok
+    df — one shuffle fewer on paper — was measured 20x SLOWER: WindowExec
+    buffers per partition-key group, and millions of tiny token groups
+    drown it in per-group overhead. Rejected.)"""
     from ..functions.text_arrow import ngram_tf_rows_arrow
 
     # doc-local (doc, DISTINCT token, tf) stream in one Arrow pass
@@ -1779,8 +1768,9 @@ def tfidf_top_terms_df(docs: DataFrame) -> DataFrame:
     # the tf side of the join (no CSE across join children): with the
     # kernel vectorized and parallel, recomputing it per consumer
     # measured faster than localCheckpoint materialization.
+    docs = load_spread(spark, sf_dir, "documents", "doc_id", "text")
     dt = (
-        ngram_tf_rows_arrow(docs.select("doc_id", "text"), 1)
+        ngram_tf_rows_arrow(docs, 1)
         .select(F.col("_id").alias("doc_id"),
                 F.col("ngram").alias("tok"), "tf")
     )
@@ -1841,27 +1831,19 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     distincts, top-run tf) computes doc-locally in one Arrow pass
     (functions/text_arrow, r6). No explode, no shuffle, no join
     anywhere in the operator; the only exchanges are the small-input
-    parallelism floor and this wrapper's presentation-order sort.
-    Beyond-reference training-data operator."""
-    return doc_repetition_df(
-        load_spread(spark, sf_dir, "documents", "doc_id", "text")) \
-        .orderBy("doc_id")
+    parallelism floor and the presentation-order sort.
+    Beyond-reference training-data operator.
 
-
-def doc_repetition_df(docs: DataFrame) -> DataFrame:
-    """Core of :func:`q_doc_repetition` over any ``(doc_id, text)``
-    DataFrame.
-
-    Plan shape: MAP-ONLY, one Arrow pass (functions/text_arrow) — the
-    r5 form computed the same doc-local signals with Catalyst
-    higher-order functions, whose lambdas are evaluated interpreted
-    per array element; measured 12.8 s -> ~1 s at sf1.0 (guide §4.2:
-    vectorized native code inside mapInArrow beats interpreted JVM
-    expression chains). Output rows = input rows with >= 1 token,
-    partition-local, zero shuffle — scale shape unchanged."""
+    The r5 form computed the same doc-local signals with Catalyst
+    higher-order functions, whose lambdas are evaluated interpreted per
+    array element; the Arrow pass measured 12.8 s -> ~1 s at sf1.0
+    (guide §4.2: vectorized native code inside mapInArrow beats
+    interpreted JVM expression chains). Output rows = input rows with
+    >= 1 token."""
     from ..functions.text_arrow import doc_repetition_stats_arrow
 
-    return doc_repetition_stats_arrow(docs.select("doc_id", "text"))
+    docs = load_spread(spark, sf_dir, "documents", "doc_id", "text")
+    return doc_repetition_stats_arrow(docs).orderBy("doc_id")
 
 
 def _sql_doc_repetition() -> str:
@@ -2132,18 +2114,9 @@ def q_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     compared only on a hash match, which keeps the count exact under
     collisions), followed by one partial/final groupBy(doc_id). Docs with
     no shingles (< K tokens) stay in the output with zero overlap via the
-    doc-table left join."""
-    return benchmark_contamination_df(
-        load_spread(spark, sf_dir, "documents", "doc_id", "text"))
-
-
-def benchmark_contamination_df(docs: DataFrame) -> DataFrame:
-    """Core of :func:`q_benchmark_contamination` over any
-    ``(doc_id, text)`` DataFrame. ``doc_id`` must be unique per row —
-    the one-pass groupBy folds stats per id, so rows SHARING an id would
-    get their shingle counts summed and fanned back out to every copy
-    (and would diverge from the per-row DuckDB oracle); run exact dedup
-    first if ids can repeat."""
+    doc-table left join. ``doc_id`` is unique per row: the one-pass
+    groupBy folds stats per id, so rows SHARING an id would get their
+    shingle counts summed and fanned back out to every copy."""
     from ..functions.text_arrow import ngram_tf_rows_arrow
 
     k, mod = CONTAM_SHINGLE_K, CONTAM_BENCH_MOD
@@ -2153,7 +2126,8 @@ def benchmark_contamination_df(docs: DataFrame) -> DataFrame:
     # benchmark-set branch and the corpus-scoring branch; recomputing
     # the vectorized kernel per branch measured faster than
     # localCheckpoint materialization of the string stream.
-    st = ngram_tf_rows_arrow(docs.select("doc_id", "text"), k)
+    docs = load_spread(spark, sf_dir, "documents", "doc_id", "text")
+    st = ngram_tf_rows_arrow(docs, k)
     # benchmark relation keyed by xxhash64(shingle): the broadcast hash
     # table is int64-keyed (8-byte keys, int64 probe hashing) instead of
     # string-keyed — the r4 bench showed the 560k-entry STRING relation

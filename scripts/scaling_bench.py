@@ -17,7 +17,6 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -66,52 +65,40 @@ def run_level(cpus: int, corpus: str, reps: int) -> dict:
                          text=True, timeout=1800)
     for line in out.stdout.splitlines():
         if line.startswith("SCALING_RESULT "):
-            return json.loads(line[len("SCALING_RESULT "):])
+            return {**json.loads(line[len("SCALING_RESULT "):]),
+                    "machine": _machine()}
     raise RuntimeError(f"no result from local[{cpus}]:\n{out.stdout[-2000:]}\n{out.stderr[-2000:]}")
 
 
+def _machine() -> str:
+    """The CPUs this process may run on and the machine's memory."""
+    with open("/proc/meminfo") as f:
+        kib = next(int(line.split()[1]) for line in f
+                   if line.startswith("MemTotal:"))
+    return f"{len(os.sched_getaffinity(0))} vCPU / {kib / 2**20:.0f} GiB"
+
+
 def _parity_section() -> str:
-    p = os.path.join(REPO, "BENCH", "parity.json")
+    """The reference-parity block of the last ``bench.py`` run."""
+    p = os.path.join(REPO, "BENCH", "bench_detail.json")
     if not os.path.exists(p):
         return "(not yet measured — run bench.py)"
     with open(p) as f:
-        r = json.load(f)
+        detail = json.load(f)
+    r = detail["reference_parity"]
     return f"""CMS build over {r['n_items'] / 1e6:.0f}M uint32 items (gen_datasets mixture, seed 12345),
-{r.get('config', '')}:
+measured by `bench.py` at local[{detail['cpus']}] (BENCH/bench_detail.json):
 
 | metric | this engine | reference (BASELINE.md) |
 |---|---|---|
 | build, {r['n_items'] / 1e6:.0f}M items | {r['items_build_sec']:.1f} s ({r['items_per_sec'] / 1e6:.1f}M items/s) | sequential 26.65 s (9.4M/s); mpiV2 32 procs ~48.8M/s (1000M run) |
 | point query (avg of 10^6) | {r['point_query_us']:.2f} us | 6.5-10 us |
 | range query [100,110], per-call | {r['range_query_us']:.1f} us | ~4.4 us (C repetition loop) |
-| range query, batched/amortized | {r.get('range_query_batch_us', float('nan')):.2f} us | — (methodology-matched comparison) |
+| range query, batched/amortized | {r['range_query_batch_us']:.2f} us | — (methodology-matched comparison) |
 | self inner product | {r['inner_product_us']:.1f} us | ~27-30 us |
 
 Planted-oracle sanity: est(123) = {r['est_123']:,} on {r['n_items']:,} items
-(mixture plants 10% -> ~{r['n_items'] // 10:,}); one-sided bound verified in-run.""" + _parity_1000m_section()
-
-
-def _parity_1000m_section() -> str:
-    p = os.path.join(REPO, "BENCH", "parity_1000m.json")
-    if not os.path.exists(p):
-        return ""
-    with open(p) as f:
-        r = json.load(f)
-    return f"""
-
-### At the reference's own 1000M-item scale
-
-| metric | this engine (local[32], 1 VM) | reference (BASELINE.md, 1000M) |
-|---|---|---|
-| build, 1000M items | {r['items_build_sec']:.1f} s ({r['items_per_sec'] / 1e6:.1f}M items/s) | best single node (openmpV1 @16t) 66.1 s (15.1M/s); sequential 106 s (9.4M/s); best 4-node MPI 20.5 s (48.8M/s) |
-| point query | {r['point_query_us']:.2f} us | 6.5-10 us |
-| range query per-call / batched | {r['range_query_us']:.1f} / {r['range_query_batch_us']:.2f} us | ~4.4 us (C loop) |
-| self inner product | {r['inner_product_us']:.1f} us | ~27-30 us |
-
-Same machine class as the reference's single-node runs:
-**{66.1 / r['items_build_sec']:.2f}x its best single-node throughput at the
-identical item count** and {20.5 / r['items_build_sec']:.2f}x the best 4-node
-MPI configuration (which has 4x the memory channels)."""
+(mixture plants 10% -> ~{r['n_items'] // 10:,}); one-sided bound verified in-run."""
 
 
 def _spark_submit_section() -> str:
@@ -234,7 +221,7 @@ def main() -> None:
 
 Corpus: deterministic synthetic web pages (FIXTURES F1), {small['n_docs']:,} docs /
 {small['n_tokens']:,} token occurrences, seed 12345. Sketch: eps=0.001, delta=0.1
-(3 x 2719, reference defaults). Machine: 32 vCPU / 128 GiB, Spark {{local mode}}.
+(3 x 2719, reference defaults). Machine: {_machine()}, Spark local mode.
 Methodology: identical job at local[{args.n}] and local[{args.n * 4}] in fresh JVMs,
 warmup pass first, best of {args.reps} warm runs (the north-rule two-cluster-size
 criterion evidenced by two parallelism levels on the same input).
@@ -259,10 +246,11 @@ local[{args.n}], {big['n_tokens'] / big['arrow_sec'] / 1e6:.1f}M tokens/s at loc
 
 ## All measured parallelism levels
 
-| level | wall | tokens/s |
-|---|---|---|
+| level | wall | tokens/s | machine |
+|---|---|---|---|
 """ + "\n".join(
-        f"| local[{r['cpus']}] | {r['arrow_sec']:.2f} s | {r['n_tokens'] / r['arrow_sec'] / 1e6:.1f}M |"
+        f"| local[{r['cpus']}] | {r['arrow_sec']:.2f} s | {r['n_tokens'] / r['arrow_sec'] / 1e6:.1f}M "
+        f"| {r.get('machine', 'not recorded')} |"
         for r in all_levels
     ) + f"""
 

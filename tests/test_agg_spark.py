@@ -14,7 +14,12 @@ from parallel_count_min_sketch_spark.operators.agg import (
     cms_partials,
     merge_partials,
 )
-from parallel_count_min_sketch_spark.operators.sql_build import collect_cms, point_query_df
+from parallel_count_min_sketch_spark.operators.sql_build import (
+    cells_to_sketch,
+    cms_table_df,
+    collect_cms,
+    point_query_df,
+)
 from parallel_count_min_sketch_spark.sketches import CountMinSketch, djb2_py
 
 CFG = CMSConfig(epsilon=0.01, delta=0.1, seed=42)
@@ -73,8 +78,6 @@ def test_pre_aggregate_plan_is_bit_identical(spark, items_df):
     integer and string items, weighted and unweighted."""
     from pyspark.sql import functions as F
 
-    from parallel_count_min_sketch_spark.operators.sql_build import cms_table_df
-
     df, items = items_df
 
     def table(d, **kw):
@@ -96,8 +99,6 @@ def test_string_build_checks_each_weight_under_pre_aggregate(spark):
     """String items have one build: with ``pre_aggregate=True`` the kernel
     still folds row by row, so a negative weight fails even where every
     item's total is non-negative."""
-    from parallel_count_min_sketch_spark.operators.sql_build import cms_table_df
-
     df = spark.createDataFrame([("a", -1), ("a", 2), ("b", 1)],
                                "item STRING, w BIGINT")
     with pytest.raises(Exception, match="negative weights"):
@@ -111,8 +112,6 @@ def test_rescan_strategy_is_bit_identical(spark, items_df):
     integer and string items, weighted and unweighted."""
     import pytest
     from pyspark.sql import functions as F
-
-    from parallel_count_min_sketch_spark.operators.sql_build import cms_table_df
 
     df, items = items_df
 
@@ -178,7 +177,8 @@ def test_sql_and_arrow_paths_agree_on_non_ascii(spark):
     cfg = CMSConfig(epsilon=0.1, delta=0.1, seed=7)
     tokens = df.select(F.explode(F.split("text", " ")).alias("tok")).filter("tok != ''")
     arrow_sk = build_cms_from_text(df.repartition(2), "text", cfg)
-    sql_sk = collect_cms(tokens, "tok", cfg, string_items=True)
+    sql_sk = cells_to_sketch(
+        cms_table_df(tokens, "tok", cfg, string_items=True).collect(), cfg)
     assert sql_sk.to_bytes() == arrow_sk.to_bytes()
 
     toks = sorted({t for d in docs for t in d[0].split(" ") if t})
@@ -215,27 +215,6 @@ def test_grouped_sketches_skip_nulls(spark):
     assert out["en"]["rows_seen"] == 1 and out["de"]["rows_seen"] == 1
     totals = {g: cfg.from_bytes(bytes(r["sketch"])).total for g, r in out.items()}
     assert totals == {"en": 1, "de": 1}
-
-
-def test_grouped_salted_pre_shuffle_byte_equal(spark):
-    """pre_shuffle_salt changes ONLY the physical row placement — the
-    merged per-group sketch must be byte-identical to the default plan
-    (merge is order/partitioning-invariant), and totals must match."""
-    import random
-
-    rng = random.Random(7)
-    rows = [(f"h{rng.randrange(40)}", rng.randrange(1000)) for _ in range(4000)]
-    df = spark.createDataFrame(rows, "host STRING, item BIGINT").repartition(8)
-    cfg = CMSConfig(epsilon=0.01, delta=0.1, seed=5)
-    plain = {r["group"]: r for r in cms_grouped(df, "host", "item", cfg).collect()}
-    salted = {r["group"]: r for r in cms_grouped(
-        df, "host", "item", cfg, pre_shuffle_salt=4, n_partitions=16).collect()}
-    assert set(plain) == set(salted)
-    for g in plain:
-        assert plain[g]["rows_seen"] == salted[g]["rows_seen"]
-        assert (cfg.from_bytes(bytes(plain[g]["sketch"])).total
-                == plain[g]["rows_seen"])
-        assert bytes(plain[g]["sketch"]) == bytes(salted[g]["sketch"])
 
 
 def test_weighted_cms_path_rejects_negative_weights(spark):

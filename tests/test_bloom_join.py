@@ -1,21 +1,17 @@
-"""Bloom runtime semi-join pushdown (operators/joins.py).
+"""Bloom probe of a join's big side (operators/joins.py).
 
-Covers: exactness of the prefilter+exact-join composition, the one-sided
-guarantee (no false negatives ever, even with a deliberately undersized
-filter that produces many false positives), null-key SQL semantics, the
-diagnostic flag column, and string-key hashing parity.
+Covers: the one-sided guarantee (no false negatives ever, even with a
+deliberately undersized filter that produces many false positives),
+null-key SQL semantics of the flag column, and the distinct-free build.
 """
 
 from functools import partial
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from parallel_count_min_sketch_spark.operators.joins import (
     bloom_flag,
-    bloom_prefilter,
-    bloom_semi_join,
     build_key_bloom,
 )
 from parallel_count_min_sketch_spark.sketches.bloom import BloomFilter
@@ -40,20 +36,6 @@ def frames(spark):
     return big, small
 
 
-def test_semi_join_is_exact(spark, frames):
-    big, small = frames
-    for mk in (_mk_tiny, _mk_sized):
-        got = sorted(
-            r["row_id"]
-            for r in bloom_semi_join(big, "key", small, "key", mk).collect()
-        )
-        want = sorted(
-            r["row_id"]
-            for r in big.join(small, "key", "leftsemi").collect()
-        )
-        assert got == want and len(got) == 20 * 20  # 20 keys x 20 rows each
-
-
 def test_no_false_negatives_even_undersized(spark, frames):
     big, small = frames
     bf = build_key_bloom(small, "key", _mk_tiny)
@@ -63,20 +45,7 @@ def test_no_false_negatives_even_undersized(spark, frames):
     n_false_pos = sum(1 for r in rows if r["bloom_pass"] and r["key"] not in truth)
     n_false_neg = sum(1 for r in rows if not r["bloom_pass"] and r["key"] in truth)
     assert n_false_neg == 0  # one-sided, always
-    assert n_false_pos > 0  # the tiny filter really does overshoot...
-    # ...and the exact join removes exactly those rows
-    joined = bloom_semi_join(big, "key", small, "key", _mk_tiny)
-    assert joined.count() == 20 * 20
-
-
-def test_prefilter_reduces_rows_with_sized_filter(spark, frames):
-    big, small = frames
-    bf = build_key_bloom(small, "key", _mk_sized)
-    n_pre = bloom_prefilter(big, "key", bf).count()
-    # sized filter: ~1% fpp over the 980 non-member keys -> at most a few
-    # false-pass keys (20 rows each); far below the unfiltered 20k rows
-    assert 20 * 20 <= n_pre <= 20 * 20 + 20 * 30
-    assert bf.n_added == small.count()
+    assert n_false_pos > 0  # the tiny filter really does overshoot
 
 
 def test_null_keys_never_pass_or_match(spark):
@@ -87,20 +56,7 @@ def test_null_keys_never_pass_or_match(spark):
     bf = build_key_bloom(small, "key", _mk_sized)
     flagged = {r["row_id"]: r["bloom_pass"] for r in bloom_flag(big, "key", bf).collect()}
     assert flagged[2] is False and flagged[4] is False
-    got = sorted(r["row_id"] for r in bloom_semi_join(big, "key", small, "key", _mk_sized).collect())
-    assert got == [1]
-
-
-def test_string_keys(spark):
-    big = spark.createDataFrame(
-        [(i, f"host{i % 50}.example") for i in range(2000)], "row_id LONG, key STRING"
-    )
-    small = spark.createDataFrame([(f"host{k}.example",) for k in (0, 7, 49)], "key STRING")
-    got = bloom_semi_join(big, "key", small, "key", _mk_sized, string_keys=True)
-    assert got.count() == 3 * 40
-    bf = build_key_bloom(small, "key", _mk_sized, string_keys=True)
-    member = bf.contains_strings(np.array(["host0.example", "nope.example"]))
-    assert bool(member[0]) and not bool(member[1])
+    assert flagged[1] is True
 
 
 def test_build_needs_no_distinct(spark):
@@ -111,52 +67,3 @@ def test_build_needs_no_distinct(spark):
     bf_dis = build_key_bloom(dup.distinct(), "key", _mk_sized)
     assert np.array_equal(bf_dup.bits, bf_dis.bits)
 
-
-def test_jvm_prefilter_matches_arrow_and_kernel(spark, frames):
-    big, small = frames
-    from parallel_count_min_sketch_spark.operators.joins import bloom_prefilter_jvm
-
-    for mk in (_mk_tiny, _mk_sized):
-        bf = build_key_bloom(small, "key", mk)
-        a = sorted(r["row_id"] for r in bloom_prefilter(big, "key", bf).collect())
-        j = sorted(r["row_id"] for r in bloom_prefilter_jvm(big, "key", bf).collect())
-        assert a == j  # bit-identical to the Arrow path (same numpy kernel)
-
-
-def test_jvm_prefilter_negative_and_null_keys(spark):
-    from parallel_count_min_sketch_spark.operators.joins import bloom_prefilter_jvm
-
-    big = spark.createDataFrame(
-        [(1, -37), (2, 10), (3, None), (4, -500)], "row_id LONG, key LONG")
-    small = spark.createDataFrame([(-37,), (10,)], "key LONG")
-    bf = build_key_bloom(small, "key", _mk_sized)
-    got = sorted(r["row_id"] for r in bloom_prefilter_jvm(big, "key", bf).collect())
-    # pmod in the SQL twin matches numpy % on negatives; NULL never passes
-    assert 1 in got and 2 in got and 3 not in got
-
-
-def test_jvm_prefilter_string_keys(spark):
-    from parallel_count_min_sketch_spark.operators.joins import (
-        bloom_prefilter, bloom_prefilter_jvm)
-
-    big = spark.createDataFrame(
-        [(i, f"tok{i % 97}") for i in range(3000)] + [(9999, None)],
-        "row_id LONG, key STRING")
-    small = spark.createDataFrame([(f"tok{k}",) for k in (0, 13, 96)], "key STRING")
-    bf = build_key_bloom(small, "key", _mk_sized, string_keys=True)
-    a = sorted(r["row_id"] for r in bloom_prefilter(big, "key", bf, string_keys=True).collect())
-    j = sorted(r["row_id"] for r in bloom_prefilter_jvm(big, "key", bf, string_keys=True).collect())
-    assert a == j and 9999 not in j
-
-
-def test_auto_prefilter_picks_jvm_within_limit(spark, frames):
-    big, small = frames
-    from parallel_count_min_sketch_spark.operators.joins import (
-        _MAX_JVM_BITS, bloom_prefilter_auto)
-
-    bf = build_key_bloom(small, "key", _mk_sized)
-    assert bf.m <= _MAX_JVM_BITS
-    out = bloom_prefilter_auto(big, "key", bf)
-    # the JVM path is a Filter over codegen'd expressions, not mapInArrow
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" not in plan, plan

@@ -7,8 +7,8 @@
   ``_MAX_TOKEN_LEN`` bytes still raises.
 - ``_arrow_np.token_counts`` tokenizes a text column in slices bounded by
   text bytes. With the slice bound monkeypatched small, every token-count
-  kernel (the CMS and HLL text partials, the grouped text partials,
-  ``candidate_tokens`` and both outputs of ``fused_sketch_and_candidates``)
+  kernel (the CMS and HLL text partials, the grouped text partials and
+  both outputs of ``fused_sketch_and_candidates``)
   is byte-identical to a one-slice run. The kernels are the real worker
   functions, captured from ``mapInArrow`` with a stub DataFrame.
 - A fresh interpreter with the worker's malloc settings folds an 8 MB
@@ -122,8 +122,6 @@ KERNELS = {
         _StubDF(), "text", functools.partial(HyperLogLog, 10, 3)),
     "grouped_text_partials": lambda: sketch_agg.text_token_grouped_partials(
         _StubDF(), "group", "text", CFG.new_sketch),
-    "candidate_tokens": lambda: heavy_hitters.candidate_tokens(
-        _StubDF(), "text", 7),
     "fused_sketch_and_candidates":
         lambda: heavy_hitters.fused_sketch_and_candidates(
             _StubDF(), "text", CFG, 7),

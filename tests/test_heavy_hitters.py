@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from parallel_count_min_sketch_spark.config import CMSConfig
 from parallel_count_min_sketch_spark.operators.heavy_hitters import (
-    candidate_tokens,
+    fused_sketch_and_candidates,
     heavy_hitters_scalable,
 )
 from parallel_count_min_sketch_spark.sources.web_pages import web_pages
@@ -45,11 +45,17 @@ def test_exact_heavy_hitter_set(spark, pages):
 
 
 def test_candidates_bounded_per_partition(spark, pages):
-    cands = candidate_tokens(pages, "text", k_per_partition=10).collect()
+    """The fused scan's candidate rows (kind = 1) hold at most k tokens
+    per partition, each with a positive local count."""
+    cands = (fused_sketch_and_candidates(pages, "text", CFG, k_per_partition=10)
+             .filter("kind = 1")
+             .withColumn("pid", F.spark_partition_id())
+             .collect())
     per_part: dict[int, int] = {}
-    for _ in cands:
-        pass
-    assert len(cands) <= 10 * pages.rdd.getNumPartitions()
+    for r in cands:
+        per_part[r["pid"]] = per_part.get(r["pid"], 0) + 1
+    assert cands and max(per_part.values()) <= 10
+    assert len(per_part) <= pages.rdd.getNumPartitions()
     assert all(r["local_count"] > 0 for r in cands)
 
 

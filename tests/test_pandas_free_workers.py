@@ -51,7 +51,8 @@ cfg = CMSConfig(epsilon=0.01, delta=0.1, seed=7)
 docs = spark.read.parquet(sf + "/documents.parquet")
 arrow = agg.build_cms_from_text(docs, "text", cfg)
 toks = docs.selectExpr("explode(split(text, ' ')) AS tok").filter("tok <> ''")
-catalyst = sql_build.collect_cms(toks, "tok", cfg, string_items=True)
+catalyst = sql_build.cells_to_sketch(
+    sql_build.cms_table_df(toks, "tok", cfg, string_items=True).collect(), cfg)
 assert (arrow.table == catalyst.table).all()
 queries = entry.queries()
 for name in {queries!r}:

@@ -232,27 +232,6 @@ def test_lsh_banding_stays_in_codegen(spark, pages_path):
     assert "array_distinct(" not in plan_tbl, plan_tbl
 
 
-def test_bloom_semijoin_broadcasts_exact_join(spark):
-    """The Bloom semi-join's fp-removing backstop join must broadcast the
-    key side (never shuffle the prefiltered big side), and the prefilter
-    itself must be a mapInArrow over the scan — no exchange before it."""
-    from functools import partial
-
-    from parallel_count_min_sketch_spark.operators.joins import bloom_semi_join
-    from parallel_count_min_sketch_spark.sketches.bloom import BloomFilter
-
-    big = spark.range(0, 5000).select(
-        F.col("id").alias("row_id"), (F.col("id") % 100).alias("key"))
-    small = spark.range(0, 100, 7).select(F.col("id").alias("key"))
-    out = bloom_semi_join(big, "key", small, "key",
-                          partial(BloomFilter, 1000, 0.01, seed=3))
-    plan = _plan(out, execute=True)
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-    # the only exchange feeding the join is the broadcast one
-    assert "Exchange hashpartitioning" not in plan.split("BroadcastHashJoin")[0], plan
-
-
 def test_mg_recount_is_broadcast_and_bounded(spark, pages_path):
     """mg_frequent_tokens' exact recount must broadcast the (<= k)
     candidate set against the token stream — the distinct-token universe

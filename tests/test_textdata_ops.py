@@ -12,7 +12,6 @@ from parallel_count_min_sketch_spark.operators.similarity import (
     cosine_topk,
     lsh_ann_topk,
 )
-from parallel_count_min_sketch_spark.multimodal.binary_ops import binary_metadata
 
 
 # ---------------------------- textstats -----------------------------------
@@ -21,14 +20,11 @@ def test_textstats_hand_computed(spark):
     row = df.select(
         ts.n_tokens("text").alias("n"),
         ts.stopword_count("text").alias("sw"),
-        ts.avg_token_len_bp("text").alias("alen"),
         ts.stopword_ratio_bp("text").alias("swr"),
         ts.doc_fingerprint("text").alias("fp"),
     ).collect()[0]
     assert row["n"] == 6
     assert row["sw"] == 2  # 'the', 'a'
-    # tokens: the(3) cat(3) sat(3) on(2) a(1) mat(3) = 15 chars / 6 = 250 bp
-    assert row["alen"] == 250
     assert row["swr"] == 3333
     # fingerprint equals the pure-python fold
     h = 0
@@ -444,20 +440,14 @@ def test_ivf_kmeans_centroids_recall_and_determinism(spark):
 
 
 # ---------------------------- multimodal ------------------------------------
-def test_decode_image_dispatch_and_byte_tensor():
-    from parallel_count_min_sketch_spark.multimodal.binary_ops import (
-        byte_tensor,
-        decode_image,
-    )
+def test_decode_image_dispatch():
+    from parallel_count_min_sketch_spark.multimodal.binary_ops import decode_image
 
     # codec-library formats name the missing dependency
     with pytest.raises(NotImplementedError):
         decode_image(b"\x89PNG....")
     with pytest.raises(ValueError):
         decode_image(b"not an image at all")
-    a = byte_tensor(b"same bytes")
-    b = byte_tensor(b"same bytes")
-    assert np.array_equal(a, b) and a.shape == (4, 4, 3) and a.dtype == np.uint8
 
 
 def test_bmp_roundtrip_identity():
@@ -550,24 +540,6 @@ def test_resize_nearest_matches_naive():
     for i in range(4):
         for j in range(4):
             assert np.array_equal(out[i, j], img[i * 6 // 4, j * 8 // 4])
-
-
-def test_binary_pipeline_end_to_end(spark):
-    from parallel_count_min_sketch_spark.multimodal.binary_ops import encode_bmp
-
-    img = np.full((2, 2, 3), 100, dtype=np.uint8)
-    bmp = encode_bmp(img)
-    df = spark.createDataFrame(
-        [(1, bytearray(b"\x89PNGrestofpng")), (2, bytearray(b"\xff\xd8\xffjpegdata")),
-         (3, bytearray(b"plainbytes")), (4, bytearray(bmp))],
-        "id LONG, blob BINARY",
-    )
-    meta = {r["id"]: (r["sniffed_format"], r["byte_len"])
-            for r in binary_metadata(df, "blob", keep_cols=("id",)).collect()}
-    assert meta[1] == ("png", 13)
-    assert meta[2] == ("jpeg", 11)
-    assert meta[3] == ("unknown", 10)
-    assert meta[4] == ("bmp", len(bmp))
 
 
 def test_embedding_near_dups_hot_bucket_capped(spark):
@@ -836,30 +808,6 @@ def test_incremental_dedup_oversized_corpus_bucket_dropped(spark, tmp_path):
         spark, bdf, "doc_id", idx, max_bucket=50).collect()}
     assert rep[5000]["corpus_dup"] is False  # clique bucket was dropped
     assert rep[5001]["corpus_dup"] is True   # normal bucket still matches
-
-
-def test_append_lsh_index_extends_matches(spark, tmp_path):
-    """The nightly loop closes: batch-1 keepers appended to the index are
-    visible to batch 2 as corpus hits."""
-    rng = np.random.default_rng(17)
-    vocab = [f"v{i}" for i in range(5000)]
-    corpus = _mk_corpus(rng, vocab, 20)
-    b1 = _mk_corpus(rng, vocab, 4, start=100)
-    cdf = spark.createDataFrame(corpus, "doc_id LONG, text STRING")
-    idx = str(tmp_path / "idx")
-    dd.write_lsh_index(cdf, "doc_id", idx, max_bucket=50)
-    b1df = spark.createDataFrame(b1, "doc_id LONG, text STRING")
-    rep1 = dd.incremental_dedup_report(spark, b1df, "doc_id", idx,
-                                       max_bucket=50)
-    kept = b1df.join(rep1.filter("keep").select("doc_id"), "doc_id")
-    dd.append_lsh_index(kept, "doc_id", idx)
-
-    b2 = spark.createDataFrame([(200, b1[0][1]), (201, corpus[0][1])],
-                               "doc_id LONG, text STRING")
-    rep2 = {r["doc_id"]: r for r in dd.incremental_dedup_report(
-        spark, b2, "doc_id", idx, max_bucket=50).collect()}
-    assert rep2[200]["corpus_dup"] is True   # hit on appended batch-1 doc
-    assert rep2[201]["corpus_dup"] is True   # hit on original corpus doc
 
 
 def test_canonicalize_urls_hand_built(spark):

@@ -130,7 +130,7 @@ def _missing_hook(pkg_dir: Path):
 
 def test_every_python_kernel_calls_the_worker_hook_first():
     found, missing = _missing_hook(PKG_DIR)
-    assert found >= 25, found  # the scan must keep seeing the kernels
+    assert found >= 23, found  # the scan must keep seeing the kernels
     assert not missing, "\n".join(missing)
 
 
